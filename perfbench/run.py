@@ -29,10 +29,6 @@ BENCH = ROOT / "perfbench"
 BUILD = ROOT / ".bench_build"
 RUN_TIMEOUT_S = 170
 HEAP = "3g"
-# Spark 4 on JDK 17 outside spark-submit (same list as build.sbt)
-OPENS = ["java.lang", "java.lang.invoke", "java.lang.reflect", "java.io", "java.net",
-         "java.nio", "java.util", "java.util.concurrent", "java.util.concurrent.atomic",
-         "sun.nio.ch", "sun.nio.cs", "sun.security.action", "sun.util.calendar"]
 
 
 def fail(msg, code=2):
@@ -40,18 +36,32 @@ def fail(msg, code=2):
     sys.exit(code)
 
 
+def build_sbt():
+    sbt = ROOT / "build.sbt"
+    if not sbt.is_file():
+        fail("build.sbt not found: not a repository checkout")
+    return sbt.read_text()
+
+
 def spark_jars():
     """The jar directory the repository build compiles against: $SPARK_JARS,
     else build.sbt's `unmanagedBase`."""
     if os.environ.get("SPARK_JARS"):
         return Path(os.environ["SPARK_JARS"])
-    sbt = ROOT / "build.sbt"
-    if not sbt.is_file():
-        fail("build.sbt not found: not a repository checkout")
-    m = re.search(r'unmanagedBase\s*:=\s*file\("([^"]+)"\)', sbt.read_text())
+    m = re.search(r'unmanagedBase\s*:=\s*file\("([^"]+)"\)', build_sbt())
     if not m:
         fail("build.sbt names no unmanagedBase jar directory; set SPARK_JARS")
     return Path(m.group(1))
+
+
+def add_opens():
+    """The `--add-opens` flags Spark 4 needs on JDK 17 outside
+    spark-submit: build.sbt's `jdk17AddOpens` list."""
+    m = re.search(r"val\s+jdk17AddOpens\s*=\s*Seq\((.*?)\)", build_sbt(), re.S)
+    mods = re.findall(r'"([\w.]+/[\w.]+)"', m.group(1)) if m else []
+    if not mods:
+        fail("build.sbt has no jdk17AddOpens list of modules to open")
+    return [x for mod in mods for x in ("--add-opens", f"{mod}=ALL-UNNAMED")]
 
 
 def sources():
@@ -112,8 +122,12 @@ def main():
 
     work = BUILD / "work"
     (work / "tmp").mkdir(parents=True, exist_ok=True)
-    cmd = (["java"] + [x for p in OPENS for x in ("--add-opens", f"java.base/{p}=ALL-UNNAMED")] +
-           [f"-Xms{HEAP}", f"-Xmx{HEAP}", "-Xmn1g", "-XX:+UseParallelGC", "-XX:TieredStopAtLevel=1", f"-Djava.io.tmpdir={work / 'tmp'}",
+    # a fixed heap with ParallelGC, so that GC work per iteration does not
+    # follow adaptive sizing; a fixed set of JIT compiler threads, whose
+    # time cpu_s leaves out (Main.scala)
+    cmd = (["java"] + add_opens() +
+           [f"-Xms{HEAP}", f"-Xmx{HEAP}", "-Xmn1g", "-XX:+UseParallelGC",
+            "-XX:-UseDynamicNumberOfCompilerThreads", f"-Djava.io.tmpdir={work / 'tmp'}",
             "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
             "-cp", f"{classes}:{jars}/*", "graft.perfbench.Main",
             "--workload", a.workload, "--seed", str(a.seed), "--seconds", str(a.seconds),

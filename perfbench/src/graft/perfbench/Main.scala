@@ -20,19 +20,19 @@ object Stats {
   * Main --workload <pipeline_forecast|queries_loops|queries_scan>
   *      --seed <n> --seconds <s> --trace <0|1> --work <dir> --expected <file>
   * }}}
-  * One JVM, `local[4]` with 4 shuffle partitions. The run sets up the
-  * workload three times (fresh session and inputs each time; `setup_s` is
-  * the median), warms up until two consecutive iterations agree, then
-  * measures whole iterations for `--seconds`. With `--trace 1` it then
-  * adds a listener and the fence probe and measures traced iterations for
+  * One JVM, `local[4]` with 4 shuffle partitions. The run sets the
+  * workload up once (the cold start, in no metric), warms up for a fixed
+  * number of iterations, then measures whole iterations for `--seconds`.
+  * Untraced, it then times `SetupSamples` samples of fresh set-ups after
+  * one untimed batch (`setup_s` is their median); traced, it adds a
+  * listener and the fence probe and measures traced iterations for
   * another `--seconds`. The last stdout line is the result object. */
 object Main {
   val Cores = 4
-  val SetupReps = 3
-  val MinWarmup = 2
+  val SetupSamples = 4
+  /** Untimed iterations before the measured ones. */
+  val Warmup = 2
   val MinSamples = 3
-  /** Warm-up ends when an iteration is within this share of the last. */
-  val Steady = 0.05
 
   final case class Sample(startMs: Long, wallS: Double, cpuS: Double, heapMb: Double, spans: Spans)
 
@@ -45,41 +45,45 @@ object Main {
     val work = opts("work")
     val expected = readFlatJson(opts("expected"))
     val wl = Workload(workload, seed, work, expected)
-    val memBean = ManagementFactory.getMemoryMXBean
     var attempted = 0
     var failed = 0
 
-    var spark: SparkSession = null
-    val setupS = (1 to SetupReps).map { _ =>
-      if (spark != null) spark.stop()
+    def timed(body: => Unit): Double = {
       val t0 = System.nanoTime()
-      spark = session(work)
-      wl.setup(spark)
+      body
       (System.nanoTime() - t0) / 1e9
     }
+    var spark: SparkSession = null
+    /** Session start, input generation and registration; the previous
+      * session's shutdown is not timed. */
+    def setUp(): Double = {
+      if (spark != null) spark.stop()
+      timed { spark = session(work); wl.setup(spark) }
+    }
+    val coldSetupS = setUp()
 
-    /** One checked iteration; None when it failed. */
-    def iterate(): Option[Sample] = {
+    /** One checked iteration; None when it failed. `heap` false skips the
+      * heap reading and its collections (the early warm-up iterations). */
+    def iterate(heap: Boolean = true): Option[Sample] = {
       wl.prepare()
       val spans = new Spans
       val ms0 = System.currentTimeMillis()
-      val c0 = threadCpu()
+      val c0 = cpuNs()
       val t0 = System.nanoTime()
       val check =
         try wl.iteration(spark, spans)
         catch { case e: Exception => () => Some(s"iteration failed: ${String.valueOf(e).take(300)}") }
       val wall = (System.nanoTime() - t0) / 1e9
-      val cpu = threadCpu().map { case (id, ns) => ns - c0.getOrElse(id, 0L) }.sum / 1e9
+      val cpu = (cpuNs() - c0) / 1e9
       val err = check()
-      liveHeapGc()
-      val heap = memBean.getHeapMemoryUsage.getUsed / 1048576.0
+      val heapMb = if (heap) liveHeapMb() else Double.NaN
       attempted += 1
       err match {
         case Some(msg) =>
           failed += 1
           System.err.println(s"perfbench: $workload check failed: $msg")
           None
-        case None => Some(Sample(ms0, wall, cpu, heap, spans))
+        case None => Some(Sample(ms0, wall, cpu, heapMb, spans))
       }
     }
 
@@ -91,20 +95,21 @@ object Main {
       out.toSeq
     }
 
-    // warm-up: at least MinWarmup iterations, until two consecutive ones
-    // agree within Steady, for at most `seconds`
-    val warm = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val w0 = System.nanoTime()
-    def steady: Boolean = warm.size >= MinWarmup &&
-      math.abs(warm.last - warm(warm.size - 2)) <= Steady * warm.last
-    while (!steady && (warm.size < MinWarmup || (System.nanoTime() - w0) / 1e9 < seconds))
-      warm += iterate().map(_.wallS).getOrElse(Double.NaN)
-
+    // warm-up: a fixed number of iterations, so that every run measures
+    // from the same point of the JIT's progress
+    val warm = (1 to Warmup).map(i => iterate(heap = i == Warmup).map(_.wallS).getOrElse(Double.NaN))
     val samples = measure(MinSamples)
     val runS = Stats.median(samples.map(_.wallS))
+    // set-up samples, after the measured iterations so they run in a warm
+    // JVM; each sums `setupBatch` fresh set-ups, so it lasts over a second.
+    // The first batch is untimed: it warms the set-up path up.
+    val setupS =
+      if (trace) Nil
+      else (0 to SetupSamples).map(_ => (1 to wl.setupBatch).map(_ => setUp()).sum).tail
     val summary = scala.collection.mutable.LinkedHashMap[String, Any](
-      "workload" -> workload, "seed" -> seed, "warmup_s" -> warm.toSeq,
-      "setup_s" -> setupS, "run_s" -> samples.map(_.wallS), "cpu_s" -> samples.map(_.cpuS),
+      "workload" -> workload, "seed" -> seed, "cold_setup_s" -> coldSetupS,
+      "warmup_s" -> warm, "setup_s" -> setupS, "setup_batch" -> wl.setupBatch,
+      "run_s" -> samples.map(_.wallS), "cpu_s" -> samples.map(_.cpuS),
       "heap_live_mb" -> samples.map(_.heapMb))
 
     val metrics: Seq[(String, Double, String)] =
@@ -222,22 +227,46 @@ object Main {
     (all, routing)
   }
 
-  /** CPU nanoseconds of every live Java thread: the driver, Spark's task
-    * and service threads. The JIT compiler and GC threads are not Java
-    * threads visible here; their time depends on how far warm-up got and
-    * on heap sizing, not on the engine's work, and it made process CPU
-    * spread 2-3 times wider than wall time between runs. */
-  private val threads = ManagementFactory.getThreadMXBean
-  private def threadCpu(): Map[Long, Long] =
-    threads.getAllThreadIds.map(id => id -> threads.getThreadCpuTime(id)).filter(_._2 >= 0).toMap
+  /** CPU nanoseconds the process has used, less its JIT compiler
+    * threads': the driver, Spark's task and service threads, and the GC,
+    * so a change that allocates more still shows. The compiler's time
+    * depends on how far warm-up has got, not on the engine's work. The
+    * compiler threads are found by name in /proc/self/task (on another OS
+    * nothing is subtracted); run.py keeps their number fixed, so none
+    * exits with its time mid-iteration. */
+  private val os = ManagementFactory.getOperatingSystemMXBean
+    .asInstanceOf[com.sun.management.OperatingSystemMXBean]
+  private def cpuNs(): Long = os.getProcessCpuTime - compilerNs()
+  private def compilerNs(): Long =
+    Option(new File("/proc/self/task").listFiles()).toSeq.flatten.map { t =>
+      try {
+        val comm = Files.readString(new File(t, "comm").toPath)
+        if (comm.startsWith("C1 CompilerThre") || comm.startsWith("C2 CompilerThre"))
+          Files.readString(new File(t, "schedstat").toPath).split(' ')(0).toLong
+        else 0L
+      } catch { case _: java.io.IOException => 0L } // the thread has ended
+    }.sum
 
-  /** Two full collections with a pause between them: the first makes
-    * dead broadcasts, shuffles and cached RDDs unreachable, Spark's
-    * ContextCleaner then drops their blocks, and the second frees those. */
-  private def liveHeapGc(): Unit = {
-    System.gc()
-    Thread.sleep(100)
-    System.gc()
+  /** Heap in use, in MiB, after at least three full collections 100 ms
+    * apart, and more until it stops falling (at most 6). A collection
+    * makes dead broadcasts, shuffles and cached RDDs unreachable, Spark's
+    * ContextCleaner then drops their blocks, and a later collection frees
+    * them. The pipeline's broadcast hash relations (64 MiB of long[]
+    * pages) are freed only by the third collection. */
+  private val memBean = ManagementFactory.getMemoryMXBean
+  private def liveHeapMb(): Double = {
+    def collect(): Long = { System.gc(); memBean.getHeapMemoryUsage.getUsed }
+    var used = collect()
+    var rounds = 1
+    var falling = true
+    while (rounds < 3 || (falling && rounds < 6)) {
+      Thread.sleep(100)
+      val now = collect()
+      falling = now < used - (1L << 20)
+      used = math.min(used, now)
+      rounds += 1
+    }
+    used / 1048576.0
   }
 
   def session(work: String): SparkSession = {
