@@ -20,21 +20,24 @@ object Stats {
   * Main --workload <pipeline_forecast|queries_loops|queries_scan>
   *      --seed <n> --seconds <s> --trace <0|1> --work <dir> --expected <file>
   * }}}
-  * One JVM, `local[4]` with 4 shuffle partitions. The run sets the
+  * One JVM, `local[2]` with 4 shuffle partitions. The run sets the
   * workload up once (the cold start, in no metric), warms up for a fixed
   * number of iterations, then measures whole iterations for `--seconds`.
   * Untraced, it then times `SetupSamples` samples of fresh set-ups after
-  * one untimed batch (`setup_s` is their median); traced, it adds a
-  * listener and the fence probe and measures traced iterations for
-  * another `--seconds`. The last stdout line is the result object. */
+  * half a batch of untimed ones (`setup_s` is their median); traced, it
+  * adds a listener and the fence probe and measures traced iterations
+  * for another `--seconds`. The last stdout line is the result object. */
 object Main {
-  val Cores = 4
-  val SetupSamples = 4
-  /** Untimed iterations before the measured ones. */
-  val Warmup = 2
+  /** Spark task threads: half of the 4 vCPUs the benchmark is sized for,
+    * so that the driver, JIT and GC threads do not queue behind the tasks
+    * and other load on the machine slows an iteration less (README.md). */
+  val Cores = 2
+  val Partitions = 4
+  val SetupSamples = 3
   val MinSamples = 3
 
-  final case class Sample(startMs: Long, wallS: Double, cpuS: Double, heapMb: Double, spans: Spans)
+  final case class Sample(startMs: Long, wallS: Double, cpuS: Double, heapMb: Double, steal: Double,
+                          spans: Spans)
 
   def main(argv: Array[String]): Unit = {
     val opts = argv.grouped(2).collect { case Array(k, v) if k.startsWith("--") => k.drop(2) -> v }.toMap
@@ -69,12 +72,14 @@ object Main {
       val spans = new Spans
       val ms0 = System.currentTimeMillis()
       val c0 = cpuNs()
+      val s0 = HostSteal.read()
       val t0 = System.nanoTime()
       val check =
         try wl.iteration(spark, spans)
         catch { case e: Exception => () => Some(s"iteration failed: ${String.valueOf(e).take(300)}") }
       val wall = (System.nanoTime() - t0) / 1e9
       val cpu = (cpuNs() - c0) / 1e9
+      val steal = HostSteal.share(s0, HostSteal.read())
       val err = check()
       val heapMb = if (heap) liveHeapMb() else Double.NaN
       attempted += 1
@@ -83,7 +88,7 @@ object Main {
           failed += 1
           System.err.println(s"perfbench: $workload check failed: $msg")
           None
-        case None => Some(Sample(ms0, wall, cpu, heapMb, spans))
+        case None => Some(Sample(ms0, wall, cpu, heapMb, steal, spans))
       }
     }
 
@@ -97,20 +102,23 @@ object Main {
 
     // warm-up: a fixed number of iterations, so that every run measures
     // from the same point of the JIT's progress
-    val warm = (1 to Warmup).map(i => iterate(heap = i == Warmup).map(_.wallS).getOrElse(Double.NaN))
+    val warm = (1 to wl.warmup).map(i => iterate(heap = i == wl.warmup).map(_.wallS).getOrElse(Double.NaN))
     val samples = measure(MinSamples)
     val runS = Stats.median(samples.map(_.wallS))
     // set-up samples, after the measured iterations so they run in a warm
     // JVM; each sums `setupBatch` fresh set-ups, so it lasts over a second.
-    // The first batch is untimed: it warms the set-up path up.
+    // Half a batch of untimed set-ups first warms the set-up path up.
     val setupS =
       if (trace) Nil
-      else (0 to SetupSamples).map(_ => (1 to wl.setupBatch).map(_ => setUp()).sum).tail
+      else {
+        (1 to (wl.setupBatch + 1) / 2).foreach(_ => setUp())
+        (1 to SetupSamples).map(_ => (1 to wl.setupBatch).map(_ => setUp()).sum)
+      }
     val summary = scala.collection.mutable.LinkedHashMap[String, Any](
       "workload" -> workload, "seed" -> seed, "cold_setup_s" -> coldSetupS,
       "warmup_s" -> warm, "setup_s" -> setupS, "setup_batch" -> wl.setupBatch,
       "run_s" -> samples.map(_.wallS), "cpu_s" -> samples.map(_.cpuS),
-      "heap_live_mb" -> samples.map(_.heapMb))
+      "heap_live_mb" -> samples.map(_.heapMb), "host_steal" -> samples.map(_.steal))
 
     val metrics: Seq[(String, Double, String)] =
       if (!trace) Seq(
@@ -273,7 +281,7 @@ object Main {
     val s = SparkSession.builder()
       .appName("perfbench")
       .master(s"local[$Cores]")
-      .config("spark.sql.shuffle.partitions", Cores.toString)
+      .config("spark.sql.shuffle.partitions", Partitions.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -283,6 +291,19 @@ object Main {
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  /** The share of the VM's CPU time the host took (steal), from the
+    * first line of /proc/stat; NaN where that file is missing. Diagnostic
+    * only: it goes to the report, next to each measured iteration. */
+  object HostSteal {
+    def read(): Array[Long] =
+      try Files.readAllLines(Paths.get("/proc/stat")).get(0).trim.split("\\s+").drop(1).map(_.toLong)
+      catch { case _: Exception => Array.empty }
+    def share(a: Array[Long], b: Array[Long]): Double = {
+      val d = a.zip(b).map { case (x, y) => y - x }
+      if (d.length < 8 || d.sum <= 0) Double.NaN else d(7).toDouble / d.sum
+    }
   }
 
   /** Reads a flat JSON object of string values (the recorded digests). */

@@ -29,6 +29,9 @@ trait Workload {
   /** Set-ups summed into one `setup_s` sample, so that it lasts over a
     * second. */
   def setupBatch: Int
+  /** Untimed iterations before the measured ones, so that every run
+    * measures past the steep part of the JIT's curve (README.md). */
+  def warmup: Int
   /** Writes the inputs and registers them with the session. */
   def setup(spark: SparkSession): Unit
   /** Untimed housekeeping before each iteration. */
@@ -51,8 +54,8 @@ object Workload {
       // the loop queries read only documents; the SQL queries register
       // every corpus view (graft.Views), so that workload writes them all
       case "queries_loops" =>
-        new Queries(name, Loops, Seq("documents"), 4, seed, s"$work/corpus", expected)
-      case "queries_scan" => new Queries(name, Scan, graft.Views.names :+ "events", 1,
+        new Queries(name, Loops, Seq("documents"), 4, 6, seed, s"$work/corpus", expected)
+      case "queries_scan" => new Queries(name, Scan, graft.Views.names :+ "events", 1, 4,
         seed, s"$work/corpus", expected)
       case other => throw new IllegalArgumentException(s"unknown workload $other")
     }
@@ -70,10 +73,11 @@ object Workload {
   * interpolation → one COG per timestep, plus the mosaic sidecars. */
 final class Forecast(seed: Long, dir: String, expected: Map[String, String]) extends Workload {
   val name = "pipeline_forecast"
-  val K = 160
+  val K = 128
   val T = 8
-  val G = 320
-  val setupBatch = 18
+  val G = 256
+  val setupBatch = 24
+  val warmup = 3
   /** The seed picks one of eight zeta phases; each has a recorded digest. */
   val phase: Int = java.lang.Math.floorMod(seed, 8L).toInt
   private val nc = s"$dir/fort.63.nc"
@@ -196,7 +200,7 @@ final class Forecast(seed: Long, dir: String, expected: Map[String, String]) ext
   * order drawn from the seed. Each query's rows are reduced to an
   * order-independent digest, which is also the action that runs it. */
 final class Queries(val name: String, queries: Seq[String], tables: Seq[String],
-                    val setupBatch: Int, seed: Long,
+                    val setupBatch: Int, val warmup: Int, seed: Long,
                     dir: String, expected: Map[String, String]) extends Workload {
   /** Corpus scale factor, and the corpus seed: the data is fixed so its
     * digests can be recorded; the run seed only orders the queries. */
