@@ -93,10 +93,11 @@ object Fence {
     * scc extract, bowtie closures, betweenness layers): a delta leaf at
     * the session's shuffle parallelism makes a k-level lazy union scan
     * k × parallelism near-empty partitions per round (the r16 "delta-
-    * only measured SLOWER" failure mode); a SMALL delta now coalesces to
-    * ⌈bytes / 4 MB⌉ partitions (a narrow view over the cached blocks —
-    * no shuffle, no recompute), while a genuinely large delta keeps its
-    * partitions, so the form stays correct at webgraph scale. */
+    * only measured SLOWER" failure mode); a delta whose estimated size
+    * (row count × estimated row width) is at most 4 MB now coalesces to
+    * ONE partition (a narrow view over the cached blocks — no shuffle,
+    * no recompute), while any larger delta keeps its native partition
+    * count, so the form stays correct at webgraph scale. */
   def cutDeltaCounted(df: DataFrame): (DataFrame, Long) =
     org.apache.spark.sql.GraftSqlShim.localCheckpointCappedCountedAdaptive(df)
 

@@ -24,15 +24,10 @@ object Pipeline {
     val parts = args(1).split(",")
     val outDir = parts(0)
     val g = if (parts.length > 1) parts(1).toInt else 100
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")  // legacy events encodings readable from session build (no loader conf mutation)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(math.min(32, Runtime.getRuntime.availableProcessors()))
+    // the engine's own session: GraftExtensions and GroupTopK installed
+    val spark = Graft.session("graft-pipeline", master = s"local[$cpus]", shufflePartitions = cpus)
     spark.sparkContext.setLogLevel("WARN")
     run(spark, ncPath, outDir, g)
     spark.stop()

@@ -93,43 +93,19 @@ object RasterSink {
   def writeGeoTiffs(s: SparkSession, outDir: String, varName: String = "fort_63_zeta",
                     cog: Boolean = false, tile: Int = 32): Unit = {
     val g = Interp.G
-    mkdirs(outDir)
-    Interp.qInterpBarycentric(s, "")
-      .repartition(col("ts"))
-      .sortWithinPartitions("ts")
-      .foreachPartition { it: Iterator[org.apache.spark.sql.Row] =>
-        var cur = Long.MinValue
-        var grid: Array[Float] = null
-        def flush(): Unit = if (grid != null) {
-          // north-up: grow 0 is the top row; origin at the grid's NW corner
-          val bytes =
-            if (cog) GeoTiff.encodeCog(g, g, grid,
-              originX = 0.3 - 0.19, originY = 0.3 + (g - 1) * 0.38 + 0.19,
-              res = 0.38, tile = tile)
-            else GeoTiff.encode(g, g, grid,
-              originX = 0.3 - 0.19, originY = 0.3 + (g - 1) * 0.38 + 0.19, res = 0.38)
-          writeFile(s"$outDir/${tiffName(varName, cur, Map.empty)}", bytes)
-        }
-        it.foreach { r =>
-          val ts = r.getAs[Long]("ts")
-          if (ts != cur) {
-            flush(); cur = ts
-            grid = new Array[Float](g * g)
-            java.util.Arrays.fill(grid, Float.NaN) // absent cells = nodata
-          }
-          grid(r.getAs[Int]("grow") * g + r.getAs[Int]("gcol")) =
-            (r.getAs[Long]("zi4") / 10000.0).toFloat
-        }
-        flush()
-      }
+    // north-up: grow 0 is the top row; origin at the grid's NW corner
+    val (ox, oy, res) = (0.3 - 0.19, 0.3 + (g - 1) * 0.38 + 0.19, 0.38)
+    val raster = Interp.qInterpBarycentric(s, "")
+      .select(col("ts"), col("grow"), col("gcol"), (col("zi4") / 10000.0).as("value"))
+    streamGrids(raster, g, outDir, tiffName(varName, _, Map.empty), grid =>
+      if (cog) GeoTiff.encodeCog(g, g, grid, ox, oy, res, tile)
+      else GeoTiff.encode(g, g, grid, ox, oy, res))
   }
 
   /** Generalized per-timestep COG writer for an arbitrary raster
     * (ts, grow, gcol, value) + GridSpec — the sink stage of the full
     * [[graft.Pipeline]]. Same streaming one-grid-at-a-time shape as
-    * [[writeGeoTiffs]]. Absent cells and NULL values (masked dry nodes
-    * null-propagated through the interpolation) become Float.NaN, the
-    * COG's declared GDAL_NODATA. `tsLabels` (from [[graft.sources.Ingest
+    * [[writeGeoTiffs]]. `tsLabels` (from [[graft.sources.Ingest
     * .timeLabels]]) names files with the real decoded instants. */
   def writeCogs(raster: DataFrame, spec: Interp.GridSpec, outDir: String,
                 varName: String, tile: Int = 256,
@@ -137,27 +113,35 @@ object RasterSink {
                 compress: Boolean = true): Unit = {
     val g = spec.g
     val (ox, oy, res) = (spec.originX, spec.originY, spec.resX)
+    streamGrids(raster, g, outDir, tiffName(varName, _, tsLabels),
+      GeoTiff.encodeCog(g, g, _, ox, oy, res, tile, compress))
+  }
+
+  /** The shared sink loop: `raster`'s (ts: long, grow: int, gcol: int,
+    * value: double) rows, clustered by ts, become one g×g Float32 grid
+    * per timestep, encoded by `encode` and written to `outDir/name(ts)`.
+    * Absent cells and NULL values (masked dry nodes null-propagated
+    * through the interpolation) become Float.NaN, the COG's declared
+    * GDAL_NODATA. Fields are read by position from one projection. */
+  private def streamGrids(raster: DataFrame, g: Int, outDir: String,
+                          name: Long => String,
+                          encode: Array[Float] => Array[Byte]): Unit = {
     mkdirs(outDir)
-    raster
+    raster.select("ts", "grow", "gcol", "value")
       .repartition(col("ts"))
       .sortWithinPartitions("ts")
       .foreachPartition { it: Iterator[org.apache.spark.sql.Row] =>
         var cur = Long.MinValue
         var grid: Array[Float] = null
-        def flush(): Unit = if (grid != null) {
-          val bytes = GeoTiff.encodeCog(g, g, grid, ox, oy, res, tile, compress)
-          writeFile(s"$outDir/${tiffName(varName, cur, tsLabels)}", bytes)
-        }
+        def flush(): Unit = if (grid != null) writeFile(s"$outDir/${name(cur)}", encode(grid))
         it.foreach { r =>
-          val ts = r.getAs[Long]("ts")
+          val ts = r.getLong(0)
           if (ts != cur) {
             flush(); cur = ts
             grid = new Array[Float](g * g)
-            java.util.Arrays.fill(grid, Float.NaN)
+            java.util.Arrays.fill(grid, Float.NaN) // absent cells = nodata
           }
-          if (!r.isNullAt(r.fieldIndex("value")))
-            grid(r.getAs[Int]("grow") * g + r.getAs[Int]("gcol")) =
-              r.getAs[Double]("value").toFloat
+          if (!r.isNullAt(3)) grid(r.getInt(1) * g + r.getInt(2)) = r.getDouble(3).toFloat
         }
         flush()
       }

@@ -169,6 +169,45 @@ class IngestSpec extends SparkSpec {
     }
   }
 
+  test("declared read schemas equal the written schemas: CDF-1, CDF-5 and HDF5") {
+    val dir = Files.createTempDirectory("graft_ingest_schema").toString
+    writeFixture(s"$dir/cdf1.nc")
+    writeFixture(s"$dir/cdf5.nc", version = 5)
+    Files.write(Paths.get(s"$dir/hdf5.nc"), Hdf5Fixture.writeV0(Hdf5Fixture.Content(
+      n = N, m = M, t = T, fill = Fill, dry = dry, dryMax = Set(5),
+      units = "seconds since 2008-09-09 00:00:00 UTC")))
+    val declared = Seq("nodes" -> Ingest.NodesSchema, "elements" -> Ingest.ElementsSchema,
+                       "series" -> Ingest.SeriesSchema, "times" -> Ingest.TimesSchema)
+    for (f <- Seq("cdf1", "cdf5", "hdf5")) {
+      Ingest.fort63ToParquet(spark, s"$dir/$f.nc", s"$dir/$f")
+      for ((table, schema) <- declared)
+        assert(spark.read.parquet(s"$dir/$f/$table").schema === schema, s"$f $table")
+    }
+  }
+
+  test("one failed ingest write is rethrown after every write has ended") {
+    val dir = Files.createTempDirectory("graft_ingest_fail").toString
+    writeFixture(s"$dir/full.nc")
+    val full = Files.readAllBytes(Paths.get(s"$dir/full.nc"))
+    // cut inside the last record's zeta: x, y, element and every time
+    // value stay readable, so only the series tasks fail
+    val nc = s"$dir/cut.nc"
+    Files.write(Paths.get(nc), java.util.Arrays.copyOf(full, full.length - (N / 2) * 8))
+    val out = s"$dir/out"
+    val e = intercept[Exception](Ingest.fort63ToParquet(spark, nc, out))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[java.io.EOFException]), s"not the series read's failure: $e")
+    org.apache.spark.TestBus.drain(spark.sparkContext)
+    assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty)
+    import scala.jdk.CollectionConverters._
+    assert(!Thread.getAllStackTraces.keySet.asScala
+      .exists(t => t.getName.startsWith("graft-ingest-") && t.isAlive))
+    // the other three writes ran to completion
+    assert(Ingest.nodes(spark, out).count() === N)
+    assert(Ingest.elements(spark, out).count() === M)
+    assert(Ingest.times(spark, out).count() === T)
+  }
+
   test("_FillValue mask→null: dry nodes become NULL, never the sentinel") {
     val dir = Files.createTempDirectory("graft_ingest_fill").toString
     val nc = s"$dir/fort63.nc"
