@@ -1,124 +1,79 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+
+/** A materialized fence: the leaf frame, its row count, and the fused
+  * Long and Double term sums (0 when no term was given). */
+final case class Fenced(df: DataFrame, rows: Long, sum: Long, sumD: Double)
 
 /** The engine's multi-consumer lineage fence (SURVEY §7: exchange reuse
   * dedupes shuffles, not per-row compute — a relation with 2+ consumers
   * must be materialized once or Catalyst replans its subtree per
   * consumer).
   *
-  * Two implementations, selectable per session via `spark.graft.fence`:
-  *  - `pin` (DEFAULT, r10): [[org.apache.spark.sql.GraftSqlShim
-  *    .pinMemory]] — MEMORY_ONLY materialization + a LogicalRDD leaf.
-  *    Chosen because localCheckpoint's forced MEMORY_AND_DISK level pays
-  *    an eager local-disk write whose cost swings with box state (the r9
-  *    driver bench recorded q_curate_dsir at 0.80 s and 5.84 s across
-  *    runs of the same binary; ScaleProbe `fencevar` measures the 5-run
-  *    spread of both modes — SCALE.md records the result).
-  *  - `local`: plain `localCheckpoint()` — kept selectable so the A/B
-  *    stays runnable forever.
+  * Every entry routes through the one materialization in
+  * [[org.apache.spark.sql.GraftSqlShim.materialize]], and each entry has
+  * one mode — no session switch selects between implementations:
+  *  - [[apply]] — the PIN: MEMORY_ONLY materialization + a LogicalRDD
+  *    leaf (r10; the localCheckpoint form's forced MEMORY_AND_DISK write
+  *    swung multi-consumer queries 0.8↔5.8 s with box state, SCALE.md
+  *    §Round-10). Truncates Catalyst lineage but not RDD lineage.
+  *  - [[cut]] — a local checkpoint: truncates RDD lineage too, for deep
+  *    loops (the FenceGateSpec deep-loop rule) and pins that must
+  *    survive eviction for a stream's lifetime.
+  *  - [[counted]] — either of the above, also returning what the
+  *    materialization job already computed: the row count and optional
+  *    fused term sums.
   * Both truncate Catalyst lineage to a leaf, so iterative callers
-  * (label propagation, k-means) keep O(1) plan depth per round either
-  * way. */
+  * (label propagation, k-means) keep O(1) plan depth per round. */
 object Fence {
   def apply(df: DataFrame): DataFrame =
-    df.sparkSession.conf.getOption("spark.graft.fence") match {
-      case Some("local") => org.apache.spark.sql.GraftSqlShim.localCheckpointCapped(df)
-      case _             => org.apache.spark.sql.GraftSqlShim.pinMemory(df)
-    }
+    org.apache.spark.sql.GraftSqlShim.materialize(df, checkpoint = false).df
 
   /** RDD-lineage CUT: the engine's one spelling of a raw
-    * `localCheckpoint` — for call sites that want checkpoint semantics
-    * REGARDLESS of the fence mode: sealing the survivor of an
-    * iterative loop before the superseded round pins are released
-    * (qDedupClusters' A/B branch), one-time static pins whose blocks
-    * must survive eviction pressure for a whole stream's lifetime
-    * (Streams' cell maps), and probe-input pins whose timing isolation
-    * must not vary with `spark.graft.fence` (ScaleProbe). FenceGateSpec
-    * greps main source so the checkpoint machinery stays behind this
-    * file + the shim (r10 verdict #2). Since r15 the implementation is
-    * [[org.apache.spark.sql.GraftSqlShim.localCheckpointCapped]] —
-    * Dataset.localCheckpoint's exact recipe with the leaf's carried
-    * statistics CAPPED at Long.MaxValue: the raw carry let a
-    * recursively-accumulated cut pipeline square its sizeInBytes per
-    * generation until ONE Catalyst stats pass burned 33 min of driver
-    * CPU in BigInteger multiplies (the r15 knnIngest probe finding). */
+    * `localCheckpoint` — for sealing the survivor of an iterative loop
+    * before the superseded round pins are released, deep loops whose
+    * round count is a graph property, and one-time static pins whose
+    * blocks must survive eviction pressure for a whole stream's
+    * lifetime (Streams' cell maps). FenceGateSpec greps main source so
+    * the checkpoint machinery stays behind this file + the shim (r10
+    * verdict #2). The leaf's carried statistics are exact (see the
+    * shim), never the origin plan's propagated estimate: the raw carry
+    * let a recursively-accumulated cut pipeline square its sizeInBytes
+    * per generation until ONE Catalyst stats pass burned 33 min of
+    * driver CPU in BigInteger multiplies (the r15 knnIngest finding). */
   def cut(df: DataFrame): DataFrame =
-    org.apache.spark.sql.GraftSqlShim.localCheckpointCapped(df)
+    org.apache.spark.sql.GraftSqlShim.materialize(df, checkpoint = true).df
 
-  /** [[cut]] that also RETURNS the materialized frame's row count (r16
-    * optimization, guide §1.2 — don't compute things twice): the fence's
-    * eager materialization already counts the RDD; loops whose
-    * convergence scalar is that count (BFS frontier sizes, trim
-    * cascades, peel rounds) read it here instead of paying one extra
-    * plan + job per round for a `count()` over the frame they just
-    * materialized. */
-  def cutCounted(df: DataFrame): (DataFrame, Long) =
-    org.apache.spark.sql.GraftSqlShim.localCheckpointCappedCounted(df)
+  /** [[cut]] (`cut = true`) or [[apply]] that also returns what the
+    * fence's one materialization job computed (guide §1.2 — don't
+    * compute things twice):
+    *  - `rows`: the row count — the convergence scalar of BFS frontiers,
+    *    trim cascades and peel rounds, which otherwise pay one extra
+    *    plan + job per round for a `count()`;
+    *  - `sum`: Σ `sum(row)`, a commutative Long term over the
+    *    materialized InternalRow read by ORDINAL (the caller owns the
+    *    layout) — sum-convergence loops (components, scc colors, the
+    *    pageRankRefresh L1 delta). Per-partition runJob RESULTS are
+    *    exactly-once under task retry, and Long addition wraps exactly
+    *    as SQL `sum` does, so the value is bit-equal to it;
+    *  - `sumD`: Σ `sumD(row)` folded in PARTITION-INDEX order —
+    *    deterministic for a deterministic plan but not bit-pinned to
+    *    the SQL sum's merge order, so only for bound-checked estimator
+    *    scalars (the HyperBall Σest), never hashed payload values.
+    * `delta = true` makes the leaf SIZE-ADAPTIVE (r17) — for the
+    * per-round delta cuts of the BFS family: a frame whose estimated
+    * size (rows × estimated row width) is at most 4 MB coalesces to
+    * ONE partition, so a k-level lazy union scans k small leaves, not
+    * k × parallelism near-empty partitions; a larger frame keeps its
+    * native partition count. */
+  def counted(df: DataFrame, cut: Boolean, delta: Boolean = false,
+              sum: InternalRow => Long = null,
+              sumD: InternalRow => Double = null): Fenced =
+    org.apache.spark.sql.GraftSqlShim.materialize(df, cut, delta, sum, sumD)
 
-  /** [[apply]] (mode-dispatched fence) that also returns the row count —
-    * the pin-mode counterpart of [[cutCounted]]. */
-  def applyCounted(df: DataFrame): (DataFrame, Long) =
-    df.sparkSession.conf.getOption("spark.graft.fence") match {
-      case Some("local") =>
-        org.apache.spark.sql.GraftSqlShim.localCheckpointCappedCounted(df)
-      case _ => org.apache.spark.sql.GraftSqlShim.pinMemoryCounted(df)
-    }
-
-  /** [[applyCounted]] that ALSO folds a commutative Long term sum into
-    * the fence's materialization job (r17, verdict #2 — per-round driver
-    * cost): sum-convergence loops (connected components, the scc color
-    * sweep, pageRankRefresh's L1 delta) paid one extra Catalyst plan +
-    * 2-stage aggregate job per round for a scalar that is a plain Long
-    * sum over the rows the fence was already streaming into cache. The
-    * per-partition sums come back as runJob RESULTS (exactly-once under
-    * task retry — one successful result per partition — unlike
-    * accumulator updates inside transformations, the r16 rejection), and
-    * Long addition is associative/commutative with identical wrap-on-
-    * overflow, so Σ term(row) is bit-equal to the SQL `sum(...)` it
-    * replaces. `term` reads the materialized frame's InternalRow by
-    * ORDINAL — the caller owns the column layout of the frame it fences.
-    * Returns (fenced frame, row count, Σ term). */
-  def applyCountedSum(df: DataFrame,
-                      term: org.apache.spark.sql.catalyst.InternalRow => Long):
-      (DataFrame, Long, Long) =
-    df.sparkSession.conf.getOption("spark.graft.fence") match {
-      case Some("local") =>
-        org.apache.spark.sql.GraftSqlShim.localCheckpointCappedCountedSum(df, term)
-      case _ => org.apache.spark.sql.GraftSqlShim.pinMemoryCountedSum(df, term)
-    }
-
-  /** [[cutCounted]] with a SIZE-ADAPTIVE leaf (r17, verdict #3) — for
-    * the per-round DELTA cuts of the BFS family (harmonic, diameter,
-    * scc extract, bowtie closures, betweenness layers): a delta leaf at
-    * the session's shuffle parallelism makes a k-level lazy union scan
-    * k × parallelism near-empty partitions per round (the r16 "delta-
-    * only measured SLOWER" failure mode); a delta whose estimated size
-    * (row count × estimated row width) is at most 4 MB now coalesces to
-    * ONE partition (a narrow view over the cached blocks — no shuffle,
-    * no recompute), while any larger delta keeps its native partition
-    * count, so the form stays correct at webgraph scale. */
-  def cutDeltaCounted(df: DataFrame): (DataFrame, Long) =
-    org.apache.spark.sql.GraftSqlShim.localCheckpointCappedCountedAdaptive(df)
-
-  /** [[cutCounted]] with the fused term sum — see [[applyCountedSum]]. */
-  def cutCountedSum(df: DataFrame,
-                    term: org.apache.spark.sql.catalyst.InternalRow => Long):
-      (DataFrame, Long, Long) =
-    org.apache.spark.sql.GraftSqlShim.localCheckpointCappedCountedSum(df, term)
-
-  /** [[cutCounted]] with a fused DOUBLE term sum — for bound-checked
-    * estimator scalars only (the HyperBall Σest rides the round cut's
-    * materialization job instead of a separate per-round plan + agg);
-    * per-partition partials fold in partition-index order, so the value
-    * is deterministic for a deterministic plan but NOT bit-pinned to the
-    * SQL sum's merge order — never use for hashed payload values. */
-  def cutCountedSumD(df: DataFrame,
-                     termD: org.apache.spark.sql.catalyst.InternalRow => Double):
-      (DataFrame, Long, Double) =
-    org.apache.spark.sql.GraftSqlShim.localCheckpointCappedCountedSumD(df, termD)
-
-  /** Unpersist a [[apply]]-fenced frame's pinned blocks once it is
+  /** Unpersist an [[apply]]-fenced frame's pinned blocks once it is
     * SUPERSEDED — the iterative-loop discipline (r10 advice): without
     * this, round r's pin keeps rounds 1..r-1's MEMORY_ONLY blocks
     * reachable and cache usage grows per round. Caller contract: pass
@@ -127,19 +82,13 @@ object Fence {
     * only after the superseding fence has materialized (apply is
     * eager) and it will not be read again; an eviction of the LIVE pin
     * then recomputes through the released round's plan — correct under
-    * [[org.apache.spark.sql.GraftSqlShim.pinMemory]]'s documented
-    * determinism assumption, just slower. Delegates unconditionally:
-    * releasePin's exact-MEMORY_ONLY storage-level match already makes
-    * it a no-op on a `local`-mode (localCheckpoint-backed,
-    * MEMORY_AND_DISK) frame, and matching on the LEVEL rather than the
-    * session conf stays correct when the conf is flipped between fence
-    * time and release time (ScaleProbe's fencevar A/B does exactly
-    * that). NOTE (r14 advice): on a [[cut]]-produced (localCheckpoint-
-    * backed, MEMORY_AND_DISK) frame this is a deliberate NO-OP — those
-    * blocks are the data, and dropping them by accident would be
-    * unrecoverable. A deep loop whose round frames ride [[cut]] must
-    * release superseded rounds with [[releaseCut]] or its checkpoint
-    * blocks accumulate for the whole walk. */
+    * the pin's documented determinism assumption, just slower. On a
+    * [[cut]]-produced (localCheckpoint-backed, MEMORY_AND_DISK) frame
+    * this is a deliberate NO-OP (r14 advice) — those blocks are the
+    * data, and dropping them by accident would be unrecoverable. A deep
+    * loop whose round frames ride [[cut]] must release superseded rounds
+    * with [[releaseCut]] or its checkpoint blocks accumulate for the
+    * whole walk. */
   def release(df: DataFrame): Unit =
     org.apache.spark.sql.GraftSqlShim.releasePin(df)
 

@@ -18,7 +18,6 @@ object ScaleProbe {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     if (args(0) == "dedup") dedupProbe(spark, args(1).toInt)
-    else if (args(0) == "clusters") clustersProbe(spark, args(1))
     else if (args(0) == "bigram") bigramProbe(spark, args(1).toInt)
     else if (args(0) == "kmeans") kmeansProbe(spark, args(1))
     else if (args(0) == "pipeline") pipelineProbe(spark, args(1))
@@ -34,7 +33,6 @@ object ScaleProbe {
       val secs = (System.nanoTime() - t0) / 1e9
       println(f"idw k=$k g=$g: ${k.toLong * k}%,d nodes x ${g.toLong * g}%,d cells -> $n%,d regridded in $secs%.1f s (${n / secs}%,.0f cells/s)")
     }
-    else if (args(0) == "fencevar") fencevarProbe(spark, args(1))
     else if (args(0) == "ppjoin") ppjoinProbe(spark, args(1))
     else if (args(0) == "ppjoinx") ppjoinGrowthProbe(spark, args(1).toInt)
     else if (args(0) == "dsir") dsirProbe(spark, args(1).toInt)
@@ -112,16 +110,16 @@ object ScaleProbe {
     else if (args(0) == "graph") graphProbe(spark, args(1).toInt)
     else if (args(0) == "graphops") graphopsProbe(spark, args(1).toInt)
     else if (args(0) == "graphmacro") {
-      // arg form: <millions>[:leg] — leg ∈ scc|bc|linkpred|recsql|mod|
-      // coreness|sssp|trim (default "all" = every leg except trim, which
-      // builds its own tendril topology); unknown legs are rejected, not
-      // silently mapped to the sssp tail (r12 advice)
+      // arg form: <millions>[:leg] — leg ∈ scc|bc|bcfunnel|linkpred|
+      // recsql|mod|coreness|sssp (default "all" = every leg but bcfunnel);
+      // unknown legs are rejected, not silently mapped to the sssp tail
+      // (r12 advice)
       val parts = args(1).split(":")
       val leg = if (parts.length > 1) parts(1) else "all"
       val legal = Set("all", "scc", "bc", "bcfunnel", "linkpred", "recsql",
                       "mod", "coreness", "sssp")
-      require(legal(leg) || leg.matches("trim\\d*"),
-        s"graphmacro: unknown leg '$leg' (expected one of ${legal.mkString("|")}|trim[N])")
+      require(legal(leg),
+        s"graphmacro: unknown leg '$leg' (expected one of ${legal.mkString("|")})")
       graphmacroProbe(spark, parts(0).toInt, leg)
     }
     else if (args(0) == "prrefresh") prRefreshProbe(spark, args(1).toInt)
@@ -143,25 +141,6 @@ object ScaleProbe {
       println(f"interp k=$k g=$g t=$t: $tris%,d triangles x $cells%,d cells x $t ts -> $n%,d rows in $secs%.1f s (naive pairs: ${tris * cells}%,d)")
     }
     spark.stop()
-  }
-
-  /** A/B the q_dedup_clusters per-round lineage fence: localCheckpoint vs
-    * persist(MEMORY_AND_DISK)+count (VERDICT r2 item 8). Five timed runs
-    * per mode after one warm-up; medians printed.
-    * Usage: tools/run_verify.sh clusters <sfDir> graft.ScaleProbe */
-  private def clustersProbe(spark: SparkSession, sfDir: String): Unit = {
-    def time(): Double = {
-      val t0 = System.nanoTime()
-      operators.Dedup.qDedupClusters(spark, sfDir).count()
-      (System.nanoTime() - t0) / 1e9
-    }
-    Seq("local", "persist").foreach { mode =>
-      spark.conf.set("spark.graft.clusters.fence", mode)
-      time() // warm-up
-      val runs = (1 to 5).map(_ => time()).sorted
-      println(f"clusters fence=$mode%-7s median=${runs(2)}%.2f s runs=${runs.map(r => f"$r%.2f").mkString(",")}")
-    }
-    spark.conf.unset("spark.graft.clusters.fence")
   }
 
   /** Streaming-dedup probe at crawl magnitude: [[graft.streaming
@@ -285,37 +264,6 @@ object ScaleProbe {
     val (c2, t2) = time(twoScan)
     println(f"selectk mult=$mult: $n%,d docs, 4 strata -> window $c1%,d in $t1%.1f s; " +
       f"two-scan $c2%,d in $t2%.1f s (${t1 / t2}%.1fx)")
-  }
-
-  /** Fence-variance probe (r9 verdict #1b): 5 timed runs of the two
-    * queries whose walls swung run-to-run in the r9 driver bench
-    * (q_curate_dsir 0.8↔5.8 s, q_dedup_clusters 1.6↔4.0 s), under each
-    * fence implementation — `pin` (Fence's MEMORY_ONLY pin, the r10
-    * default) vs `local` (localCheckpoint's MEMORY_AND_DISK with its
-    * eager disk write). Prints median AND min..max spread per mode —
-    * the spread is the number under test, not the median.
-    * Usage: tools/run_verify.sh fencevar <sfDir> graft.ScaleProbe */
-  private def fencevarProbe(spark: SparkSession, sfDir: String): Unit = {
-    def run(q: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      q(spark, sfDir).count()
-      (System.nanoTime() - t0) / 1e9
-    }
-    val targets = Seq(
-      "q_curate_dsir" -> (operators.TextOps.qCurateDsir _),
-      "q_dedup_clusters" -> (operators.Dedup.qDedupClusters _),
-      "q_dedup_ppjoin" -> (operators.Dedup.qDedupPpjoin _))
-    Seq("pin", "local").foreach { mode =>
-      spark.conf.set("spark.graft.fence", mode)
-      targets.foreach { case (name, q) =>
-        run(q) // warm-up
-        val runs = (1 to 5).map(_ => run(q)).sorted
-        println(f"fencevar $mode%-5s $name%-17s median=${runs(2)}%.2f s " +
-          f"spread=${runs.head}%.2f..${runs.last}%.2f (${runs.last / runs.head}%.1fx) " +
-          f"runs=${runs.map(r => f"$r%.2f").mkString(",")}")
-      }
-    }
-    spark.conf.unset("spark.graft.fence")
   }
 
   /** Bigram-LM scale probe: replicate the sf0.1 corpus `mult`× with a
@@ -753,56 +701,6 @@ object ScaleProbe {
       .select(col("src"),
         pmod(col("src") * lit(2654435761L) + col("k") * lit(40503L), lit(n)).as("dst"))
       .filter(col("src") =!= col("dst"))
-    if (leg.startsWith("trim")) {
-      // tendril-heavy topology (r12 verdict #3): a 100k-node expander
-      // core (strongly connected, small diameter) plus chains of length
-      // N (default 30, `trim100` = 100) feeding INTO it — the Broder
-      // IN-tendril shape. Trim must cascade chain-length rounds before
-      // the core is all that remains; the A/B measures the r12
-      // full-re-scan trim against the r13 degree cascade on the same
-      // graph. Deeper chains are where the re-scan's quadratic cost
-      // lives — each scan round re-distincts and re-semi-joins the
-      // WHOLE surviving edge relation, while a cascade round's joins
-      // are keyed on the (chain-count-sized) dead set.
-      val coreN = 100000L
-      val chainLen = if (leg == "trim") 30L else leg.stripPrefix("trim").toLong
-      val nChains = (n - coreN) / chainLen
-      val core = spark.range(0, coreN).toDF("i")
-        .select(col("i").as("src"),
-          explode(array(
-            pmod(col("i") + 1L, lit(coreN)),
-            pmod(col("i") * lit(2654435761L) + lit(40503L), lit(coreN)),
-            pmod(col("i") * lit(2654435761L) + lit(81006L), lit(coreN)))).as("dst"))
-        .filter(col("src") =!= col("dst"))
-      val chains = spark.range(coreN, coreN + nChains * chainLen).toDF("i")
-        .select(col("i").as("src"),
-          when(pmod(col("i") - coreN, lit(chainLen)) === chainLen - 1L,
-               pmod(col("i"), lit(coreN)))
-            .otherwise(col("i") + 1L).as("dst"))
-        .filter(col("src") =!= col("dst"))
-      val tEdges = core.union(chains)
-      // alternate modes, first pair = JVM/codegen warm-up (measured: a
-      // cold first leg swings ±50% — the bench_diff box-variance band),
-      // second pair = the reported A/B
-      Seq("scan", "cascade", "scan", "cascade").zipWithIndex.foreach {
-        case (mode, i) =>
-          spark.conf.set("spark.graft.scc.trim", mode)
-          val t0 = System.nanoTime()
-          var trimWall = 0.0; var trimRounds = 0
-          val labels = operators.Graph.scc(tEdges,
-            onRound = (phase, metric, secs) => {
-              if (phase == "trim") { trimWall += secs; trimRounds += 1 }
-              println(f"graphmacro trim[$mode/$i] $phase metric=$metric%,d wall=$secs%.1f s")
-            })
-          val nLab = labels.count()
-          val kind = if (i < 2) "warmup" else "timed"
-          println(f"graphmacro trim[$mode/$i $kind]: $n%,d nodes, $trimRounds " +
-            f"trim rounds sum=$trimWall%.1f s, " +
-            f"total=${(System.nanoTime() - t0) / 1e9}%.1f s, labels=$nLab%,d")
-      }
-      spark.conf.unset("spark.graft.scc.trim")
-      return
-    }
     if (leg == "all" || leg == "scc") {
       val t0 = System.nanoTime()
       val labels = operators.Graph.scc(edges,

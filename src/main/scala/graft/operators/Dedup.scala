@@ -696,8 +696,8 @@ object Dedup {
       .select((-(col("doc_id") + 1L)).as("doc_id"),
               concat_ws(" ", slice(split(col("text"), " "), 1, 20)).as("text"))
     // inv/pruned are multi-consumer but deliberately UNFENCED — the
-    // fence rule is MEASURED per site, not assumed: the A/B (TimeOne,
-    // sf0.1) ran 1.60 s unfenced vs 1.80 s with both fenced. Here
+    // fence rule is MEASURED per site, not assumed: a same-JVM A/B at
+    // sf0.1 ran 1.60 s unfenced vs 1.80 s with both fenced. Here
     // ReuseExchange and the cheap per-consumer re-explode undercut the
     // cost of materializing two ~1e6-row pins; dsir/ppjoin went the
     // other way because their shared subtrees carry md5/token work that

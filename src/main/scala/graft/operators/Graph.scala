@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Fenced, Tables}
 
 /** Graph operators over edge lists — the link-analysis family a
   * crawl-scale training-data pipeline runs on its host/domain webgraph.
@@ -29,7 +29,7 @@ object Graph {
 
   /** DELTA-LEVEL accumulator for the frontier-BFS family (r17, verdict
     * #3 — completing the r16 negative result): each round cuts ONLY its
-    * first-discovery delta ([[graft.Fence.cutDeltaCounted]] —
+    * first-discovery delta (a `delta` [[graft.Fence.counted]] cut —
     * size-adaptive leaf, so a union of levels scans k small leaves, not
     * k × parallelism near-empty partitions), the frontier IS the newest
     * level leaf, and the visited check anti-joins the lazy union of
@@ -66,7 +66,7 @@ object Graph {
       // compacted cut would make the loop re-expand the whole visited
       // set, correct but O(|R|) work per round).
       if (live.size >= maxLive) {
-        val compacted = graft.Fence.cutDeltaCounted(all)._1
+        val compacted = graft.Fence.counted(all, cut = true, delta = true).df
         live.filter(releasable).foreach(graft.Fence.releaseCut)
         live.clear()
         live += compacted
@@ -150,14 +150,14 @@ object Graph {
     val allNodes = edges.select(col("src").as("node"))
       .union(edges.select(col("dst").as("node")))
       .distinct()
-    // (nodes pin + bounded n scalar: see applyCounted below)
-    val (nodes, n) = graft.Fence.applyCounted(seeds match {
+    // (nodes pin + bounded n scalar: the fence materialization's count)
+    val Fenced(nodes, n, _, _) = graft.Fence.counted(seeds match {
       case None => allNodes.withColumn("s", lit(1L))
       case Some(sd) => allNodes.join(
           sd.select(col("node"), lit(1L).as("s")).distinct(),
           Seq("node"), "left")
         .select(col("node"), coalesce(col("s"), lit(0L)).as("s"))
-    }) // the fence materialization doubles as the bounded n scalar
+    }, cut = false) // the fence materialization doubles as the bounded n scalar
     require(n > 0, "pageRank: empty graph")
     // teleport support size: |seeds ∩ graph| (== n when uniform)
     val nT = if (seeds.isEmpty) n
@@ -269,9 +269,9 @@ object Graph {
                       tolPpm: Long = 100L, maxRounds: Int = 50,
                       dampNum: Long = 85L,
                       scale: Long = 1000000000000L): (DataFrame, Int) = {
-    val (nodes, n) = graft.Fence.applyCounted(
+    val Fenced(nodes, n, _, _) = graft.Fence.counted(
       edges.select(col("src").as("node"))
-        .union(edges.select(col("dst").as("node"))).distinct())
+        .union(edges.select(col("dst").as("node"))).distinct(), cut = false)
     require(n > 0, "pageRankRefresh: empty graph")
     val weighted = edges.columns.contains("w")
     val ew = if (weighted) edges else edges.withColumn("w", lit(1L))
@@ -309,12 +309,12 @@ object Graph {
       // paid a second r⋈prevR join (its own plan + job) per round just
       // to recompute a pairing the update join already had in hand.
       // r17 (verdict #2): the L1 movement Σ|rank − rank0| rides the
-      // fence's own materialization job ([[graft.Fence.applyCountedSum]]
+      // fence's own materialization job ([[graft.Fence.counted]]'s `sum`
       // — a commutative Long sum over the round frame's (node, dgl,
       // rank, rank0) rows, ordinals 2/3), removing the separate agg
       // plan + job the loop ran per round. rank and rank0 are non-null
       // by construction (coalesce in the update; prevR ranks non-null).
-      val rs = graft.Fence.applyCountedSum(
+      val rs = graft.Fence.counted(
         prevR.select(col("node"), col("dgl"), col("rank").as("rank0"))
           .join(in.withColumnRenamed("dst", "node"), Seq("node"), "left")
           .crossJoin(broadcast(dm1))
@@ -323,9 +323,9 @@ object Graph {
               expr(s"($dampNum * (coalesce(m, 0L) + dm DIV ${n}L)) DIV 100"))
               .as("rank"),
             col("rank0")),
-        row => math.abs(row.getLong(2) - row.getLong(3)))
-      r = rs._1
-      delta = rs._3
+        cut = false, sum = row => math.abs(row.getLong(2) - row.getLong(3)))
+      r = rs.df
+      delta = rs.sum
       graft.Fence.release(prevR)
       rounds += 1
     }
@@ -712,8 +712,8 @@ object Graph {
       edges.select(col("src").as("a"), col("dst").as("b"))
         .union(edges.select(col("dst").as("a"), col("src").as("b")))
         .filter(col("a") =!= col("b")).distinct())
-    val (nodes, nNodes) = graft.Fence.applyCounted(
-      und.select(col("a").as("node")).distinct())
+    val Fenced(nodes, nNodes, _, _) = graft.Fence.counted(
+      und.select(col("a").as("node")).distinct(), cut = false)
     def coreDeg(alive: DataFrame): DataFrame = und
       .join(alive.select(col("node").as("a")), Seq("a"), "left_semi")
       .join(alive.select(col("node").as("b")), Seq("b"), "left_semi")
@@ -730,8 +730,8 @@ object Graph {
       // FenceGateSpec deep-loop rule applies (pin lineage depth grows
       // per round; cut stays constant). The alive frame is one bare
       // column, so the checkpoint write is trivially cheap.
-      val (a2, n2) = graft.Fence.cutCounted(
-        coreDeg(prev).filter(col("deg_core") >= k).select("node"))
+      val Fenced(a2, n2, _, _) = graft.Fence.counted(
+        coreDeg(prev).filter(col("deg_core") >= k).select("node"), cut = true)
       alive = a2
       if (!(prev eq nodes)) graft.Fence.release(prev)
       prevN = curN
@@ -858,7 +858,7 @@ object Graph {
     // R: (src, v, d) = d(src -> v) exact BFS distance, d <= depth.
     // r17 DELTA-ONLY accumulation (verdict #3, completing the r16
     // negative result): each round cuts ONLY its first-discovery delta
-    // ([[graft.Fence.cutDeltaCounted]] — size-adaptive leaf, so the
+    // (a `delta` [[graft.Fence.counted]] cut — size-adaptive leaf, so the
     // k-level union scans k small leaves, not k × parallelism empty
     // partitions, which is what made the r16 b2 attempt slower). The
     // frontier IS the newest level leaf (no filter), the visited check
@@ -870,15 +870,15 @@ object Graph {
     // compaction — plan size stays O(maxLive), the unbounded-leaves
     // form grew pure optimizer time with depth).
     val acc = new DeltaAcc(
-      graft.Fence.cutDeltaCounted(nodes.select(col("node").as("src"),
-                                               col("node").as("v"), lit(0).as("d")))._1)
+      graft.Fence.counted(nodes.select(col("node").as("src"),
+        col("node").as("v"), lit(0).as("d")), cut = true, delta = true).df)
     (1 to depth).foreach { d =>
       val next = acc.frontier.join(e.withColumnRenamed("src", "v"), "v")
         .select(col("src"), col("dst").as("v"))
         .distinct()
         .join(acc.seen("src", "v"), Seq("src", "v"), "left_anti")
         .withColumn("d", lit(d))
-      acc.add(graft.Fence.cutDeltaCounted(next)._1)
+      acc.add(graft.Fence.counted(next, cut = true, delta = true).df)
     }
     val out = acc.all.filter(col("d") > 0)
       .groupBy(col("v").as("node"))
@@ -916,45 +916,24 @@ object Graph {
     * localCheckpoint 1.97 s vs bare persist(MEMORY_AND_DISK)+count
     * 6.84 s at sf0.1 — persist alone does NOT truncate lineage, so every
     * round re-analyzes a plan that grew by one join+agg; the 3.5× gap is
-    * driver-side plan work. r10 moved the default to [[graft.Fence]]'s
+    * driver-side plan work. r10 moved the fence to [[graft.Fence]]'s
     * memory pin (truncates lineage like localCheckpoint, skips the eager
     * MEMORY_AND_DISK write whose cost swung this query 1.6↔4.0 s with
-    * box state). Both modes stay selectable
-    * (spark.graft.clusters.fence=persist, spark.graft.fence=local) so
-    * the A/Bs remain runnable. Release discipline (r11 advice): each
-    * round's fence supersedes the previous round's and is released as
-    * soon as the new fence materializes — cache usage is O(1) in the
-    * round count in both modes. */
+    * box state). Release discipline (r11 advice): each round's fence
+    * supersedes the previous round's and is released as soon as the new
+    * fence materializes — cache usage is O(1) in the round count. */
   def connectedComponents(pairs: DataFrame): DataFrame = {
-    val s = pairs.sparkSession
-    val usePersist =
-      s.conf.getOption("spark.graft.clusters.fence").contains("persist")
-    def fence(df: DataFrame): DataFrame =
-      if (!usePersist) graft.Fence(df)
-      else {
-        df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        df.count() // materialize now, while the previous round is still cached
-        df
-      }
-    def release(df: DataFrame): Unit =
-      if (!usePersist) graft.Fence.release(df) else { df.unpersist(false); () }
     // r17 (verdict #2, per-round driver cost): the Σlbl convergence
     // scalar rides the fence's own materialization job (a commutative
     // Long sum over the (v, lbl) rows the fence already streams into
-    // cache — [[graft.Fence.applyCountedSum]]), removing the separate
-    // agg plan + 2-stage job the loop used to run per round. The persist
-    // A/B branch keeps the two-action shape: it exists to time fence
-    // implementations against each other, not to win the bench.
-    def fenceSum(df: DataFrame): (DataFrame, Long) =
-      if (!usePersist) {
-        val (f, _, sm) = graft.Fence.applyCountedSum(df, _.getLong(1))
-        (f, sm)
-      } else {
-        val f = fence(df)
-        (f, f.agg(sum("lbl")).head().getLong(0))
-      }
-    val p = fence(pairs.select(col("src"), col("dst")))
-    val sym = fence(p.union(p.select(col("dst").as("src"), col("src").as("dst"))))
+    // cache — [[graft.Fence.counted]]'s `sum`), removing the separate
+    // agg plan + 2-stage job the loop used to run per round.
+    def fenceSum(df: DataFrame): (DataFrame, Long) = {
+      val f = graft.Fence.counted(df, cut = false, sum = _.getLong(1))
+      (f.df, f.sum)
+    }
+    val p = graft.Fence(pairs.select(col("src"), col("dst")))
+    val sym = graft.Fence(p.union(p.select(col("dst").as("src"), col("src").as("dst"))))
     var (labels, curSum) = fenceSum(sym.select(col("src").as("v")).distinct()
       .withColumn("lbl", col("v")))
     var prevSum = Long.MaxValue
@@ -967,14 +946,14 @@ object Graph {
         .select(col("v"),
                 least(col("lbl"), coalesce(col("nlbl"), col("lbl"))).as("lbl")))
       labels = l2
-      release(prev) // the new fence is materialized; round r-1 is superseded
+      graft.Fence.release(prev) // the new fence is materialized; round r-1 is superseded
       prevSum = curSum
       curSum = s2
     }
     // Seal the SURVIVOR with a real lineage cut, then release everything
     // the loop pinned.
     val keep = graft.Fence.cut(labels)
-    release(labels); release(sym); release(p)
+    graft.Fence.release(labels); graft.Fence.release(sym); graft.Fence.release(p)
     keep
   }
 
@@ -1134,16 +1113,16 @@ object Graph {
       val t0 = System.nanoTime()
       val prevR = r
       // r17 (verdict #2/#6 profile): the global Σest scalar rides the
-      // round cut's own materialization job ([[graft.Fence.cutCountedSumD]]
+      // round cut's own materialization job ([[graft.Fence.counted]]'s `sumD`
       // — estimate(reg) over the (node, reg) rows the cut already
       // streams, reg at ordinal 1) instead of a separate per-round
       // estimates plan + aggregate job. Bound-checked scalar only —
       // the hashed payload is the exact form's.
-      val rc = graft.Fence.cutCountedSumD(hllPropagate(e, prevR),
-        row => graft.functions.Hll.estimate(row.getBinary(1)))
-      r = rc._1 // the deep-loop cut rule
+      val rc = graft.Fence.counted(hllPropagate(e, prevR), cut = true,
+        sumD = row => graft.functions.Hll.estimate(row.getBinary(1)))
+      r = rc.df // the deep-loop cut rule
       graft.Fence.releaseCut(prevR) // cut-backed: plain release would leave the blocks (r14 advice)
-      totals += rc._3
+      totals += rc.sumD
       onRound(d, (System.nanoTime() - t0) / 1e9)
     }
     graft.Fence.releaseCut(r); graft.Fence.release(e)
@@ -1216,8 +1195,8 @@ object Graph {
     *     tendril chain (real webgraphs: Broder's IN/OUT tendrils) costs
     *     O(chain length) broadcast joins, not chain-length full
     *     endpoint re-scans; eA/active shrink once at the fixpoint.
-    *     The r12 re-scan form stays selectable
-    *     (spark.graft.scc.trim=scan) for the graphmacro `trim` A/B.
+    *     (The r12 form re-scanned both endpoint sets per round; the
+    *     cascade measured 0.66–0.70× of its wall, SCALE.md §Round-13.)
     *  2. COLOR to fixpoint: clr(v) = max(v, clr of in-neighbors) — at
     *     convergence clr(v) is the maximum active node that reaches v.
     *     Σclr is monotone increasing, so convergence is one scalar
@@ -1255,139 +1234,109 @@ object Graph {
     // projections over their level leaves, so they are closed only after
     // the final label fence materializes (r17 delta-only extract)
     val extractAccs = scala.collection.mutable.ArrayBuffer.empty[DeltaAcc]
-    // trim mode: "cascade" (default, r13) maintains per-node in/out
-    // degrees incrementally — each round's work is keyed on the DEAD set
-    // (broadcast-size joins against eA, no endpoint re-scan) — vs "scan"
-    // (the r12 form: two distinct endpoint sets + two semi-joins + a
-    // full eA shrink PER ROUND, quadratic on deep tendril chains; kept
-    // selectable for the graphmacro `trim` A/B, the clusters.fence
-    // precedent). Same fixpoint — a node dies iff its active in- or
-    // out-degree is 0 — so labels are identical (GraphSpec's scalacheck
-    // closure property pins it in both modes).
-    val scanTrim = edges.sparkSession.conf
-      .getOption("spark.graft.scc.trim").contains("scan")
     while (nActive > 0) {
       // ---- 1. trim singleton SCCs (missing in- or out-edges) ----
-      if (scanTrim) {
-        var trimming = true
-        while (trimming && nActive > 0) {
-          val t0 = System.nanoTime()
-          val (both, n2) = graft.Fence.cutCounted(active
-            .join(eA.select(col("src").as("node")).distinct(), Seq("node"), "left_semi")
-            .join(eA.select(col("dst").as("node")).distinct(), Seq("node"), "left_semi"))
-          if (n2 == nActive) trimming = false
-          else {
-            active = both
-            eA = graft.Fence.cut(eA
-              .join(active.select(col("node").as("src")), Seq("src"), "left_semi")
-              .join(active.select(col("node").as("dst")), Seq("dst"), "left_semi"))
-            nActive = n2
-          }
-          onRound("trim", nActive, (System.nanoTime() - t0) / 1e9)
-        }
-      } else {
-        // degree cascade: one degree build per outer round, then each
-        // cascade round touches eA only through joins against the dead
-        // set (AQE broadcasts it); eA and active shrink ONCE, after the
-        // fixpoint, not per round
-        var dc = graft.Fence.cutCounted(active
-          .join(eA.groupBy(col("src").as("node")).agg(count(lit(1)).as("od")),
-                Seq("node"), "left")
-          .join(eA.groupBy(col("dst").as("node")).agg(count(lit(1)).as("id")),
-                Seq("node"), "left")
+      // degree cascade: one degree build per outer round, then each
+      // cascade round touches eA only through joins against the dead
+      // set (AQE broadcasts it); eA and active shrink ONCE, after the
+      // fixpoint, not per round
+      var dc = graft.Fence.counted(active
+        .join(eA.groupBy(col("src").as("node")).agg(count(lit(1)).as("od")),
+              Seq("node"), "left")
+        .join(eA.groupBy(col("dst").as("node")).agg(count(lit(1)).as("id")),
+              Seq("node"), "left")
+        .select(col("node"),
+          coalesce(col("od"), lit(0L)).as("od"),
+          coalesce(col("id"), lit(0L)).as("id")), cut = true)
+      var degs = dc.df
+      var nDegs = dc.rows
+      var trimming = true
+      var anyDead = false
+      var estAlive = nActive
+      // every cascade round probes eA in full (no index to exploit —
+      // a broadcast join still scans the probe side), so re-shrink eA
+      // to the survivors each time the alive set loses another 25%:
+      // O(log) amortized shrinks instead of the r12 form's per-round
+      // shrink or no shrink at all (measured on the 5M tendril probe:
+      // never-shrink 72 s, per-round scan 112 s)
+      var lastShrink = nActive
+      while (trimming) {
+        val t0 = System.nanoTime()
+        // r16: the dead set is a lazy filter over the counted degs
+        // leaf and the round's ONE fence (the updated degs) carries
+        // the termination scalar as its count delta — the old round
+        // cut AND counted the dead set separately (2 fences/round)
+        val dead = degs.filter(col("od") === 0L || col("id") === 0L)
+          .select("node")
+        // an edge decrements the OPPOSITE endpoint's degree exactly
+        // once: the round its endpoint dies (dead sets are disjoint
+        // across rounds, eA is never rescanned in full)
+        val decOut = eA.join(dead.withColumnRenamed("node", "dst"), "dst")
+          .groupBy(col("src").as("node")).agg(count(lit(1)).as("dec_o"))
+        val decIn = eA.join(dead.withColumnRenamed("node", "src"), "src")
+          .groupBy(col("dst").as("node")).agg(count(lit(1)).as("dec_i"))
+        val prevDegs = degs
+        val nPrev = nDegs
+        dc = graft.Fence.counted(prevDegs
+          .join(dead, Seq("node"), "left_anti")
+          .join(decOut, Seq("node"), "left")
+          .join(decIn, Seq("node"), "left")
           .select(col("node"),
-            coalesce(col("od"), lit(0L)).as("od"),
-            coalesce(col("id"), lit(0L)).as("id")))
-        var degs = dc._1
-        var nDegs = dc._2
-        var trimming = true
-        var anyDead = false
-        var estAlive = nActive
-        // every cascade round probes eA in full (no index to exploit —
-        // a broadcast join still scans the probe side), so re-shrink eA
-        // to the survivors each time the alive set loses another 25%:
-        // O(log) amortized shrinks instead of the scan mode's per-round
-        // shrink or no shrink at all (measured on the 5M tendril probe:
-        // never-shrink 72 s, per-round scan 112 s)
-        var lastShrink = nActive
-        while (trimming) {
-          val t0 = System.nanoTime()
-          // r16: the dead set is a lazy filter over the counted degs
-          // leaf and the round's ONE fence (the updated degs) carries
-          // the termination scalar as its count delta — the old round
-          // cut AND counted the dead set separately (2 fences/round)
-          val dead = degs.filter(col("od") === 0L || col("id") === 0L)
-            .select("node")
-          // an edge decrements the OPPOSITE endpoint's degree exactly
-          // once: the round its endpoint dies (dead sets are disjoint
-          // across rounds, eA is never rescanned in full)
-          val decOut = eA.join(dead.withColumnRenamed("node", "dst"), "dst")
-            .groupBy(col("src").as("node")).agg(count(lit(1)).as("dec_o"))
-          val decIn = eA.join(dead.withColumnRenamed("node", "src"), "src")
-            .groupBy(col("dst").as("node")).agg(count(lit(1)).as("dec_i"))
-          val prevDegs = degs
-          val nPrev = nDegs
-          dc = graft.Fence.cutCounted(prevDegs
-            .join(dead, Seq("node"), "left_anti")
-            .join(decOut, Seq("node"), "left")
-            .join(decIn, Seq("node"), "left")
-            .select(col("node"),
-              (col("od") - coalesce(col("dec_o"), lit(0L))).as("od"),
-              (col("id") - coalesce(col("dec_i"), lit(0L))).as("id")))
-          degs = dc._1; nDegs = dc._2
-          graft.Fence.release(prevDegs)
-          if (nPrev == nDegs) trimming = false
-          else {
-            anyDead = true
-            estAlive = nDegs
-            if (estAlive * 4L <= lastShrink * 3L) {
-              val alive = degs.select("node")
-              val prevEA = eA
-              eA = graft.Fence.cut(prevEA
-                .join(alive.withColumnRenamed("node", "src"), Seq("src"), "left_semi")
-                .join(alive.withColumnRenamed("node", "dst"), Seq("dst"), "left_semi"))
-              graft.Fence.release(prevEA)
-              lastShrink = estAlive
-            }
+            (col("od") - coalesce(col("dec_o"), lit(0L))).as("od"),
+            (col("id") - coalesce(col("dec_i"), lit(0L))).as("id")), cut = true)
+        degs = dc.df; nDegs = dc.rows
+        graft.Fence.release(prevDegs)
+        if (nPrev == nDegs) trimming = false
+        else {
+          anyDead = true
+          estAlive = nDegs
+          if (estAlive * 4L <= lastShrink * 3L) {
+            val alive = degs.select("node")
+            val prevEA = eA
+            eA = graft.Fence.cut(prevEA
+              .join(alive.withColumnRenamed("node", "src"), Seq("src"), "left_semi")
+              .join(alive.withColumnRenamed("node", "dst"), Seq("dst"), "left_semi"))
+            graft.Fence.release(prevEA)
+            lastShrink = estAlive
           }
-          onRound("trim", estAlive, (System.nanoTime() - t0) / 1e9)
         }
-        if (anyDead) {
-          val (a2, nA2) = graft.Fence.cutCounted(degs.select("node"))
-          active = a2
-          eA = graft.Fence.cut(eA
-            .join(active.select(col("node").as("src")), Seq("src"), "left_semi")
-            .join(active.select(col("node").as("dst")), Seq("dst"), "left_semi"))
-          nActive = nA2
-        }
-        graft.Fence.release(degs)
+        onRound("trim", estAlive, (System.nanoTime() - t0) / 1e9)
       }
+      if (anyDead) {
+        val Fenced(a2, nA2, _, _) = graft.Fence.counted(degs.select("node"), cut = true)
+        active = a2
+        eA = graft.Fence.cut(eA
+          .join(active.select(col("node").as("src")), Seq("src"), "left_semi")
+          .join(active.select(col("node").as("dst")), Seq("dst"), "left_semi"))
+        nActive = nA2
+      }
+      graft.Fence.release(degs)
       if (nActive > 0) {
         // ---- 2. forward max-color propagation to fixpoint ----
         // r17 (verdict #2): the Σclr convergence scalar rides the round
-        // cut's own materialization job ([[graft.Fence.cutCountedSum]])
+        // cut's own materialization job ([[graft.Fence.counted]]'s `sum`)
         // — one plan + one job per round instead of two; superseded
         // color cuts are now released (the r14 deep-loop discipline —
         // the old loop let checkpoint blocks accumulate per round).
-        var cs = graft.Fence.cutCountedSum(
-          active.withColumn("clr", col("node")), _.getLong(1))
-        var colors = cs._1
+        var cs = graft.Fence.counted(
+          active.withColumn("clr", col("node")), cut = true, sum = _.getLong(1))
+        var colors = cs.df
         var prevSum = -1L
-        var curSum = cs._3
+        var curSum = cs.sum
         while (curSum != prevSum) {
           val t0 = System.nanoTime()
           val prop = eA.join(colors.withColumnRenamed("node", "src"), "src")
             .groupBy(col("dst").as("node")).agg(max(col("clr")).as("nclr"))
           val prevC = colors
-          cs = graft.Fence.cutCountedSum(
+          cs = graft.Fence.counted(
             colors.join(prop, Seq("node"), "left")
               .select(col("node"),
                 greatest(col("clr"), coalesce(col("nclr"), col("clr"))).as("clr")),
-            _.getLong(1))
-          colors = cs._1
+            cut = true, sum = _.getLong(1))
+          colors = cs.df
           graft.Fence.releaseCut(prevC)
           prevSum = curSum
-          curSum = cs._3
+          curSum = cs.sum
           onRound("color", curSum, (System.nanoTime() - t0) / 1e9)
         }
         // ---- 3. multi-source backward BFS within each root's color ----
@@ -1396,10 +1345,11 @@ object Graph {
         // = newest level leaf, visited check = anti-join per level, no
         // O(|R|) reached-relation rewrite; the delta cut's own count is
         // the convergence scalar (empty delta ⇔ done).
-        var rc = graft.Fence.cutDeltaCounted(
-          colors.filter(col("clr") === col("node")).select("node", "clr"))
-        val acc = new DeltaAcc(rc._1)
-        var nDelta = rc._2 // >= 1: the max active node is a root
+        var rc = graft.Fence.counted(
+          colors.filter(col("clr") === col("node")).select("node", "clr"),
+          cut = true, delta = true)
+        val acc = new DeltaAcc(rc.df)
+        var nDelta = rc.rows // >= 1: the max active node is a root
         while (nDelta > 0) {
           val t0 = System.nanoTime()
           val cand = eA
@@ -1408,8 +1358,8 @@ object Graph {
           val next = cand
             .join(colors, Seq("node", "clr"), "left_semi")
             .join(acc.seen("node"), Seq("node"), "left_anti")
-          rc = graft.Fence.cutDeltaCounted(next)
-          acc.add(rc._1); nDelta = rc._2
+          rc = graft.Fence.counted(next, cut = true, delta = true)
+          acc.add(rc.df); nDelta = rc.rows
           onRound("extract", nDelta, (System.nanoTime() - t0) / 1e9)
         }
         val reached = acc.all
@@ -1422,8 +1372,8 @@ object Graph {
         extractAccs += acc
         graft.Fence.releaseCut(colors)
         // ---- 4. peel the extracted components off ----
-        val (a3, nA3) = graft.Fence.cutCounted(
-          active.join(reached.select("node"), Seq("node"), "left_anti"))
+        val Fenced(a3, nA3, _, _) = graft.Fence.counted(
+          active.join(reached.select("node"), Seq("node"), "left_anti"), cut = true)
         active = a3
         eA = graft.Fence.cut(eA
           .join(active.select(col("node").as("src")), Seq("src"), "left_semi")
@@ -1480,8 +1430,8 @@ object Graph {
     val e = graft.Fence(edges)
     // counted cut (r16): the fence materialization IS the frontier-size
     // read — no per-round recount job
-    val (coreSet, nCore) = graft.Fence.cutCounted(
-      labels.filter(col("scc") === core).select("node"))
+    val Fenced(coreSet, nCore, _, _) = graft.Fence.counted(
+      labels.filter(col("scc") === core).select("node"), cut = true)
     // frontier BFS over node sets; direction = which edge end we follow.
     // r17 DELTA-ONLY accumulation — see the [[harmonic]] note (verdict
     // #3): one size-adaptive delta cut per round, frontier = newest
@@ -1499,8 +1449,8 @@ object Graph {
         val nxt = e.join(acc.frontier.withColumnRenamed("node", from), from)
           .select(col(follow).as("node")).distinct()
           .join(acc.seen("node"), Seq("node"), "left_anti")
-        val sc = graft.Fence.cutDeltaCounted(nxt)
-        acc.add(sc._1); nDelta = sc._2
+        val sc = graft.Fence.counted(nxt, cut = true, delta = true)
+        acc.add(sc.df); nDelta = sc.rows
       }
       acc
     }
@@ -1713,12 +1663,13 @@ object Graph {
     // whole accumulated (s, v, d, sig) relation every round (see the
     // [[harmonic]] note) — and the backward phase reads each layer's
     // OWN fence directly instead of filtering the accumulation by depth.
-    // (r17: delta cuts are size-adaptive — [[graft.Fence.cutDeltaCounted]]
-    // — so the k-level seen union scans k small leaves, not
+    // (r17: delta cuts are size-adaptive — `delta` [[graft.Fence.counted]]
+    // cuts — so the k-level seen union scans k small leaves, not
     // k × parallelism near-empty partitions)
     val levels = scala.collection.mutable.ArrayBuffer(
-      graft.Fence.cutDeltaCounted(seeds.select(col("node").as("s")).distinct()
-        .select(col("s"), col("s").as("v"), lit(0).as("d"), lit(1L).as("sig")))._1)
+      graft.Fence.counted(seeds.select(col("node").as("s")).distinct()
+        .select(col("s"), col("s").as("v"), lit(0).as("d"), lit(1L).as("sig")),
+        cut = true, delta = true).df)
     var frontier = levels.head
     (1 to depth).foreach { dd =>
       val seen = levels.reduce(_ union _)
@@ -1728,12 +1679,12 @@ object Graph {
         .agg(sum(col("sig")).as("sig"))
         .join(seen.select("s", "v"), Seq("s", "v"), "left_anti")
         .select(col("s"), col("v"), lit(dd).as("d"), col("sig"))
-      frontier = graft.Fence.cutDeltaCounted(next)._1
+      frontier = graft.Fence.counted(next, cut = true, delta = true).df
       levels += frontier
     }
     // backward: δ per layer, deepest first; layer `depth` seeds δ = 0
-    var deltaUp = graft.Fence.cutDeltaCounted(levels(depth)
-      .select(col("s"), col("v"), col("sig"), lit(0L).as("dfp")))._1
+    var deltaUp = graft.Fence.counted(levels(depth)
+      .select(col("s"), col("v"), col("sig"), lit(0L).as("dfp")), cut = true, delta = true).df
     val layers = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     ((depth - 1) to 0 by -1).foreach { dd =>
       val contrib = e
@@ -1741,7 +1692,7 @@ object Graph {
           col("sig").as("sigw"), col("dfp").as("dfpw")), "dst")
         .select(col("s"), col("src").as("v"),
           col("sigw"), col("dfpw"))
-      val layer = graft.Fence.cutDeltaCounted(
+      val layer = graft.Fence.counted(
         levels(dd).select(col("s"), col("v"), col("sig"))
           .join(contrib, Seq("s", "v"), "left")
           .groupBy(col("s"), col("v"), col("sig"))
@@ -1753,7 +1704,7 @@ object Graph {
           // loudly in the SUM under ANSI rather than wrapping.
           .agg(coalesce(sum(
             expr(s"CAST((CAST(sig AS DECIMAL(38,0)) * ($scale + dfpw)) DIV sigw AS BIGINT)")),
-            lit(0L)).as("dfp")))._1
+            lit(0L)).as("dfp")), cut = true, delta = true).df
       layers += layer
       graft.Fence.release(deltaUp)
       deltaUp = layer
@@ -1882,15 +1833,15 @@ object Graph {
     // bounded union of level leaves, no O(|R|) accumulated-relation
     // rewrite per round.
     val acc = new DeltaAcc(
-      graft.Fence.cutDeltaCounted(nodes.select(col("node").as("src"),
-                                               col("node").as("v"), lit(0).as("d")))._1)
+      graft.Fence.counted(nodes.select(col("node").as("src"),
+        col("node").as("v"), lit(0).as("d")), cut = true, delta = true).df)
     (1 to depth).foreach { dd =>
       val next = acc.frontier.join(e.withColumnRenamed("src", "v"), "v")
         .select(col("src"), col("dst").as("v"))
         .distinct()
         .join(acc.seen("src", "v"), Seq("src", "v"), "left_anti")
         .withColumn("d", lit(dd))
-      acc.add(graft.Fence.cutDeltaCounted(next)._1)
+      acc.add(graft.Fence.counted(next, cut = true, delta = true).df)
     }
     val dist = acc.all.filter(col("d") > 0)
       .groupBy(col("d").cast("long").as("d"))
@@ -1960,8 +1911,8 @@ object Graph {
       edges.select(col("src").as("a"), col("dst").as("b"))
         .union(edges.select(col("dst").as("a"), col("src").as("b")))
         .filter(col("a") =!= col("b")).distinct())
-    val (nodes, nNodes) = graft.Fence.applyCounted(
-      und.select(col("a").as("node")).distinct())
+    val Fenced(nodes, nNodes, _, _) = graft.Fence.counted(
+      und.select(col("a").as("node")).distinct(), cut = false)
     def coreDeg(alive: DataFrame): DataFrame = und
       .join(alive.select(col("node").as("a")), Seq("a"), "left_semi")
       .join(alive.select(col("node").as("b")), Seq("b"), "left_semi")
@@ -1974,8 +1925,8 @@ object Graph {
       val atEntry = alive
       var prevN = -1L
       while (nAlive != prevN && nAlive > 0) {
-        val (next, nNext) = graft.Fence.cutCounted(
-          coreDeg(alive).filter(col("dc") >= k).select("node"))
+        val Fenced(next, nNext, _, _) = graft.Fence.counted(
+          coreDeg(alive).filter(col("dc") >= k).select("node"), cut = true)
         prevN = nAlive
         alive = next
         nAlive = nNext

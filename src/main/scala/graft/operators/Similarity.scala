@@ -510,7 +510,7 @@ object Similarity {
     * LONGs before the SUM (integer, order-independent), final scores
     * 4-dp rounds. */
   def qAnnIvfPq(s: SparkSession, d: String): DataFrame =
-    ivfPqTopk(vecs(s, d), rotate = Some(false))
+    ivfPqTopk(vecs(s, d), rotate = false)
 
   /** OPQ-style deterministic rotation for the PQ family (r13, measured
     * at the 1M probe shape — SCALE.md): R = H·D/8 with H the 64-point
@@ -534,7 +534,7 @@ object Similarity {
     * lever (SCALE.md r13: 0.630 → 0.825 at identical budget) ships
     * with bit-exact arithmetic evidence, not only probe curves. */
   def qAnnIvfPqRot(s: SparkSession, d: String): DataFrame =
-    ivfPqTopk(vecs(s, d), rotate = Some(true))
+    ivfPqTopk(vecs(s, d), rotate = true)
 
   // the rotation replayed oracle-side: one 64-entry list of
   // list_dot_product terms against the ±0.125e0 literal rows of rotW
@@ -573,14 +573,11 @@ object Similarity {
     * other semantics change.
     *
     * DEFAULT = ROTATED (r13 verdict #4): a production caller passing
-    * no flag gets the measured-better retrieval; `spark.graft.ann
-    * .rotate=false` restores the plain split session-wide. The two
-    * declared queries pin their flags explicitly (`q_ann_ivfpq` plain,
-    * `q_ann_ivfpq_rot` rotated), so the conf never moves a hash. */
+    * no flag gets the measured-better retrieval. The two declared
+    * queries pin their flags explicitly (`q_ann_ivfpq` plain,
+    * `q_ann_ivfpq_rot` rotated). */
   private[graft] def ivfPqTopk(vv: DataFrame, poolN: Int = 50,
-                               rotate: Option[Boolean] = None): DataFrame = {
-    val doRotate = rotate.getOrElse(
-      !vv.sparkSession.conf.getOption("spark.graft.ann.rotate").contains("false"))
+                               rotate: Boolean = true): DataFrame = {
     val e = (if (vv.columns.contains("nrm")) vv
              else vv.withColumn("nrm", sqrt(vecDot(col("v"), col("v")))))
       .select(col("vec_id"), col("v"), col("nrm"))
@@ -597,7 +594,7 @@ object Similarity {
       .join(broadcast(cents.select(col("cid").as("cell"), col("cv"))), "cell")
       .select(col("vec_id"), col("cell"),
               zip_with(col("v"), col("cv"), (x, c) => x - c).as("rv"))
-    val resid = if (doRotate) resid0.withColumn("rv", rotCol(col("rv"))) else resid0
+    val resid = if (rotate) resid0.withColumn("rv", rotCol(col("rv"))) else resid0
     val sub = resid
       .select(col("vec_id"), col("cell"),
               explode(array((0 until 8).map(lit): _*)).as("j"), col("rv"))
@@ -624,7 +621,7 @@ object Similarity {
       .select(col("vec_id").as("qid"), col("cid").as("cell"),
               zip_with(col("v"), col("cv"), (x, c) => x - c).as("qrv0"))
       .select(col("qid"), col("cell"),
-              (if (doRotate) rotCol(col("qrv0")) else col("qrv0")).as("qrv"))
+              (if (rotate) rotCol(col("qrv0")) else col("qrv0")).as("qrv"))
     val qSub = qCells
       .select(col("qid"), col("cell"),
               explode(array((0 until 8).map(lit): _*)).as("j"), col("qrv"))
@@ -2059,7 +2056,8 @@ object Similarity {
     // pre-partitioned + pre-sorted scoring relation — see the
     // [[graphSearchWalk]] note (r17, verdict #4): one fence serves every
     // descent level's rounds; the final base walk builds its own inside
-    // graphSearchWalk.
+    // graphSearchWalk, so eP is released before that walk starts — two
+    // full-corpus copies are never pinned at once.
     val eP = graft.Fence.cut(
       e.select(col("vec_id").as("cid"), col("v").as("cv"), col("nrm").as("cn"))
         .repartition(col("cid")).sortWithinPartitions("cid"))
@@ -2104,9 +2102,10 @@ object Similarity {
     val entry = carried.getOrElse(
       q.select("qid").crossJoin(broadcast(
         e.filter(col("vec_id") >= corpusMin).agg(min(col("vec_id")).as("cid")))))
+    // safe: `carried` is its own cut leaf, so nothing still read derives from eP
+    graft.Fence.releaseCut(eP)
     val out = graphSearchWalk(e, gu, q, k, beam, rounds, corpusMin, entry)
     carried.foreach(graft.Fence.releaseCut)
-    graft.Fence.releaseCut(eP)
     out
   }
 

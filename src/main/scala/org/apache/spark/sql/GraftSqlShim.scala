@@ -25,89 +25,6 @@ object GraftSqlShim {
   def autoBroadcastJoinThreshold(spark: SparkSession): Long =
     spark.asInstanceOf[classic.SparkSession].sessionState.conf.autoBroadcastJoinThreshold
 
-  /** Lineage fence WITHOUT the local-disk write: materialize the frame's
-    * InternalRow RDD into MEMORY_ONLY storage and wrap it as a
-    * `LogicalRDD` leaf (the same construction `Dataset.localCheckpoint`
-    * uses, minus the checkpoint machinery's forced MEMORY_AND_DISK level
-    * whose eager disk write was measured swinging multi-consumer queries
-    * 0.8↔5.8 s run-to-run with box state, r9 verdict #1b). Rows are
-    * COPIED before caching (toRdd reuses unsafe-row buffers); the RDD is
-    * materialized eagerly so every consumer reads the cache; an evicted
-    * partition recomputes from RDD lineage (correct, just slower) rather
-    * than spilling to disk up front. Cleanup follows the same path as
-    * localCheckpoint: the ContextCleaner drops the cached blocks once
-    * the RDD is unreachable.
-    *
-    * DETERMINISM ASSUMPTION (r10 advice): unlike localCheckpoint, the
-    * pin does NOT truncate RDD lineage — an evicted (or released)
-    * partition recomputes from the upstream plan. Every fenced relation
-    * in this engine is a deterministic function of its parquet inputs
-    * (no RNG, no wall-clock, hash-partitioned exchanges), so a
-    * recompute reproduces the same rows; a nondeterministic upstream
-    * would silently diverge where localCheckpoint would fail instead —
-    * that is the one contract pin-mode callers accept. Iterative loops
-    * must [[graft.Fence.release]] superseded pins so cache usage stays
-    * O(1) in the round count. */
-  /** STATS-CAPPED fence leaf (r15 finding): `LogicalRDD.fromDataset` —
-    * used by Dataset.checkpoint/localCheckpoint and previously by both
-    * fence modes here — carries the origin plan's `Statistics` into the
-    * leaf verbatim. Catalyst's size-only estimator MULTIPLIES children
-    * sizes through every join, so a recursively accumulated cut-pipeline
-    * (a graph grown batch-over-batch from its own walk results — the
-    * knnIngest shape) roughly SQUARES the carried `sizeInBytes` per
-    * generation: after ~19 generations the stat is a ~10-million-digit
-    * BigInt and one InjectRuntimeFilter stats pass ground 33 MINUTES of
-    * driver CPU in `BigInteger.multiplyToomCook3` — at PLAN time, before
-    * a single task ran (jstack-verified on the 50k probe). The numbers
-    * above ~2^63 carry no planning information (every threshold they
-    * gate saturates), so every fence leaf caps its carried stats at
-    * Long.MaxValue: per-plan stats then stay bounded by the CURRENT
-    * plan's join count, never by pipeline history. Partitioning,
-    * ordering, expr-id rewrite and constraints still come from
-    * fromDataset's construction. */
-  /** r17 refinement (verdict #2, per-round driver cost): when the
-    * materialization already COUNTED the frame, the leaf carries EXACT
-    * statistics — rowCount = the materialized count, sizeInBytes = count
-    * × the estimator's own per-row width ([[org.apache.spark.sql
-    * .catalyst.plans.logical.statsEstimation.EstimationUtils
-    * .getSizePerRow]], so the number means the same thing it means
-    * everywhere else in Catalyst). The origin plan's propagated estimate
-    * is usually enormous for a loop's round frame (size-only estimation
-    * multiplies through every join), so the planner could never pick a
-    * broadcast join STATICALLY for the small evolving side of an
-    * iterative round — AQE had to shuffle first and demote at runtime,
-    * paying extra query stages on every round of every loop. Exact leaf
-    * stats are correct at any scale: a genuinely large frame reports
-    * large and plans exactly as before. */
-  private def cappedLeaf(rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
-                         ds: classic.Dataset[_],
-                         rowCount: Option[Long] = None): execution.LogicalRDD = {
-    val spark = ds.sparkSession
-    val lr = execution.LogicalRDD.fromDataset(rdd, ds, isStreaming = false)
-    // A/B escape hatch (spark.graft.leafstats=origin): keep the r15
-    // capped-origin-estimate behavior selectable so the exact-stats
-    // planning effect stays measurable in one JVM (the clusters.fence
-    // precedent).
-    val exactOk = !spark.conf.getOption("spark.graft.leafstats").contains("origin")
-    val stats = rowCount.filter(_ => exactOk) match {
-      case Some(n) =>
-        val perRow = org.apache.spark.sql.catalyst.plans.logical.statsEstimation
-          .EstimationUtils.getSizePerRow(lr.output)
-        org.apache.spark.sql.catalyst.plans.logical.Statistics(
-          sizeInBytes = (perRow * n).max(1),
-          rowCount = Some(BigInt(n)))
-      case None =>
-        val cap = BigInt(Long.MaxValue)
-        val st = ds.queryExecution.optimizedPlan.stats
-        org.apache.spark.sql.catalyst.plans.logical.Statistics(
-          sizeInBytes = st.sizeInBytes.min(cap),
-          rowCount = st.rowCount.map(_.min(cap)))
-    }
-    new execution.LogicalRDD(lr.output, lr.rdd, lr.outputPartitioning,
-      lr.outputOrdering, lr.isStreaming, lr.stream)(
-      spark, Some(stats), Some(lr.constraints))
-  }
-
   /** Dev-only fence instrumentation hook (graft.Profile sets it; query
     * code never does): when non-null, every fence materialization
     * reports (Catalyst tracker phases, toRdd wall ms = analysis→physical
@@ -115,25 +32,36 @@ object GraftSqlShim {
     * volatile null check. */
   @volatile var fenceProbe: (String, Long, Long) => Unit = null
 
-  /** The one fence-materialization core both fence modes and every
-    * counted/fused-aggregate variant route through: plan the frame
-    * (`toRdd`), persist it (MEMORY_ONLY pin or local checkpoint), run
-    * ONE job that streams every partition into cache while computing the
-    * row count AND an optional caller-supplied commutative Long term sum
-    * (r17, verdict #2 — per-round driver cost: sum-convergence loops
-    * paid one extra Catalyst plan + aggregate job per round for a scalar
-    * that is a plain Long sum over rows this job already touches).
-    * Per-partition runJob RESULTS are exactly-once under task retry —
-    * the driver keeps one successful result per partition — unlike
-    * accumulator updates inside transformations (the r16 rejection), and
-    * Long addition is associative/commutative, so the fused sum is
-    * bit-equal to the SQL `sum(...)` the loops used to run (both wrap on
-    * overflow). */
-  private def materialize(df: DataFrame, checkpoint: Boolean,
-                          term: catalyst.InternalRow => Long,
-                          adaptive: Boolean = false,
-                          termD: catalyst.InternalRow => Double = null):
-      (DataFrame, Long, Long, Double) = {
+  /** The one fence materialization, reached only through [[graft.Fence]]
+    * (FenceGateSpec greps main source for other callers). Plans the frame
+    * (`toRdd`), persists it, and runs ONE job that streams every
+    * partition into cache while computing the row count and the optional
+    * fused term sums — see [[graft.Fence.counted]] for their contracts
+    * (r17, verdict #2: per-partition runJob RESULTS are exactly-once
+    * under task retry, unlike accumulator updates inside transformations,
+    * the r16 rejection). Rows are COPIED before caching (toRdd reuses
+    * unsafe-row buffers); the RDD is materialized eagerly so every
+    * consumer reads the cache; the ContextCleaner drops the cached
+    * blocks once the RDD is unreachable.
+    *
+    *  - `checkpoint = false` — the PIN: MEMORY_ONLY storage, without
+    *    localCheckpoint's forced MEMORY_AND_DISK level whose eager disk
+    *    write was measured swinging multi-consumer queries 0.8↔5.8 s
+    *    run-to-run with box state (r9 verdict #1b). DETERMINISM
+    *    ASSUMPTION (r10 advice): the pin does NOT truncate RDD lineage —
+    *    an evicted (or released) partition recomputes from the upstream
+    *    plan. Every fenced relation in this engine is a deterministic
+    *    function of its parquet inputs (no RNG, no wall-clock,
+    *    hash-partitioned exchanges), so a recompute reproduces the same
+    *    rows; a nondeterministic upstream would silently diverge where
+    *    localCheckpoint would fail instead — that is the one contract
+    *    pin callers accept. Iterative loops must [[graft.Fence.release]]
+    *    superseded pins so cache usage stays O(1) in the round count.
+    *  - `checkpoint = true` — Dataset.localCheckpoint's recipe: local
+    *    checkpoint storage, eager materialization truncating lineage. */
+  def materialize(df: DataFrame, checkpoint: Boolean, adaptive: Boolean = false,
+                  term: catalyst.InternalRow => Long = null,
+                  termD: catalyst.InternalRow => Double = null): graft.Fenced = {
     val ds = df.asInstanceOf[classic.Dataset[_]]
     val spark = ds.sparkSession
     val t0 = System.nanoTime()
@@ -141,12 +69,6 @@ object GraftSqlShim {
     if (checkpoint) rdd.localCheckpoint()
     else rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
     val t1 = System.nanoTime()
-    // Double term (r17): per-partition partials folded on the driver in
-    // PARTITION-INDEX order — deterministic for a deterministic plan.
-    // Only for bound-checked estimator scalars (the HyperBall Σest),
-    // never for hashed payload values: double addition is not
-    // associative, so the fold order is part of the semantics and this
-    // order is at least as reproducible as the SQL sum it replaces.
     val (n, s, sd) =
       if (term == null && termD == null) (rdd.count(), 0L, 0.0)
       else {
@@ -160,6 +82,7 @@ object GraftSqlShim {
             }
             (n, s, d)
           })
+        // the Double partials fold in PARTITION-INDEX order
         (partials.map(_._1).sum, partials.map(_._2).sum,
          partials.foldLeft(0.0)(_ + _._3))
       }
@@ -170,137 +93,63 @@ object GraftSqlShim {
         .map { case (k, v) => s"$k=${v.durationMs}" }.mkString(",")
       probe(phases, (t1 - t0) / 1000000L, (t2 - t1) / 1000000L)
     }
-    // SIZE-ADAPTIVE leaf partitioning (r17, verdict #3): a delta fence in
-    // a BFS loop inherits the session's shuffle parallelism, so a k-level
-    // lazy union scans k × parallelism near-empty partitions per round —
-    // the r16 "delta-only measured SLOWER" failure mode. When the caller
-    // opted in AND the materialized frame is small, the leaf becomes a
-    // narrow coalesce VIEW over the cached partitions (local concatenation,
-    // no shuffle, no recompute — the blocks stay where the count put
-    // them), sized from the count just computed × the estimator's row
-    // width. Partitioning/ordering claims are dropped (a concatenation
-    // has neither); release helpers look THROUGH the one-level coalesce
-    // to the persisted parent.
-    // The rule collapses ONLY genuinely tiny frames (≤ one shuffle-
-    // partition's worth) to a single partition; anything larger keeps
-    // its native partition count — an 8 MB BFS pair-level coalesced to
-    // 2 partitions lost the anti-join's sort parallelism and measured
-    // ~+1 s on q_graph_diameter (r17 A/B), while the k × parallelism
-    // empty-partition waste this exists to kill only bites at KB scale.
-    val target = 4L << 20
-    val perRow = catalyst.plans.logical.statsEstimation.EstimationUtils
-      .getSizePerRow(ds.queryExecution.analyzed.output)
-    val bytes = perRow * n
-    val wantParts = if (bytes <= target) 1L else rdd.getNumPartitions.toLong
-    val leaf =
-      if (adaptive && wantParts < rdd.getNumPartitions) {
-        val small = rdd.coalesce(wantParts.toInt)
-        val lr = execution.LogicalRDD.fromDataset(small, ds, isStreaming = false)
-        new execution.LogicalRDD(lr.output, small,
-          catalyst.plans.physical.UnknownPartitioning(small.getNumPartitions),
-          Nil, lr.isStreaming, lr.stream)(
-          spark,
-          Some(catalyst.plans.logical.Statistics(
-            sizeInBytes = bytes.max(1), rowCount = Some(BigInt(n)))),
-          Some(lr.constraints))
-      } else cappedLeaf(rdd, ds, Some(n))
-    // LogicalRDD via [[cappedLeaf]] — the SAME leaf construction Dataset
-    // .checkpoint uses — carries the fenced plan's output PARTITIONING
-    // and ordering through the fence (expr-ids rewritten onto the new
-    // leaf), with EXACT statistics from the count just computed (see
-    // cappedLeaf). A bare internalCreateDataFrame defaults the leaf to
-    // UnknownPartitioning, which made every downstream consumer of a
-    // hash-partitioned fenced relation re-shuffle it (measured: the
-    // 4-consumer ppjoin shingle relation at sf0.1 ran 3.0 s vs 1.7 s).
-    (classic.Dataset.ofRows(spark, leaf), n, s, sd)
+    graft.Fenced(classic.Dataset.ofRows(spark, fenceLeaf(rdd, ds, n, adaptive)), n, s, sd)
   }
 
-  /** [[localCheckpointCappedCounted]] with SIZE-ADAPTIVE leaf
-    * partitioning — see the adaptive note in [[materialize]]. For the
-    * per-round DELTA cuts of the BFS family (r17, verdict #3). */
-  def localCheckpointCappedCountedAdaptive(df: DataFrame): (DataFrame, Long) = {
-    val (out, n, _, _) = materialize(df, checkpoint = true, term = null, adaptive = true)
-    (out, n)
-  }
-
-  def pinMemory(df: DataFrame): DataFrame = pinMemoryCounted(df)._1
-
-  /** [[pinMemory]] variant that RETURNS the materialization count (r16
-    * optimization): the fence's eager `rdd.count()` already computes the
-    * row count of the fenced frame and threw it away — iterative loops
-    * whose convergence scalar IS that count (BFS frontiers, trim
-    * cascades, peel rounds) were paying one extra plan + job per round
-    * to recount the frame they had just materialized. */
-  def pinMemoryCounted(df: DataFrame): (DataFrame, Long) = {
-    val (out, n, _, _) = materialize(df, checkpoint = false, term = null)
-    (out, n)
-  }
-
-  /** [[pinMemoryCounted]] that ALSO folds a commutative Long term sum
-    * into the materialization job — see [[materialize]]. Returns
-    * (fenced frame, row count, Σ term(row)). */
-  def pinMemoryCountedSum(df: DataFrame,
-                          term: catalyst.InternalRow => Long): (DataFrame, Long, Long) = {
-    val (out, n, s, _) = materialize(df, checkpoint = false, term)
-    (out, n, s)
-  }
-
-  /** The [[graft.Fence.cut]] implementation: Dataset.localCheckpoint's
-    * exact recipe (row-copied internal RDD, local checkpoint storage,
-    * eager materialization truncating lineage, fromDataset-shaped leaf)
-    * with the carried statistics CAPPED (see [[cappedLeaf]] — the r15
-    * stats-squaring finding). */
-  def localCheckpointCapped(df: DataFrame): DataFrame =
-    localCheckpointCappedCounted(df)._1
-
-  /** [[localCheckpointCapped]] returning the materialization count —
-    * see [[pinMemoryCounted]]. */
-  def localCheckpointCappedCounted(df: DataFrame): (DataFrame, Long) = {
-    val (out, n, _, _) = materialize(df, checkpoint = true, term = null)
-    (out, n)
-  }
-
-  /** [[localCheckpointCappedCounted]] that ALSO folds a commutative Long
-    * term sum into the materialization job — see [[materialize]]. */
-  def localCheckpointCappedCountedSum(df: DataFrame,
-                                      term: catalyst.InternalRow => Long): (DataFrame, Long, Long) = {
-    val (out, n, s, _) = materialize(df, checkpoint = true, term)
-    (out, n, s)
-  }
-
-  /** [[localCheckpointCappedCounted]] with a fused DOUBLE term sum —
-    * see the double-term determinism note in [[materialize]]; for
-    * bound-checked estimator scalars only (the HyperBall Σest), never
-    * for hashed payload values. */
-  def localCheckpointCappedCountedSumD(df: DataFrame,
-                                       termD: catalyst.InternalRow => Double): (DataFrame, Long, Double) = {
-    val (out, n, _, d) = materialize(df, checkpoint = true, term = null, termD = termD)
-    (out, n, d)
-  }
-
-  /** Drop the MEMORY_ONLY blocks behind a [[pinMemory]]-fenced frame (the
-    * iterative-loop release half of the pin contract — see the
-    * determinism note on [[pinMemory]]). Walks the frame's analyzed plan
-    * for `LogicalRDD` leaves and unpersists their RDDs non-blockingly; a
-    * frame with no pinned leaf (never fenced, or fenced through the
-    * `local` mode whose blocks ARE the data) is a no-op, so callers can
-    * release unconditionally. The match is EXACTLY MEMORY_ONLY — the
-    * level [[pinMemory]] sets and localCheckpoint never does (it forces
-    * MEMORY_AND_DISK) — so a checkpoint-backed leaf, whose blocks are
-    * unrecoverable once dropped, can never be released by mistake.
+  /** The fence leaf over `rdd`, the materialized `n` rows of `ds`.
     *
-    * Pass the fenced frame ITSELF, not a frame DERIVED from it: this
-    * walks the whole plan, so releasing a derived frame would drop
-    * every pinned leaf under it — including pins that sibling
-    * consumers still read. That is correct-but-slow (they recompute
-    * through lineage) but silently defeats the fence for those
-    * consumers. Note also that a post-release recompute can reorder
-    * rows WITHIN a shuffle partition (task-level nondeterminism the
-    * pin had frozen), so the determinism assumption extends only to
-    * order-insensitive consumers — every aggregation/join in this
-    * engine, but not e.g. a zipWithIndex over the raw pin. */
+    * SHAPE: `LogicalRDD.fromDataset` — the leaf construction
+    * Dataset.checkpoint uses — carries the fenced plan's output
+    * PARTITIONING and ordering through the fence (expr-ids rewritten onto
+    * the new leaf), plus its constraints. A bare internalCreateDataFrame
+    * defaults the leaf to UnknownPartitioning, which made every
+    * downstream consumer of a hash-partitioned fenced relation re-shuffle
+    * it (measured: the 4-consumer ppjoin shingle relation at sf0.1 ran
+    * 3.0 s vs 1.7 s).
+    *
+    * STATISTICS are EXACT, never fromDataset's carried origin estimate:
+    * rowCount = `n`, sizeInBytes = n × the estimator's own per-row width
+    * ([[org.apache.spark.sql.catalyst.plans.logical.statsEstimation
+    * .EstimationUtils.getSizePerRow]], so the number means what it means
+    * everywhere else in Catalyst). The carried estimate multiplies
+    * through every join: a recursively accumulated cut pipeline (the
+    * knnIngest shape) roughly SQUARED it per generation until one
+    * InjectRuntimeFilter stats pass ground 33 minutes of driver CPU in
+    * BigInteger multiplies at plan time (r15), and for a loop's small
+    * evolving round frame it was so large the planner could never pick a
+    * broadcast join statically — AQE shuffled first and demoted at
+    * runtime, every round (r17, verdict #2).
+    *
+    * SIZE-ADAPTIVE partitioning (`adaptive`, r17 verdict #3): a BFS delta
+    * fence inherits the session's shuffle parallelism, so a k-level lazy
+    * union scans k × parallelism near-empty partitions per round — the
+    * r16 "delta-only measured SLOWER" failure mode. A frame of at most
+    * 4 MB (≤ one shuffle partition's worth) becomes a narrow coalesce
+    * VIEW over the cached partitions (local concatenation, no shuffle, no
+    * recompute); its partitioning/ordering claims are dropped (a
+    * concatenation has neither), and the release helpers look THROUGH
+    * the one-level coalesce to the persisted parent. Anything larger
+    * keeps its native partition count — an 8 MB BFS pair-level coalesced
+    * to 2 partitions lost the anti-join's sort parallelism and measured
+    * ~+1 s on q_graph_diameter (r17 A/B). */
+  private def fenceLeaf(rdd: org.apache.spark.rdd.RDD[catalyst.InternalRow],
+                        ds: classic.Dataset[_], n: Long,
+                        adaptive: Boolean): execution.LogicalRDD = {
+    val lr = execution.LogicalRDD.fromDataset(rdd, ds, isStreaming = false)
+    val bytes = catalyst.plans.logical.statsEstimation.EstimationUtils
+      .getSizePerRow(lr.output) * n
+    val stats = catalyst.plans.logical.Statistics(
+      sizeInBytes = bytes.max(1), rowCount = Some(BigInt(n)))
+    val (leafRdd, partitioning, ordering) =
+      if (adaptive && bytes <= (4L << 20) && rdd.getNumPartitions > 1)
+        (rdd.coalesce(1), catalyst.plans.physical.UnknownPartitioning(1), Nil)
+      else (rdd, lr.outputPartitioning, lr.outputOrdering)
+    new execution.LogicalRDD(lr.output, leafRdd, partitioning, ordering,
+      lr.isStreaming, lr.stream)(ds.sparkSession, Some(stats), Some(lr.constraints))
+  }
+
   /** The RDD whose blocks BACK a fence leaf: the leaf's own rdd, or —
-    * for a size-adaptive leaf (see [[materialize]]) — its one-level
+    * for a size-adaptive leaf (see [[fenceLeaf]]) — its one-level
     * narrow parent (the coalesce view is never persisted; the cached
     * partitions live on the parent). ONE level only: walking deeper
     * would cross into upstream lineage and could match an unrelated
@@ -313,30 +162,32 @@ object GraftSqlShim {
       case _ => rdd
     }
 
+  /** Drop the MEMORY_ONLY blocks behind a pinned ([[graft.Fence.apply]])
+    * frame (the iterative-loop release half of the pin contract — see
+    * the determinism note on [[materialize]]). Walks the frame's analyzed
+    * plan for `LogicalRDD` leaves and unpersists their RDDs
+    * non-blockingly; a frame with no pinned leaf (never fenced, or a
+    * [[graft.Fence.cut]] leaf whose blocks ARE the data) is a no-op, so
+    * callers can release unconditionally. The match is EXACTLY
+    * MEMORY_ONLY — the level the pin sets and localCheckpoint never does
+    * (it forces MEMORY_AND_DISK) — so a checkpoint-backed leaf, whose
+    * blocks are unrecoverable once dropped, can never be released by
+    * mistake.
+    *
+    * Pass the fenced frame ITSELF, not a frame DERIVED from it: this
+    * walks the whole plan, so releasing a derived frame would drop
+    * every pinned leaf under it — including pins that sibling
+    * consumers still read. That is correct-but-slow (they recompute
+    * through lineage) but silently defeats the fence for those
+    * consumers. Note also that a post-release recompute can reorder
+    * rows WITHIN a shuffle partition (task-level nondeterminism the
+    * pin had frozen), so the determinism assumption extends only to
+    * order-insensitive consumers — every aggregation/join in this
+    * engine, but not e.g. a zipWithIndex over the raw pin. */
   def releasePin(df: DataFrame): Unit =
     df.asInstanceOf[classic.Dataset[_]].queryExecution.analyzed.foreach {
       case lr: execution.LogicalRDD
           if storageRdd(lr.rdd).getStorageLevel == org.apache.spark.storage.StorageLevel.MEMORY_ONLY =>
-        storageRdd(lr.rdd).unpersist(blocking = false)
-      case _ => ()
-    }
-
-  /** Drop the blocks behind a `localCheckpoint`-backed ([[graft.Fence
-    * .cut]]) frame — the DESTRUCTIVE half [[releasePin]] deliberately
-    * refuses (r14 advice: the per-round release calls in deep cut-loops
-    * were documented no-ops, so superseded pools/frontiers accumulated
-    * checkpoint blocks for the whole walk). A checkpoint leaf's lineage
-    * is truncated, so once these blocks drop the frame — and anything
-    * lazily DERIVED from it — is unreadable, not slow: the caller must
-    * guarantee the superseding frame has materialized and nothing
-    * derived from this one escapes. Matches the level localCheckpoint
-    * forces (MEMORY_AND_DISK) on LogicalRDD leaves only; a pin-mode
-    * (MEMORY_ONLY) frame is untouched — pair with [[releasePin]] via
-    * [[graft.Fence.releaseCut]] for mode-agnostic loop hygiene. */
-  def releaseCheckpoint(df: DataFrame): Unit =
-    df.asInstanceOf[classic.Dataset[_]].queryExecution.analyzed.foreach {
-      case lr: execution.LogicalRDD
-          if storageRdd(lr.rdd).getStorageLevel == org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK =>
         storageRdd(lr.rdd).unpersist(blocking = false)
       case _ => ()
     }

@@ -142,7 +142,7 @@ class AnnRecallSpec extends SparkSpec {
     val vv = withPlants(baseVecs)
     val expected = (for (q <- 0 until 5; j <- 1 to 3)
       yield (q.toLong, 100000L + q * 10 + j)).toSeq
-    Seq(("rotate", Similarity.ivfPqTopk(vv, rotate = Some(true))),
+    Seq(("rotate", Similarity.ivfPqTopk(vv, rotate = true)),
         ("pool=200", Similarity.ivfPqTopk(vv, poolN = 200))).foreach {
       case (tag, out) =>
         val found = out.collect()

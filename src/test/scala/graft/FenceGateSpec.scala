@@ -3,41 +3,56 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-/** The fence-discipline gates (r10 verdict #2 / r11 verdict #1):
+/** The fence-discipline gates (r10 verdict #2 / r11 verdict #1). Each
+  * `Fence` entry has exactly one mode — `apply` pins, `cut`
+  * checkpoints, `counted` does either by its `cut` argument — and no
+  * session switch selects another implementation:
   *
-  *  1. GREP GATE — `graft.Fence` is the engine's ONLY spelling of a raw
-  *     `.localCheckpoint()`. Every other main-source call site goes
-  *     through `Fence.apply` (mode-selectable pin) or `Fence.cut`
-  *     (unconditional checkpoint), so the fence A/B
-  *     (`spark.graft.fence`) and the release discipline stay
-  *     enforceable from one file.
-  *  2. PIN LIFECYCLE — `Fence.apply` (pin mode) sets EXACTLY
-  *     MEMORY_ONLY on the leaf RDD; `Fence.release` clears it; a
-  *     re-read after release is row-identical (recompute through
-  *     lineage — the documented determinism contract).
-  *  3. RELEASE SAFETY — releasing a `local`-mode (localCheckpoint-
+  *  1. GREP GATES — `graft.Fence` is the engine's ONLY spelling of a raw
+  *     `.localCheckpoint()` and the only main-source caller of the
+  *     shim's one fence materialization, so the release discipline and
+  *     the fence instrumentation stay enforceable from one file.
+  *  2. PIN LIFECYCLE — `Fence.apply` sets EXACTLY MEMORY_ONLY on the
+  *     leaf RDD; `Fence.release` clears it; a re-read after release is
+  *     row-identical (recompute through lineage — the documented
+  *     determinism contract).
+  *  3. RELEASE SAFETY — releasing a `Fence.cut` (localCheckpoint-
   *     backed) frame is a no-op: its MEMORY_AND_DISK blocks ARE the
   *     data and must never match releasePin's MEMORY_ONLY filter.
+  *  4. COUNTED — `Fence.counted`'s fused scalars equal what separate
+  *     SQL actions would compute, and its leaf carries exact stats.
   */
 class FenceGateSpec extends SparkSpec {
 
-  test("main source has no raw .localCheckpoint() outside Fence.scala and the shim") {
-    // since r15 the one real checkpoint call is the RDD-level one inside
-    // GraftSqlShim.localCheckpointCapped (the stats-capped cut
-    // implementation Fence.cut delegates to); graft code still has
-    // exactly one sanctioned spelling — graft.Fence.cut
+  /** Main-source files, outside `allowed`, whose text matches `hit`. */
+  private def mainOffenders(allowed: Set[String])(hit: String => Boolean): List[String] = {
     import scala.jdk.CollectionConverters._
     val root = java.nio.file.Paths.get("src/main/scala")
     assert(java.nio.file.Files.isDirectory(root), s"run from repo root: $root")
-    val allowed = Set("Fence.scala", "GraftSqlShim.scala")
-    val offenders = java.nio.file.Files.walk(root).iterator().asScala
+    java.nio.file.Files.walk(root).iterator().asScala
       .filter(p => p.toString.endsWith(".scala"))
       .filterNot(p => allowed.contains(p.getFileName.toString))
-      .filter(p => new String(java.nio.file.Files.readAllBytes(p))
-        .contains(".localCheckpoint("))
+      .filter(p => hit(new String(java.nio.file.Files.readAllBytes(p))))
       .map(_.toString).toList
+  }
+
+  test("main source has no raw .localCheckpoint() outside Fence.scala and the shim") {
+    // the one real checkpoint call is the RDD-level one inside
+    // GraftSqlShim.materialize; graft code has exactly one sanctioned
+    // spelling — graft.Fence.cut (or Fence.counted with cut = true)
+    val offenders = mainOffenders(Set("Fence.scala", "GraftSqlShim.scala"))(
+      _.contains(".localCheckpoint("))
     assert(offenders.isEmpty,
       s"raw .localCheckpoint() call sites outside graft.Fence/shim: $offenders")
+  }
+
+  test("main source calls the shim's materialize only from Fence.scala") {
+    // the qualified call, a wildcard import, or a selective import of it
+    val call = """GraftSqlShim\s*\.\s*(?:materialize\b|_|\{[^}]*\bmaterialize\b)""".r
+    val offenders = mainOffenders(Set("Fence.scala", "GraftSqlShim.scala"))(
+      call.findFirstIn(_).isDefined)
+    assert(offenders.isEmpty,
+      s"GraftSqlShim.materialize reached outside graft.Fence: $offenders")
   }
 
   /** The pinned leaf's RDD, or None if the frame has no LogicalRDD leaf. */
@@ -95,18 +110,79 @@ class FenceGateSpec extends SparkSpec {
         "ever stops holding, the deep-loop guidance on Fence should be revisited")
   }
 
-  test("release is a no-op on a local-mode (checkpoint-backed) fence") {
-    spark.conf.set("spark.graft.fence", "local")
-    try {
-      val fenced = Fence(spark.range(0, 100).toDF())
-      val lvl = leafLevel(fenced)
-      assert(lvl.isDefined && lvl.get != StorageLevel.NONE,
-        s"localCheckpoint leaf should hold its blocks, got $lvl")
-      Fence.release(fenced) // MEMORY_AND_DISK != MEMORY_ONLY -> must not drop
-      assert(leafLevel(fenced) == lvl,
-        "release must never unpersist a checkpoint-backed leaf")
-      assert(fenced.count() == 100)
-    } finally spark.conf.unset("spark.graft.fence")
+  test("release is a no-op on a Fence.cut leaf") {
+    val fenced = Fence.cut(spark.range(0, 100).toDF())
+    val lvl = leafLevel(fenced)
+    assert(lvl.isDefined && lvl.get != StorageLevel.NONE,
+      s"localCheckpoint leaf should hold its blocks, got $lvl")
+    Fence.release(fenced) // MEMORY_AND_DISK != MEMORY_ONLY -> must not drop
+    assert(leafLevel(fenced) == lvl,
+      "release must never unpersist a checkpoint-backed leaf")
+    assert(fenced.count() == 100)
+  }
+
+  test("counted: rows and the leaf rowCount equal count() in both modes") {
+    val base = spark.range(0, 1000, 1, 4).filter(col("id") % 3 =!= 0).toDF()
+    val expected = base.count()
+    Seq(true, false).foreach { cut =>
+      val f = Fence.counted(base, cut = cut)
+      assert(f.rows === expected, s"cut=$cut")
+      assert(f.df.count() === expected, s"cut=$cut")
+      assert(f.df.queryExecution.optimizedPlan.stats.rowCount.contains(BigInt(expected)),
+        s"cut=$cut: the leaf must carry the materialized count as its rowCount")
+      assert(f.sum === 0L && f.sumD === 0.0, "no term given: both sums read 0")
+    }
+  }
+
+  test("counted: the Long sum equals SQL sum and wraps on overflow like it") {
+    // Long.MaxValue + 1 wraps; the legacy (non-ANSI) SQL sum wraps the
+    // same way, ANSI mode would throw instead
+    val vals = Seq(Long.MaxValue, 1L) ++ (1L to 200L).map(i => i * 7919L - 50000L)
+    val df = spark.createDataFrame(vals.zipWithIndex.map { case (v, i) => (i.toLong, v) })
+      .toDF("id", "v").repartition(4)
+    val f = Fence.counted(df, cut = true, sum = _.getLong(1))
+    val sqlSum =
+      try {
+        spark.conf.set("spark.sql.ansi.enabled", "false")
+        f.df.agg(sum("v")).head().getLong(0)
+      } finally spark.conf.unset("spark.sql.ansi.enabled")
+    assert(f.sum === sqlSum)
+    assert(f.sum === vals.sum, "the sum wraps exactly as Long addition does")
+    assert(f.rows === vals.size.toLong)
+  }
+
+  test("counted: sumD is the partition-index-order fold of per-partition sums") {
+    // magnitudes far apart, so a different fold order gives different bits
+    val vals = (0 until 64).map(i => if (i % 8 == 0) 1e17 * (if (i % 16 == 0) 1 else -1) else 1.0 + i / 3.0)
+    val df = spark.createDataFrame(vals.zipWithIndex.map { case (v, i) => (i.toLong, v) })
+      .toDF("id", "d").repartition(4)
+    val f = Fence.counted(df, cut = true, sumD = _.getDouble(1))
+    // the leaf holds the materialized partitions in index order
+    val expected = f.df.rdd
+      .mapPartitions(it => Iterator(it.foldLeft(0.0)((a, r) => a + r.getDouble(1))))
+      .collect().foldLeft(0.0)(_ + _)
+    assert(java.lang.Double.doubleToLongBits(f.sumD) ===
+      java.lang.Double.doubleToLongBits(expected))
+    assert(f.sum === 0L)
+  }
+
+  test("counted: a delta leaf at or under 4 MB is one partition and just over keeps its count") {
+    val perRow = org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
+      .getSizePerRow(spark.range(1).queryExecution.analyzed.output).toLong
+    val atCap = (4L << 20) / perRow
+    def leafParts(df: org.apache.spark.sql.DataFrame): Int =
+      df.queryExecution.analyzed.collectFirst {
+        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.getNumPartitions
+      }.get
+    val small = Fence.counted(spark.range(0, atCap, 1, 4).toDF(), cut = true, delta = true)
+    assert(small.rows === atCap)
+    assert(leafParts(small.df) === 1, "a delta of at most 4 MB coalesces to one partition")
+    val over = Fence.counted(spark.range(0, atCap + 1, 1, 4).toDF(), cut = true, delta = true)
+    assert(leafParts(over.df) === 4, "a delta just over 4 MB keeps its native partition count")
+    val plain = Fence.counted(spark.range(0, atCap, 1, 4).toDF(), cut = true)
+    assert(leafParts(plain.df) === 4, "only a delta fence coalesces")
+    assert(small.df.count() === atCap && over.df.count() === atCap + 1)
+    Seq(small, over, plain).foreach(f => Fence.releaseCut(f.df))
   }
 
   test("releaseCut guard: leaf releases, unfenced derived no-ops, fenced derived THROWS") {

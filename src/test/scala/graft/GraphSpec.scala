@@ -947,23 +947,17 @@ class GraphSpec extends SparkSpec {
     assert(d90Est === d90Exact, s"effective diameter: est $d90Est vs exact $d90Exact")
   }
 
-  test("scc trim modes: degree cascade (default) and full re-scan produce identical labels") {
+  test("scc trim: the degree cascade peels tendril chains and keeps the core") {
     import spark.implicits._
     // expander-ish core {0,1,2} + two IN-tendril chains + an OUT tail —
-    // the shape the r13 cascade exists for; both modes must reach the
-    // same trim fixpoint and the same labels
+    // the shape the r13 cascade exists for
     val edges = Seq[(Long, Long)](
       (0, 1), (1, 2), (2, 0),
       (10, 11), (11, 12), (12, 0),
       (20, 21), (21, 22), (22, 1),
       (0, 30), (30, 31))
-    def run(): Map[Long, (Long, Long)] =
-      Graph.scc(edges.toDF("src", "dst")).collect()
-        .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-    val cascade = run()
-    spark.conf.set("spark.graft.scc.trim", "scan")
-    val scan = try run() finally spark.conf.unset("spark.graft.scc.trim")
-    assert(cascade === scan)
+    val cascade = Graph.scc(edges.toDF("src", "dst")).collect()
+      .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     assert(cascade(0L) === ((2L, 3L)) && cascade(1L) === ((2L, 3L)),
       "core = {0,1,2} labeled by max member")
     assert(cascade(11L) === ((11L, 1L)) && cascade(31L) === ((31L, 1L)),
