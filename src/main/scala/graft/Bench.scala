@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Benchmark main: steady-state wall-clock per declared query at
@@ -25,19 +24,10 @@ object Bench {
     val sfDir = args.headOption.filter(_.nonEmpty)
       .orElse(sys.env.get("SPARK_GRAFT_SF_DIR"))
       .getOrElse("/root/testdata/sf0.1")
-    // toIntOption: the env value is interpolated UNQUOTED into both JSON
-    // artifacts, so a non-numeric value must fall back, not emit invalid
-    // JSON (r8 advice)
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").flatMap(_.toIntOption)
-      .getOrElse(math.min(32, Runtime.getRuntime.availableProcessors()))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")  // legacy events encodings readable from session build (no loader conf mutation)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // Graft.cpus is an Int: it is interpolated UNQUOTED into both JSON
+    // artifacts, so a non-numeric env value falls back (r8 advice)
+    val cpus = Graft.cpus
+    val spark = Graft.session("graft-bench")
     spark.sparkContext.setLogLevel("WARN")
     // JVM/codegen warm-up so the first measured query doesn't absorb
     // classloading + Janino compile cost (~4s cold).

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Round-start corpus probe (r7 verdict #5): print every table's SCANNED
   * parquet schema next to the loader's normalized logical schema, one JSON
   * line per table. The driver regenerates the corpus between rounds and
@@ -15,13 +13,7 @@ import org.apache.spark.sql.SparkSession
 object CorpusProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.filter(_.nonEmpty).getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.session("graft-corpus-probe", master = "local[4]", shufflePartitions = 4)
     spark.sparkContext.setLogLevel("ERROR")
     (Views.names :+ "events").foreach { t =>
       val line =

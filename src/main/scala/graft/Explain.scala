@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print the formatted physical plan for declared queries.
   * Usage: tools/run_verify.sh <sfDir> <q1,q2,...|all> graft.Explain */
 object Explain {
@@ -12,13 +10,7 @@ object Explain {
       return
     }
     val sfDir = args(0); val which = args(1) // extra args ignored
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")  // legacy events encodings readable from session build (no loader conf mutation)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.session("graft-explain", master = "local[4]", shufflePartitions = 4)
     spark.sparkContext.setLogLevel("ERROR")
     val names =
       if (which == "all") SparkEntry.queries.keys.toSeq.sorted

@@ -28,14 +28,7 @@ object GenScale {
   def main(args: Array[String]): Unit = {
     val Array(base, out, factorS) = args
     val factor = factorS.toInt
-    val cpus = math.min(32, Runtime.getRuntime.availableProcessors())
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.session("graft-genscale")
     spark.sparkContext.setLogLevel("WARN")
     run(spark, base, out, factor)
     spark.stop()

@@ -15,24 +15,33 @@ import org.apache.spark.sql.SparkSession
   * splits, runtime coalescing), UTC timezone (oracle + CF-convention time
   * handling), shuffle width sized to the machine rather than the 200
   * default. On a real cluster pass the master/shuffle explicitly.
+  * Every main in the engine builds its session here.
   */
 object Graft {
 
+  /** Local task threads: `SPARK_GRAFT_CPUS` when it parses as an Int,
+    * else the machine's cores capped at 32. */
+  val cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").flatMap(_.toIntOption)
+    .getOrElse(math.min(32, Runtime.getRuntime.availableProcessors()))
+
+  /** `spark.sql.extensions` is set at build time, so
+    * [[graft.GraftExtensions]] injects its SQL functions, the GroupTopK
+    * strategy and `PushFilterThroughGroupTopK` into the main optimizer
+    * batch (the filter push then reaches the scan). On an already-running
+    * session `getOrCreate` cannot add extensions; it keeps the ones that
+    * session was built with. */
   def session(appName: String = "graft",
-              master: String = s"local[${math.min(32, Runtime.getRuntime.availableProcessors())}]",
-              shufflePartitions: Int = math.min(32, Runtime.getRuntime.availableProcessors())): SparkSession = {
-    val s = SparkSession.builder()
+              master: String = s"local[$cpus]",
+              shufflePartitions: Int = cpus): SparkSession =
+    SparkSession.builder()
       .appName(appName)
       .master(master)
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")  // legacy events encodings readable from session build (no loader conf mutation)
       .getOrCreate()
-    GraftExtensions.install(s)
-    plans.GroupTopK.ensureInstalled(s)
-    s
-  }
 
   /** Register the corpus tables as temp views for the SQL surface. */
   def openCorpus(spark: SparkSession, dir: String): Unit =

@@ -24,10 +24,7 @@ object Pipeline {
     val parts = args(1).split(",")
     val outDir = parts(0)
     val g = if (parts.length > 1) parts(1).toInt else 100
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
-      .getOrElse(math.min(32, Runtime.getRuntime.availableProcessors()))
-    // the engine's own session: GraftExtensions and GroupTopK installed
-    val spark = Graft.session("graft-pipeline", master = s"local[$cpus]", shufflePartitions = cpus)
+    val spark = Graft.session("graft-pipeline")
     spark.sparkContext.setLogLevel("WARN")
     run(spark, ncPath, outDir, g)
     spark.stop()

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 
 /** Dev tool (guide §1: measure first): per-JOB wall breakdown of one
@@ -15,15 +14,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
 object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0); val which = args(1)
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").flatMap(_.toIntOption).getOrElse(32)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.session("graft-profile")
     spark.sparkContext.setLogLevel("WARN")
     // GRAFT_CONF="k=v;k=v" — runtime conf overrides for A/B experiments
     sys.env.get("GRAFT_CONF").foreach(_.split(";").foreach { kv =>

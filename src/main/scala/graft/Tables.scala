@@ -78,8 +78,8 @@ object Tables {
     *
     * Legacy INT64-nanos files additionally need
     * `spark.sql.legacy.parquet.nanosAsLong=true`, which every session
-    * builder in this engine sets at BUILD time (Graft.session, the mains,
-    * the test harness) — a loader must never mutate session conf as a side
+    * builder in this engine sets at BUILD time (Graft.session, which every
+    * main calls, and the test harness) — a loader must never mutate session conf as a side
     * effect (r7 advice: a mid-session conf flip changes semantics for
     * unrelated readers of other nanos files). */
   def events(s: SparkSession, d: String): DataFrame =

@@ -197,8 +197,7 @@ object Dedup {
     * `spark.sql.files.ignoreMissingFiles` (standard for any
     * compacting parquet layout) or schedule compaction off probe
     * windows. Returns (rowsBefore, rowsAfter). Probe evidence:
-    * ScaleProbe `compact` mode shows probe cost flat after compaction
-    * (SCALE.md). */
+    * SCALE.md §Round-10 probes shows probe cost flat after compaction. */
   def compactBandIndex(s: SparkSession, indexDir: String, active: DataFrame): (Long, Long) = {
     import org.apache.hadoop.fs.Path
     val dir = new Path(indexDir)

@@ -137,14 +137,10 @@ object Graph {
     *              d=0.85 is ~1e-1 per round — 5 rounds ranks hosts, 50
     *              rounds reproduces published scores to 6 figures).
     * @param seeds optional (node: long) teleport support; None = uniform.
-    * @param onRound fires after each round's fence materializes — the
-    *                ScaleProbe `graph` mode uses it for per-round wall
-    *                evidence (the [[Similarity.kmeansIvf]] convention).
     */
   def pageRank(edges: DataFrame, iters: Int, dampNum: Long = 85L,
                scale: Long = 1000000000000L,
-               seeds: Option[DataFrame] = None,
-               onRound: (Int, Double) => Unit = (_, _) => ()): DataFrame = {
+               seeds: Option[DataFrame] = None): DataFrame = {
     // static frames, fenced once for the loop's lifetime and released
     // at the end (the qDedupClusters discipline)
     val allNodes = edges.select(col("src").as("node"))
@@ -192,8 +188,7 @@ object Graph {
       .select(col("node"), col("s"),
               when(col("em").isNull, 1L).otherwise(0L).as("dgl"),
               (lit(pshare) * col("s")).as("rank")))
-    (1 to iters).foreach { i =>
-      val t0 = System.nanoTime()
+    (1 to iters).foreach { _ =>
       val dm1 = r.filter(col("dgl") === 1L)
         .agg(coalesce(sum(col("rank")), lit(0L)).as("dm"))
       // rank·w staged through DECIMAL(38,0) (r12 verdict #2 / the HITS
@@ -217,7 +212,6 @@ object Graph {
               expr(s"($dampNum * (coalesce(m, 0L) + s * (dm DIV ${nT}L))) DIV 100"))
               .as("rank")))
       graft.Fence.release(prev) // the new fence is materialized; r-1 superseded
-      onRound(i, (System.nanoTime() - t0) / 1e9)
     }
     val keep = graft.Fence.cut(r.select("node", "rank"))
     graft.Fence.release(r)
@@ -249,7 +243,7 @@ object Graph {
     * incremental edge delta the previous fixpoint is already close, so
     * the refresh converges in a few rounds where the cold start pays
     * the full log(tol)/log(d) schedule (GraphSpec measures the round
-    * gap on the fixture; ScaleProbe `prrefresh` at webgraph scale).
+    * gap on the fixture; SCALE.md §Round-13 probes at webgraph scale).
     *
     * Same per-round plan as [[pageRank]] (edges⋈ranks join + dst-sum
     * shuffle + broadcast dangling scalar) plus ONE extra bounded driver
@@ -625,8 +619,7 @@ object Graph {
     * groupBy-sum shuffle per half-round, a 1-row broadcast for the
     * normalizer; each round's frames fenced and released when
     * superseded, so plan depth and cache are O(1) in the round count. */
-  def hits(edges: DataFrame, iters: Int, scale: Long = 1000000000000L,
-           onRound: (Int, Double) => Unit = (_, _) => ()): DataFrame = {
+  def hits(edges: DataFrame, iters: Int, scale: Long = 1000000000000L): DataFrame = {
     val e = graft.Fence(edges.select(col("src"), col("dst")))
     val nodes = graft.Fence(
       e.select(col("src").as("node"))
@@ -655,15 +648,13 @@ object Graph {
         .agg(sum(col(in).cast("decimal(38,0)")).as("raw"))
     var hub = graft.Fence(nodes.withColumn("hub", lit(scale)))
     var auth: DataFrame = null
-    (1 to iters).foreach { i =>
-      val t0 = System.nanoTime()
+    (1 to iters).foreach { _ =>
       val newAuth = normalized(gather(hub, "hub", "src", "dst"), "auth")
       if (auth != null) graft.Fence.release(auth)
       auth = newAuth
       val prevHub = hub
       hub = normalized(gather(auth, "auth", "dst", "src"), "hub")
       graft.Fence.release(prevHub)
-      onRound(i, (System.nanoTime() - t0) / 1e9)
     }
     // zero padding for nodes with no out-edges (hub) / no in-edges
     // (auth) — previously re-padded every half-round, now once (r17)
@@ -706,8 +697,7 @@ object Graph {
     * depth. At 100 TB the edge relation dominates and is only ever
     * semi-joined — never mutated — so bucketing it by both endpoints
     * pre-co-locates every round. */
-  def kcore(edges: DataFrame, k: Int,
-            onRound: (Int, Long, Double) => Unit = (_, _, _) => ()): DataFrame = {
+  def kcore(edges: DataFrame, k: Int): DataFrame = {
     val und = graft.Fence(
       edges.select(col("src").as("a"), col("dst").as("b"))
         .union(edges.select(col("dst").as("a"), col("src").as("b")))
@@ -721,9 +711,7 @@ object Graph {
     var alive = nodes
     var prevN = -1L
     var curN = nNodes
-    var round = 0
     while (curN != prevN && curN > 0) {
-      val t0 = System.nanoTime()
       val prev = alive
       // Fence.cut, not the pin: peel depth on a webgraph is its
       // degeneracy cascade — tens-to-hundreds of rounds — and the
@@ -736,8 +724,6 @@ object Graph {
       if (!(prev eq nodes)) graft.Fence.release(prev)
       prevN = curN
       curN = n2
-      round += 1
-      onRound(round, curN, (System.nanoTime() - t0) / 1e9)
     }
     val keep = graft.Fence.cut(
       nodes.join(coreDeg(alive), Seq("node"), "left")
@@ -775,8 +761,7 @@ object Graph {
     * (node, lbl) frame, one (node, lbl) count shuffle, one per-node
     * window pick (partitioned — no global sort); fenced + released per
     * round, O(1) plan depth. */
-  def labelPropagation(edges: DataFrame, iters: Int,
-                       onRound: (Int, Double) => Unit = (_, _) => ()): DataFrame = {
+  def labelPropagation(edges: DataFrame, iters: Int): DataFrame = {
     val und = graft.Fence(
       edges.select(col("src").as("a"), col("dst").as("b"))
         .union(edges.select(col("dst").as("a"), col("src").as("b")))
@@ -784,8 +769,7 @@ object Graph {
     val nodes = graft.Fence(und.select(col("a").as("node")).distinct())
     var lbl = graft.Fence(nodes.withColumn("lbl", col("node")))
     val w = Window.partitionBy("a").orderBy(col("c").desc, col("lbl").asc)
-    (1 to iters).foreach { i =>
-      val t0 = System.nanoTime()
+    (1 to iters).foreach { _ =>
       // r17 (guide §2.1, remove a shuffle per round): one explicit
       // hash(a) exchange serves BOTH the (a, lbl) count aggregate
       // (HashPartitioning(a) satisfies ClusteredDistribution(a, lbl) —
@@ -803,7 +787,6 @@ object Graph {
           .filter(col("rn") === 1)
           .select(col("a").as("node"), col("lbl")))
       graft.Fence.release(prev)
-      onRound(i, (System.nanoTime() - t0) / 1e9)
     }
     val keep = graft.Fence.cut(lbl.select(col("node"), col("lbl").as("community")))
     graft.Fence.release(lbl); graft.Fence.release(nodes); graft.Fence.release(und)
@@ -995,16 +978,15 @@ object Graph {
     * At 100 TB: per-vertex state is CONSTANT (m bytes) no matter how
     * large the balls grow — where the exact form's pair relation goes
     * quadratic — and each round is the same edges⋈registers join +
-    * register-merge shuffle, fences keeping plan depth O(1) (ScaleProbe
-    * `hyperball` measures round walls at 10M nodes, where the exact
+    * register-merge shuffle, fences keeping plan depth O(1) (SCALE.md
+    * §Round-10 probes measures round walls at 10M nodes, where the exact
     * form is infeasible). Estimates are deterministic (xxhash64
     * registers, exact max-merge) but APPROXIMATE (±1.04/√256 ≈ 6.5%
     * rel. std. err.), so this op is spec-gated against [[harmonic]] on
     * the fixture graph rather than oracle-hashed — the exact form IS
     * its correctness reference. Output: (node, harmonic_est, reached_est).
     */
-  def harmonicHyperBall(edges: DataFrame, depth: Int,
-                        onRound: (Int, Double) => Unit = (_, _) => ()): DataFrame = {
+  def harmonicHyperBall(edges: DataFrame, depth: Int): DataFrame = {
     val s = edges.sparkSession
     import s.implicits._
     val e = graft.Fence(edges.select(col("src"), col("dst")).distinct())
@@ -1017,7 +999,6 @@ object Graph {
     var acc = graft.Fence(estimates(r)
       .select(col("node"), lit(0.0).as("h"), col("est").as("prev")))
     (1 to depth).foreach { d =>
-      val t0 = System.nanoTime()
       val gathered = hllPropagate(e, r)
       // Fence.cut, not the pin: the pin's RDD lineage is NOT truncated,
       // and in a DEEP loop each round's tasks serialize the whole parent
@@ -1035,7 +1016,6 @@ object Graph {
           (col("h") + greatest(col("est") - col("prev"), lit(0.0)) / lit(d.toDouble)).as("h"),
           col("est").as("prev")))
       graft.Fence.releaseCut(prevAcc)
-      onRound(d, (System.nanoTime() - t0) / 1e9)
     }
     val keep = graft.Fence.cut(
       acc.select(col("node"), col("h").as("harmonic_est"),
@@ -1087,8 +1067,7 @@ object Graph {
     * infeasible past fixture scale. Output rows are depth-bounded.
     * Spec-gated against [[qGraphDiameter]]'s exact distribution on the
     * fixture graph (rel-err + d90 floors, the harmonic precedent). */
-  def diameterHyperBall(edges: DataFrame, depth: Int,
-                        onRound: (Int, Double) => Unit = (_, _) => ()): DataFrame = {
+  def diameterHyperBall(edges: DataFrame, depth: Int): DataFrame = {
     val s = edges.sparkSession
     import s.implicits._
     val e = graft.Fence(edges.select(col("src"), col("dst")).distinct())
@@ -1110,7 +1089,6 @@ object Graph {
     }
     val totals = scala.collection.mutable.ArrayBuffer(total(r)) // N(0) ~ n
     (1 to depth).foreach { d =>
-      val t0 = System.nanoTime()
       val prevR = r
       // r17 (verdict #2/#6 profile): the global Σest scalar rides the
       // round cut's own materialization job ([[graft.Fence.counted]]'s `sumD`
@@ -1123,7 +1101,6 @@ object Graph {
       r = rc.df // the deep-loop cut rule
       graft.Fence.releaseCut(prevR) // cut-backed: plain release would leave the blocks (r14 advice)
       totals += rc.sumD
-      onRound(d, (System.nanoTime() - t0) / 1e9)
     }
     graft.Fence.releaseCut(r); graft.Fence.release(e)
     // depth-bounded readout: one row per probed distance
@@ -1219,8 +1196,7 @@ object Graph {
     * lineage rule from the HyperBall probe). Iteration count on real
     * webgraphs is small: one giant SCC, then trim eats the periphery
     * (Broder: ~28% core, most of the rest DAG). */
-  def scc(edges: DataFrame,
-          onRound: (String, Long, Double) => Unit = (_, _, _) => ()): DataFrame = {
+  def scc(edges: DataFrame): DataFrame = {
     val e0 = graft.Fence(edges.select(col("src"), col("dst"))
       .filter(col("src") =!= col("dst")).distinct())
     val allNodes = graft.Fence(
@@ -1261,7 +1237,6 @@ object Graph {
       // never-shrink 72 s, per-round scan 112 s)
       var lastShrink = nActive
       while (trimming) {
-        val t0 = System.nanoTime()
         // r16: the dead set is a lazy filter over the counted degs
         // leaf and the round's ONE fence (the updated degs) carries
         // the termination scalar as its count delta — the old round
@@ -1300,7 +1275,6 @@ object Graph {
             lastShrink = estAlive
           }
         }
-        onRound("trim", estAlive, (System.nanoTime() - t0) / 1e9)
       }
       if (anyDead) {
         val Fenced(a2, nA2, _, _) = graft.Fence.counted(degs.select("node"), cut = true)
@@ -1324,7 +1298,6 @@ object Graph {
         var prevSum = -1L
         var curSum = cs.sum
         while (curSum != prevSum) {
-          val t0 = System.nanoTime()
           val prop = eA.join(colors.withColumnRenamed("node", "src"), "src")
             .groupBy(col("dst").as("node")).agg(max(col("clr")).as("nclr"))
           val prevC = colors
@@ -1337,7 +1310,6 @@ object Graph {
           graft.Fence.releaseCut(prevC)
           prevSum = curSum
           curSum = cs.sum
-          onRound("color", curSum, (System.nanoTime() - t0) / 1e9)
         }
         // ---- 3. multi-source backward BFS within each root's color ----
         // r17 DELTA-ONLY accumulation — see the [[harmonic]] note
@@ -1351,7 +1323,6 @@ object Graph {
         val acc = new DeltaAcc(rc.df)
         var nDelta = rc.rows // >= 1: the max active node is a root
         while (nDelta > 0) {
-          val t0 = System.nanoTime()
           val cand = eA
             .join(acc.frontier.withColumnRenamed("node", "dst"), "dst")
             .select(col("src").as("node"), col("clr")).distinct()
@@ -1360,7 +1331,6 @@ object Graph {
             .join(acc.seen("node"), Seq("node"), "left_anti")
           rc = graft.Fence.counted(next, cut = true, delta = true)
           acc.add(rc.df); nDelta = rc.rows
-          onRound("extract", nDelta, (System.nanoTime() - t0) / 1e9)
         }
         val reached = acc.all
         parts += reached.select(col("node"), col("clr").as("scc"))

@@ -392,8 +392,8 @@ object Interp {
     * ever grows. */
   def qInterpIdw(s: SparkSession, d: String): DataFrame = idw(s, K, G)
 
-  /** Parameterized kernel (mesh k×k nodes, raster g×g cells) — the
-    * ScaleProbe `idw` mode drives it at production raster magnitude. */
+  /** Parameterized kernel (mesh k×k nodes, raster g×g cells) — SCALE.md
+    * §IDW kNN regridding measures it at production raster magnitude. */
   private[graft] def idw(s: SparkSession, K: Int, G: Int): DataFrame = {
     val vals = series(s, K, 1).filter(col("ts") === 0).drop("ts")
     val nd = nodes(s, K).join(vals, "node_id")

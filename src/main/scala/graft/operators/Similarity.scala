@@ -826,12 +826,9 @@ object Similarity {
     * The codebook broadcast stays k × dim × 8 B + struct overhead
     * (k=4096 × 64-d ≈ 2 MB) — broadcastable at any real k; the per-round
     * scan cost is O(n·k·dim) dots, which is why production coarse-assigns
-    * in the 8-d projected space ([[qAnnIvfProj]]) when k grows.
-    * `onRound(i, secs)` fires after each round's action — the ScaleProbe
-    * `kmeans` mode uses it for per-round wall evidence (SCALE.md). */
-  def kmeansIvf(s: SparkSession, d: String, iters: Int, k: Int = 8,
-                onRound: (Int, Double) => Unit = (_, _) => ()): (DataFrame, Seq[Double]) =
-    kmeansIvfFrame(vecs(s, d), iters, k, onRound)
+    * in the 8-d projected space ([[qAnnIvfProj]]) when k grows. */
+  def kmeansIvf(s: SparkSession, d: String, iters: Int, k: Int = 8): (DataFrame, Seq[Double]) =
+    kmeansIvfFrame(vecs(s, d), iters, k)
 
   /** [[kmeansIvf]] over an arbitrary prepared (vec_id, v, nrm) frame —
     * the entry the replicated-corpus scale probe drives. `seeds`
@@ -884,7 +881,6 @@ object Similarity {
   }
 
   private[graft] def kmeansIvfFrame(e: DataFrame, iters: Int, k: Int,
-                                    onRound: (Int, Double) => Unit = (_, _) => (),
                                     seeds: Option[DataFrame] = None)
       : (DataFrame, Seq[Double]) = {
     val s = e.sparkSession
@@ -898,9 +894,7 @@ object Similarity {
     var centroids = graft.Fence.cut(seeds.getOrElse(d2ColdSeeds(e, k)))
     val meanCos = Seq.newBuilder[Double]
     var assigned = assign(centroids)
-    var round = 0
     (1 to iters).foreach { _ =>
-      val t0 = System.nanoTime()
       meanCos += assigned.agg(avg(col("cos"))).head().getDouble(0)
       val prevCents = centroids
       centroids = assigned
@@ -913,8 +907,6 @@ object Similarity {
       // old lazy `assigned` is reassigned below and never read again
       graft.Fence.releaseCut(prevCents)
       assigned = assign(centroids)
-      round += 1
-      onRound(round, (System.nanoTime() - t0) / 1e9)
     }
     meanCos += assigned.agg(avg(col("cos"))).head().getDouble(0)
     (assigned, meanCos.result())
@@ -1708,7 +1700,7 @@ object Similarity {
     * Pruning per-vid breaks strict undirected symmetry (A may keep B
     * while B drops A) — exactly HNSW's per-node neighbor lists; the
     * walk expands vid→nb lists, so asymmetry affects only which DIRECTED
-    * hops exist, and recall is re-measured after pruning (ScaleProbe).
+    * hops exist, and recall is re-measured after pruning (SCALE.md §Round-15 probes).
     * One rescore join over the relation — refresh-cadence cost, never
     * query-time. */
   private[graft] def pruneDegree(gu: DataFrame, vectors: DataFrame,
@@ -2045,9 +2037,9 @@ object Similarity {
       maxLevels, descentBeam, descentRounds)
   }
 
-  /** The descent walk itself, over in-memory relations — shared by
-    * [[graphSearchIndexedHier]] (persisted generation) and the
-    * ScaleProbe measurement legs (operator-level maintenance twins). */
+  /** The descent walk itself, over in-memory relations — run by
+    * [[graphSearchIndexedHier]] (persisted generation); its measured
+    * legs are in SCALE.md §Round-16 probes. */
   private[graft] def graphSearchHierDescend(e: DataFrame, gu: DataFrame,
       levEdges: DataFrame, q: DataFrame, k: Int, beam: Int, rounds: Int,
       corpusMin: Long, maxLevels: Int,

@@ -500,8 +500,8 @@ object TextOps {
   def qTextBigramLm(s: SparkSession, d: String): DataFrame =
     bigramLm(Tables.documents(s, d))
 
-  /** Core over any (doc_id, text) frame — reused by ScaleProbe's
-    * replication probe. */
+  /** Core over any (doc_id, text) frame — the replicated-corpus
+    * numbers are in SCALE.md §Round-7 fixes. */
   private[graft] def bigramLm(docs: DataFrame): DataFrame = {
     val big = fanout(docs)
       .select(col("doc_id"), toks(col("text")).as("tk"))
@@ -633,8 +633,8 @@ object TextOps {
       .orderBy(col("weight_q").desc, col("doc_id"))
       .limit(100)
 
-  /** The DSIR core over any (doc_id, lang, text) frame — factored so
-    * [[graft.ScaleProbe]] can drive it at replicated-corpus scale. */
+  /** The DSIR core over any (doc_id, lang, text) frame — the
+    * replicated-corpus numbers are in SCALE.md §Round-9 probes. */
   def dsirWeights(docs: DataFrame): DataFrame = {
     // The feature relation feeds BOTH the model build and the scoring
     // join; unfenced, Catalyst plans the scan + explode + md5 + count
@@ -841,8 +841,8 @@ object TextOps {
     * The selected SET is identical to the full window form by
     * construction (prefix order is a prefix of full-hash order; the
     * boundary ranks by the same (h, doc_id) key) — DedupSimilaritySpec
-    * asserts set equality, and ScaleProbe `selectk` measures both forms
-    * at replicated scale. `alloc` columns: (source, alloc). */
+    * asserts set equality, and SCALE.md §Round-10 probes measures both
+    * forms at replicated scale. `alloc` columns: (source, alloc). */
   private[graft] def selectKByHash(docs: DataFrame, alloc: DataFrame): DataFrame = {
     val h = md5(col("doc_id").cast("string"))
     val withP = docs.select(col("doc_id"), col("source"), h.as("h"),

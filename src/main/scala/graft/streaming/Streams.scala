@@ -228,20 +228,12 @@ object Streams {
     * files in, the reference's cloud-ordered GeoTIFFs out, per cycle. */
   def interpStreamCogs(seriesDir: String, cells: DataFrame,
                        spec: graft.operators.Interp.GridSpec, outDir: String,
-                       checkpoint: String,
-                       maxFilesPerBatch: Option[Int] = None)
+                       checkpoint: String)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val s = cells.sparkSession
     val cellsPinned = cells.transform(graft.Fence.cut)
-    // maxFilesPerBatch: one landing FILE is one forecast cycle (the
-    // landing contract), so capping files-per-trigger makes a staged
-    // BACKLOG process as one micro-batch per cycle — the shape the
-    // ScaleProbe `stream` mode measures per-cycle walls on. Unset, an
-    // AvailableNow run folds the whole backlog into one batch.
-    val src = maxFilesPerBatch.foldLeft(
-      s.readStream.schema(seriesLandingSchema))(
-      (r, n) => r.option("maxFilesPerTrigger", n))
-    src.parquet(seriesDir)
+    // an AvailableNow run folds the whole landed backlog into one batch
+    s.readStream.schema(seriesLandingSchema).parquet(seriesDir)
       .writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
@@ -294,16 +286,9 @@ object Streams {
     * ([[graft.operators.Dedup.qDedupMinhash]]); this stream owns the
     * cross-crawl axis. */
   def dedupStream(s: SparkSession, docsDir: String, indexDir: String,
-                  hitsDir: String, checkpoint: String,
-                  maxFilesPerBatch: Option[Int] = None)
+                  hitsDir: String, checkpoint: String)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    // one landing FILE = one crawl (the landing contract); capping
-    // files-per-trigger lets a staged backlog replay as one micro-batch
-    // per crawl — the ScaleProbe `dstream` measurement shape
-    val src = maxFilesPerBatch.foldLeft(
-      s.readStream.schema(docsLandingSchema))(
-      (r, n) => r.option("maxFilesPerTrigger", n))
-    src.parquet(docsDir)
+    s.readStream.schema(docsLandingSchema).parquet(docsDir)
       .writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
@@ -351,15 +336,13 @@ object Streams {
     * the read-back parquet (columnar, doc_id+text pruned) rather than
     * re-running the container parse.
     *
-    * Outputs per micro-batch (one crawl under `AvailableNow` +
-    * `maxFilesPerBatch` staging, the [[dedupStream]] convention):
+    * Outputs per micro-batch:
     * `docsDir/batch_<id>` — the decoded corpus increment;
     * `hitsDir/batch_<id>` — (doc_id, dup_of, n_bands) cross-crawl
     * near-dup hits against all EARLIER crawls; `indexDir/batch_<id>` —
     * the crawl's band signatures, appended to the corpus index. */
   def crawlStream(s: SparkSession, warcDir: String, docsDir: String,
                   indexDir: String, hitsDir: String, checkpoint: String,
-                  maxFilesPerBatch: Option[Int] = None,
                   splitBytes: Long = 64L << 20)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     // binaryFile's fixed source schema, spelled out because streaming
@@ -367,11 +350,9 @@ object Streams {
     val binaryFileSchema = StructType(Seq(
       StructField("path", StringType), StructField("modificationTime", TimestampType),
       StructField("length", LongType), StructField("content", BinaryType)))
-    val src = maxFilesPerBatch.foldLeft(
-      s.readStream.format("binaryFile").schema(binaryFileSchema)
-        .option("pathGlobFilter", "*.{warc,warc.gz}"))(
-      (r, n) => r.option("maxFilesPerTrigger", n))
-    src.load(warcDir)
+    s.readStream.format("binaryFile").schema(binaryFileSchema)
+      .option("pathGlobFilter", "*.{warc,warc.gz}")
+      .load(warcDir)
       .select(col("path"), col("length")) // prunes `content`: listing-only stream
       .writeStream
       .outputMode("append")
@@ -422,18 +403,15 @@ object Streams {
     * the edge history remains replayable. */
   def watStream(s: SparkSession, watDir: String, edgesDir: String,
                 ranksDir: String, checkpoint: String,
-                maxFilesPerBatch: Option[Int] = None,
                 splitBytes: Long = 64L << 20,
                 compactEvery: Int = 16)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val binaryFileSchema = StructType(Seq(
       StructField("path", StringType), StructField("modificationTime", TimestampType),
       StructField("length", LongType), StructField("content", BinaryType)))
-    val src = maxFilesPerBatch.foldLeft(
-      s.readStream.format("binaryFile").schema(binaryFileSchema)
-        .option("pathGlobFilter", "*.{wat,wat.gz}"))(
-      (r, n) => r.option("maxFilesPerTrigger", n))
-    src.load(watDir)
+    s.readStream.format("binaryFile").schema(binaryFileSchema)
+      .option("pathGlobFilter", "*.{wat,wat.gz}")
+      .load(watDir)
       .select(col("path"), col("length"))
       .writeStream
       .outputMode("append")
@@ -577,18 +555,15 @@ object Streams {
                          ranksDir: String, curateDir: String, checkpoint: String,
                          hostOf: org.apache.spark.sql.Column =
                            expr("CAST(regexp_extract(doc_id, ':([0-9]+)>$', 1) AS BIGINT)"),
-                         maxFilesPerBatch: Option[Int] = None,
                          splitBytes: Long = 64L << 20,
                          compactEvery: Int = 16)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val binaryFileSchema = StructType(Seq(
       StructField("path", StringType), StructField("modificationTime", TimestampType),
       StructField("length", LongType), StructField("content", BinaryType)))
-    val src = maxFilesPerBatch.foldLeft(
-      s.readStream.format("binaryFile").schema(binaryFileSchema)
-        .option("pathGlobFilter", "*.{warc,warc.gz,wat,wat.gz,wet,wet.gz}"))(
-      (r, n) => r.option("maxFilesPerTrigger", n))
-    src.load(dropDir)
+    s.readStream.format("binaryFile").schema(binaryFileSchema)
+      .option("pathGlobFilter", "*.{warc,warc.gz,wat,wat.gz,wet,wet.gz}")
+      .load(dropDir)
       .select(col("path"), col("length")) // listing-only discovery
       .writeStream
       .outputMode("append")
@@ -968,8 +943,8 @@ object Streams {
     *    This is ALSO the honest test of the r14 navigability lesson:
     *    early inserts link across what later becomes long range, the
     *    construction HNSW's greedy descent needs (the post-hoc layered
-    *    hierarchy measured recall 0.135; ScaleProbe `knningest` measures
-    *    this path — SCALE.md).
+    *    hierarchy measured recall 0.135; SCALE.md §Round-15 probes
+    *    measures this path).
     *  - **refresh** (every `refreshEvery`-th batch): COMPACTION, not a
     *    rebuild — preserving the incrementally-grown links is the point.
     *    Generation ∪ deltas union-distinct, DEGREE-PRUNED to each

@@ -19,7 +19,7 @@ import graft.operators.Similarity
   *     floors sit below with margin so a silent scoring regression
   *     fails, while honest variance does not).
   * The 50 k-vector recall CURVES (nprobe / code-bits sweeps) live in
-  * ScaleProbe `recall` mode + SCALE.md.
+  * SCALE.md §Round-10 probes.
   */
 class AnnRecallSpec extends SparkSpec {
 
@@ -83,7 +83,7 @@ class AnnRecallSpec extends SparkSpec {
   }
 
   test("PQ re-rank restores recall@10 >= 0.9 at the 50k shape where plain PQ measures ~0.4") {
-    // the ScaleProbe `recall 25` corpus: 25 perturbed replicas of the 2k
+    // the SCALE.md `recall 25` corpus: 25 perturbed replicas of the 2k
     // sf0.1 embeddings — the near-dup-heavy distribution where 16-bit
     // ADC codes measured 0.415 strict recall (SCALE.md). The re-rank
     // leg must restore >= 0.9 against the engine's own exact scorer

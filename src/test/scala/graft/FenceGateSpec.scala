@@ -22,12 +22,12 @@ import org.apache.spark.storage.StorageLevel
   *  4. COUNTED — `Fence.counted`'s fused scalars equal what separate
   *     SQL actions would compute, and its leaf carries exact stats.
   */
-class FenceGateSpec extends SparkSpec {
-
-  /** Main-source files, outside `allowed`, whose text matches `hit`. */
-  private def mainOffenders(allowed: Set[String])(hit: String => Boolean): List[String] = {
+object FenceGateSpec {
+  /** Scala files under `dir`, outside `allowed`, whose text matches `hit`. */
+  def offenders(dir: String, allowed: Set[String] = Set.empty)(
+      hit: String => Boolean): List[String] = {
     import scala.jdk.CollectionConverters._
-    val root = java.nio.file.Paths.get("src/main/scala")
+    val root = java.nio.file.Paths.get(dir)
     assert(java.nio.file.Files.isDirectory(root), s"run from repo root: $root")
     java.nio.file.Files.walk(root).iterator().asScala
       .filter(p => p.toString.endsWith(".scala"))
@@ -35,24 +35,28 @@ class FenceGateSpec extends SparkSpec {
       .filter(p => hit(new String(java.nio.file.Files.readAllBytes(p))))
       .map(_.toString).toList
   }
+}
+
+class FenceGateSpec extends SparkSpec {
+  import FenceGateSpec.offenders
 
   test("main source has no raw .localCheckpoint() outside Fence.scala and the shim") {
     // the one real checkpoint call is the RDD-level one inside
     // GraftSqlShim.materialize; graft code has exactly one sanctioned
     // spelling — graft.Fence.cut (or Fence.counted with cut = true)
-    val offenders = mainOffenders(Set("Fence.scala", "GraftSqlShim.scala"))(
+    val hits = offenders("src/main/scala", Set("Fence.scala", "GraftSqlShim.scala"))(
       _.contains(".localCheckpoint("))
-    assert(offenders.isEmpty,
-      s"raw .localCheckpoint() call sites outside graft.Fence/shim: $offenders")
+    assert(hits.isEmpty,
+      s"raw .localCheckpoint() call sites outside graft.Fence/shim: $hits")
   }
 
   test("main source calls the shim's materialize only from Fence.scala") {
     // the qualified call, a wildcard import, or a selective import of it
     val call = """GraftSqlShim\s*\.\s*(?:materialize\b|_|\{[^}]*\bmaterialize\b)""".r
-    val offenders = mainOffenders(Set("Fence.scala", "GraftSqlShim.scala"))(
+    val hits = offenders("src/main/scala", Set("Fence.scala", "GraftSqlShim.scala"))(
       call.findFirstIn(_).isDefined)
-    assert(offenders.isEmpty,
-      s"GraftSqlShim.materialize reached outside graft.Fence: $offenders")
+    assert(hits.isEmpty,
+      s"GraftSqlShim.materialize reached outside graft.Fence: $hits")
   }
 
   /** The pinned leaf's RDD, or None if the frame has no LogicalRDD leaf. */

@@ -34,8 +34,8 @@ import graft.operators.Dedup
   * The residual case — documents that are ~ALL boilerplate, forcing
   * template shingles into prefixes — is the case where the TRUE ANSWER
   * is itself quadratic (those documents genuinely are near-duplicates),
-  * so candidate growth tracks output growth; ScaleProbe `ppjoinx`
-  * measures that trajectory (SCALE.md).
+  * so candidate growth tracks output growth; SCALE.md §Round-10 probes
+  * measures that trajectory.
   */
 class PpjoinSkewSpec extends SparkSpec {
 

@@ -37,6 +37,19 @@ class SqlFrontendSpec extends SparkSpec {
     assert(s.conf.get("spark.sql.session.timeZone") === "UTC")
   }
 
+  test("every main builds its session through Graft.session") {
+    val builders = FenceGateSpec.offenders("src/main/scala", Set("Graft.scala"))(
+      _.contains("SparkSession.builder"))
+    assert(builders.isEmpty, s"SparkSession.builder outside Graft.scala: $builders")
+  }
+
+  test("no loop operator or stream entry carries a per-round or per-trigger hook") {
+    // spelled in pieces so this file does not match itself
+    val hook = ("\\b(?:on" + "Round|maxFilesPer" + "Batch)\\b").r
+    val hooks = FenceGateSpec.offenders("src")(hook.findFirstIn(_).isDefined)
+    assert(hooks.isEmpty, s"removed loop/stream hooks are back: $hooks")
+  }
+
   test("vec_dot registered via GraftExtensions.install is usable from SQL") {
     GraftExtensions.install(spark)
     val r = spark.sql(
