@@ -8,7 +8,7 @@ import org.apache.spark.sql.SparkSession
   *
   *   fort.63.nc  →  ingest (NetCDF-3 → Parquet tables, -1 shift)
   *               →  mesh→raster barycentric interpolation
-  *                  (bucket equi-join, time as a join key)
+  *                  (row-walk containment, time as a join key)
   *               →  one Cloud-Optimized GeoTIFF per timestep
   *               →  GeoServer ImageMosaic sidecar properties
   *

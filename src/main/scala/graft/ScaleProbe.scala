@@ -74,14 +74,13 @@ object ScaleProbe {
     * the REAL parquet-backed Catalyst stats of the just-ingested series
     * — no test override anywhere. A QueryExecutionListener captures the
     * COG write's executed QueryExecution so the OBSERVED join shape
-    * (corner-explode Generate, series joined shuffled on node_id, never
+    * (3-join or corner-explode, and how many of its series joins
     * broadcast) is read off the plan that actually ran — the SCALE.md
     * evidence closing the loop between the gate's intent and execution.
     * Usage: tools/run_verify.sh pipeline <nc>,<outDir>,<g> graft.ScaleProbe */
   private def pipelineProbe(spark: SparkSession, arg: String): Unit = {
     import org.apache.spark.sql.execution.QueryExecution
-    import org.apache.spark.sql.execution.joins._
-    import org.apache.spark.sql.execution.GenerateExec
+    import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
     val Array(nc, outDir, gs) = arg.split(",")
     val g = gs.toInt
     val captured = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
@@ -99,42 +98,21 @@ object ScaleProbe {
     val thr = org.apache.spark.sql.GraftSqlShim.autoBroadcastJoinThreshold(spark)
     val gate = math.min(operators.Interp.BroadcastSeriesMaxBytes, thr)
     println(f"pipeline: $n COGs (g=$g) in $wall%.1f s; series parquet stats=$bytes B vs gate=min(100MB ceiling, $thr planner)=$gate B -> ${if (bytes > gate) "corner-explode (scale) path" else "3-join (small) path"}")
-    // the listener bus is async — wait for the interpolation QE to land
-    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-    def interpQe: Option[QueryExecution] = {
-      import scala.jdk.CollectionConverters._
-      captured.asScala.find { qe =>
-        val nds = PlanWalk.flatten(qe.executedPlan)
-        nds.exists(_.isInstanceOf[GenerateExec]) &&
-          nds.exists(_.toString.contains("corner"))
-      }
+    org.apache.spark.sql.GraftSqlShim.drainListenerBus(spark)
+    // the interpolation is the action whose plan joins the series on its
+    // node_id, which joinSeriesGated names m1..m3 on the 3-join path
+    val seriesKeys = Set("node_id", "m1", "m2", "m3")
+    def seriesJoins(qe: QueryExecution) = PlanWalk.flatten(qe.executedPlan).collect {
+      case j: BaseJoinExec if (j.leftKeys ++ j.rightKeys).exists(_.references.exists(a => seriesKeys(a.name))) => j
     }
-    var qe = interpQe
-    while (qe.isEmpty && System.nanoTime() < deadline) { Thread.sleep(200); qe = interpQe }
-    qe match {
-      case None => println("pipeline: WARNING — interpolation QueryExecution not captured")
-      case Some(q) =>
-        val nds = PlanWalk.flatten(q.executedPlan)
-        def onNodeId(keys: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =
-          keys.exists(_.references.exists(_.name == "node_id"))
-        val shuffledSeries = nds.collect {
-          case j: SortMergeJoinExec if onNodeId(j.leftKeys)    => "SortMergeJoin(node_id)"
-          case j: ShuffledHashJoinExec if onNodeId(j.leftKeys) => "ShuffledHashJoin(node_id)"
-        }
-        val broadcastSeries = nds.collect {
-          case j: BroadcastHashJoinExec if onNodeId(j.leftKeys) => j
-        }
-        val generates = nds.count(_.isInstanceOf[GenerateExec])
-        val verdict =
-          if (shuffledSeries.nonEmpty && broadcastSeries.isEmpty)
-            " -> CORNER-EXPLODE, SHUFFLED node_id JOIN, NO BROADCAST (as gated)"
-          else if (broadcastSeries.nonEmpty)
-            // AQE promoted from RUNTIME bytes — legitimate below its
-            // threshold; at the 3e7-row production series it cannot fire
-            " -> corner-explode with AQE-promoted broadcast (runtime bytes fit)"
-          else " -> UNEXPECTED SHAPE"
-        println(s"pipeline observed join shape: corner-explode generates=$generates, " +
-          s"series join=${shuffledSeries.mkString(",")}, broadcast-on-node_id=${broadcastSeries.size}" + verdict)
+    import scala.jdk.CollectionConverters._
+    captured.asScala.map(seriesJoins).find(_.nonEmpty) match {
+      case None => println("pipeline: no executed plan joined the series on node_id")
+      case Some(joins) =>
+        val broadcast = joins.count(_.isInstanceOf[BroadcastHashJoinExec])
+        println(s"pipeline observed join shape: ${if (joins.size == 1) "corner-explode" else "3-join"}, " +
+          s"series joins: $broadcast broadcast, ${joins.size - broadcast} shuffled " +
+          s"(${joins.map(_.nodeName).distinct.mkString(", ")})")
     }
   }
 }

@@ -13,7 +13,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object SparkEntry {
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     * The reference's core computation end-to-end: unstructured mesh →
-    * bucketed containment join → barycentric raster per timestep
+    * row-walk containment → barycentric raster per timestep
     * (run/adcircTime2cogs.py:190-209). */
   def entry(spark: SparkSession): DataFrame =
     operators.Interp.qInterpBarycentric(spark, "/root/testdata/sf0.001")

@@ -10,16 +10,16 @@ import org.apache.spark.sql.functions._
   * — SURVEY §2.3 J1/J2 + §2.4 A4.
   *
   * Decomposition (no UDF, no scipy — pure relational algebra):
-  *   1. mesh + grid are *generated relations* (`range` + arithmetic — the
-  *      reference's `np.arange`/`np.meshgrid`, run/adcircTime2cogs.py:74-81);
-  *   2. point-in-triangle containment = a RANGE JOIN rewritten as an
-  *      EQUI-join on spatial bucket keys: each triangle is exploded to the
-  *      integer-lattice buckets its bbox overlaps, each grid centroid hashes
-  *      to exactly one bucket, and the join on (bx, by) is then an ordinary
-  *      shuffled/broadcast hash join with the exact barycentric sign test as
-  *      a residual predicate (SURVEY §4, §7.5.1). At 100 TB this is the
-  *      critical move: the O(cells × triangles) nested loop becomes
-  *      O(cells + triangles) bucket-local work.
+  *   1. the mesh is a *generated relation* and raster centroids are
+  *      arithmetic on their row/column indices (the reference's
+  *      `np.arange`/`np.meshgrid`, run/adcircTime2cogs.py:74-81);
+  *   2. point-in-triangle containment walks each triangle's raster rows
+  *      (scan conversion): a triangle emits only the centroids of the
+  *      rows its y-span crosses, in each row only the columns between its
+  *      edges' x-intercepts, and the exact barycentric sign test then
+  *      drops the near misses (SURVEY §4, §7.5.1). The O(cells ×
+  *      triangles) nested loop becomes O(cells + triangles) work local to
+  *      each triangle, with no cell relation and no containment join.
   *   3. barycentric weights are closed-form column math; the per-timestep
   *      value = w1·v1 + w2·v2 + w3·v3 via three broadcast equi-joins on
   *      node_id (the reference's positional alignment, SURVEY J5) — one
@@ -81,43 +81,12 @@ object Interp {
       .withColumn("value", round(sin(col("node_id").cast("double") * lit(0.7) +
                                      col("ts").cast("double") * lit(1.3)) * lit(10.0), 4))
 
-  /** Triangles with corner coordinates, exploded to every bucket their bbox
-    * overlaps (the J1 "spatial index build"). Nodes are broadcast — the
-    * dimension side of the star (3×). */
-  def triangles(s: SparkSession, k: Int = K): DataFrame = {
-    val n = broadcast(nodes(s, k))
-    val e = elements(s, k)
-      .join(n.select(col("node_id").as("n1"), col("lon").as("x1"), col("lat").as("y1")), "n1")
-      .join(n.select(col("node_id").as("n2"), col("lon").as("x2"), col("lat").as("y2")), "n2")
-      .join(n.select(col("node_id").as("n3"), col("lon").as("x3"), col("lat").as("y3")), "n3")
-    e.withColumn("tbx", explode(sequence(
-        floor(least(col("x1"), col("x2"), col("x3"))).cast("long"),
-        floor(greatest(col("x1"), col("x2"), col("x3"))).cast("long"))))
-     .withColumn("tby", explode(sequence(
-        floor(least(col("y1"), col("y2"), col("y3"))).cast("long"),
-        floor(greatest(col("y1"), col("y2"), col("y3"))).cast("long"))))
-  }
-
-  /** The J2 containment join: bucket equi-join + exact barycentric residual;
-    * ties to the lowest ele_id (one window on the tiny matched set). */
+  /** The J2 containment on the toy grid (centroid i at 0.3 + i·0.38 on
+    * both axes): the row walk, the barycentric residual, ties to the
+    * lowest ele_id. */
   def cellMap(s: SparkSession, k: Int = K, g: Int = G): DataFrame = {
-    val det = (col("y2") - col("y3")) * (col("x1") - col("x3")) +
-              (col("x3") - col("x2")) * (col("y1") - col("y3"))
-    val w1 = ((col("y2") - col("y3")) * (col("xm") - col("x3")) +
-              (col("x3") - col("x2")) * (col("ym") - col("y3"))) / det
-    val w2 = ((col("y3") - col("y1")) * (col("xm") - col("x3")) +
-              (col("x1") - col("x3")) * (col("ym") - col("y3"))) / det
-    val matched = grid(s, g)
-      .join(broadcast(triangles(s, k)), col("bx") === col("tbx") && col("by") === col("tby"))
-      .withColumn("w1", w1)
-      .withColumn("w2", w2)
-      .withColumn("w3", lit(1.0) - col("w1") - col("w2"))
-      .filter(col("w1") >= 0 && col("w2") >= 0 && col("w3") >= 0)
-    val first = Window.partitionBy("grow", "gcol").orderBy("ele_id")
-    matched
-      .withColumn("rn", row_number().over(first))
-      .filter(col("rn") === 1)
-      .select("grow", "gcol", "ele_id", "n1", "n2", "n3", "w1", "w2", "w3")
+    val toy = Axis(0.3, 0.0, 0.38)
+    containment(walk(nodes(s, k), elements(s, k), g, toy, toy))
   }
 
   /** Manifest q_interp_barycentric: one raster value per (ts, row, col) —
@@ -223,7 +192,7 @@ object Interp {
 
   /** Generalized pipeline at any mesh/grid/time scale — used by the scale
     * test at ~80k triangles x 250k cells (the production mesh magnitude,
-    * BASELINE.md) to prove the bucket-join rewrite holds at 100x the
+    * BASELINE.md) to prove the row-walk containment holds at 100x the
     * oracle-checked toy size.
     *
     * The series join is SIZE-GATED (`broadcastSeries`; default: row-count
@@ -260,8 +229,8 @@ object Interp {
   }
 
   /** Raster geometry for an arbitrary mesh: bbox + g×g cells. Pixel-is-area
-    * with centroids at cell centers; buckets ARE grid cells, so the
-    * triangle bbox explosion and the centroid bucketing share one unit. */
+    * with centroids at cell centers: column i at minX + (i + 0.5)·resX,
+    * row i at maxY − (i + 0.5)·resY. */
   case class GridSpec(minX: Double, maxX: Double, minY: Double, maxY: Double, g: Int) {
     def resX: Double = (maxX - minX) / g
     def resY: Double = (maxY - minY) / g
@@ -275,14 +244,106 @@ object Interp {
     GridSpec(r.getDouble(0), r.getDouble(1), r.getDouble(2), r.getDouble(3), g)
   }
 
+  /** One raster axis: centroid i sits at a + (i + o)·s. The toy grid is
+    * (0.3, 0, 0.38) on both axes; a GridSpec's columns are
+    * (minX, 0.5, resX) and its north-up rows (maxY, 0.5, −resY). Adding
+    * 0.0 to an integer-valued double and a − x·r = a + x·(−r) are exact,
+    * so these are the same doubles as 0.3 + i·0.38, minX + (i + 0.5)·resX
+    * and maxY − (i + 0.5)·resY. */
+  private case class Axis(a: Double, o: Double, s: Double) {
+    def at(i: Column): Column = lit(a) + (i + lit(o)) * lit(s)
+
+    /** The indices in [0, g) of the centroids within [lo, hi] widened by
+      * [[SpanSlack]]; null (no rows) when there are none, because
+      * `sequence(lo, hi)` counts down when lo > hi. */
+    def span(lo: Column, hi: Column, g: Int): Column = {
+      def idx(v: Column): Column = (v - lit(a)) / lit(s) - lit(o)
+      val (l, h) = if (s > 0) (lo, hi) else (hi, lo) // s < 0: the index falls as v rises
+      val first = greatest(ceil(idx(l) - lit(SpanSlack)), lit(0L))
+      val last = least(floor(idx(h) + lit(SpanSlack)), lit(g - 1L))
+      when(first <= last, sequence(first.cast("int"), last.cast("int")))
+    }
+  }
+
+  /** How far, in pixels, the walk's row and column ranges reach past a
+    * triangle's exact span: far above the rounding of the intercepts, so
+    * every centroid the residual can accept is a candidate. */
+  private val SpanSlack = 1e-6
+
+  private val det = (col("y2") - col("y3")) * (col("x1") - col("x3")) +
+                    (col("x3") - col("x2")) * (col("y1") - col("y3"))
+
+  /** Elements with their corner coordinates (x1, y1)..(x3, y3): three
+    * joins against the broadcast node table, the small side of the star. */
+  private[graft] def corners(nodesDf: DataFrame, elementsDf: DataFrame): DataFrame = {
+    val n = broadcast(nodesDf)
+    elementsDf
+      .join(n.select(col("node_id").as("n1"), col("lon").as("x1"), col("lat").as("y1")), "n1")
+      .join(n.select(col("node_id").as("n2"), col("lon").as("x2"), col("lat").as("y2")), "n2")
+      .join(n.select(col("node_id").as("n3"), col("lon").as("x3"), col("lat").as("y3")), "n3")
+  }
+
+  /** The containment candidates: one row per (triangle, centroid) pair.
+    * Each triangle with |det| > 1e-12 takes the raster rows its y-span
+    * crosses and, in each row, the columns between its edges'
+    * x-intercepts at the row's y. */
+  private def walk(nodesDf: DataFrame, elementsDf: DataFrame, g: Int,
+                   xa: Axis, ya: Axis): DataFrame = {
+    val (x1, y1, x2, y2, x3, y3) =
+      (col("x1"), col("y1"), col("x2"), col("y2"), col("x3"), col("y3"))
+    val (ylo, yhi, yc) = (least(y1, y2, y3), greatest(y1, y2, y3), col("yc"))
+    // an edge's x at yc; null where yc misses the edge or the edge is
+    // horizontal, whose endpoints the other two edges then contribute
+    def cut(xp: Column, yp: Column, xq: Column, yq: Column): Column =
+      when(yp =!= yq && least(yp, yq) <= yc && yc <= greatest(yp, yq),
+           xp + (yc - yp) * (xq - xp) / (yq - yp))
+    val cuts = Seq(cut(x1, y1, x2, y2), cut(x2, y2, x3, y3), cut(x3, y3, x1, y1))
+    corners(nodesDf, elementsDf)
+      .filter(abs(det) > 1e-12)
+      .withColumn("grow", explode(ya.span(ylo, yhi, g)))
+      .withColumn("ym", ya.at(col("grow")))
+      // the row's y held inside the y-span, so a slack row still meets two edges
+      .withColumn("yc", least(greatest(col("ym"), ylo), yhi))
+      .withColumns(Map("xlo" -> least(cuts: _*), "xhi" -> greatest(cuts: _*)))
+      .withColumn("gcol", explode(xa.span(col("xlo"), col("xhi"), g)))
+      .withColumn("xm", xa.at(col("gcol")))
+      .drop("yc", "xlo", "xhi")
+  }
+
+  /** The J2 containment of [[walk]]'s candidates: the exact barycentric
+    * residual, then ties to the lowest ele_id (one window on the matched
+    * set). Out: (grow, gcol, ele_id, n1, n2, n3, w1, w2, w3). */
+  private def containment(candidates: DataFrame): DataFrame = {
+    val w1 = ((col("y2") - col("y3")) * (col("xm") - col("x3")) +
+              (col("x3") - col("x2")) * (col("ym") - col("y3"))) / det
+    val w2 = ((col("y3") - col("y1")) * (col("xm") - col("x3")) +
+              (col("x1") - col("x3")) * (col("ym") - col("y3"))) / det
+    val first = Window.partitionBy("grow", "gcol").orderBy("ele_id")
+    candidates
+      .withColumns(Map("w1" -> w1, "w2" -> w2))
+      .withColumn("w3", lit(1.0) - col("w1") - col("w2"))
+      .filter(col("w1") >= 0 && col("w2") >= 0 && col("w3") >= 0)
+      .withColumn("rn", row_number().over(first))
+      .filter(col("rn") === 1)
+      .select("grow", "gcol", "ele_id", "n1", "n2", "n3", "w1", "w2", "w3")
+  }
+
+  /** [[walk]]'s candidate pairs for a GridSpec raster. The name is older
+    * than the walk and stays because the benchmark's
+    * `interp.candidate_pairs` probe calls it. */
+  private[graft] def bucketTris(nodesDf: DataFrame, elementsDf: DataFrame,
+                                spec: GridSpec): DataFrame =
+    walk(nodesDf, elementsDf, spec.g,
+         Axis(spec.minX, 0.5, spec.resX), Axis(spec.maxY, 0.5, -spec.resY))
+
   /** The reference pipeline for ARBITRARY ingested tables
     * (sources.Ingest layout: nodes(node_id,lon,lat),
-    * elements(ele_id,n1,n2,n3), series(ts,node_id,value)) — same
-    * bucket-equi-join + barycentric-residual shape as the oracle-checked
-    * toy, parameterized by the mesh bbox. grow counts DOWN from maxY
-    * (north-up raster rows, reference run/adcircTime2cogs.py:74-75).
-    * Output (ts, grow, gcol, value) — one raster value per cell per
-    * timestep, cells outside the mesh absent (the reference's NaN mask).
+    * elements(ele_id,n1,n2,n3), series(ts,node_id,value)) — the same
+    * row-walk containment as the oracle-checked toy, parameterized by
+    * the mesh bbox. grow counts DOWN from maxY (north-up raster rows,
+    * reference run/adcircTime2cogs.py:74-75). Output
+    * (ts, grow, gcol, value) — one raster value per cell per timestep,
+    * cells outside the mesh absent (the reference's NaN mask).
     *
     * The series value join is SIZE-GATED through [[joinSeriesGated]] (the
     * same helper as the oracle query): below [[BroadcastSeriesMaxBytes]]
@@ -291,64 +352,10 @@ object Interp {
     * above, it takes the corner-explode single shuffled equi-join.
     * `broadcastSeries` overrides the gate for tests / operators who know
     * their data. */
-  /** The bucket-exploded triangle relation of [[interpolateTables]] —
-    * one row per (triangle, overlapped raster bucket), the exact relation
-    * the containment join shuffles on (tbx, tby). Factored out so
-    * SkewSpec can quantify bucket-key skew on a clustered (coastal)
-    * mesh against the same relation the production join sees. */
-  private[graft] def bucketTris(nodesDf: DataFrame, elementsDf: DataFrame,
-                                spec: GridSpec): DataFrame = {
-    val g = spec.g
-    val n = broadcast(nodesDf)
-    elementsDf
-      .join(n.select(col("node_id").as("n1"), col("lon").as("x1"), col("lat").as("y1")), "n1")
-      .join(n.select(col("node_id").as("n2"), col("lon").as("x2"), col("lat").as("y2")), "n2")
-      .join(n.select(col("node_id").as("n3"), col("lon").as("x3"), col("lat").as("y3")), "n3")
-      // bucket range in grid-cell units, clipped to the raster
-      .withColumn("tbx", explode(sequence(
-        greatest(floor((least(col("x1"), col("x2"), col("x3")) - lit(spec.minX)) / lit(spec.resX)), lit(0L)),
-        least(floor((greatest(col("x1"), col("x2"), col("x3")) - lit(spec.minX)) / lit(spec.resX)), lit(g - 1L)))))
-      .withColumn("tby", explode(sequence(
-        greatest(floor((lit(spec.maxY) - greatest(col("y1"), col("y2"), col("y3"))) / lit(spec.resY)), lit(0L)),
-        least(floor((lit(spec.maxY) - least(col("y1"), col("y2"), col("y3"))) / lit(spec.resY)), lit(g - 1L)))))
-  }
-
   def interpolateTables(nodesDf: DataFrame, elementsDf: DataFrame,
                         seriesDf: DataFrame, spec: GridSpec,
                         broadcastSeries: Option[Boolean] = None): DataFrame = {
-    val s = nodesDf.sparkSession
-    val g = spec.g
-    val grid = s.range(0, g.toLong * g).toDF("id")
-      .select((col("id") % g).cast("int").as("gcol"),
-              floor(col("id") / g).cast("int").as("grow"))
-      .select(col("gcol"), col("grow"),
-              (lit(spec.minX) + (col("gcol") + lit(0.5)) * lit(spec.resX)).as("xm"),
-              (lit(spec.maxY) - (col("grow") + lit(0.5)) * lit(spec.resY)).as("ym"))
-      .withColumn("bx", col("gcol").cast("long"))
-      .withColumn("by", floor((lit(spec.maxY) - col("ym")) / lit(spec.resY)).cast("long"))
-    val tris = bucketTris(nodesDf, elementsDf, spec)
-    val det = (col("y2") - col("y3")) * (col("x1") - col("x3")) +
-              (col("x3") - col("x2")) * (col("y1") - col("y3"))
-    val w1 = ((col("y2") - col("y3")) * (col("xm") - col("x3")) +
-              (col("x3") - col("x2")) * (col("ym") - col("y3"))) / det
-    val w2 = ((col("y3") - col("y1")) * (col("xm") - col("x3")) +
-              (col("x1") - col("x3")) * (col("ym") - col("y3"))) / det
-    // NO broadcast hint on tris: the bucket-exploded triangle relation
-    // grows with raster resolution (one row per overlapped grid cell);
-    // at production g the equi-join on (bx,by) must be free to plan as a
-    // shuffled hash join — AQE broadcasts it anyway when it fits.
-    val matched = grid
-      .join(tris, col("bx") === col("tbx") && col("by") === col("tby"))
-      .filter(abs(det) > 1e-12)
-      .withColumn("w1", w1)
-      .withColumn("w2", w2)
-      .withColumn("w3", lit(1.0) - col("w1") - col("w2"))
-      .filter(col("w1") >= 0 && col("w2") >= 0 && col("w3") >= 0)
-    val first = Window.partitionBy("grow", "gcol").orderBy("ele_id")
-    val cells = matched
-      .withColumn("rn", row_number().over(first))
-      .filter(col("rn") === 1)
-      .select("grow", "gcol", "ele_id", "n1", "n2", "n3", "w1", "w2", "w3")
+    val cells = containment(bucketTris(nodesDf, elementsDf, spec))
     val sv = seriesDf.select(col("ts"), col("node_id"), col("value"))
     // The shape gate must agree with the PLANNER's broadcast decision
     // (r8 advice): with hintBroadcast=false, a series sized between the

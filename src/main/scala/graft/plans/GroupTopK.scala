@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{And, Ascending, Attribute, AttributeSet, Descending, Expression, KnownFloatingPointNormalized, PredicateHelper, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.GenerateOrdering
@@ -182,8 +182,7 @@ object GroupTopKExec {
 }
 
 /** Plans GroupTopK as partial→(exchange+sort)→final. Registered by
-  * [[graft.GraftExtensions]] (`injectPlannerStrategy`) or live via
-  * [[GroupTopK.ensureInstalled]]. */
+  * [[graft.GraftExtensions]] (`injectPlannerStrategy`). */
 object GroupTopKStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case GroupTopK(g, o, k, child) =>
@@ -194,22 +193,6 @@ object GroupTopKStrategy extends SparkStrategy {
 }
 
 object GroupTopK {
-  /** Idempotent live registration (for sessions built without
-    * `spark.sql.extensions`). The optimizer hook available on a live
-    * session (`experimental.extraOptimizations`) runs AFTER the main
-    * operator-optimization batch, so the pushed filter stops right below
-    * the operator instead of reaching the scan — still the important
-    * win (no top-k over discarded groups). Sessions built with
-    * `spark.sql.extensions=graft.GraftExtensions` get the full push. */
-  def ensureInstalled(s: SparkSession): Unit = {
-    if (!s.experimental.extraStrategies.contains(GroupTopKStrategy))
-      s.experimental.extraStrategies =
-        s.experimental.extraStrategies :+ GroupTopKStrategy
-    if (!s.experimental.extraOptimizations.contains(PushFilterThroughGroupTopK))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ PushFilterThroughGroupTopK
-  }
-
   /** GROUP BY / window semantics for floating-point keys: Spark runs
     * NormalizeFloatingNumbers over Aggregate/Window grouping keys so that
     * -0.0 == 0.0 and all NaN bit patterns collapse; a custom node is not
@@ -230,7 +213,8 @@ object GroupTopK {
   def topKPerGroup(df: DataFrame, group: Seq[String],
                    order: Seq[(String, Boolean)], k: Int): DataFrame = {
     val s = df.sparkSession
-    ensureInstalled(s)
+    require(s.sessionState.planner.extraPlanningStrategies.contains(GroupTopKStrategy),
+      "GroupTopK runs only on a session built with spark.sql.extensions=graft.GraftExtensions")
     val child = df.queryExecution.analyzed
     def attr(n: String): Attribute = child.output.find(_.name == n)
       .getOrElse(throw new IllegalArgumentException(

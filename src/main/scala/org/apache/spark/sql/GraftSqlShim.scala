@@ -25,6 +25,12 @@ object GraftSqlShim {
   def autoBroadcastJoinThreshold(spark: SparkSession): Long =
     spark.asInstanceOf[classic.SparkSession].sessionState.conf.autoBroadcastJoinThreshold
 
+  /** Blocks until the listener bus has delivered every event posted so
+    * far (`listenerBus` is `private[spark]`), e.g. the
+    * QueryExecutionListener callbacks of the actions that just ran. */
+  def drainListenerBus(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
+
   /** Dev-only fence instrumentation hook (graft.Profile sets it; query
     * code never does): when non-null, every fence materialization
     * reports (Catalyst tracker phases, toRdd wall ms = analysis→physical

@@ -183,4 +183,17 @@ class GroupTopKSpec extends SparkSpec {
     assert(e.getMessage.contains("no column 'nope'"))
     assert(e.getMessage.contains("o_orderkey"))
   }
+
+  test("registered once, by the session extension: topKPerGroup installs nothing") {
+    import graft.plans.{GroupTopKStrategy, PushFilterThroughGroupTopK}
+    GroupTopK.topKPerGroup(Tables.orders(spark, sf), Seq("o_custkey"), Seq("o_orderkey" -> false), 1)
+    assert(!spark.experimental.extraStrategies.contains(GroupTopKStrategy))
+    assert(!spark.experimental.extraOptimizations.contains(PushFilterThroughGroupTopK))
+    val holders = spark.sessionState.optimizer.batches
+      .map(b => b.name -> b.rules.count(_ eq PushFilterThroughGroupTopK)).filter(_._2 > 0)
+    // the injected rule joins the operator-optimization rule set, which
+    // two batches share; a live registration would add a third batch
+    assert(holders === Seq("Operator Optimization before Inferring Filters" -> 1,
+                           "Operator Optimization after Inferring Filters" -> 1))
+  }
 }

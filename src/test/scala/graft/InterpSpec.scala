@@ -201,9 +201,9 @@ class InterpSpec extends SparkSpec {
     // corner-explode marker: the pivot column only exists on the scale path
     assert(plan.toString.contains("corner"), "expected the corner-explode join shape")
     // exactly ONE join touches the series fact: 3 node-coordinate joins +
-    // grid⋈triangles + 1 series join = 5 (the broadcast form would be 7)
+    // 1 series join = 4 (the broadcast form would be 6)
     val joins = plan.collect { case j: Join => j }
-    assert(joins.size === 5, s"expected 5 joins (single series join), got ${joins.size}")
+    assert(joins.size === 4, s"expected 4 joins (single series join), got ${joins.size}")
     // and no broadcast hint wraps the series side — only the tiny node dim
     val seriesCols = Set("value", "v1", "v2", "v3")
     val badHints = plan.collect {
@@ -229,31 +229,31 @@ class InterpSpec extends SparkSpec {
       spark.conf.set(key, "1KB")
       val mid = Interp.interpolateTables(nodesDf, elementsDf, seriesDf, spec)
       val joins = mid.queryExecution.analyzed.collect { case j: Join => j }
-      assert(joins.size === 5, s"mid-zone must corner-explode (5 joins), got ${joins.size}")
+      assert(joins.size === 4, s"mid-zone must corner-explode (4 joins), got ${joins.size}")
       // broadcast disabled entirely (-1) must also fall through
       spark.conf.set(key, "-1")
       val off = Interp.interpolateTables(nodesDf, elementsDf, seriesDf, spec)
       val joinsOff = off.queryExecution.analyzed.collect { case j: Join => j }
-      assert(joinsOff.size === 5, s"threshold -1 must corner-explode, got ${joinsOff.size}")
+      assert(joinsOff.size === 4, s"threshold -1 must corner-explode, got ${joinsOff.size}")
       // and with the default threshold restored the tiny toy series is
-      // back under the gate: 3-join small shape (7 joins)
+      // back under the gate: 3-join small shape (6 joins)
       spark.conf.set(key, saved)
       val smallShape = Interp.interpolateTables(nodesDf, elementsDf, seriesDf, spec)
       val joinsSmall = smallShape.queryExecution.analyzed.collect { case j: Join => j }
-      assert(joinsSmall.size === 7, s"tiny series must keep the 3-join shape, got ${joinsSmall.size}")
+      assert(joinsSmall.size === 6, s"tiny series must keep the 3-join shape, got ${joinsSmall.size}")
     } finally spark.conf.set(key, saved)
   }
 
-  test("scale: bucket-join interp at production mesh magnitude (79k triangles, 250k cells)") {
+  test("scale: row-walk interp at production mesh magnitude (79k triangles, 250k cells)") {
     // BASELINE.md: production mesh ~4.5e5 triangles, raster 70.7M cells.
     // k=200/g=500 → 79,202 triangles × 250,000 cells: a naive containment
-    // join would evaluate 2.0e10 pairs; the bucket rewrite stays local.
+    // join would evaluate 2.0e10 pairs; the row walk stays local.
     val t0 = System.nanoTime()
     val n = graft.operators.Interp.interpolate(spark, 200, 500, 2).count()
     val secs = (System.nanoTime() - t0) / 1e9
     info(f"interpolated $n rows in $secs%.1fs")
     assert(n === 2L * 500 * 500) // every cell claimed, both timesteps
-    assert(secs < 120.0, f"bucket-join interp too slow: $secs%.1fs")
+    assert(secs < 120.0, f"row-walk interp too slow: $secs%.1fs")
     // and the SCALE join path (corner-explode shuffle, what production
     // series sizes select) executes at the same magnitude with the same
     // row count — the gate switches plans, never results
@@ -270,7 +270,7 @@ class InterpSpec extends SparkSpec {
     // Place the query point AT a random interior lattice node: exactly one
     // weight is 1, the rest 0, so the interpolated value equals the node's
     // value — the strongest of the SURVEY §5.4 invariants.
-    val tris = Interp.triangles(spark)
+    val tris = Interp.corners(Interp.nodes(spark), Interp.elements(spark))
       .select("n1", "x1", "y1", "x2", "y2", "x3", "y3").distinct().collect()
     val prop = Prop.forAll(org.scalacheck.Gen.choose(0, tris.length - 1)) { i =>
       val r = tris(i)

@@ -2,102 +2,63 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.execution.joins.{ShuffledHashJoinExec, SortMergeJoinExec}
 import graft.operators.Interp
 
-/** Skew evidence for the containment join (VERDICT r8 #5): real ADCIRC
-  * meshes concentrate triangles near the coast, so the (bx,by) bucket key
-  * of the containment equi-join is SKEWED — the one place the interp plan
-  * could die at 100× that no spec exercised. This spec builds a
-  * clustered-node synthetic mesh (a k×k lattice whose coordinates are
-  * compressed by x ↦ (x/k)^24·k, pushing ≥80% of triangles into ≤5% of
-  * the occupied buckets — asserted empirically, not assumed), forces the
-  * shuffled-join path (broadcast off — the production condition: the
-  * bucket-exploded triangle relation grows with raster resolution and is
-  * not broadcastable), and asserts:
+/** Skew evidence for the row-walk containment (VERDICT r8 #5): real ADCIRC
+  * meshes concentrate triangles near the coast and leave huge triangles
+  * offshore. This spec builds a clustered-node synthetic mesh (a k×k
+  * lattice whose coordinates are compressed by x ↦ (x/k)^24·k, so most
+  * triangles are far smaller than a pixel) plus one coarse triangle over
+  * more than a quarter of the raster, whose rows are the walk's longest,
+  * and asserts:
   *
-  *   1. AQE's skew-join optimization actually TRIGGERS — the final
-  *      adaptive plan's containment join carries isSkewJoin=true, i.e.
-  *      the oversized partition was split into advisory-sized chunks
-  *      instead of serializing one straggler task;
-  *   2. the skew-split run is ROW-IDENTICAL to the broadcast reference
-  *      run (splitting a partition must not change the result).
-  *
-  * Thresholds are lowered to make test-scale bytes (a ~64k-triangle
-  * cluster ≈ MBs) cross the same ratios a production partition (tens of
-  * GB against a 256 MB threshold) would cross; the FACTOR condition
-  * (skewed > 2× median) is scale-free.
+  *   1. the raster equals the brute-force reference bit for bit
+  *      (IrregularMesh.passing/raster);
+  *   2. the walk emits at most 1.01 candidate rows per passing
+  *      (centroid, triangle) pair: neither the cluster of sub-pixel
+  *      triangles nor the long rows make it test centroids the residual
+  *      then drops.
   */
 class SkewSpec extends SparkSpec {
 
-  private val K = 200  // 79,202 triangles
-  private val G = 100  // raster/bucket grid
+  private val K = 200  // 79,202 lattice triangles
+  private val G = 100  // raster
 
   /** Lattice connectivity with coast-clustered coordinates: column c maps
     * to (c/k)^24·k, so spacing near the origin is microscopic and most of
-    * the mesh piles into the lowest few buckets. */
+    * the mesh piles into the lowest few pixels. */
   private def clusteredNodes(k: Int): DataFrame =
     spark.range(0, k.toLong * k).toDF("node_id")
       .select(col("node_id"),
         (pow((col("node_id") % k).cast("double") / k, 24.0) * k).as("lon"),
         (pow(floor(col("node_id") / k).cast("double") / k, 24.0) * k).as("lat"))
 
-  test("clustered mesh: AQE splits the skewed containment-join partition; result row-identical") {
-    val nodes = clusteredNodes(K)
-    val elements = Interp.elements(spark, K)
-    val series = Interp.series(spark, K, 1)
-    val spec = Interp.gridSpec(nodes, G)
+  test("clustered mesh + coarse triangle: brute-force raster, <= 1.01 walk rows per hit") {
+    val lattice = clusteredNodes(K).orderBy("node_id").collect()
+    val elements = Interp.elements(spark, K).orderBy("ele_id").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toIndexedSeq
+    val top = lattice.map(_.getDouble(1)).max
+    val coarseId = elements.last._1 + 1
+    val mesh = Mesh(lattice.map(_.getDouble(1)).toIndexedSeq, lattice.map(_.getDouble(2)).toIndexedSeq, elements)
+      .plus(coarseId, Seq((0.5 * top, 0.0), (2 * top, 0.0), (2 * top, top)))
+    val values = IndexedSeq(IndexedSeq.tabulate(mesh.x.length)(n => math.sin(n * 0.7) * 10))
+    val (nodesDf, elementsDf) = (mesh.nodesDf(spark), mesh.elementsDf(spark))
+    val spec = Interp.gridSpec(nodesDf, G)
 
-    // quantify the clustering claim instead of assuming it: share of
-    // bucket-exploded triangle rows landing in the top 5% of occupied
-    // buckets (the exact relation the containment join shuffles)
-    val bucketCounts = Interp
-      .bucketTris(nodes, elements, spec)
-      .groupBy("tbx", "tby").count()
-      .orderBy(col("count").desc)
-      .collect().map(_.getLong(2))
-    val top5 = math.max(1, math.ceil(bucketCounts.length * 0.05).toInt)
-    val share = bucketCounts.take(top5).sum.toDouble / bucketCounts.sum
-    info(f"occupied buckets=${bucketCounts.length}, top-5%% share=$share%.2f")
-    assert(share >= 0.8, f"mesh not skewed enough to exercise the claim: $share%.2f")
+    val hits = IrregularMesh.passing(mesh, spec)
+    val coarse = hits.count(_.contains(mesh.elements.length - 1))
+    assert(coarse >= G * G / 4, s"the coarse triangle holds $coarse of ${G * G} centroids")
+    val want = IrregularMesh.bits(IrregularMesh.raster(mesh, spec, hits, values))
+    val got = IrregularMesh.bits(
+      Interp.interpolateTables(nodesDf, elementsDf, mesh.seriesDf(spark, values), spec)
+        .collect().toSeq.map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getDouble(3))))
+    assert(got.length === want.length, "row count")
+    assert(got === want, s"first differing rows ${(got.diff(want) ++ want.diff(got)).take(4)}")
 
-    // reference result: default planner (nodes broadcast, containment
-    // join free to broadcast the toy-sized triangle relation)
-    val reference = Interp
-      .interpolateTables(nodes, elements, series, spec, broadcastSeries = Some(true))
-      .collect().map(_.toString).sorted
-
-    val confs = Seq(
-      // production condition: the exploded triangle relation does not fit
-      // a broadcast — the containment join must shuffle on (bx,by)
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      // scale the skew detector to test bytes (prod: 256MB threshold);
-      // the factor condition (skewed > Nx median) is unchanged semantics
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "512k",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "256k",
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2")
-    val saved = confs.map { case (key, _) => key -> spark.conf.getOption(key) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
-      val df = Interp
-        .interpolateTables(nodes, elements, series, spec, broadcastSeries = Some(true))
-      val nodesRan = PlanWalk.executeAndFlatten(df)
-      val skewJoins = nodesRan.collect {
-        case j: SortMergeJoinExec if j.isSkewJoin    => j
-        case j: ShuffledHashJoinExec if j.isSkewJoin => j
-      }
-      info(s"skew-handled joins in final adaptive plan: ${skewJoins.size}")
-      assert(skewJoins.nonEmpty,
-        "AQE skew-join split did not trigger on the clustered containment join — " +
-          "a production coastal mesh would serialize one straggler partition")
-
-      val split = df.collect().map(_.toString).sorted
-      assert(split.length === reference.length,
-        s"skew-split row count ${split.length} != reference ${reference.length}")
-      assert(split.sameElements(reference), "skew-split result differs from reference")
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
+    val pairs = hits.map(_.length.toLong).sum
+    val walked = Interp.bucketTris(nodesDf, elementsDf, spec).count()
+    info(s"walk rows=$walked, passing pairs=$pairs, covered cells=${hits.count(_.nonEmpty)}")
+    assert(walked >= pairs && walked <= 1.01 * pairs,
+      s"walk rows $walked vs $pairs passing pairs")
   }
 }
