@@ -46,10 +46,4 @@ object Graft {
   /** Register the corpus tables as temp views for the SQL surface. */
   def openCorpus(spark: SparkSession, dir: String): Unit =
     Views.register(spark, dir)
-
-  /** The reference's full workflow: fort.63.nc → per-timestep COGs.
-    * Returns the number of COGs written. */
-  def runPipeline(spark: SparkSession, ncPath: String, outDir: String,
-                  gridSize: Int = 1000): Long =
-    Pipeline.run(spark, ncPath, outDir, gridSize)
 }

@@ -27,12 +27,17 @@ object Profile {
                    var shRead: Long = 0L, var shWrite: Long = 0L)
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, Job]()
     val order = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    // each stage belongs to the job whose JobStart lists it first: the job
+    // that created and ran it (later jobs that reuse its shuffle list it
+    // too, but skip it)
+    val stageJob = new java.util.concurrent.ConcurrentHashMap[Int, Job]()
     @volatile var recording = false
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = if (recording) {
         val site = Option(e.properties.getProperty("callSite.short")).getOrElse("?")
         val j = Job(e.jobId, site); j.t0 = e.time
-        jobs.put(e.jobId, j); order.add(e.jobId); ()
+        jobs.put(e.jobId, j); order.add(e.jobId)
+        e.stageInfos.foreach(s => stageJob.putIfAbsent(s.stageId, j))
       }
       override def onJobEnd(e: SparkListenerJobEnd): Unit = {
         val j = jobs.get(e.jobId)
@@ -40,12 +45,7 @@ object Profile {
       }
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
         val info = e.stageInfo
-        // attribute a stage to the recording job set via its job (first match wins)
-        jobs.forEach { (_, j) => () }
-        // jobId is not on stageInfo; fold into the most recent unfinished job
-        val it = order.iterator(); var last: Job = null
-        while (it.hasNext) { val j = jobs.get(it.next()); if (j != null && j.wallMs == 0L) last = j }
-        val tgt = if (last != null) last else { val l = order.toArray.lastOption.map(x => jobs.get(x.asInstanceOf[Int])); l.orNull }
+        val tgt = stageJob.get(info.stageId)
         if (tgt != null) {
           tgt.stages += 1; tgt.tasks += info.numTasks
           tgt.shRead += info.taskMetrics.shuffleReadMetrics.totalBytesRead
@@ -77,14 +77,17 @@ object Profile {
       val fn = SparkEntry.queries(name)
       fn(spark, sfDir).count() // warm-up (builds index caches, codegen)
       System.gc()
-      jobs.clear(); order.clear()
+      // the listener checks `recording` when it handles an event, so the
+      // bus is drained on both edges of the measured run
+      org.apache.spark.sql.GraftSqlShim.drainListenerBus(spark)
+      jobs.clear(); order.clear(); stageJob.clear()
       fences.n = 0; fences.planMs = 0L; fences.jobMs = 0L; fences.phaseMs.clear()
       recording = true
       val t0 = System.nanoTime()
       fn(spark, sfDir).count()
       val wall = (System.nanoTime() - t0) / 1e9
+      org.apache.spark.sql.GraftSqlShim.drainListenerBus(spark)
       recording = false
-      Thread.sleep(300) // let listener drain
       println(s"\n===== $name measured ${f"$wall%.2f"} s, ${order.size} jobs =====")
       var sum = 0L
       order.forEach { id =>

@@ -91,13 +91,11 @@ object ScaleProbe {
     val t0 = System.nanoTime()
     val n = Pipeline.run(spark, nc, outDir, g)
     val wall = (System.nanoTime() - t0) / 1e9
-    // the gate inputs exactly as interpolateTables read them: the
-    // parquet-backed series' Catalyst stats vs the planner threshold
+    // the gate interpolateTables ran, over the parquet-backed series
     val sv = sources.Ingest.series(spark, s"$outDir/tables")
     val bytes = sv.queryExecution.optimizedPlan.stats.sizeInBytes
-    val thr = org.apache.spark.sql.GraftSqlShim.autoBroadcastJoinThreshold(spark)
-    val gate = math.min(operators.Interp.BroadcastSeriesMaxBytes, thr)
-    println(f"pipeline: $n COGs (g=$g) in $wall%.1f s; series parquet stats=$bytes B vs gate=min(100MB ceiling, $thr planner)=$gate B -> ${if (bytes > gate) "corner-explode (scale) path" else "3-join (small) path"}")
+    val small = operators.Interp.seriesFitsBroadcast(sv)
+    println(f"pipeline: $n COGs (g=$g) in $wall%.1f s; series parquet stats=$bytes B -> ${if (small) "3-join (small) path" else "corner-explode (scale) path"}")
     org.apache.spark.sql.GraftSqlShim.drainListenerBus(spark)
     // the interpolation is the action whose plan joins the series on its
     // node_id, which joinSeriesGated names m1..m3 on the 3-join path

@@ -99,20 +99,28 @@ object Interp {
   def qInterpBarycentric(s: SparkSession, d: String): DataFrame =
     interpolate(s, K, G, T)
 
-  /** Above this many series rows (timesteps × nodes) the value join stops
+  /** Above this many Catalyst-estimated series bytes the value join stops
     * broadcasting: the production shape is ~3e5 nodes × O(10²) timesteps ≈
-    * 3e7 rows — a driver-memory scale-killer as a broadcast. 4M rows ×
-    * ~24 B ≈ 100 MB is the conventional broadcast comfort ceiling. */
-  val BroadcastSeriesMaxRows: Long = 4L * 1000 * 1000
-
-  /** Byte form of the same gate, for [[interpolateTables]] where the series
-    * row count is not statically known (arbitrary ingested tables):
-    * Catalyst's optimized-plan `stats.sizeInBytes` (actual file bytes for
-    * parquet-backed relations, row-width products for generated ones)
-    * against the conventional ~100 MB broadcast comfort ceiling —
-    * 4M rows × ~24 B ≈ 100 MB, the same line [[BroadcastSeriesMaxRows]]
-    * draws in rows. */
+    * 3e7 rows — a driver-memory scale-killer as a broadcast. ~100 MB
+    * (4M rows × ~24 B) is the conventional broadcast comfort ceiling. */
   val BroadcastSeriesMaxBytes: Long = 100L << 20
+
+  /** The series-join shape gate of [[interpolate]] and
+    * [[interpolateTables]]: true (the 3-join shape) when the series'
+    * optimized-plan `stats.sizeInBytes` (actual file bytes for
+    * parquet-backed relations, row-width products for generated ones) is
+    * at most min([[BroadcastSeriesMaxBytes]], the session's
+    * autoBroadcastJoinThreshold). The gate must agree with the PLANNER's
+    * broadcast decision: the 3-join carries no hint, so a
+    * series between the threshold and the ceiling would plan three
+    * SHUFFLED joins — strictly worse than the corner-explode path's
+    * single shuffle. A threshold <= 0 (broadcast disabled) always takes
+    * the corner-explode path. */
+  private[graft] def seriesFitsBroadcast(sv: DataFrame): Boolean = {
+    val gateBytes = math.min(BroadcastSeriesMaxBytes,
+      org.apache.spark.sql.GraftSqlShim.autoBroadcastJoinThreshold(sv.sparkSession))
+    gateBytes > 0 && sv.queryExecution.optimizedPlan.stats.sizeInBytes <= gateBytes
+  }
 
   /** The size-gated series value join shared by [[interpolate]] (the oracle
     * query) and [[interpolateTables]] (the end-to-end ADCIRC pipeline) — so
@@ -140,26 +148,23 @@ object Interp {
     * still yields a null raster row on both paths). Precondition on both
     * paths: (ts, node_id) unique in sv — the reference's data model.
     *
-    * `hintBroadcast`: the toy/oracle path (statically-known tiny generated
-    * series) FORCES the broadcast; [[interpolateTables]] passes false so
-    * below the shape gate the planner's autoBroadcastJoinThreshold / AQE
-    * decide from actual file stats — a forced hint would override the
-    * threshold using compressed-on-disk size and could pin three
-    * decompressed copies of a ~100 MB file in driver memory.
+    * Neither path hints a broadcast: below the shape gate the planner's
+    * autoBroadcastJoinThreshold / AQE decide from actual stats — a forced
+    * hint would override the threshold using compressed-on-disk size and
+    * could pin three decompressed copies of a ~100 MB file in driver
+    * memory.
     * In: cells (grow, gcol, n1..n3, w1..w3), sv (ts, node_id, value).
     * Out: (ts, grow, gcol, value). */
   private[graft] def joinSeriesGated(cells: DataFrame, sv: DataFrame,
-                                     small: Boolean,
-                                     hintBroadcast: Boolean = true): DataFrame =
+                                     small: Boolean): DataFrame =
     if (small) {
-      def hinted(df: DataFrame): DataFrame = if (hintBroadcast) broadcast(df) else df
       val s1 = sv.select(col("ts"), col("node_id").as("m1"), col("value").as("v1"))
       val s2 = sv.select(col("ts").as("t2"), col("node_id").as("m2"), col("value").as("v2"))
       val s3 = sv.select(col("ts").as("t3"), col("node_id").as("m3"), col("value").as("v3"))
       cells
-        .join(hinted(s1), col("n1") === col("m1"))
-        .join(hinted(s2), col("n2") === col("m2") && col("ts") === col("t2"))
-        .join(hinted(s3), col("n3") === col("m3") && col("ts") === col("t3"))
+        .join(s1, col("n1") === col("m1"))
+        .join(s2, col("n2") === col("m2") && col("ts") === col("t2"))
+        .join(s3, col("n3") === col("m3") && col("ts") === col("t3"))
         .select(col("ts"), col("grow"), col("gcol"),
                 (col("w1") * col("v1") + col("w2") * col("v2") + col("w3") * col("v3")).as("value"))
     } else {
@@ -195,8 +200,8 @@ object Interp {
     * BASELINE.md) to prove the row-walk containment holds at 100x the
     * oracle-checked toy size.
     *
-    * The series join is SIZE-GATED (`broadcastSeries`; default: row-count
-    * gate against [[BroadcastSeriesMaxRows]]):
+    * The series join is SIZE-GATED (`broadcastSeries`; default:
+    * [[seriesFitsBroadcast]]):
     *  - small series (the oracle toy, short hindcasts): three broadcast
     *    equi-joins — zero shuffles, the fastest plan when it fits;
     *  - at scale: the cell map's three corners EXPLODE to
@@ -214,8 +219,7 @@ object Interp {
                   broadcastSeries: Option[Boolean] = None): DataFrame = {
     val sv = series(s, k, t)
     val cells = cellMap(s, k, g)
-    val seriesRows = t.toLong * k * k
-    val small = broadcastSeries.getOrElse(seriesRows <= BroadcastSeriesMaxRows)
+    val small = broadcastSeries.getOrElse(seriesFitsBroadcast(sv))
     // zi in 1e-4 units as an integer: floor(x*1e4 + 0.5) is exact on
     // doubles, so identical FP inputs give identical integers in any
     // engine — no decimal-rounding semantics in the comparison path
@@ -346,35 +350,17 @@ object Interp {
     * cells outside the mesh absent (the reference's NaN mask).
     *
     * The series value join is SIZE-GATED through [[joinSeriesGated]] (the
-    * same helper as the oracle query): below [[BroadcastSeriesMaxBytes]]
-    * of Catalyst-estimated series bytes it keeps the 3-join shape
-    * (UNHINTED — planner/AQE choose broadcast from real file stats);
-    * above, it takes the corner-explode single shuffled equi-join.
-    * `broadcastSeries` overrides the gate for tests / operators who know
-    * their data. */
+    * same helper and the same [[seriesFitsBroadcast]] gate as the oracle
+    * query): a series that fits takes the unhinted 3-join shape (planner
+    * and AQE choose broadcast from real file stats); above, the
+    * corner-explode single shuffled equi-join. `broadcastSeries`
+    * overrides the gate for tests / operators who know their data. */
   def interpolateTables(nodesDf: DataFrame, elementsDf: DataFrame,
                         seriesDf: DataFrame, spec: GridSpec,
                         broadcastSeries: Option[Boolean] = None): DataFrame = {
     val cells = containment(bucketTris(nodesDf, elementsDf, spec))
     val sv = seriesDf.select(col("ts"), col("node_id"), col("value"))
-    // The shape gate must agree with the PLANNER's broadcast decision
-    // (r8 advice): with hintBroadcast=false, a series sized between the
-    // session's autoBroadcastJoinThreshold and BroadcastSeriesMaxBytes
-    // would select the 3-join shape but plan three SHUFFLED joins —
-    // strictly worse than the corner-explode path's single shuffle. Gate
-    // on min(threshold, ceiling); threshold <= 0 (broadcast disabled)
-    // always takes the corner-explode path.
-    val plannerThreshold =
-      org.apache.spark.sql.GraftSqlShim.autoBroadcastJoinThreshold(sv.sparkSession)
-    val gateBytes = math.min(BroadcastSeriesMaxBytes, plannerThreshold)
-    val small = broadcastSeries.getOrElse(
-      gateBytes > 0 &&
-        sv.queryExecution.optimizedPlan.stats.sizeInBytes <= gateBytes)
-    // hintBroadcast = false: the gate picks the JOIN SHAPE only; whether
-    // the 3-join's series side actually broadcasts is left to the
-    // planner's threshold + AQE over real file stats (a forced hint from
-    // compressed-size estimates could OOM the driver at 3× decompressed)
-    joinSeriesGated(cells, sv, small, hintBroadcast = false)
+    joinSeriesGated(cells, sv, broadcastSeries.getOrElse(seriesFitsBroadcast(sv)))
   }
 
   /** EXT: inverse-distance-weighted regridding over a radius-bounded

@@ -1,24 +1,20 @@
 package graft.plans
 
-import java.io.ByteArrayOutputStream
 import java.nio.{ByteBuffer, ByteOrder}
 
-/** Minimal pure-JVM GeoTIFF writer (public TIFF 6.0 + GeoTIFF 1.1 specs;
-  * no native or third-party codec). Produces a single-band Float32,
-  * uncompressed, striped GeoTIFF — the byte-level contract of the
-  * reference's per-timestep raster output (write_cog,
-  * /root/reference/run/adcircTime2cogs.py:205-206), minus compression
-  * and overviews (out of scope for a correctness sink; the container is
-  * still a valid GeoTIFF any GDAL/QGIS reader opens).
-  *
-  * Layout: 8-byte header, pixel strips, out-of-line arrays (strip
-  * offsets/counts, the two GeoTIFF DOUBLE arrays, GeoKey directory),
-  * then one IFD with tags in ascending order as TIFF requires.
+/** Pure-JVM Cloud-Optimized GeoTIFF codec (public TIFF 6.0 + GeoTIFF 1.1
+  * specs; no native or third-party codec): the engine's one raster
+  * format. [[encodeCog]] writes a single-band Float32 COG — tiled, a full
+  * overview pyramid, every IFD before any pixel data, each tile its own
+  * deflate stream — the byte-level contract of the reference's
+  * per-timestep raster output (write_cog, run/adcircTime2cogs.py:205-206)
+  * that any GDAL/QGIS reader opens. [[decodeCog]] reads back that subset
+  * and throws on a file outside it.
   *
   * Scale note: encoding is per-timestep and O(width*height) memory —
   * the same envelope as the reference, which materializes each full
   * grid before writing. Parallelism comes from timesteps-per-executor
-  * (see [[RasterSink.writeGeoTiffs]]), not from splitting one image.
+  * (see [[RasterSink.writeCogs]]), not from splitting one image.
   */
 object GeoTiff {
 
@@ -28,10 +24,7 @@ object GeoTiff {
   private val BitsPerSample = 258
   private val Compression = 259
   private val Photometric = 262
-  private val StripOffsets = 273
   private val SamplesPerPixel = 277
-  private val RowsPerStrip = 278
-  private val StripByteCounts = 279
   private val SampleFormat = 339
   private val ModelPixelScale = 33550
   private val ModelTiepoint = 33922
@@ -41,95 +34,6 @@ object GeoTiff {
   private val TShort = 3
   private val TLong = 4
   private val TDouble = 12
-
-  /** Encode one Float32 band as an uncompressed striped GeoTIFF
-    * (little-endian). `values` is row-major, length width*height;
-    * georeferencing is north-up: pixel (0,0) top-left at
-    * (originX, originY), square pixels of size `res` degrees,
-    * EPSG:4326, pixel-is-area. */
-  def encode(width: Int, height: Int, values: Array[Float],
-             originX: Double, originY: Double, res: Double): Array[Byte] = {
-    require(values.length == width.toLong * height, s"${values.length} != $width x $height")
-    val rowBytes = width * 4
-    // ~64 KiB strips (TIFF 6.0 recommendation), at least one row each
-    val rowsPerStrip = math.max(1, 65536 / math.max(1, rowBytes))
-    val nStrips = (height + rowsPerStrip - 1) / rowsPerStrip
-
-    val pixelStart = 8
-    val pixelBytes = rowBytes.toLong * height
-    var cursor = pixelStart + pixelBytes
-
-    val stripOffsets = Array.tabulate(nStrips)(i => pixelStart + i.toLong * rowsPerStrip * rowBytes)
-    val stripCounts = Array.tabulate(nStrips) { i =>
-      val rows = math.min(rowsPerStrip, height - i * rowsPerStrip); rows.toLong * rowBytes
-    }
-
-    // out-of-line value areas (anything > 4 bytes)
-    def reserve(n: Long): Long = { val at = cursor; cursor += n; at }
-    val stripOffAt = if (nStrips > 1) reserve(4L * nStrips) else 0L
-    val stripCntAt = if (nStrips > 1) reserve(4L * nStrips) else 0L
-    val scaleAt = reserve(24) // 3 doubles
-    val tieAt = reserve(48) // 6 doubles
-    // GeoKeys: version 1.1.0 + 3 keys: model type 2 (geographic),
-    // raster type 1 (pixel-is-area), geographic CRS 4326
-    val geoKeys: Array[Int] = Array(
-      1, 1, 0, 3,
-      1024, 0, 1, 2,
-      1025, 0, 1, 1,
-      2048, 0, 1, 4326)
-    val geoKeysAt = reserve(2L * geoKeys.length)
-    val ifdAt = cursor
-
-    val entries = 14
-    val total = ifdAt + 2 + entries * 12 + 4
-    val buf = ByteBuffer.allocate(total.toInt).order(ByteOrder.LITTLE_ENDIAN)
-
-    // header
-    buf.put('I'.toByte).put('I'.toByte).putShort(42).putInt(ifdAt.toInt)
-
-    // pixel strips (row-major float32)
-    values.foreach(buf.putFloat)
-
-    // out-of-line arrays
-    if (nStrips > 1) {
-      buf.position(stripOffAt.toInt); stripOffsets.foreach(o => buf.putInt(o.toInt))
-      buf.position(stripCntAt.toInt); stripCounts.foreach(c => buf.putInt(c.toInt))
-    }
-    buf.position(scaleAt.toInt)
-    buf.putDouble(res).putDouble(res).putDouble(0.0)
-    buf.position(tieAt.toInt)
-    buf.putDouble(0).putDouble(0).putDouble(0).putDouble(originX).putDouble(originY).putDouble(0)
-    buf.position(geoKeysAt.toInt)
-    geoKeys.foreach(k => buf.putShort(k.toShort))
-
-    // IFD — tags strictly ascending
-    buf.position(ifdAt.toInt)
-    buf.putShort(entries.toShort)
-    def entry(tag: Int, typ: Int, count: Int, value: Long): Unit = {
-      buf.putShort(tag.toShort).putShort(typ.toShort).putInt(count)
-      if (typ == TShort && count == 1) buf.putShort(value.toShort).putShort(0)
-      else buf.putInt(value.toInt)
-    }
-    entry(ImageWidth, TLong, 1, width)
-    entry(ImageLength, TLong, 1, height)
-    entry(BitsPerSample, TShort, 1, 32)
-    entry(Compression, TShort, 1, 1)
-    entry(Photometric, TShort, 1, 1)
-    if (nStrips > 1) entry(StripOffsets, TLong, nStrips, stripOffAt)
-    else entry(StripOffsets, TLong, 1, stripOffsets(0))
-    entry(SamplesPerPixel, TShort, 1, 1)
-    entry(RowsPerStrip, TLong, 1, rowsPerStrip)
-    if (nStrips > 1) entry(StripByteCounts, TLong, nStrips, stripCntAt)
-    else entry(StripByteCounts, TLong, 1, stripCounts(0))
-    entry(SampleFormat, TShort, 1, 3)
-    entry(ModelPixelScale, TDouble, 3, scaleAt)
-    entry(ModelTiepoint, TDouble, 6, tieAt)
-    entry(GeoKeyDirectory, TShort, geoKeys.length, geoKeysAt)
-    nodataEntry(buf)
-    buf.putInt(0) // no next IFD
-
-    buf.array()
-  }
 
   /** GDAL_NODATA = "nan": absent (out-of-mesh) cells are Float.NaN, which
     * Float32 SampleFormat=3 represents natively. NaN is out-of-band by
@@ -350,7 +254,7 @@ object GeoTiff {
     n
   }
 
-  /** Decode helper for the COG writer's base image (tests): reads IFD0's
+  /** Decoder for the COG writer's base image: reads IFD0's
     * tiled layout and returns (width, height, values); also returns the
     * overview dims from IFD1 and whether all pixel data sits after both
     * IFDs (the cloud-optimized ordering property). */
@@ -402,47 +306,5 @@ object GeoTiff {
     val ifdEnd = next + 2 + 12 * { buf.position(next); buf.getShort().toInt } + 4
     val dataAfterIfds = offsets.min >= ifdEnd
     (w, h, out, (ifd1(ImageWidth)._3.toInt, ifd1(ImageLength)._3.toInt), dataAfterIfds)
-  }
-
-  /** Decode helper for tests: (width, height, row-major values). Reads
-    * the same subset of TIFF it writes — strict little-endian, strips,
-    * Float32. */
-  def decode(bytes: Array[Byte]): (Int, Int, Array[Float]) = {
-    val buf = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
-    require(buf.get() == 'I' && buf.get() == 'I', "not little-endian TIFF")
-    require(buf.getShort() == 42, "bad TIFF magic")
-    buf.position(buf.getInt(4))
-    val n = buf.getShort()
-    var w = 0; var h = 0; var rps = 0
-    var offAt = 0L; var offCount = 0
-    (0 until n).foreach { i =>
-      val base = buf.position()
-      val tag = buf.getShort() & 0xffff
-      val typ = buf.getShort(); val count = buf.getInt()
-      val value =
-        if (typ == TShort && count == 1) buf.getShort(base + 8).toLong
-        else buf.getInt(base + 8).toLong
-      tag match {
-        case ImageWidth => w = value.toInt
-        case ImageLength => h = value.toInt
-        case RowsPerStrip => rps = value.toInt
-        case StripOffsets => offAt = value; offCount = count
-        case _ => ()
-      }
-      buf.position(base + 12)
-    }
-    val offsets =
-      if (offCount == 1) Array(offAt)
-      else Array.tabulate(offCount)(i => buf.getInt((offAt + 4L * i).toInt).toLong)
-    val out = new Array[Float](w * h)
-    var row = 0
-    offsets.foreach { off =>
-      val rows = math.min(rps, h - row)
-      val fb = buf.duplicate().order(ByteOrder.LITTLE_ENDIAN)
-      fb.position(off.toInt)
-      (0 until rows * w).foreach(i => out(row * w + i) = fb.getFloat())
-      row += rows
-    }
-    (w, h, out)
   }
 }

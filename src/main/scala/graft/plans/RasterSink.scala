@@ -1,24 +1,19 @@
 package graft.plans
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.Interp
 
-/** The reference's output stage, relationalized (SURVEY §2.1 S5/S6):
-  * one raster per timestep + GeoServer ImageMosaic sidecar metadata.
+/** The reference's output stage (SURVEY §2.1 S5/S6): one Cloud-Optimized
+  * GeoTIFF per timestep + GeoServer ImageMosaic sidecar metadata.
   *
-  *  - S5 (one COG per timestep, run/adcircTime2cogs.py:205-206): the raster
-  *    table written `partitionBy("ts")` — each timestep lands in its own
-  *    directory of columnar files, the engine's equivalent of
-  *    one-image-per-timestep (SURVEY §4: partition output by ts). True
-  *    GeoTIFF byte-encoding is in [[GeoTiff]].
+  *  - S5 (one COG per timestep, run/adcircTime2cogs.py:205-206):
+  *    [[writeCogs]] streams an interpolated raster into one [[GeoTiff]]
+  *    COG per timestep; [[readGeoTiffs]] is the matching source.
   *  - S6 (indexer/timeregex/datastore properties,
-  *    run/adcircTime2cogs.py:211-222): the same sidecar strings derived
-  *    relationally and written once from the driver.
-  *
-  * At 100 TB: `partitionBy` turns downstream per-timestep reads into
-  * partition-pruned scans; the sort within partitions keeps row-groups
-  * ordered by (grow, gcol) so a tile reader seeks, not scans.
+  *    run/adcircTime2cogs.py:211-222): [[sidecars]] and
+  *    [[mosaicIndexFromTimes]], the same strings derived from the
+  *    ingested time axis.
   *
   * File I/O goes through the Hadoop FileSystem API resolved from the
   * path's scheme, so `outDir` may be a shared POSIX mount, `file://`,
@@ -39,34 +34,6 @@ object RasterSink {
   }
   private def mkdirs(path: String): Unit = { val (fs, p) = hfs(path); fs.mkdirs(p) }
 
-  /** P4 reprojection stage (reference construct_geopandas + to_crs,
-    * run/adcircTime2cogs.py:29-47): closed-form spherical-Mercator forward
-    * over the mesh nodes — a narrow, codegen'd transformation, no shuffle
-    * (the reference repartitions to 4 for the same step; here partitioning
-    * is inherited from the source). Identity in production (4326→4326) but
-    * the operator exists, as in the reference. */
-  def reprojectNodes(s: SparkSession): DataFrame = {
-    val R = lit(6378137.0)
-    val rad = lit(math.Pi) / lit(180.0)
-    // lattice coords are degree-like; scale into a valid lon/lat window
-    val lon = col("lon") - lit(90.0)
-    val lat = col("lat") + lit(20.0)
-    Interp.nodes(s)
-      .withColumn("mx", lon * rad * R)
-      .withColumn("my", R * log(tan(lit(math.Pi) / lit(4.0) + lat * rad / lit(2.0))))
-  }
-
-  /** Write the interpolated raster partitioned by timestep; returns the
-    * frame that was written (for assertions). */
-  def writeRaster(s: SparkSession, outDir: String): DataFrame = {
-    val raster = Interp.qInterpBarycentric(s, "")
-    raster.write
-      .mode(SaveMode.Overwrite)
-      .partitionBy("ts")
-      .parquet(s"$outDir/raster")
-    raster
-  }
-
   /** The per-timestep tiff filename: the reference's
     * `<var>_<yyyyMMdd'T'HHmmss>Z.tiff` contract
     * (run/adcircTime2cogs.py:190-194, matched by timeregex.properties)
@@ -78,54 +45,24 @@ object RasterSink {
       case None => f"${varName}_ts$ts%03d.tiff"
     }
 
-  /** S5 closed: one true GeoTIFF per timestep ([[GeoTiff]], pure-JVM
-    * TIFF 6.0 — the reference's write_cog contract,
-    * run/adcircTime2cogs.py:205-206). Distribution shape: repartition by
-    * ts, sort within partitions by ts, then STREAM grids one at a time —
-    * rows arrive clustered per timestep, so task memory is ONE g×g grid
-    * (a 283 MB production grid stays a 283 MB task envelope) no matter
-    * how many timesteps hash into the same task. Executors write in
-    * parallel across timesteps; the driver never sees pixel data. At
-    * 100 TB `outDir` is shared storage (POSIX mount or any Hadoop
-    * filesystem URI) and timesteps fan out across the cluster; the
-    * serial per-timestep Python loop in the reference becomes
-    * embarrassing parallelism here. */
-  def writeGeoTiffs(s: SparkSession, outDir: String, varName: String = "fort_63_zeta",
-                    cog: Boolean = false, tile: Int = 32): Unit = {
-    val g = Interp.G
-    // north-up: grow 0 is the top row; origin at the grid's NW corner
-    val (ox, oy, res) = (0.3 - 0.19, 0.3 + (g - 1) * 0.38 + 0.19, 0.38)
-    val raster = Interp.qInterpBarycentric(s, "")
-      .select(col("ts"), col("grow"), col("gcol"), (col("zi4") / 10000.0).as("value"))
-    streamGrids(raster, g, outDir, tiffName(varName, _, Map.empty), grid =>
-      if (cog) GeoTiff.encodeCog(g, g, grid, ox, oy, res, tile)
-      else GeoTiff.encode(g, g, grid, ox, oy, res))
-  }
-
-  /** Generalized per-timestep COG writer for an arbitrary raster
-    * (ts, grow, gcol, value) + GridSpec — the sink stage of the full
-    * [[graft.Pipeline]]. Same streaming one-grid-at-a-time shape as
-    * [[writeGeoTiffs]]. `tsLabels` (from [[graft.sources.Ingest
-    * .timeLabels]]) names files with the real decoded instants. */
+  /** S5: one COG per timestep ([[GeoTiff.encodeCog]], 256-pixel deflate
+    * tiles — the reference's write_cog contract,
+    * run/adcircTime2cogs.py:205-206) for a raster's (ts: long, grow: int,
+    * gcol: int, value: double) rows on `spec`'s grid, named
+    * `<varName>_<label>Z.tiff` from `tsLabels` (from [[graft.sources.Ingest
+    * .timeLabels]]), else `<varName>_tsNNN.tiff`. Distribution shape:
+    * repartition by ts, sort within partitions by ts, then STREAM grids
+    * one at a time — rows arrive clustered per timestep, so task memory
+    * is ONE g×g grid no matter how many timesteps hash into the same
+    * task. Executors write in parallel across timesteps; the driver never
+    * sees pixel data. Absent cells and NULL values (masked dry nodes
+    * null-propagated through the interpolation) become Float.NaN, the
+    * COG's declared GDAL_NODATA. Fields are read by position from one
+    * projection. */
   def writeCogs(raster: DataFrame, spec: Interp.GridSpec, outDir: String,
-                varName: String, tile: Int = 256,
-                tsLabels: Map[Long, String] = Map.empty,
-                compress: Boolean = true): Unit = {
+                varName: String, tsLabels: Map[Long, String] = Map.empty): Unit = {
     val g = spec.g
     val (ox, oy, res) = (spec.originX, spec.originY, spec.resX)
-    streamGrids(raster, g, outDir, tiffName(varName, _, tsLabels),
-      GeoTiff.encodeCog(g, g, _, ox, oy, res, tile, compress))
-  }
-
-  /** The shared sink loop: `raster`'s (ts: long, grow: int, gcol: int,
-    * value: double) rows, clustered by ts, become one g×g Float32 grid
-    * per timestep, encoded by `encode` and written to `outDir/name(ts)`.
-    * Absent cells and NULL values (masked dry nodes null-propagated
-    * through the interpolation) become Float.NaN, the COG's declared
-    * GDAL_NODATA. Fields are read by position from one projection. */
-  private def streamGrids(raster: DataFrame, g: Int, outDir: String,
-                          name: Long => String,
-                          encode: Array[Float] => Array[Byte]): Unit = {
     mkdirs(outDir)
     raster.select("ts", "grow", "gcol", "value")
       .repartition(col("ts"))
@@ -133,7 +70,9 @@ object RasterSink {
       .foreachPartition { it: Iterator[org.apache.spark.sql.Row] =>
         var cur = Long.MinValue
         var grid: Array[Float] = null
-        def flush(): Unit = if (grid != null) writeFile(s"$outDir/${name(cur)}", encode(grid))
+        def flush(): Unit = if (grid != null)
+          writeFile(s"$outDir/${tiffName(varName, cur, tsLabels)}",
+                    GeoTiff.encodeCog(g, g, grid, ox, oy, res, compress = true))
         it.foreach { r =>
           val ts = r.getLong(0)
           if (ts != cur) {
@@ -147,10 +86,11 @@ object RasterSink {
       }
   }
 
-  /** The matching SOURCE: read a directory of per-timestep GeoTIFF/COGs
-    * back into the long-form raster (ts, grow, gcol, value) — the engine
+  /** The matching SOURCE: read a directory of per-timestep COGs back
+    * into the long-form raster (ts, grow, gcol, value) — the engine
     * consumes its own sink format (and the reference ecosystem's COGs,
-    * within the Float32/tiled-or-striped subset [[GeoTiff]] writes).
+    * within the subset [[GeoTiff.decodeCog]] reads; a file outside it
+    * fails the read).
     * Distribution: one task per file via a parallelized path list; each
     * task decodes its file locally — tiff bytes never cross the network
     * beyond the scan (same shape as binaryFiles, minus the driver
@@ -178,9 +118,7 @@ object RasterSink {
           val len = bfs.getFileStatus(bp).getLen.toInt
           val b = new Array[Byte](len); in.readFully(0, b); b
         } finally in.close()
-        val (w, h, vals) =
-          try { val (cw, ch, cv, _, _) = GeoTiff.decodeCog(bytes); (cw, ch, cv) }
-          catch { case _: Exception => GeoTiff.decode(bytes) } // striped fallback
+        val (w, _, vals, _, _) = GeoTiff.decodeCog(bytes)
         vals.indices.iterator.map(i => (ts, i / w, i % w, vals(i).toDouble))
       }
       .toDF("ts", "grow", "gcol", "value")
@@ -207,18 +145,6 @@ object RasterSink {
       .orderBy("ts")
   }
 
-  /** Demo-axis variant for the synthetic lattice relations (which carry
-    * no time variable): maps record index → hourly cadence. Kept ONLY for
-    * the synthetic tables; real ingests use [[mosaicIndexFromTimes]]. */
-  def mosaicIndex(s: SparkSession, varName: String): DataFrame =
-    Interp.series(s)
-      .select(col("ts")).distinct()
-      .select(col("ts"),
-              concat(lit(varName), lit("_"),
-                     date_format(timestamp_seconds(col("ts") * 3600), "yyyyMMdd'T'HHmmss"),
-                     lit("Z.tiff")).as("fname"))
-      .orderBy("ts")
-
   /** The three sidecar properties payloads (contents match the reference's
     * ImageMosaic contract, run/adcircTime2cogs.py:211-222; connection
     * parameters are left as placeholders — they arrive from deployment
@@ -242,14 +168,4 @@ object RasterSink {
          |Connection\\ timeout=10
          |preparedStatements=true""".stripMargin,
   )
-
-  /** Full pipeline demo: raster write + sidecar files, mirroring
-    * run/adcircTime2cogs.py:121-240 stage for stage. */
-  def run(s: SparkSession, outDir: String, layerName: String = "graft"): Unit = {
-    writeRaster(s, outDir)
-    mkdirs(outDir)
-    sidecars(layerName).foreach { case (name, body) =>
-      writeFile(s"$outDir/$name", body.getBytes("UTF-8"))
-    }
-  }
 }

@@ -106,7 +106,7 @@ object Ingest {
     * no write outlives the call. Rethrows the first failure in argument
     * order, with any others attached as suppressed. The threads inherit
     * the caller's Spark local properties (job group, scheduler pool). */
-  private def concurrently(bodies: (String, () => Unit)*): Unit = {
+  private[graft] def concurrently(bodies: (String, () => Unit)*): Unit = {
     val failures = new Array[Throwable](bodies.length)
     val threads = bodies.zipWithIndex.map { case ((name, body), i) =>
       val run: Runnable = () => try body() catch { case e: Throwable => failures(i) = e }

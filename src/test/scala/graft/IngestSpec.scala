@@ -206,6 +206,16 @@ class IngestSpec extends SparkSpec {
     assert(Ingest.nodes(spark, out).count() === N)
     assert(Ingest.elements(spark, out).count() === M)
     assert(Ingest.times(spark, out).count() === T)
+
+    // the join itself: a body that fails first must not let the call
+    // return before the other body has ended
+    val failed = new java.util.concurrent.CountDownLatch(1)
+    val ended = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val direct = intercept[IllegalStateException](Ingest.concurrently(
+      "a" -> { () => failed.countDown(); throw new IllegalStateException("a failed") },
+      "b" -> { () => failed.await(); Thread.sleep(200); ended.set(true) }))
+    assert(direct.getMessage === "a failed")
+    assert(ended.get, "the failure was rethrown before every body had ended")
   }
 
   test("_FillValue mask→null: dry nodes become NULL, never the sentinel") {

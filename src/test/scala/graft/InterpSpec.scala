@@ -129,12 +129,19 @@ class InterpSpec extends SparkSpec {
     }
     assert(hints.isEmpty,
       s"series must not be broadcast above the gate:\n${hints.mkString("\n")}")
-    // and the toy path (below the gate) DOES broadcast — the fast plan stays
+    // and the toy path (below the gate) DOES broadcast, unhinted: the
+    // planner builds each of the three series joins from the series side
+    import org.apache.spark.sql.catalyst.optimizer.BuildRight
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
     val toy = Interp.interpolate(spark, Interp.K, Interp.G, Interp.T)
-    val toyHints = toy.queryExecution.analyzed.collect {
-      case h: ResolvedHint if h.child.output.map(_.name).toSet.intersect(seriesCols).nonEmpty => h
+    def builtFromSeries(j: BroadcastHashJoinExec): Boolean = {
+      val built = (if (j.buildSide == BuildRight) j.right else j.left).output.map(_.name).toSet
+      built.intersect(seriesCols).nonEmpty && !built("grow")
     }
-    assert(toyHints.size === 3, s"toy series should broadcast 3x, got ${toyHints.size}")
+    val toyBroadcasts = PlanWalk.flatten(toy.queryExecution.executedPlan).collect {
+      case j: BroadcastHashJoinExec if builtFromSeries(j) => j
+    }
+    assert(toyBroadcasts.size === 3, s"toy series should broadcast 3x, got ${toyBroadcasts.size}")
   }
 
   test("tables entry point: broadcast and corner-explode paths are bit-identical") {

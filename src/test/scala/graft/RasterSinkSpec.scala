@@ -1,64 +1,123 @@
 package graft
 
-import java.nio.file.Files
-import graft.plans.RasterSink
+import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.functions.col
+import graft.operators.Interp
+import graft.plans.{GeoTiff, RasterSink}
 
-/** End-to-end output-stage test: raster partitioned by timestep + sidecar
-  * metadata, the relational equivalent of the reference's COG-per-timestep
-  * plus ImageMosaic properties contract. */
+/** Output-stage test: the per-timestep COG sink and its matching source,
+  * the COG codec, and the ImageMosaic sidecar contract — the relational
+  * equivalent of the reference's COG-per-timestep plus ImageMosaic
+  * properties output. */
 class RasterSinkSpec extends SparkSpec {
 
-  test("raster sink writes one partition directory per timestep + sidecars") {
-    val out = Files.createTempDirectory("graft_raster").toString
-    RasterSink.run(spark, out)
+  /** The oracle-checked toy raster as the sink's (ts, grow, gcol, value)
+    * rows, and its grid: centroid i at 0.3 + i·0.38 on both axes. */
+  private def toyRaster = Interp.qInterpBarycentric(spark, "")
+    .select(col("ts"), col("grow"), col("gcol"), (col("zi4") / 10000.0).as("value"))
+  private val toySpec = Interp.GridSpec(0.11, 0.11 + Interp.G * 0.38, 0.11, 0.11 + Interp.G * 0.38, Interp.G)
 
-    val rasterDir = new java.io.File(s"$out/raster")
-    val tsDirs = rasterDir.listFiles().filter(_.getName.startsWith("ts=")).map(_.getName).sorted
-    assert(tsDirs.toSeq === (0 until graft.operators.Interp.T).map(t => s"ts=$t"))
+  /** (ts, grow, gcol) → the Float32 the sink stores for it. */
+  private def expectedPixels(raster: org.apache.spark.sql.DataFrame) = raster.collect()
+    .map(r => ((r.getAs[Long]("ts"), r.getAs[Int]("grow"), r.getAs[Int]("gcol")),
+               r.getAs[Double]("value").toFloat)).toMap
 
-    // read back one timestep: partition pruning path
-    val t1 = spark.read.parquet(s"$out/raster").filter(org.apache.spark.sql.functions.col("ts") === 1)
-    assert(t1.count() === graft.operators.Interp.G.toLong * graft.operators.Interp.G)
+  private def tiffs(dir: String) = new java.io.File(dir).listFiles()
+    .filter(_.getName.endsWith(".tiff")).sortBy(_.getName)
 
-    for (f <- Seq("indexer.properties", "timeregex.properties", "datastore.properties"))
-      assert(new java.io.File(s"$out/$f").exists(), s"$f missing")
-    val timeregex = Files.readString(java.nio.file.Paths.get(s"$out/timeregex.properties"))
-    assert(timeregex.contains("[0-9]{8}T[0-9]{6}"))
+  /** IFD0's entries as (tag, type, count, value-or-offset). */
+  private def ifd0(bytes: Array[Byte]): Seq[(Int, Int, Int, Int)] = {
+    val buf = java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    val at = buf.getInt(4)
+    (0 until buf.getShort(at)).map { i =>
+      val base = at + 2 + i * 12
+      (buf.getShort(base) & 0xffff, buf.getShort(base + 2).toInt, buf.getInt(base + 4), buf.getInt(base + 8))
+    }
   }
 
-  test("GeoTiff encode/decode round-trips header, dims, and strip data") {
-    val w = 37; val h = 211 // force multiple ~64KiB strips and a short tail strip
-    val vals = Array.tabulate(w * h)(i => (i * 0.25f) - 3f)
-    val bytes = graft.plans.GeoTiff.encode(w, h, vals, -98.0, 45.0, 0.005)
-    // TIFF magic: little-endian "II", 42
-    assert(bytes(0) == 'I'.toByte && bytes(1) == 'I'.toByte && bytes(2) == 42.toByte)
-    val (dw, dh, dvals) = graft.plans.GeoTiff.decode(bytes)
-    assert(dw === w); assert(dh === h)
-    assert(dvals.toSeq === vals.toSeq)
+  test("writeCogs emits one COG per timestep matching the interpolated raster") {
+    val out = Files.createTempDirectory("graft_cog").toString
+    RasterSink.writeCogs(toyRaster, toySpec, out, "fort_63_zeta")
+    val files = tiffs(out)
+    assert(files.map(_.getName).toSeq === (0 until Interp.T).map(t => f"fort_63_zeta_ts$t%03d.tiff"))
+    val g = Interp.G
+    val expected = expectedPixels(toyRaster)
+    files.zipWithIndex.foreach { case (f, t) =>
+      val bytes = Files.readAllBytes(f.toPath)
+      val (w, h, vals, _, afterIfds) = GeoTiff.decodeCog(bytes)
+      assert(w === g && h === g && afterIfds)
+      assert(GeoTiff.cogOverviewCount(bytes) >= 1)
+      assert(vals.zipWithIndex.forall { case (v, i) => expected((t.toLong, i / g, i % g)) === v },
+        s"ts=$t pixels")
+    }
+  }
+
+  test("writeCogs emits one valid GeoTIFF per timestep georeferenced to the grid spec") {
+    val out = Files.createTempDirectory("graft_tiff").toString
+    RasterSink.writeCogs(toyRaster, toySpec, out, "fort_63_zeta")
+    val files = tiffs(out)
+    assert(files.length === Interp.T)
+    files.foreach { f =>
+      val bytes = Files.readAllBytes(f.toPath)
+      val buf = java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      // TIFF magic: little-endian "II", 42
+      assert(bytes(0) == 'I'.toByte && bytes(1) == 'I'.toByte && bytes(2) == 42.toByte, f.getName)
+      val tags = ifd0(bytes)
+      val width = tags.find(_._1 == 256).get._4
+      val height = tags.find(_._1 == 257).get._4
+      assert(width === Interp.G && height === Interp.G, f.getName)
+      // the NW corner of the spec's grid, one resX per pixel
+      val scale = tags.find(_._1 == 33550).get
+      assert(buf.getDouble(scale._4) === toySpec.resX, f.getName)
+      val tie = tags.find(_._1 == 33922).get
+      assert(buf.getDouble(tie._4 + 24) === toySpec.originX &&
+             buf.getDouble(tie._4 + 32) === toySpec.originY, f.getName)
+      val geo = tags.find(_._1 == 34735).get
+      val keys = (0 until geo._3).map(i => buf.getShort(geo._4 + 2 * i) & 0xffff)
+      assert(keys.sliding(4, 4).exists(g => g.headOption.contains(2048) && g.lift(3).contains(4326)),
+        s"${f.getName}: EPSG:4326 GeoKey")
+    }
+  }
+
+  test("sidecars carry the ImageMosaic indexer, timeregex and datastore properties") {
+    val props = RasterSink.sidecars("fort_63_zeta").map { case (name, body) =>
+      val p = new java.util.Properties()
+      p.load(new java.io.StringReader(body))
+      name -> p
+    }
+    assert(props.keySet === Set("indexer.properties", "timeregex.properties", "datastore.properties"))
+    assert(props("timeregex.properties").getProperty("regex") === "[0-9]{8}T[0-9]{6}")
+    val indexer = props("indexer.properties")
+    assert(indexer.getProperty("TimeAttribute") === "time")
+    assert(indexer.getProperty("PropertyCollectors") === "TimestampFileNameExtractorSPI[timeregex](time)")
+    assert(indexer.getProperty("Schema").contains("time:java.util.Date"))
+    val store = props("datastore.properties")
+    assert(store.getProperty("database") === "fort_63_zeta")
+    assert(store.getProperty("host") === "HOST_PLACEHOLDER" && store.getProperty("port") === "PORT_PLACEHOLDER",
+      "connection parameters come from deployment config, not code")
   }
 
   test("GeoTiff carries the EPSG:4326 GeoKey and pixel scale") {
-    val bytes = graft.plans.GeoTiff.encode(4, 4, new Array[Float](16), -98.0, 45.0, 0.005)
+    val bytes = GeoTiff.encodeCog(4, 4, new Array[Float](16), -98.0, 45.0, 0.005, tile = 16)
     val buf = java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    buf.position(buf.getInt(4))
-    val n = buf.getShort()
-    val tags = (0 until n).map { i =>
-      val base = buf.getInt(4) + 2 + i * 12
-      (buf.getShort(base) & 0xffff, buf.getShort(base + 2).toInt, buf.getInt(base + 4), buf.getInt(base + 8))
-    }
-    assert(tags.map(_._1).toSeq === tags.map(_._1).sorted, "IFD tags must be ascending")
+    val tags = ifd0(bytes)
+    assert(tags.map(_._1) === tags.map(_._1).sorted, "IFD tags must be ascending")
     val geo = tags.find(_._1 == 34735).get
     val keys = (0 until geo._3).map(i => buf.getShort(geo._4 + 2 * i) & 0xffff)
     // key triple (2048, 0, 1, 4326) = GeographicTypeGeoKey -> EPSG:4326
     assert(keys.sliding(4, 4).exists(g => g.headOption.contains(2048) && g.lift(3).contains(4326)))
     val scale = tags.find(_._1 == 33550).get
     assert(buf.getDouble(scale._4) === 0.005)
+    val tie = tags.find(_._1 == 33922).get
+    assert(buf.getDouble(tie._4 + 24) === -98.0 && buf.getDouble(tie._4 + 32) === 45.0)
   }
 
   test("COG encode: tiled base round-trips, overview chained, data after IFDs") {
     val w = 70; val h = 90 // 32px tiles -> 3x3 base tile grid with padding
     val vals = Array.tabulate(w * h)(i => i * 0.5f - 100f)
     val bytes = graft.plans.GeoTiff.encodeCog(w, h, vals, -98.0, 45.0, 0.005, tile = 32)
+    // TIFF magic: little-endian "II", 42
+    assert(bytes(0) == 'I'.toByte && bytes(1) == 'I'.toByte && bytes(2) == 42.toByte)
     val (dw, dh, dvals, (ovW, ovH), dataAfterIfds) = graft.plans.GeoTiff.decodeCog(bytes)
     assert(dw === w && dh === h)
     assert(dvals.toSeq === vals.toSeq, "tiled base image must round-trip exactly")
@@ -92,69 +151,73 @@ class RasterSinkSpec extends SparkSpec {
              === vals.map(java.lang.Float.floatToIntBits).toSeq)
   }
 
-  test("writeGeoTiffs cog=true emits per-timestep COGs matching the raster") {
-    val out = Files.createTempDirectory("graft_cog").toString
-    RasterSink.writeGeoTiffs(spark, out, cog = true)
-    val files = new java.io.File(out).listFiles().filter(_.getName.endsWith(".tiff")).sortBy(_.getName)
-    assert(files.length === graft.operators.Interp.T)
-    val g = graft.operators.Interp.G
-    val (w, h, vals, _, afterIfds) =
-      graft.plans.GeoTiff.decodeCog(Files.readAllBytes(files(2).toPath))
-    assert(w === g && h === g && afterIfds)
-    val expected = graft.operators.Interp.qInterpBarycentric(spark, "")
-      .filter(org.apache.spark.sql.functions.col("ts") === 2)
-      .collect().map(r => (r.getAs[Int]("grow") * g + r.getAs[Int]("gcol"),
-                           (r.getAs[Long]("zi4") / 10000.0).toFloat)).toMap
-    assert(vals.zipWithIndex.forall { case (v, i) => expected(i) === v })
-  }
-
-  test("writeGeoTiffs emits one valid GeoTIFF per timestep with the raster's values") {
-    val out = Files.createTempDirectory("graft_tiff").toString
-    RasterSink.writeGeoTiffs(spark, out)
-    val files = new java.io.File(out).listFiles().filter(_.getName.endsWith(".tiff")).sortBy(_.getName)
-    assert(files.length === graft.operators.Interp.T)
-    val g = graft.operators.Interp.G
-    // cross-check ts=1 against the relational raster
-    val bytes = Files.readAllBytes(files(1).toPath)
-    val (w, h, vals) = graft.plans.GeoTiff.decode(bytes)
-    assert(w === g && h === g)
-    val expected = graft.operators.Interp.qInterpBarycentric(spark, "")
-      .filter(org.apache.spark.sql.functions.col("ts") === 1)
-      .collect().map(r => (r.getAs[Int]("grow") * g + r.getAs[Int]("gcol"),
-                           (r.getAs[Long]("zi4") / 10000.0).toFloat)).toMap
-    assert(vals.zipWithIndex.forall { case (v, i) => expected(i) === v })
-  }
-
-  test("readGeoTiffs round-trips both COG and striped sinks to the raster") {
+  test("readGeoTiffs round-trips the COG sink to the raster") {
     val out = Files.createTempDirectory("graft_rt").toString
-    RasterSink.writeGeoTiffs(spark, s"$out/cog", cog = true)
-    RasterSink.writeGeoTiffs(spark, s"$out/strip", cog = false)
-    val g = graft.operators.Interp.G
-    val expected = graft.operators.Interp.qInterpBarycentric(spark, "")
-      .collect()
-      .map(r => ((r.getAs[Long]("ts"), r.getAs[Int]("grow"), r.getAs[Int]("gcol")),
-                 (r.getAs[Long]("zi4") / 10000.0).toFloat.toDouble)).toMap
-    for (sub <- Seq("cog", "strip")) {
-      val back = RasterSink.readGeoTiffs(spark, s"$out/$sub").collect()
-      assert(back.length === graft.operators.Interp.T * g * g, s"$sub cell count")
-      back.foreach { r =>
-        val key = (r.getAs[Long]("ts"), r.getAs[Int]("grow"), r.getAs[Int]("gcol"))
-        val v = r.getAs[Double]("value")
-        expected.get(key) match {
-          case Some(e) => assert(v === e, s"$sub $key")
-          case None => assert(v.isNaN, s"$sub $key should be NaN nodata")
-        }
+    // column 0 left out: absent cells come back as NaN nodata
+    val raster = toyRaster.filter(col("gcol") =!= 0)
+    RasterSink.writeCogs(raster, toySpec, out, "fort_63_zeta")
+    val expected = expectedPixels(raster)
+    val back = RasterSink.readGeoTiffs(spark, out).collect()
+    assert(back.length === Interp.T * Interp.G * Interp.G, "cell count")
+    back.foreach { r =>
+      val key = (r.getAs[Long]("ts"), r.getAs[Int]("grow"), r.getAs[Int]("gcol"))
+      val v = r.getAs[Double]("value")
+      expected.get(key) match {
+        case Some(e) => assert(v === e.toDouble, s"$key")
+        case None => assert(v.isNaN, s"$key should be NaN nodata")
+      }
+    }
+    assert(back.count(_.getAs[Double]("value").isNaN) === Interp.T * Interp.G)
+  }
+
+  test("readGeoTiffs fails on a corrupt tile or a missing overview instead of reading zeros") {
+    val out = Files.createTempDirectory("graft_bad").toString
+    RasterSink.writeCogs(toyRaster, toySpec, s"$out/good", "fort_63_zeta")
+    val good = Files.readAllBytes(tiffs(s"$out/good").head.toPath)
+    // a 50×50 image is one 256-pixel tile, so TileOffsets (324) holds its
+    // offset inline; zeroing the zlib header makes its deflate stream
+    // undecodable
+    val corrupt = good.clone()
+    val tileAt = ifd0(good).find(_._1 == 324).get._4
+    java.util.Arrays.fill(corrupt, tileAt, tileAt + 16, 0.toByte)
+    // IFD0's next-IFD pointer set to 0: a tiled GeoTIFF without overviews,
+    // as GDAL writes small images; the reader requires the overview
+    val noOverview = good.clone()
+    val ifdAt = java.nio.ByteBuffer.wrap(good).order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt(4)
+    java.nio.ByteBuffer.wrap(noOverview).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      .putInt(ifdAt + 2 + ifd0(good).size * 12, 0)
+    for ((name, bytes, cause) <- Seq(
+           ("corrupt", corrupt, classOf[java.util.zip.DataFormatException]),
+           ("no_overview", noOverview, classOf[IllegalArgumentException]))) {
+      Files.createDirectories(Paths.get(s"$out/$name"))
+      Files.write(Paths.get(s"$out/$name/fort_63_zeta_ts000.tiff"), bytes)
+      scala.util.Try(RasterSink.readGeoTiffs(spark, s"$out/$name").collect()) match {
+        case scala.util.Success(rows) =>
+          fail(s"$name read back ${rows.length} pixels " +
+               s"(${rows.count(_.getAs[Double]("value") == 0.0)} of them 0.0) instead of failing")
+        case scala.util.Failure(e) =>
+          assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+            .exists(cause.isInstance), s"$name: not the decoder's failure: $e")
       }
     }
   }
 
   test("reprojection stage is a narrow transform preserving node count") {
-    val proj = RasterSink.reprojectNodes(spark)
-    assert(proj.count() === graft.operators.Interp.K.toLong * graft.operators.Interp.K)
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    // lattice coords are degree-like; shift them into a valid lon/lat window
+    val lonLat = Interp.nodes(spark)
+      .select(col("node_id"), (col("lon") - 90.0).as("lon"), (col("lat") + 20.0).as("lat"))
+    val proj = operators.Crs.transform(lonLat, "lon", "lat", 4326, 3857)
+    assert(proj.count() === Interp.K.toLong * Interp.K)
+    assert(PlanWalk.flatten(proj.queryExecution.executedPlan)
+      .collect { case e: ShuffleExchangeExec => e }.isEmpty, "no shuffle")
     // Mercator x is linear in lon; y is monotonic in lat
-    val rows = proj.orderBy("node_id").limit(graft.operators.Interp.K).collect()
-    val mxs = rows.map(_.getAs[Double]("mx"))
-    assert(mxs.zip(mxs.tail).forall { case (a, b) => a < b })
+    val rows = proj.orderBy("node_id").collect()
+    val xs = rows.take(Interp.K).map(_.getAs[Double]("lon"))
+    assert(math.abs(xs.head - -90.0 * math.Pi / 180.0 * 6378137.0) < 1e-6, "node 0 at 90°W")
+    assert(xs.zip(xs.tail).forall { case (a, b) => a < b })
+    val ys = rows.grouped(Interp.K).map(_.head.getAs[Double]("lat")).toSeq
+    assert(ys.zip(ys.tail).forall { case (a, b) => a < b })
   }
 
   test("existence-gated source: optional missing table is an empty relation") {
@@ -173,9 +236,25 @@ class RasterSinkSpec extends SparkSpec {
   }
 
   test("mosaic index derives the reference's compact-ISO tiff names") {
-    val idx = RasterSink.mosaicIndex(spark, "fort_63_zeta").collect()
-    assert(idx.length === graft.operators.Interp.T)
-    assert(idx.forall(_.getAs[String]("fname").matches("fort_63_zeta_[0-9]{8}T[0-9]{6}Z\\.tiff")))
+    import spark.implicits._
+    // hourly records across a month and a year boundary
+    val start = 1230764400L // 2008-12-31T23:00:00Z
+    val times = (0L until 6L)
+      .map(t => (t, t * 3600.0, Some(java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(start + t * 3600)))))
+      .toDF("ts", "t_raw", "t_utc")
+    val idx = RasterSink.mosaicIndexFromTimes(times, "fort_63_zeta").collect()
+    assert(idx.length === 6)
+    assert(idx.head.getAs[String]("fname") === "fort_63_zeta_20081231T230000Z.tiff")
+    assert(idx(1).getAs[String]("fname") === "fort_63_zeta_20090101T000000Z.tiff")
+    // every name is the reference's compact-ISO form, which the mosaic's
+    // timeregex.properties must find in it
+    val timeRegex = RasterSink.sidecars("graft")("timeregex.properties").stripPrefix("regex=").r
+    assert(timeRegex.regex === "[0-9]{8}T[0-9]{6}")
+    assert(idx.forall { r =>
+      val f = r.getAs[String]("fname")
+      f.matches("fort_63_zeta_[0-9]{8}T[0-9]{6}Z\\.tiff") && timeRegex.findFirstIn(f).nonEmpty
+    })
+    assert(idx.map(_.getAs[String]("fname")).distinct.length === 6, "one name per timestep")
   }
 
   test("mosaic index from an ingested time axis carries the REAL instants") {
