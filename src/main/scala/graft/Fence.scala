@@ -26,7 +26,9 @@ final case class Fenced(df: DataFrame, rows: Long, sum: Long, sumD: Double)
   *    materialization job already computed: the row count and optional
   *    fused term sums.
   * Both truncate Catalyst lineage to a leaf, so iterative callers
-  * (label propagation, k-means) keep O(1) plan depth per round. */
+  * (label propagation, k-means) keep O(1) plan depth per round; they run
+  * their rounds through [[iterate]], which owns the round fence, the
+  * release of each superseded round frame and the stop test. */
 object Fence {
   def apply(df: DataFrame): DataFrame =
     org.apache.spark.sql.GraftSqlShim.materialize(df, checkpoint = false).df
@@ -73,10 +75,43 @@ object Fence {
               sumD: InternalRow => Double = null): Fenced =
     org.apache.spark.sql.GraftSqlShim.materialize(df, cut, delta, sum, sumD)
 
+  /** The engine's one round loop for iterative operators. Round r
+    * (1-based) fences `step(frame, r)` through [[counted]] (`cut`, `sum`,
+    * `sumD` as there), then — the new fence having materialized —
+    * releases the frame it superseded with [[releaseCut]], which drops
+    * the blocks in both fence modes. `init` is never released, nor
+    * anything else the loop did not fence itself: the caller owns it and
+    * may still read it (a level cascade's entry frame, a shared seed).
+    *
+    * The loop stops after `maxRounds` rounds (0 runs none and returns
+    * `init`) or as soon as `stop(prev, cur)` holds. `stop` runs once per
+    * round, in order, after that round's fence; it reads scalars only —
+    * `prev`'s frame may already be released — and is also where a
+    * caller reads per-round scalars. Returns the last fence (`init`
+    * after zero rounds) and the number of rounds run. The survivor is
+    * the caller's to seal and release. */
+  def iterate(init: Fenced, cut: Boolean, maxRounds: Int = Int.MaxValue,
+              sum: InternalRow => Long = null, sumD: InternalRow => Double = null,
+              stop: (Fenced, Fenced) => Boolean = (_, _) => false)(
+      step: (DataFrame, Int) => DataFrame): (Fenced, Int) = {
+    var cur = init
+    var rounds = 0
+    var done = maxRounds <= 0
+    while (!done) {
+      rounds += 1
+      val prev = cur
+      cur = counted(step(prev.df, rounds), cut, sum = sum, sumD = sumD)
+      if (!(prev eq init)) releaseCut(prev.df)
+      done = stop(prev, cur) || rounds >= maxRounds
+    }
+    (cur, rounds)
+  }
+
   /** Unpersist an [[apply]]-fenced frame's pinned blocks once it is
-    * SUPERSEDED — the iterative-loop discipline (r10 advice): without
-    * this, round r's pin keeps rounds 1..r-1's MEMORY_ONLY blocks
-    * reachable and cache usage grows per round. Caller contract: pass
+    * SUPERSEDED (r10 advice): without this, round r's pin keeps rounds
+    * 1..r-1's MEMORY_ONLY blocks reachable and cache usage grows per
+    * round — [[iterate]] does it for every round frame it fences; call
+    * this for the frames a caller fenced itself. Caller contract: pass
     * the fenced frame ITSELF (the exact frame [[apply]] returned —
     * see [[org.apache.spark.sql.GraftSqlShim.releasePin]]), release it
     * only after the superseding fence has materialized (apply is
@@ -85,10 +120,8 @@ object Fence {
     * the pin's documented determinism assumption, just slower. On a
     * [[cut]]-produced (localCheckpoint-backed, MEMORY_AND_DISK) frame
     * this is a deliberate NO-OP (r14 advice) — those blocks are the
-    * data, and dropping them by accident would be unrecoverable. A deep
-    * loop whose round frames ride [[cut]] must release superseded rounds
-    * with [[releaseCut]] or its checkpoint blocks accumulate for the
-    * whole walk. */
+    * data, and dropping them by accident would be unrecoverable: a cut
+    * frame is released with [[releaseCut]], as [[iterate]] does. */
   def release(df: DataFrame): Unit =
     org.apache.spark.sql.GraftSqlShim.releasePin(df)
 
@@ -102,8 +135,8 @@ object Fence {
     * call it only when (a) the superseding cut has materialized (cut is
     * eager) and (b) nothing derived from the released frame escapes the
     * loop (a survivor that must outlive the loop gets its own [[cut]]
-    * first). Releases pin-mode blocks too, so loops stay correct when a
-    * frame was fenced with [[apply]] instead of [[cut]].
+    * first). Releases pin-mode blocks too, which is why [[iterate]]
+    * releases every superseded round frame with it in either mode.
     *
     * GUARDED (r15 advice): the frame must BE a fence leaf (its analyzed
     * plan a single LogicalRDD) or hold no fenced leaves at all (a

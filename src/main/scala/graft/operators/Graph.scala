@@ -183,12 +183,12 @@ object Graph {
     // per-round dangling mass becomes a filter+aggregate over the fenced
     // leaf instead of a semi-join against a separate pinned node set
     // (one join and one pinned relation less per query; guide §2.4).
-    var r = graft.Fence(nodes
+    val init = graft.Fence.counted(nodes
       .join(deg.select(col("src").as("node"), lit(1L).as("em")), Seq("node"), "left")
       .select(col("node"), col("s"),
               when(col("em").isNull, 1L).otherwise(0L).as("dgl"),
-              (lit(pshare) * col("s")).as("rank")))
-    (1 to iters).foreach { _ =>
+              (lit(pshare) * col("s")).as("rank")), cut = false)
+    val (r, _) = graft.Fence.iterate(init, cut = false, maxRounds = iters) { (r, _) =>
       val dm1 = r.filter(col("dgl") === 1L)
         .agg(coalesce(sum(col("rank")), lit(0L)).as("dm"))
       // rank·w staged through DECIMAL(38,0) (r12 verdict #2 / the HITS
@@ -200,21 +200,18 @@ object Graph {
         .select(col("dst"),
           expr("CAST((CAST(rank AS DECIMAL(38,0)) * w) DIV odeg AS BIGINT)").as("c"))
         .groupBy("dst").agg(sum(col("c")).as("m"))
-      val prev = r
-      // update joins PREVR (node set == nodes by construction), so the
-      // static s/dgl columns ride the round frame for free
-      r = graft.Fence(
-        prev.select(col("node"), col("s"), col("dgl"))
-          .join(in.withColumnRenamed("dst", "node"), Seq("node"), "left")
-          .crossJoin(broadcast(dm1))
-          .select(col("node"), col("s"), col("dgl"),
-            (lit(tp) * col("s") +
-              expr(s"($dampNum * (coalesce(m, 0L) + s * (dm DIV ${nT}L))) DIV 100"))
-              .as("rank")))
-      graft.Fence.release(prev) // the new fence is materialized; r-1 superseded
+      // update joins the previous round frame (node set == nodes by
+      // construction), so the static s/dgl columns ride it for free
+      r.select(col("node"), col("s"), col("dgl"))
+        .join(in.withColumnRenamed("dst", "node"), Seq("node"), "left")
+        .crossJoin(broadcast(dm1))
+        .select(col("node"), col("s"), col("dgl"),
+          (lit(tp) * col("s") +
+            expr(s"($dampNum * (coalesce(m, 0L) + s * (dm DIV ${nT}L))) DIV 100"))
+            .as("rank"))
     }
-    val keep = graft.Fence.cut(r.select("node", "rank"))
-    graft.Fence.release(r)
+    val keep = graft.Fence.cut(r.df.select("node", "rank"))
+    graft.Fence.release(r.df); graft.Fence.release(init.df)
     graft.Fence.release(e); graft.Fence.release(nodes)
     keep
   }
@@ -278,53 +275,47 @@ object Graph {
     val tp = ((100L - dampNum) * pshare) / 100L
     val tolMass = (tolPpm * scale) / 1000000L
     // dangling indicator rides the rank frame (see the pageRank note)
-    var r = graft.Fence(
+    val init = graft.Fence.counted(
       nodes.join(prev.select(col("node"), col("rank").as("pr")), Seq("node"), "left")
         .join(deg.select(col("src").as("node"), lit(1L).as("em")), Seq("node"), "left")
         .select(col("node"),
                 when(col("em").isNull, 1L).otherwise(0L).as("dgl"),
-                coalesce(col("pr"), lit(pshare)).as("rank")))
-    var rounds = 0
-    var delta = Long.MaxValue
-    while (rounds < maxRounds && delta > tolMass) {
+                coalesce(col("pr"), lit(pshare)).as("rank")), cut = false)
+    // r17 (verdict #2): the L1 movement Σ|rank − rank0| rides the round
+    // fence's own materialization job ([[graft.Fence.counted]]'s `sum`
+    // — a commutative Long sum over the round frame's (node, dgl, rank,
+    // rank0) rows, ordinals 2/3), removing the separate agg plan + job
+    // the loop ran per round. rank and rank0 are non-null by
+    // construction (coalesce in the update; the previous ranks non-null).
+    val (r, rounds) = graft.Fence.iterate(init, cut = false, maxRounds = maxRounds,
+        sum = row => math.abs(row.getLong(2) - row.getLong(3)),
+        stop = (_, cur) => cur.sum <= tolMass) { (r, _) =>
       val dm1 = r.filter(col("dgl") === 1L)
         .agg(coalesce(sum(col("rank")), lit(0L)).as("dm"))
       val in = e.join(r.withColumnRenamed("node", "src"), "src")
         .select(col("dst"),
           expr("CAST((CAST(rank AS DECIMAL(38,0)) * w) DIV odeg AS BIGINT)").as("c"))
         .groupBy("dst").agg(sum(col("c")).as("m"))
-      val prevR = r
       // r16 optimization (guide §1.2, fewer passes per round): the
-      // update joins PREVR — whose node set is by construction exactly
-      // `nodes` (every round frame is built over it) — instead of the
-      // static node frame, so the previous rank rides the fenced round
-      // frame as `rank0` for free and the L1 convergence scalar becomes
-      // a plain aggregate over the materialized leaf. The old shape
-      // paid a second r⋈prevR join (its own plan + job) per round just
-      // to recompute a pairing the update join already had in hand.
-      // r17 (verdict #2): the L1 movement Σ|rank − rank0| rides the
-      // fence's own materialization job ([[graft.Fence.counted]]'s `sum`
-      // — a commutative Long sum over the round frame's (node, dgl,
-      // rank, rank0) rows, ordinals 2/3), removing the separate agg
-      // plan + job the loop ran per round. rank and rank0 are non-null
-      // by construction (coalesce in the update; prevR ranks non-null).
-      val rs = graft.Fence.counted(
-        prevR.select(col("node"), col("dgl"), col("rank").as("rank0"))
-          .join(in.withColumnRenamed("dst", "node"), Seq("node"), "left")
-          .crossJoin(broadcast(dm1))
-          .select(col("node"), col("dgl"),
-            (lit(tp) +
-              expr(s"($dampNum * (coalesce(m, 0L) + dm DIV ${n}L)) DIV 100"))
-              .as("rank"),
-            col("rank0")),
-        cut = false, sum = row => math.abs(row.getLong(2) - row.getLong(3)))
-      r = rs.df
-      delta = rs.sum
-      graft.Fence.release(prevR)
-      rounds += 1
+      // update joins the previous round frame — whose node set is by
+      // construction exactly `nodes` (every round frame is built over
+      // it) — instead of the static node frame, so the previous rank
+      // rides the fenced round frame as `rank0` for free and the L1
+      // convergence scalar becomes a plain aggregate over the
+      // materialized leaf. The old shape paid a second join (its own
+      // plan + job) per round just to recompute a pairing the update
+      // join already had in hand.
+      r.select(col("node"), col("dgl"), col("rank").as("rank0"))
+        .join(in.withColumnRenamed("dst", "node"), Seq("node"), "left")
+        .crossJoin(broadcast(dm1))
+        .select(col("node"), col("dgl"),
+          (lit(tp) +
+            expr(s"($dampNum * (coalesce(m, 0L) + dm DIV ${n}L)) DIV 100"))
+            .as("rank"),
+          col("rank0"))
     }
-    val keep = graft.Fence.cut(r.select("node", "rank"))
-    graft.Fence.release(r)
+    val keep = graft.Fence.cut(r.df.select("node", "rank"))
+    graft.Fence.release(r.df); graft.Fence.release(init.df)
     graft.Fence.release(e); graft.Fence.release(nodes)
     (keep, rounds)
   }
@@ -702,35 +693,29 @@ object Graph {
       edges.select(col("src").as("a"), col("dst").as("b"))
         .union(edges.select(col("dst").as("a"), col("src").as("b")))
         .filter(col("a") =!= col("b")).distinct())
-    val Fenced(nodes, nNodes, _, _) = graft.Fence.counted(
+    val nodesF = graft.Fence.counted(
       und.select(col("a").as("node")).distinct(), cut = false)
+    val nodes = nodesF.df
     def coreDeg(alive: DataFrame): DataFrame = und
       .join(alive.select(col("node").as("a")), Seq("a"), "left_semi")
       .join(alive.select(col("node").as("b")), Seq("b"), "left_semi")
       .groupBy(col("a").as("node")).agg(count(lit(1)).as("deg_core"))
-    var alive = nodes
-    var prevN = -1L
-    var curN = nNodes
-    while (curN != prevN && curN > 0) {
-      val prev = alive
-      // Fence.cut, not the pin: peel depth on a webgraph is its
-      // degeneracy cascade — tens-to-hundreds of rounds — and the
-      // FenceGateSpec deep-loop rule applies (pin lineage depth grows
-      // per round; cut stays constant). The alive frame is one bare
-      // column, so the checkpoint write is trivially cheap.
-      val Fenced(a2, n2, _, _) = graft.Fence.counted(
-        coreDeg(prev).filter(col("deg_core") >= k).select("node"), cut = true)
-      alive = a2
-      if (!(prev eq nodes)) graft.Fence.release(prev)
-      prevN = curN
-      curN = n2
+    // Fence.cut, not the pin: peel depth on a webgraph is its degeneracy
+    // cascade — tens-to-hundreds of rounds — and the FenceGateSpec
+    // deep-loop rule applies (pin lineage depth grows per round; cut
+    // stays constant). The alive frame is one bare column, so the
+    // checkpoint write is trivially cheap. An empty graph peels nothing.
+    val (alive, _) = graft.Fence.iterate(nodesF, cut = true,
+        maxRounds = if (nodesF.rows > 0) Int.MaxValue else 0,
+        stop = (prev, cur) => cur.rows == prev.rows || cur.rows == 0) { (alive, _) =>
+      coreDeg(alive).filter(col("deg_core") >= k).select("node")
     }
     val keep = graft.Fence.cut(
-      nodes.join(coreDeg(alive), Seq("node"), "left")
+      nodes.join(coreDeg(alive.df), Seq("node"), "left")
         .select(col("node"),
           when(col("deg_core").isNotNull, 1L).otherwise(0L).as("in_core"),
           coalesce(col("deg_core"), lit(0L)).as("deg_core")))
-    if (!(alive eq nodes)) graft.Fence.release(alive)
+    graft.Fence.releaseCut(alive.df)
     graft.Fence.release(nodes); graft.Fence.release(und)
     keep
   }
@@ -767,9 +752,9 @@ object Graph {
         .union(edges.select(col("dst").as("a"), col("src").as("b")))
         .filter(col("a") =!= col("b")).distinct())
     val nodes = graft.Fence(und.select(col("a").as("node")).distinct())
-    var lbl = graft.Fence(nodes.withColumn("lbl", col("node")))
+    val init = graft.Fence.counted(nodes.withColumn("lbl", col("node")), cut = false)
     val w = Window.partitionBy("a").orderBy(col("c").desc, col("lbl").asc)
-    (1 to iters).foreach { _ =>
+    val (lbl, _) = graft.Fence.iterate(init, cut = false, maxRounds = iters) { (lbl, _) =>
       // r17 (guide §2.1, remove a shuffle per round): one explicit
       // hash(a) exchange serves BOTH the (a, lbl) count aggregate
       // (HashPartitioning(a) satisfies ClusteredDistribution(a, lbl) —
@@ -781,15 +766,13 @@ object Graph {
       val cnt = und.join(lbl.withColumnRenamed("node", "b"), "b")
         .repartition(col("a"))
         .groupBy(col("a"), col("lbl")).agg(count(lit(1)).as("c"))
-      val prev = lbl
-      lbl = graft.Fence(
-        cnt.withColumn("rn", row_number().over(w))
-          .filter(col("rn") === 1)
-          .select(col("a").as("node"), col("lbl")))
-      graft.Fence.release(prev)
+      cnt.withColumn("rn", row_number().over(w))
+        .filter(col("rn") === 1)
+        .select(col("a").as("node"), col("lbl"))
     }
-    val keep = graft.Fence.cut(lbl.select(col("node"), col("lbl").as("community")))
-    graft.Fence.release(lbl); graft.Fence.release(nodes); graft.Fence.release(und)
+    val keep = graft.Fence.cut(lbl.df.select(col("node"), col("lbl").as("community")))
+    graft.Fence.release(lbl.df); graft.Fence.release(init.df)
+    graft.Fence.release(nodes); graft.Fence.release(und)
     keep
   }
 
@@ -911,32 +894,24 @@ object Graph {
     // Long sum over the (v, lbl) rows the fence already streams into
     // cache — [[graft.Fence.counted]]'s `sum`), removing the separate
     // agg plan + 2-stage job the loop used to run per round.
-    def fenceSum(df: DataFrame): (DataFrame, Long) = {
-      val f = graft.Fence.counted(df, cut = false, sum = _.getLong(1))
-      (f.df, f.sum)
-    }
     val p = graft.Fence(pairs.select(col("src"), col("dst")))
     val sym = graft.Fence(p.union(p.select(col("dst").as("src"), col("src").as("dst"))))
-    var (labels, curSum) = fenceSum(sym.select(col("src").as("v")).distinct()
-      .withColumn("lbl", col("v")))
-    var prevSum = Long.MaxValue
-    while (curSum < prevSum) {
+    val init = graft.Fence.counted(sym.select(col("src").as("v")).distinct()
+      .withColumn("lbl", col("v")), cut = false, sum = _.getLong(1))
+    val (labels, _) = graft.Fence.iterate(init, cut = false, sum = _.getLong(1),
+        stop = (prev, cur) => cur.sum >= prev.sum) { (labels, _) =>
       val prop = sym.join(labels.withColumnRenamed("v", "w"), col("dst") === col("w"))
         .groupBy(col("src")).agg(min(col("lbl")).as("nlbl"))
-      val prev = labels
-      val (l2, s2) = fenceSum(labels
+      labels
         .join(prop, col("v") === col("src"), "left")
         .select(col("v"),
-                least(col("lbl"), coalesce(col("nlbl"), col("lbl"))).as("lbl")))
-      labels = l2
-      graft.Fence.release(prev) // the new fence is materialized; round r-1 is superseded
-      prevSum = curSum
-      curSum = s2
+                least(col("lbl"), coalesce(col("nlbl"), col("lbl"))).as("lbl"))
     }
     // Seal the SURVIVOR with a real lineage cut, then release everything
     // the loop pinned.
-    val keep = graft.Fence.cut(labels)
-    graft.Fence.release(labels); graft.Fence.release(sym); graft.Fence.release(p)
+    val keep = graft.Fence.cut(labels.df)
+    graft.Fence.release(labels.df); graft.Fence.release(init.df)
+    graft.Fence.release(sym); graft.Fence.release(p)
     keep
   }
 
@@ -1073,9 +1048,9 @@ object Graph {
     val e = graft.Fence(edges.select(col("src"), col("dst")).distinct())
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct()
-    var r = graft.Fence(
+    val r0 = graft.Fence.counted(
       nodes.as[Long].map(v => (v, graft.functions.Hll.init(v)))
-        .toDF("node", "reg"))
+        .toDF("node", "reg"), cut = false)
     // empty-input hardening (the coreness/bowtie convention): no edges →
     // no node set → sum(est) is NULL; coalesce instead of NPE, and an
     // empty node set short-circuits to the empty result frame
@@ -1083,26 +1058,22 @@ object Graph {
       hllEstimates(df).agg(coalesce(sum(col("est")), lit(0.0)))
         .head().getDouble(0)
     if (nodes.isEmpty) {
-      graft.Fence.release(r); graft.Fence.release(e)
+      graft.Fence.release(r0.df); graft.Fence.release(e)
       return Seq.empty[(Long, Double, Double, Long)]
         .toDF("d", "n_pairs_est", "cum_pairs_est", "reached_90")
     }
-    val totals = scala.collection.mutable.ArrayBuffer(total(r)) // N(0) ~ n
-    (1 to depth).foreach { d =>
-      val prevR = r
-      // r17 (verdict #2/#6 profile): the global Σest scalar rides the
-      // round cut's own materialization job ([[graft.Fence.counted]]'s `sumD`
-      // — estimate(reg) over the (node, reg) rows the cut already
-      // streams, reg at ordinal 1) instead of a separate per-round
-      // estimates plan + aggregate job. Bound-checked scalar only —
-      // the hashed payload is the exact form's.
-      val rc = graft.Fence.counted(hllPropagate(e, prevR), cut = true,
-        sumD = row => graft.functions.Hll.estimate(row.getBinary(1)))
-      r = rc.df // the deep-loop cut rule
-      graft.Fence.releaseCut(prevR) // cut-backed: plain release would leave the blocks (r14 advice)
-      totals += rc.sumD
-    }
-    graft.Fence.releaseCut(r); graft.Fence.release(e)
+    val totals = scala.collection.mutable.ArrayBuffer(total(r0.df)) // N(0) ~ n
+    // r17 (verdict #2/#6 profile): the global Σest scalar N(d) rides each
+    // round cut's own materialization job ([[graft.Fence.counted]]'s
+    // `sumD` — estimate(reg) over the (node, reg) rows the cut already
+    // streams, reg at ordinal 1) instead of a separate per-round
+    // estimates plan + aggregate job; `stop` records it. Bound-checked
+    // scalar only — the hashed payload is the exact form's. Rounds ride
+    // the cut: the deep-loop rule.
+    val (r, _) = graft.Fence.iterate(r0, cut = true, maxRounds = depth,
+        sumD = row => graft.functions.Hll.estimate(row.getBinary(1)),
+        stop = (_, cur) => { totals += cur.sumD; false }) { (r, _) => hllPropagate(e, r) }
+    graft.Fence.releaseCut(r.df); graft.Fence.release(r0.df); graft.Fence.release(e)
     // depth-bounded readout: one row per probed distance
     val perD = (1 to depth).map(d => math.max(totals(d) - totals(d - 1), 0.0))
     val cum = perD.scanLeft(0.0)(_ + _).tail
@@ -1260,7 +1231,7 @@ object Graph {
             (col("od") - coalesce(col("dec_o"), lit(0L))).as("od"),
             (col("id") - coalesce(col("dec_i"), lit(0L))).as("id")), cut = true)
         degs = dc.df; nDegs = dc.rows
-        graft.Fence.release(prevDegs)
+        graft.Fence.releaseCut(prevDegs)
         if (nPrev == nDegs) trimming = false
         else {
           anyDead = true
@@ -1271,7 +1242,7 @@ object Graph {
             eA = graft.Fence.cut(prevEA
               .join(alive.withColumnRenamed("node", "src"), Seq("src"), "left_semi")
               .join(alive.withColumnRenamed("node", "dst"), Seq("dst"), "left_semi"))
-            graft.Fence.release(prevEA)
+            graft.Fence.releaseCut(prevEA)
             lastShrink = estAlive
           }
         }
@@ -1284,7 +1255,7 @@ object Graph {
           .join(active.select(col("node").as("dst")), Seq("dst"), "left_semi"))
         nActive = nA2
       }
-      graft.Fence.release(degs)
+      graft.Fence.releaseCut(degs)
       if (nActive > 0) {
         // ---- 2. forward max-color propagation to fixpoint ----
         // r17 (verdict #2): the Σclr convergence scalar rides the round
@@ -1292,25 +1263,17 @@ object Graph {
         // — one plan + one job per round instead of two; superseded
         // color cuts are now released (the r14 deep-loop discipline —
         // the old loop let checkpoint blocks accumulate per round).
-        var cs = graft.Fence.counted(
+        val cs0 = graft.Fence.counted(
           active.withColumn("clr", col("node")), cut = true, sum = _.getLong(1))
-        var colors = cs.df
-        var prevSum = -1L
-        var curSum = cs.sum
-        while (curSum != prevSum) {
+        val colors = graft.Fence.iterate(cs0, cut = true, sum = _.getLong(1),
+            stop = (prev, cur) => cur.sum == prev.sum) { (colors, _) =>
           val prop = eA.join(colors.withColumnRenamed("node", "src"), "src")
             .groupBy(col("dst").as("node")).agg(max(col("clr")).as("nclr"))
-          val prevC = colors
-          cs = graft.Fence.counted(
-            colors.join(prop, Seq("node"), "left")
-              .select(col("node"),
-                greatest(col("clr"), coalesce(col("nclr"), col("clr"))).as("clr")),
-            cut = true, sum = _.getLong(1))
-          colors = cs.df
-          graft.Fence.releaseCut(prevC)
-          prevSum = curSum
-          curSum = cs.sum
-        }
+          colors.join(prop, Seq("node"), "left")
+            .select(col("node"),
+              greatest(col("clr"), coalesce(col("nclr"), col("clr"))).as("clr"))
+        }._1.df
+        graft.Fence.releaseCut(cs0.df)
         // ---- 3. multi-source backward BFS within each root's color ----
         // r17 DELTA-ONLY accumulation — see the [[harmonic]] note
         // (verdict #3): one size-adaptive delta cut per round, frontier
@@ -1469,18 +1432,16 @@ object Graph {
                     rounds: Int): DataFrame = {
     val S = 1099511627776L // 2^40: dist·S + seed, lexicographic under min
     val e = graft.Fence(edges.select(col("src"), col("dst"), col("w")))
-    var dist = graft.Fence(seeds.select(col("node")).distinct()
-      .withColumn("enc", col("node"))) // dist 0 ⇒ enc = seed id
-    (1 to rounds).foreach { _ =>
+    val init = graft.Fence.counted(seeds.select(col("node")).distinct()
+      .withColumn("enc", col("node")), cut = false) // dist 0 ⇒ enc = seed id
+    val (dist, _) = graft.Fence.iterate(init, cut = false, maxRounds = rounds) { (dist, _) =>
       val relax = e.join(dist.withColumnRenamed("node", "src"), "src")
         .select(col("dst").as("node"),
           ((expr(s"enc DIV $S") + col("w")) * lit(S) + expr(s"enc % $S")).as("enc"))
-      val prev = dist
-      dist = graft.Fence(prev.union(relax).groupBy("node").agg(min("enc").as("enc")))
-      graft.Fence.release(prev)
+      dist.union(relax).groupBy("node").agg(min("enc").as("enc"))
     }
-    val keep = graft.Fence.cut(dist)
-    graft.Fence.release(dist); graft.Fence.release(e)
+    val keep = graft.Fence.cut(dist.df)
+    graft.Fence.release(dist.df); graft.Fence.release(init.df); graft.Fence.release(e)
     keep
   }
 
@@ -1676,7 +1637,6 @@ object Graph {
             expr(s"CAST((CAST(sig AS DECIMAL(38,0)) * ($scale + dfpw)) DIV sigw AS BIGINT)")),
             lit(0L)).as("dfp")), cut = true, delta = true).df
       layers += layer
-      graft.Fence.release(deltaUp)
       deltaUp = layer
     }
     val allNodes = e.select(col("src").as("node"))
@@ -1687,7 +1647,7 @@ object Graph {
     val keep = graft.Fence.cut(
       allNodes.join(acc, Seq("node"), "left")
         .select(col("node"), coalesce(col("bc_fp"), lit(0L)).as("bc_fp")))
-    levels.foreach(graft.Fence.releaseCut)
+    (levels ++ layers).foreach(graft.Fence.releaseCut)
     graft.Fence.release(e)
     keep
   }
@@ -1881,38 +1841,35 @@ object Graph {
       edges.select(col("src").as("a"), col("dst").as("b"))
         .union(edges.select(col("dst").as("a"), col("src").as("b")))
         .filter(col("a") =!= col("b")).distinct())
-    val Fenced(nodes, nNodes, _, _) = graft.Fence.counted(
+    val nodes = graft.Fence.counted(
       und.select(col("a").as("node")).distinct(), cut = false)
     def coreDeg(alive: DataFrame): DataFrame = und
       .join(alive.select(col("node").as("a")), Seq("a"), "left_semi")
       .join(alive.select(col("node").as("b")), Seq("b"), "left_semi")
       .groupBy(col("a").as("node")).agg(count(lit(1)).as("dc"))
     val parts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var alive = nodes
-    var nAlive = nNodes
+    // every level's entry frame, the last one the current survivor: the
+    // lazy `parts` read them until the final cut materializes
+    val levels = scala.collection.mutable.ArrayBuffer(nodes)
     var k = 1
-    while (k <= kMax && nAlive > 0) {
-      val atEntry = alive
-      var prevN = -1L
-      while (nAlive != prevN && nAlive > 0) {
-        val Fenced(next, nNext, _, _) = graft.Fence.counted(
-          coreDeg(alive).filter(col("dc") >= k).select("node"), cut = true)
-        prevN = nAlive
-        alive = next
-        nAlive = nNext
-      }
-      parts += atEntry.join(alive, Seq("node"), "left_anti")
+    while (k <= kMax && levels.last.rows > 0) {
+      val atEntry = levels.last
+      levels += graft.Fence.iterate(atEntry, cut = true,
+          stop = (prev, cur) => cur.rows == prev.rows || cur.rows == 0) { (alive, _) =>
+        coreDeg(alive).filter(col("dc") >= k).select("node")
+      }._1
+      parts += atEntry.df.join(levels.last.df, Seq("node"), "left_anti")
         .select(col("node"), lit(k - 1L).as("coreness"))
       k += 1
     }
-    if (nAlive > 0)
-      parts += alive.select(col("node"), lit(kMax.toLong).as("coreness"))
+    if (levels.last.rows > 0)
+      parts += levels.last.df.select(col("node"), lit(kMax.toLong).as("coreness"))
     // empty/self-loop-only edge relation → no levels ran and parts is
     // empty; fall back to the (empty) node set rather than throwing
     // (the scc reduceOption precedent — r12 advice)
     val keep = graft.Fence.cut(parts.reduceOption(_ union _)
-      .getOrElse(nodes.select(col("node"), lit(0L).as("coreness"))))
-    graft.Fence.release(nodes); graft.Fence.release(und)
+      .getOrElse(nodes.df.select(col("node"), lit(0L).as("coreness"))))
+    levels.foreach(l => graft.Fence.releaseCut(l.df)); graft.Fence.release(und)
     keep
   }
 

@@ -776,13 +776,13 @@ object Similarity {
     // materialized (r10 verdict #2 / r11 advice — the iterative-loop
     // pin discipline; at fixture scale this is noise, at 100 TB it is
     // what keeps the loop's cache footprint O(1) in k).
-    var selected = pool
+    val init = graft.Fence.counted(pool
       .withColumn("rk", row_number().over(wTop))
       .filter(col("rk") === 1)
       .select(col("qid"), col("cand"), col("cv"), col("cn"),
-              col("cosq"), lit(1L).as("step"))
-      .transform(graft.Fence(_))
-    (2 to 4).foreach { step =>
+              col("cosq"), lit(1L).as("step")), cut = false)
+    val (selected, _) = graft.Fence.iterate(init, cut = false, maxRounds = 3) { (selected, i) =>
+      val step = i + 1
       val sel = selected.select(col("qid").as("sqid"), col("cand").as("scand"),
                                 col("cv").as("sv"), col("cn").as("sn"))
       val remaining = pool.join(
@@ -796,16 +796,14 @@ object Similarity {
         .withColumn("mmr",
           round(lit(0.7) * col("cosq") - lit(0.3) * col("pen"), 4))
       val wSel = Window.partitionBy("qid").orderBy(col("mmr").desc, col("cand"))
-      val prev = selected
-      selected = graft.Fence(selected.unionByName(penalized
+      selected.unionByName(penalized
         .withColumn("rk", row_number().over(wSel))
         .filter(col("rk") === 1)
         .select(col("qid"), col("cand"), col("cv"), col("cn"),
-                col("cosq"), lit(step.toLong).as("step"))))
-      graft.Fence.release(prev)
+                col("cosq"), lit(step.toLong).as("step")))
     }
-    val out = selected.select("qid", "step", "cand", "cosq").orderBy("qid", "step")
-    graft.Fence.release(pool)
+    val out = selected.df.select("qid", "step", "cand", "cosq").orderBy("qid", "step")
+    graft.Fence.release(init.df); graft.Fence.release(pool)
     out
   }
 
@@ -886,30 +884,24 @@ object Similarity {
     val s = e.sparkSession
     import s.implicits._
     def assign(cents: DataFrame): DataFrame = assignToCents(e, cents)
-    // own the initial centroids with a cut: the loop's releaseCut is
-    // destructive and walks the released frame's WHOLE plan, so round 1
-    // must supersede a single-leaf frame we created — not the caller's
-    // seeds expression, whose plan can contain the caller's own
-    // checkpoint leaves (releasing those drops the INPUT's blocks)
-    var centroids = graft.Fence.cut(seeds.getOrElse(d2ColdSeeds(e, k)))
     val meanCos = Seq.newBuilder[Double]
-    var assigned = assign(centroids)
-    (1 to iters).foreach { _ =>
+    def record(assigned: DataFrame): DataFrame = {
       meanCos += assigned.agg(avg(col("cos"))).head().getDouble(0)
-      val prevCents = centroids
-      centroids = assigned
+      assigned
+    }
+    // own the initial centroids with a cut: the caller's seeds
+    // expression can hold the caller's own checkpoint leaves, which
+    // must never reach a release
+    val init = graft.Fence.counted(seeds.getOrElse(d2ColdSeeds(e, k)), cut = true)
+    val (centroids, _) = graft.Fence.iterate(init, cut = true, maxRounds = iters) { (cents, _) =>
+      record(assign(cents))
         .select(col("cid"), col("v")).as[(Long, Array[Double])]
         .groupByKey(_._1).mapValues(_._2)
         .agg(graft.functions.VectorCentroid.toColumn.name("cv"))
         .toDF("cid", "cv")
-        .transform(graft.Fence.cut)
-      // the new cut materialized THROUGH the superseded centroids; the
-      // old lazy `assigned` is reassigned below and never read again
-      graft.Fence.releaseCut(prevCents)
-      assigned = assign(centroids)
     }
-    meanCos += assigned.agg(avg(col("cos"))).head().getDouble(0)
-    (assigned, meanCos.result())
+    if (!(centroids eq init)) graft.Fence.releaseCut(init.df)
+    (record(assign(centroids.df)), meanCos.result())
   }
 
   /** WARM-START quantizer refresh — the per-crawl production mode for
@@ -1019,9 +1011,9 @@ object Similarity {
     def pick(ids: DataFrame): DataFrame =
       sub.select(col("j"), col("id").as("cand"), col("sv").as("cw"))
         .join(ids, Seq("j", "cand"))
-    var cents = graft.Fence(
-      pick(sub.groupBy("j").agg(min(col("id")).as("cand"))))
-    (1 to rounds).foreach { r =>
+    val init = graft.Fence.counted(
+      pick(sub.groupBy("j").agg(min(col("id")).as("cand"))), cut = false)
+    val (cents, _) = graft.Fence.iterate(init, cut = false, maxRounds = rounds) { (cents, r) =>
       val qd = sub.join(broadcast(cents), "j")
         .select(col("id"), col("j"), d2q(col("sv"), col("cw")).as("dd"))
         .groupBy("id", "j").agg(min(col("dd")).as("qd"))
@@ -1031,9 +1023,7 @@ object Similarity {
           pmod(xxhash64(lit(r), col("id")), lit(m)) <
             expr(s"($l * qd * $m) DIV cost"))
         .select(col("j"), col("id").as("cand"))
-      val prev = cents
-      cents = graft.Fence(prev.union(pick(selIds)))
-      graft.Fence.release(prev)
+      cents.union(pick(selIds))
     }
     // Weight pass. The argmin must survive a corpus×candidates product
     // stream: min_by's object-hash aggregate falls back to SORT past 128
@@ -1047,7 +1037,7 @@ object Similarity {
     // dd <= dscale·maxD² <= ~4e8 at unit scale, so dd·2^14 is far from
     // overflow. Tie-break (dd, ci) == (dd, cand): ci is monotone in cand.
     val wCi = Window.partitionBy("j").orderBy("cand")
-    val centsI = cents.withColumn("ci", row_number().over(wCi).cast("long"))
+    val centsI = cents.df.withColumn("ci", row_number().over(wCi).cast("long"))
       .transform(graft.Fence.cut)
     val asg = sub.join(broadcast(centsI), "j")
       .select(col("id"), col("j"),
@@ -1060,7 +1050,8 @@ object Similarity {
       .select(col("j"), col("cand"), col("cw"),
               coalesce(col("weight"), lit(0L)).as("weight"))
     val keep = graft.Fence.cut(out)
-    graft.Fence.releaseCut(centsI); graft.Fence.release(cents)
+    graft.Fence.releaseCut(centsI)
+    graft.Fence.release(cents.df); graft.Fence.release(init.df)
     keep
   }
 
@@ -1126,11 +1117,13 @@ object Similarity {
         }
         chosen.zipWithIndex.map { case ((_, _, cw, _), i) => (i + 1, j, cw) }
     }
-    var cb = rows.toDF("cid", "cj", "cw")
     def d2qc(x: Column, c: Column): Column =
       floor((vecDot(x, x) - lit(2.0) * vecDot(x, c) + vecDot(c, c))
         * lit(dscale) + lit(0.5)).cast("long")
-    (1 to lloydRounds).foreach { _ =>
+    // the greedy codebook is a driver-local relation: the loop's init,
+    // which the round loop never releases
+    val init = graft.Fenced(rows.toDF("cid", "cj", "cw"), rows.size.toLong, 0L, 0.0)
+    graft.Fence.iterate(init, cut = true, maxRounds = lloydRounds) { (cb, _) =>
       val bcb = broadcast(cb)
       val asg = sub.join(bcb, col("j") === col("cj"))
         .select(col("id"), col("j"),
@@ -1146,12 +1139,10 @@ object Similarity {
         .agg(graft.functions.VectorCentroid.toColumn.name("cw1"))
         .map { case ((j, cid), cw1) => (cid, j, cw1) }
         .toDF("cid", "cj", "cw1")
-      cb = graft.Fence.cut(
-        cb.join(upd, Seq("cid", "cj"), "left")
-          .select(col("cid"), col("cj"),
-                  coalesce(col("cw1"), col("cw")).as("cw")))
-    }
-    cb
+      cb.join(upd, Seq("cid", "cj"), "left")
+        .select(col("cid"), col("cj"),
+                coalesce(col("cw1"), col("cw")).as("cw"))
+    }._1.df
   }
 
   /** EXT: k-means|| seeding, declared + oracled — [[kmeansParSeed]] over
@@ -1452,11 +1443,11 @@ object Similarity {
           .join(ranked.select(col("vec_id").as("nb"), col("pos").as("tpos")), "tpos")
           .select("vid", "nb")
       }
-    var g = graft.Fence.cut(
+    val g0 = graft.Fence.counted(
       rescoreTopK(e, bucketPairs.unionByName(randPairs).distinct(), kBuild)
-        .select(col("vid"), col("nb"), col("cos")))
+        .select(col("vid"), col("nb"), col("cos")), cut = true)
     rankedHandle.foreach(graft.Fence.releaseCut) // seed graph sealed; rank map superseded
-    (1 to rounds).foreach { _ =>
+    val (g, _) = graft.Fence.iterate(g0, cut = true, maxRounds = rounds) { (g, _) =>
       val ge = g.select("vid", "nb")
       val twoHop = ge.as("x")
         .join(ge.as("y"), col("x.nb") === col("y.vid"))
@@ -1466,12 +1457,10 @@ object Similarity {
         .unionByName(ge.select(col("nb").as("vid"), col("vid").as("nb")))
         .unionByName(twoHop)
         .distinct()
-      val prev = g
-      g = graft.Fence.cut(
-        rescoreTopK(e, cand, kBuild).select(col("vid"), col("nb"), col("cos")))
-      graft.Fence.releaseCut(prev)
+      rescoreTopK(e, cand, kBuild).select(col("vid"), col("nb"), col("cos"))
     }
-    g
+    if (!(g eq g0)) graft.Fence.releaseCut(g0.df)
+    g.df
   }
 
   /** EXT: graph-traversal ANN retrieval — NSW-style BEAM SEARCH over the
@@ -1614,10 +1603,9 @@ object Similarity {
     def frontierOf(p: DataFrame): DataFrame =
       p.withColumn("rk", row_number().over(wBeam))
         .filter(col("rk") <= beam).select("qid", "cid")
-    var pool = graft.Fence.cut(score(entrySet.distinct()))
-    (1 to rounds).foreach { _ =>
+    val pool0 = graft.Fence.counted(score(entrySet.distinct()), cut = true)
+    val (pool, _) = graft.Fence.iterate(pool0, cut = true, maxRounds = rounds) { (pool, _) =>
       val cand = walkCandidates(gu, frontierOf(pool), corpusMin)
-      val prevP = pool
       // r16: the pool and the newly scored arrivals are each distinct by
       // construction (entry/cand are distinct (qid, cid) sets and the
       // 4-dp score is a pure function of the pair), so merging them
@@ -1626,19 +1614,17 @@ object Similarity {
       // accumulated pool every round to dedup rows already known unique
       // (guide §2.3: shuffle fewer bytes; same rows, order-insensitive
       // consumers).
-      pool = graft.Fence.cut(pool.unionByName(
-        score(cand).join(pool.select("qid", "cid"), Seq("qid", "cid"),
-                         "left_anti")))
-      graft.Fence.releaseCut(prevP)
+      pool.unionByName(
+        score(cand).join(pool.select("qid", "cid"), Seq("qid", "cid"), "left_anti"))
     }
     // seal the survivor (its own cut) BEFORE dropping the final pool's
     // checkpoint blocks — releaseCut is destructive, and `out` derives
     // from the pool (the r14-advice accumulation fix made this ordering
     // load-bearing where the old no-op release forgave it)
     val out = graft.Fence.cut(
-      pool.withColumn("rk", row_number().over(wBeam).cast("long"))
+      pool.df.withColumn("rk", row_number().over(wBeam).cast("long"))
         .filter(col("rk") <= k))
-    graft.Fence.releaseCut(pool)
+    graft.Fence.releaseCut(pool.df); graft.Fence.releaseCut(pool0.df)
     graft.Fence.releaseCut(eP)
     out
   }

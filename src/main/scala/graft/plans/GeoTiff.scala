@@ -65,17 +65,24 @@ object GeoTiff {
     out.toByteArray
   }
 
+  /** Inflates one tile's zlib stream to its END, so the inflater checks
+    * the adler32 trailer: a damaged stream throws (DataFormatException)
+    * or fails a require, never returns wrong bytes. */
   private def inflateTile(in: Array[Byte], outLen: Int): Array[Byte] = {
     val inf = new java.util.zip.Inflater()
     inf.setInput(in)
     val out = new Array[Byte](outLen)
+    val spare = new Array[Byte](1) // past outLen: only the trailer may remain
     var at = 0
-    while (at < outLen && !inf.finished()) {
-      val n = inf.inflate(out, at, outLen - at)
-      require(n > 0 || !inf.needsInput, "truncated deflate tile")
-      at += n
-    }
-    inf.end()
+    try {
+      while (!inf.finished()) {
+        val left = inf.getRemaining
+        val n = if (at < outLen) inf.inflate(out, at, outLen - at) else inf.inflate(spare)
+        require(at < outLen || n == 0, s"deflate tile longer than $outLen bytes")
+        require(n > 0 || inf.finished() || inf.getRemaining < left, "truncated deflate tile")
+        at += n
+      }
+    } finally inf.end()
     require(at == outLen, s"deflate tile gave $at of $outLen bytes")
     out
   }
@@ -256,8 +263,10 @@ object GeoTiff {
 
   /** Decoder for the COG writer's base image: reads IFD0's
     * tiled layout and returns (width, height, values); also returns the
-    * overview dims from IFD1 and whether all pixel data sits after both
-    * IFDs (the cloud-optimized ordering property). */
+    * overview dims from IFD1 — (0, 0) for a tiled GeoTIFF without
+    * overviews, the layout GDAL writes for small images — and whether
+    * all pixel data sits after the IFDs (the cloud-optimized ordering
+    * property). */
   def decodeCog(bytes: Array[Byte]): (Int, Int, Array[Float], (Int, Int), Boolean) = {
     val buf = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
     require(buf.get() == 'I' && buf.get() == 'I' && buf.getShort() == 42)
@@ -275,8 +284,9 @@ object GeoTiff {
       (m, buf.getInt(at + 2 + n * 12))
     }
     val (ifd0, next) = readIfd(buf.getInt(4))
-    require(next != 0, "COG must chain an overview IFD")
-    val (ifd1, _) = readIfd(next)
+    val overview =
+      if (next == 0) (0, 0)
+      else { val (ifd1, _) = readIfd(next); (ifd1(ImageWidth)._3.toInt, ifd1(ImageLength)._3.toInt) }
     val w = ifd0(ImageWidth)._3.toInt; val h = ifd0(ImageLength)._3.toInt
     val tw = ifd0(TileWidth)._3.toInt; val th = ifd0(TileLength)._3.toInt
     val deflated = ifd0.get(Compression).exists(_._3 == 8L)
@@ -303,8 +313,9 @@ object GeoTiff {
         if (y < h && x < w) out(y * w + x) = v
       }
     }
-    val ifdEnd = next + 2 + 12 * { buf.position(next); buf.getShort().toInt } + 4
+    val ifdAt = if (next == 0) buf.getInt(4) else next // the last IFD read
+    val ifdEnd = ifdAt + 2 + 12 * buf.getShort(ifdAt) + 4
     val dataAfterIfds = offsets.min >= ifdEnd
-    (w, h, out, (ifd1(ImageWidth)._3.toInt, ifd1(ImageLength)._3.toInt), dataAfterIfds)
+    (w, h, out, overview, dataAfterIfds)
   }
 }

@@ -61,8 +61,9 @@ object GraftSqlShim {
     *    hash-partitioned exchanges), so a recompute reproduces the same
     *    rows; a nondeterministic upstream would silently diverge where
     *    localCheckpoint would fail instead — that is the one contract
-    *    pin callers accept. Iterative loops must [[graft.Fence.release]]
-    *    superseded pins so cache usage stays O(1) in the round count.
+    *    pin callers accept. Iterative loops run through
+    *    [[graft.Fence.iterate]], which releases each superseded round
+    *    frame so cache usage stays O(1) in the round count.
     *  - `checkpoint = true` — Dataset.localCheckpoint's recipe: local
     *    checkpoint storage, eager materialization truncating lineage. */
   def materialize(df: DataFrame, checkpoint: Boolean, adaptive: Boolean = false,

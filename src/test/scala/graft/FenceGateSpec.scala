@@ -21,6 +21,9 @@ import org.apache.spark.storage.StorageLevel
   *     data and must never match releasePin's MEMORY_ONLY filter.
   *  4. COUNTED — `Fence.counted`'s fused scalars equal what separate
   *     SQL actions would compute, and its leaf carries exact stats.
+  *  5. ITERATE — `Fence.iterate` releases every round frame it
+  *     superseded, never `init` or the survivor, and runs the rounds
+  *     its cap and stop test allow, in both fence modes.
   */
 object FenceGateSpec {
   /** Scala files under `dir`, outside `allowed`, whose text matches `hit`. */
@@ -95,15 +98,12 @@ class FenceGateSpec extends SparkSpec {
       walk(df.queryExecution.toRdd)
     }
     def loop(rounds: Int, cut: Boolean): Int = {
-      var r = spark.range(0, 100).select(col("id"), lit(0L).as("x"))
-      (1 to rounds).foreach { i =>
-        val nxt = r.groupBy(col("id") % 10).agg(sum("x").as("x"))
+      val init = Fence.counted(spark.range(0, 100).select(col("id"), lit(0L).as("x")), cut)
+      val (r, _) = Fence.iterate(init, cut, maxRounds = rounds) { (r, i) =>
+        r.groupBy(col("id") % 10).agg(sum("x").as("x"))
           .select((col("(id % 10)") + i).as("id"), col("x"))
-        val prev = r
-        r = if (cut) Fence.cut(nxt) else Fence(nxt)
-        Fence.release(prev)
       }
-      lineageDepth(r)
+      lineageDepth(r.df)
     }
     val cut3 = loop(3, cut = true); val cut6 = loop(6, cut = true)
     assert(cut3 === cut6,
@@ -112,6 +112,32 @@ class FenceGateSpec extends SparkSpec {
     assert(pin6 > pin3,
       s"pin lineage depth is expected to grow ($pin3 -> $pin6); if this " +
         "ever stops holding, the deep-loop guidance on Fence should be revisited")
+  }
+
+  test("iterate: releases superseded rounds, keeps init and survivor, counts rounds") {
+    // x halves each round (6 -> 3 -> 1 -> 0), so Σx stops falling at round 4
+    val base = spark.range(0, 210, 1, 4).select(col("id"), (col("id") % 7).as("x"))
+    def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val expected = rows(base)
+    for (cut <- Seq(true, false); (cap, rounds) <- Seq((Int.MaxValue, 4), (2, 2), (0, 0))) {
+      val clue = s"cut=$cut cap=$cap"
+      val init = Fence.counted(base, cut, sum = _.getLong(1))
+      val frames = scala.collection.mutable.ArrayBuffer.empty[Fenced] // strong refs
+      val (last, n) = Fence.iterate(init, cut, maxRounds = cap, sum = _.getLong(1),
+          stop = (prev, cur) => { frames += cur; cur.sum == prev.sum }) { (df, _) =>
+        df.select(col("id"), expr("x DIV 2").as("x"))
+      }
+      assert(n === rounds && frames.size === rounds, clue)
+      assert(last eq frames.lastOption.getOrElse(init), clue)
+      frames.dropRight(1).foreach(f =>
+        assert(leafLevel(f.df).contains(StorageLevel.NONE), s"$clue: superseded round kept its blocks"))
+      Seq(init, last).foreach(f =>
+        assert(leafLevel(f.df).exists(_ != StorageLevel.NONE), s"$clue: init or survivor released"))
+      assert(rows(init.df) === expected, clue)
+      assert(rows(last.df) === expected.map { case (id, x) => (id, x >> rounds) }, clue)
+      Fence.releaseCut(last.df); Fence.releaseCut(init.df)
+    }
   }
 
   test("release is a no-op on a Fence.cut leaf") {

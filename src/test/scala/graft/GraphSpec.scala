@@ -993,9 +993,11 @@ class GraphSpec extends SparkSpec {
     val selfOnly = Seq((1L, 1L), (2L, 2L)).toDF("src", "dst")
     assert(Graph.coreness(selfOnly, kMax = 4).count() === 0L)
     assert(Graph.bowtie(selfOnly).count() === 0L)
+    assert(Graph.kcore(selfOnly, k = 2).count() === 0L)
     val emptyE = Seq.empty[(Long, Long)].toDF("src", "dst")
     assert(Graph.coreness(emptyE, kMax = 4).count() === 0L)
     assert(Graph.bowtie(emptyE).count() === 0L)
+    assert(Graph.kcore(emptyE, k = 2).count() === 0L)
     // diameterHyperBall joins the convention (r13 ADVICE: sum(est) over an
     // empty node set was NULL -> head().getDouble NPE'd)
     assert(Graph.diameterHyperBall(emptyE, depth = 3).count() === 0L)

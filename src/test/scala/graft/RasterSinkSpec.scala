@@ -151,6 +151,38 @@ class RasterSinkSpec extends SparkSpec {
              === vals.map(java.lang.Float.floatToIntBits).toSeq)
   }
 
+  test("COG decode: no bit flip in a deflate tile reads back wrong pixels silently") {
+    // one 64×64 deflate tile of varied values; every bit of its stored
+    // zlib stream is flipped in turn — the decoder must either return
+    // the exact pixels or fail (the adler32 trailer catches what the
+    // inflater alone does not)
+    val w = 64; val h = 64
+    val vals = Array.tabulate(w * h)(i => if (i % 13 == 0) Float.NaN else (i * 37 % 1009) * 0.25f)
+    val bytes = GeoTiff.encodeCog(w, h, vals, 0.0, 0.0, 1.0, tile = 64, compress = true)
+    val tags = ifd0(bytes)
+    val tileAt = tags.find(_._1 == 324).get._4
+    val tileLen = tags.find(_._1 == 325).get._4
+    val want = vals.map(java.lang.Float.floatToIntBits).toSeq
+    var failed = 0
+    val silent = for {
+      at <- tileAt until tileAt + tileLen
+      bit <- 0 until 8
+      wrong <- {
+        val flipped = bytes.clone()
+        flipped(at) = (flipped(at) ^ (1 << bit)).toByte
+        scala.util.Try(GeoTiff.decodeCog(flipped)._3) match {
+          case scala.util.Success(got) =>
+            if (got.map(java.lang.Float.floatToIntBits).toSeq != want) Some((at - tileAt, bit)) else None
+          case scala.util.Failure(_) => failed += 1; None
+        }
+      }
+    } yield wrong
+    assert(silent.size === 0,
+      s"${silent.size} of ${tileLen * 8} flips decoded to wrong pixels without an error, " +
+        s"e.g. (byte, bit) ${silent.take(5).mkString(", ")}")
+    assert(failed > 0)
+  }
+
   test("readGeoTiffs round-trips the COG sink to the raster") {
     val out = Files.createTempDirectory("graft_rt").toString
     // column 0 left out: absent cells come back as NaN nodata
@@ -170,7 +202,7 @@ class RasterSinkSpec extends SparkSpec {
     assert(back.count(_.getAs[Double]("value").isNaN) === Interp.T * Interp.G)
   }
 
-  test("readGeoTiffs fails on a corrupt tile or a missing overview instead of reading zeros") {
+  test("readGeoTiffs fails on a corrupt tile and reads a COG without overviews") {
     val out = Files.createTempDirectory("graft_bad").toString
     RasterSink.writeCogs(toyRaster, toySpec, s"$out/good", "fort_63_zeta")
     val good = Files.readAllBytes(tiffs(s"$out/good").head.toPath)
@@ -181,24 +213,32 @@ class RasterSinkSpec extends SparkSpec {
     val tileAt = ifd0(good).find(_._1 == 324).get._4
     java.util.Arrays.fill(corrupt, tileAt, tileAt + 16, 0.toByte)
     // IFD0's next-IFD pointer set to 0: a tiled GeoTIFF without overviews,
-    // as GDAL writes small images; the reader requires the overview
+    // as GDAL writes small images; its base pixels are all a reader needs
     val noOverview = good.clone()
     val ifdAt = java.nio.ByteBuffer.wrap(good).order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt(4)
     java.nio.ByteBuffer.wrap(noOverview).order(java.nio.ByteOrder.LITTLE_ENDIAN)
       .putInt(ifdAt + 2 + ifd0(good).size * 12, 0)
-    for ((name, bytes, cause) <- Seq(
-           ("corrupt", corrupt, classOf[java.util.zip.DataFormatException]),
-           ("no_overview", noOverview, classOf[IllegalArgumentException]))) {
+    for ((name, bytes) <- Seq(("corrupt", corrupt), ("no_overview", noOverview))) {
       Files.createDirectories(Paths.get(s"$out/$name"))
       Files.write(Paths.get(s"$out/$name/fort_63_zeta_ts000.tiff"), bytes)
-      scala.util.Try(RasterSink.readGeoTiffs(spark, s"$out/$name").collect()) match {
-        case scala.util.Success(rows) =>
-          fail(s"$name read back ${rows.length} pixels " +
-               s"(${rows.count(_.getAs[Double]("value") == 0.0)} of them 0.0) instead of failing")
-        case scala.util.Failure(e) =>
-          assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
-            .exists(cause.isInstance), s"$name: not the decoder's failure: $e")
-      }
+    }
+    scala.util.Try(RasterSink.readGeoTiffs(spark, s"$out/corrupt").collect()) match {
+      case scala.util.Success(rows) =>
+        fail(s"corrupt read back ${rows.length} pixels " +
+             s"(${rows.count(_.getAs[Double]("value") == 0.0)} of them 0.0) instead of failing")
+      case scala.util.Failure(e) =>
+        assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+          .exists(classOf[java.util.zip.DataFormatException].isInstance),
+          s"corrupt: not the decoder's failure: $e")
+    }
+    val (_, _, base, overview, afterIfds) = GeoTiff.decodeCog(noOverview)
+    assert(overview === ((0, 0)) && afterIfds)
+    val expected = expectedPixels(toyRaster)
+    val back = RasterSink.readGeoTiffs(spark, s"$out/no_overview").collect()
+    assert(back.length === base.length && back.length === Interp.G * Interp.G)
+    back.foreach { r =>
+      val key = (r.getAs[Long]("ts"), r.getAs[Int]("grow"), r.getAs[Int]("gcol"))
+      assert(r.getAs[Double]("value") === expected(key).toDouble, s"$key")
     }
   }
 
