@@ -3,12 +3,15 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame}
 
 /** Conf-derived fan-out width for the hot-path exchanges that balance a
-  * few-split input across tasks BEFORE an explode or pair join (shingle /
-  * token expansion in TextOps, the vector table feeding the whole ANN
-  * family, crawl micro-batches in Streams).
+  * few-split input across tasks BEFORE an explode or pair join: token
+  * expansion in TextOps, the shingle, signature and segment inputs of the
+  * dedup family (Dedup's minhash, xxhash, ppjoin, simhash, n-gram,
+  * segment, containment and evaluation operators; TextOps' decontamination
+  * and novelty queries), the vector table feeding the ANN family, and
+  * crawl micro-batches in Streams.
   *
-  * These sites used to pin `repartition(32, key)` — correct and fast at
-  * bench scale, but `RepartitionByExpression` with a literal count is a
+  * These sites used to pin `repartition(32, key)` — correct at bench
+  * scale, but `RepartitionByExpression` with a literal count is a
   * hard cap AQE cannot override: on a 1000-executor cluster every
   * downstream stage (and any file layout written from it) would run 32
   * tasks no matter the data (round-13 verdict, "What's wrong" #2). The

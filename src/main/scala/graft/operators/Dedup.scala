@@ -1,9 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Fanout, Tables}
 
 /** Near-duplicate detection for LLM training-data pipelines (SURVEY §2 EXT):
   * MinHash+LSH, SimHash, and n-gram Jaccard — plus the exact-hash variant in
@@ -30,23 +30,26 @@ import graft.Tables
   */
 object Dedup {
 
-  /** Distinct 3-token shingles of `text` as an array column. */
-  private val shingles3: Column = expr(
-    """array_distinct(transform(sequence(1, size(split(text, ' ')) - 2),
-      |                         i -> concat_ws(' ', slice(split(text, ' '), i, 3))))""".stripMargin)
+  /** (doc_id, sh): the distinct 3-token shingles of each row's `text`,
+    * one row per shingle, in first-occurrence order — the dedup and text
+    * families' one shingle construction. The text is split ONCE per row,
+    * in a projection under the explode; a `split` inside the `transform`
+    * lambda would tokenize every document once per shingle (O(words²)).
+    * A null text yields no rows.
+    *
+    * Callers fan the corpus out first with [[Fanout.byKey]] on
+    * doc_id: the corpus parquet is one split, so without it every shingle
+    * and hash runs on ONE task (the reference rechunks before its heavy
+    * kernels for the same reason, run/adcircTime2cogs.py:166-175). */
+  private[graft] def shingles3(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), split(col("text"), " ").as("w"))
+      .select(col("doc_id"), explode(expr(
+        "array_distinct(transform(sequence(1, size(w) - 2), i -> concat_ws(' ', slice(w, i, 3))))"))
+        .as("sh"))
 
-  /** Fan out a small-file scan before expression-heavy hashing: the corpus
-    * parquet is one split, so without this every md5 runs on ONE task (the
-    * reference rechunks before its heavy kernels for the same reason,
-    * run/adcircTime2cogs.py:166-175). Hash partitioning on the key keeps it
-    * deterministic; the shuffled payload is tiny relative to the hash work.
-    * At production scale the scan is already many splits and this coalesces
-    * noop-cheaply. */
-  private def fanout(df: DataFrame, key: String): DataFrame =
-    // at least the test-corpus 32, scaling with the session's parallelism —
-    // a real cluster gets cluster-wide stripes, not a magic constant
-    df.repartition(
-      math.max(32, df.sparkSession.sparkContext.defaultParallelism), col(key))
+  /** [[shingles3]] of the whole corpus, fanned out on doc_id. */
+  private[graft] def docShingles(s: SparkSession, d: String): DataFrame =
+    shingles3(Fanout.byKey(Tables.documents(s, d), col("doc_id")))
 
   /** EXT: MinHash + LSH candidate pairs. 8 hash functions, 4 bands × 2 rows:
     * P(candidate) = 1-(1-j²)⁴ — catches Jaccard ≳ 0.6 with high probability.
@@ -64,7 +67,7 @@ object Dedup {
     * (band, band_hash) → distinct pairs. The band-hash shuffle carries
     * ~50 bytes/doc; bucket sizes are bounded by construction. */
   def qDedupMinhash(s: SparkSession, d: String): DataFrame = {
-    val bands = minhashBands(fanout(Tables.documents(s, d), "doc_id"))
+    val bands = minhashBands(Fanout.byKey(Tables.documents(s, d), col("doc_id")))
     val a = bands.as("a"); val b = bands.as("b")
     a.join(b, col("a.b") === col("b.b") && col("a.bh") === col("b.bh") &&
               col("a.doc_id") < col("b.doc_id"))
@@ -84,11 +87,10 @@ object Dedup {
     * requireAllClusterKeysForCoPartition (LayoutSpec proves both the
     * win and that failure mode on executed plans). */
   private[graft] def minhashBands(docs: DataFrame): DataFrame = {
-    val sig = docs
-      .select(col("doc_id"), explode(shingles3).as("sh1"))
+    val sig = shingles3(docs)
       .select(col("doc_id"),
-              md5(concat(lit("0|"), col("sh1"))).as("h0"),
-              md5(concat(lit("1|"), col("sh1"))).as("h1"))
+              md5(concat(lit("0|"), col("sh"))).as("h0"),
+              md5(concat(lit("1|"), col("sh"))).as("h1"))
       // slice BEFORE the aggregate: the 8 min() functions then reduce plain
       // column refs, keeping the generated aggregate class small
       .select(col("doc_id") +: (0 until 8).map(k =>
@@ -127,7 +129,7 @@ object Dedup {
     * Output: one row per duplicate batch doc — its smallest matching
     * corpus doc and how many of the 4 bands agreed. */
   def qDedupIncremental(s: SparkSession, d: String): DataFrame = {
-    val bands = minhashBands(fanout(Tables.documents(s, d), "doc_id"))
+    val bands = minhashBands(Fanout.byKey(Tables.documents(s, d), col("doc_id")))
     dedupIncremental(bands.filter(col("doc_id") % 5 =!= 0),
                      bands.filter(col("doc_id") % 5 === 0))
   }
@@ -358,10 +360,9 @@ object Dedup {
     * spec gates (identical docs collide; substantial agreement with the
     * independent md5 family) remain as well. */
   def qDedupMinhashXx(s: SparkSession, d: String): DataFrame = {
-    val sig = fanout(Tables.documents(s, d), "doc_id")
-      .select(col("doc_id"), explode(shingles3).as("sh1"))
+    val sig = docShingles(s, d)
       .select(col("doc_id") +: (0 until 8).map(k =>
-                xxhash64(lit(k), col("sh1")).as(s"x$k")): _*)
+                xxhash64(lit(k), col("sh")).as(s"x$k")): _*)
       .groupBy("doc_id")
       .agg(min(col("x0")).as("mh0"),
            (1 until 8).map(k => min(col(s"x$k")).as(s"mh$k")): _*)
@@ -415,8 +416,7 @@ object Dedup {
     // (the DSIR lesson: exchange reuse dedupes shuffles, not per-row
     // compute). One corpus scan, one shingle pass, compact rows after;
     // memory-pinned (graft.Fence, r10 — no eager disk write).
-    val inv = graft.Fence(fanout(Tables.documents(s, d), "doc_id")
-      .select(col("doc_id"), explode(shingles3).as("sh")))
+    val inv = graft.Fence(docShingles(s, d))
     val dfreq = inv.groupBy("sh").agg(count(lit(1)).as("df"))
     // rarity-sorted shingle array per doc, prefix by SLICE — one hash
     // aggregation replaces the doc-partitioned window AND the separate
@@ -472,7 +472,7 @@ object Dedup {
   }
 
   def qDedupSimhash(s: SparkSession, d: String): DataFrame = {
-    simhashSig(fanout(Tables.documents(s, d), "doc_id"))
+    simhashSig(Fanout.byKey(Tables.documents(s, d), col("doc_id")))
       .groupBy("sh")
       .agg(min(col("doc_id")).as("min_doc"), count(lit(1)).as("n"))
       .filter(col("n") > 1)
@@ -486,11 +486,11 @@ object Dedup {
     * shingle equi-join shuffles (doc_id, shingle-hash); at scale this runs
     * only on LSH survivors, never the full corpus. */
   def qDedupNgramJaccard(s: SparkSession, d: String): DataFrame = {
-    val sh = fanout(Tables.documents(s, d).filter(col("doc_id") < 300), "doc_id")
-      .select(col("doc_id"), explode(shingles3).as("shingle"))
+    val sh = shingles3(Fanout.byKey(
+      Tables.documents(s, d).filter(col("doc_id") < 300), col("doc_id")))
     val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("nsh"))
     val inter = sh.as("a").join(sh.as("b"),
-        col("a.shingle") === col("b.shingle") && col("a.doc_id") < col("b.doc_id"))
+        col("a.sh") === col("b.sh") && col("a.doc_id") < col("b.doc_id"))
       .groupBy(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
       .agg(count(lit(1)).as("inter"))
     inter
@@ -512,7 +512,8 @@ object Dedup {
     * shared-vocabulary corpus is deliberately unselective; production
     * signatures are 64-bit+ and bands prune harder. */
   def qDedupSimhashPairs(s: SparkSession, d: String): DataFrame = {
-    val sig = simhashSig(fanout(Tables.documents(s, d).filter(col("doc_id") < 500), "doc_id"))
+    val sig = simhashSig(Fanout.byKey(
+      Tables.documents(s, d).filter(col("doc_id") < 500), col("doc_id")))
     val bands = sig.select(col("doc_id"), col("sh"),
       posexplode(array((0 until 4).map(b => substring(col("sh"), b * 8 + 1, 8)): _*))
         .as(Seq("b", "slice")))
@@ -647,14 +648,14 @@ object Dedup {
     * deterministic. At 100 TB this runs per-shard exactly like CCNet: the
     * segment-frequency table is the only shuffled state, and it shuffles
     * (hash, count) pairs an order of magnitude smaller than the corpus.
-    * The fanout repartition doubles as a materialization point: both the
+    * The Fanout repartition doubles as a materialization point: both the
     * frequency aggregate and the instance join hang off the SAME exchange
     * subtree, so ReuseExchange computes the scan+segmentation once. */
   def qDedupSegments(s: SparkSession, d: String): DataFrame = {
     val segsCol = expr(
       """transform(sequence(0, cast(ceil(size(split(text, ' ')) / 4.0) as int) - 1),
         |          i -> concat_ws(' ', slice(split(text, ' '), i * 4 + 1, 4)))""".stripMargin)
-    val segs = fanout(Tables.documents(s, d).select("doc_id", "text"), "doc_id")
+    val segs = Fanout.byKey(Tables.documents(s, d).select("doc_id", "text"), col("doc_id"))
       .select(col("doc_id"), posexplode(segsCol).as(Seq("seg_no", "seg")))
     val freq = segs.groupBy("seg")
       .agg(countDistinct("doc_id").as("nd"))
@@ -701,8 +702,7 @@ object Dedup {
     // cost of materializing two ~1e6-row pins; dsir/ppjoin went the
     // other way because their shared subtrees carry md5/token work that
     // exchange reuse cannot dedupe.
-    val inv = fanout(docs.union(excerpts), "doc_id")
-      .select(col("doc_id"), explode(shingles3).as("sh"))
+    val inv = shingles3(Fanout.byKey(docs.union(excerpts), col("doc_id")))
     val keep = inv.groupBy("sh").agg(count(lit(1)).as("df"))
       .filter(col("df") <= 50)
       .select("sh")
@@ -772,11 +772,10 @@ object Dedup {
     * aggregates broadcast together. */
   def qEvalDedup(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d).filter(col("doc_id") < 300)
-    val sh = fanout(docs, "doc_id")
-      .select(col("doc_id"), explode(shingles3).as("shingle"))
+    val sh = shingles3(Fanout.byKey(docs, col("doc_id")))
     val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("nsh"))
     val inter = sh.as("a").join(sh.as("b"),
-        col("a.shingle") === col("b.shingle") && col("a.doc_id") < col("b.doc_id"))
+        col("a.sh") === col("b.sh") && col("a.doc_id") < col("b.doc_id"))
       .groupBy(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
       .agg(count(lit(1)).as("inter"))
     val truth = graft.Fence(inter
@@ -784,7 +783,7 @@ object Dedup {
       .join(sizes.as("nb"), col("d2") === col("nb.doc_id"))
       .filter(lit(2L) * col("inter") > col("na.nsh") + col("nb.nsh") - col("inter"))
       .select("d1", "d2"))
-    val bands = minhashBands(fanout(docs, "doc_id"))
+    val bands = minhashBands(Fanout.byKey(docs, col("doc_id")))
     val run = graft.Fence(bands.as("a").join(bands.as("b"),
         col("a.b") === col("b.b") && col("a.bh") === col("b.bh") &&
         col("a.doc_id") < col("b.doc_id"))

@@ -1057,7 +1057,7 @@ object Graph {
     def total(df: DataFrame): Double =
       hllEstimates(df).agg(coalesce(sum(col("est")), lit(0.0)))
         .head().getDouble(0)
-    if (nodes.isEmpty) {
+    if (r0.rows == 0) {
       graft.Fence.release(r0.df); graft.Fence.release(e)
       return Seq.empty[(Long, Double, Double, Long)]
         .toDF("d", "n_pairs_est", "cum_pairs_est", "reached_90")
@@ -1176,6 +1176,20 @@ object Graph {
     var active = allNodes
     var eA = e0
     var nActive = active.count()
+    // a superseded active / eA cut is released once its replacement has
+    // materialized; allNodes and e0 are the pins the final label join
+    // and the end of the op own
+    def drop(old: DataFrame): Unit =
+      if ((old ne allNodes) && (old ne e0)) graft.Fence.releaseCut(old)
+    // move to a smaller active node set; eA keeps the edges inside it
+    def shrink(next: Fenced): Unit = {
+      val (prevA, prevE) = (active, eA)
+      active = next.df; nActive = next.rows
+      eA = graft.Fence.cut(prevE
+        .join(active.select(col("node").as("src")), Seq("src"), "left_semi")
+        .join(active.select(col("node").as("dst")), Seq("dst"), "left_semi"))
+      drop(prevA); drop(prevE)
+    }
     val parts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     // every outer round's extract accumulator — `parts` holds lazy
     // projections over their level leaves, so they are closed only after
@@ -1242,19 +1256,12 @@ object Graph {
             eA = graft.Fence.cut(prevEA
               .join(alive.withColumnRenamed("node", "src"), Seq("src"), "left_semi")
               .join(alive.withColumnRenamed("node", "dst"), Seq("dst"), "left_semi"))
-            graft.Fence.releaseCut(prevEA)
+            drop(prevEA)
             lastShrink = estAlive
           }
         }
       }
-      if (anyDead) {
-        val Fenced(a2, nA2, _, _) = graft.Fence.counted(degs.select("node"), cut = true)
-        active = a2
-        eA = graft.Fence.cut(eA
-          .join(active.select(col("node").as("src")), Seq("src"), "left_semi")
-          .join(active.select(col("node").as("dst")), Seq("dst"), "left_semi"))
-        nActive = nA2
-      }
+      if (anyDead) shrink(graft.Fence.counted(degs.select("node"), cut = true))
       graft.Fence.releaseCut(degs)
       if (nActive > 0) {
         // ---- 2. forward max-color propagation to fixpoint ----
@@ -1305,15 +1312,11 @@ object Graph {
         extractAccs += acc
         graft.Fence.releaseCut(colors)
         // ---- 4. peel the extracted components off ----
-        val Fenced(a3, nA3, _, _) = graft.Fence.counted(
-          active.join(reached.select("node"), Seq("node"), "left_anti"), cut = true)
-        active = a3
-        eA = graft.Fence.cut(eA
-          .join(active.select(col("node").as("src")), Seq("src"), "left_semi")
-          .join(active.select(col("node").as("dst")), Seq("dst"), "left_semi"))
-        nActive = nA3
+        shrink(graft.Fence.counted(
+          active.join(reached.select("node"), Seq("node"), "left_anti"), cut = true))
       }
     }
+    drop(active); drop(eA)
     // trimmed nodes never enter `parts`: they are singletons labeled by
     // their own id (coalesce below). Label relation is multi-consumer
     // (size agg + final join) — fence it once.
@@ -1614,8 +1617,9 @@ object Graph {
       levels += frontier
     }
     // backward: δ per layer, deepest first; layer `depth` seeds δ = 0
-    var deltaUp = graft.Fence.counted(levels(depth)
+    val deltaSeed = graft.Fence.counted(levels(depth)
       .select(col("s"), col("v"), col("sig"), lit(0L).as("dfp")), cut = true, delta = true).df
+    var deltaUp = deltaSeed
     val layers = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     ((depth - 1) to 0 by -1).foreach { dd =>
       val contrib = e
@@ -1647,7 +1651,7 @@ object Graph {
     val keep = graft.Fence.cut(
       allNodes.join(acc, Seq("node"), "left")
         .select(col("node"), coalesce(col("bc_fp"), lit(0L)).as("bc_fp")))
-    (levels ++ layers).foreach(graft.Fence.releaseCut)
+    (levels ++ layers :+ deltaSeed).foreach(graft.Fence.releaseCut)
     graft.Fence.release(e)
     keep
   }

@@ -986,11 +986,6 @@ object TextOps {
       .orderBy("doc_id", "pos")
   }
 
-  /** Distinct 3-token shingles (same construction as Dedup's). */
-  private val shingles3: Column = expr(
-    """array_distinct(transform(sequence(1, size(split(text, ' ')) - 2),
-      |                         i -> concat_ws(' ', slice(split(text, ' '), i, 3))))""".stripMargin)
-
   /** EXT: benchmark decontamination — the canonical pretraining hygiene
     * step: drop/flag training documents that share any n-gram with a
     * held-out evaluation set, so the model is not graded on memorized
@@ -1005,11 +1000,9 @@ object TextOps {
     * then one partial-count aggregate on doc_id. */
   def qTextDecontam(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
-    val bench = docs.filter(col("doc_id") < 10)
-      .select(explode(shingles3).as("shingle")).distinct()
-    fanout(docs.filter(col("doc_id") >= 10))
-      .select(col("doc_id"), explode(shingles3).as("shingle"))
-      .join(broadcast(bench), "shingle")
+    val bench = Dedup.shingles3(docs.filter(col("doc_id") < 10)).select("sh").distinct()
+    Dedup.shingles3(fanout(docs.filter(col("doc_id") >= 10)))
+      .join(broadcast(bench), "sh")
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_hits"))
       .orderBy("doc_id")
@@ -1204,10 +1197,7 @@ object TextOps {
     // fenced: first-occurrence agg + the join-back both consume the
     // shingle relation — one corpus scan, one shingle pass (the
     // DSIR/ppjoin fence discipline)
-    val inv = Tables.documents(s, d)
-      .repartition(math.max(32, s.sparkContext.defaultParallelism), col("doc_id"))
-      .select(col("doc_id"), explode(shingles3).as("sh"))
-      .transform(graft.Fence.cut)
+    val inv = graft.Fence.cut(Dedup.docShingles(s, d))
     val first = inv.groupBy("sh").agg(min(col("doc_id")).as("first_doc"))
     inv.join(first, "sh")
       .groupBy("doc_id")

@@ -33,14 +33,18 @@ object GraftSqlShim {
 
   /** Dev-only fence instrumentation hook (graft.Profile sets it; query
     * code never does): when non-null, every fence materialization
-    * reports (Catalyst tracker phases, toRdd wall ms = analysis→physical
-    * planning, materialization-job wall ms). The fence hot path pays one
-    * volatile null check. */
+    * reports (Catalyst tracker phases, `toRdd` wall ms, materialization-
+    * job wall ms). The `toRdd` ms is NOT planning time alone: under AQE
+    * `toRdd` also runs every shuffle and broadcast query stage of the
+    * fenced plan, each as its own job; Catalyst's own share is the
+    * tracker phases. The fence hot path pays one volatile null check. */
   @volatile var fenceProbe: (String, Long, Long) => Unit = null
 
   /** The one fence materialization, reached only through [[graft.Fence]]
     * (FenceGateSpec greps main source for other callers). Plans the frame
-    * (`toRdd`), persists it, and runs ONE job that streams every
+    * (`toRdd` — under AQE this also runs the plan's shuffle and
+    * broadcast query stages, one job each), persists it, and runs ONE
+    * more job that streams every
     * partition into cache while computing the row count and the optional
     * fused term sums — see [[graft.Fence.counted]] for their contracts
     * (r17, verdict #2: per-partition runJob RESULTS are exactly-once

@@ -1257,6 +1257,52 @@ class DedupSimilaritySpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
   }
 
+  test("shingles3 splits each text once and equals the split-per-shingle form element for element") {
+    import org.apache.spark.sql.catalyst.expressions.{LambdaFunction, StringSplit}
+    // the reference: the former construction, which re-splits `text`
+    // inside the transform lambda — once per shingle
+    val reference = expr(
+      """array_distinct(transform(sequence(1, size(split(text, ' ')) - 2),
+        |                         i -> concat_ws(' ', slice(split(text, ' '), i, 3))))""".stripMargin)
+    val edges = Seq[(Long, String)](
+      (-1L, "a  b c  d"),              // doubled spaces: empty tokens
+      (-2L, " a b c d"),               // leading space
+      (-3L, "a b c d  "),              // trailing spaces: kept empty tokens
+      (-4L, "x y z x y z x y"),        // repeated shingles: first occurrence wins
+      (-5L, "p q r"),                  // exactly 3 tokens: one shingle
+      (-6L, null))                     // null text: no shingles
+    val docs = Tables.documents(spark, sf01).select("doc_id", "text")
+      .union(edges.toDF("doc_id", "text"))
+    val want = docs.select(col("doc_id"), reference.as("a")).collect()
+      .map(r => r.getLong(0) -> Option(r.getSeq[String](1))).toMap
+    // a narrow plan (scan → project → generate) keeps each row's shingles
+    // contiguous and in generation order, so the exploded rows regroup
+    // into the per-row arrays
+    val got = Dedup.shingles3(docs).collect().toSeq
+      .groupBy(_.getLong(0)).map { case (k, rs) => k -> rs.map(_.getString(1)) }
+    assert(want.size > edges.size && want.size === docs.count())
+    want.foreach {
+      case (id, Some(a)) => assert(got.get(id) === Some(a.toSeq), s"doc $id")
+      case (id, None) => assert(!got.contains(id), s"null text of doc $id yielded shingles")
+    }
+    assert(got.keySet === want.collect { case (id, Some(_)) => id }.toSet)
+    assert(got(-1L) === Seq("a  b", " b c", "b c ", "c  d"))
+    assert(got(-3L).takeRight(2) === Seq("c d ", "d  "))
+    assert(got(-4L) === Seq("x y z", "y z x", "z x y"))
+    assert(got(-5L) === Seq("p q r"))
+
+    // structural: ppjoin's shingle relation splits in a projection under
+    // the explode, never inside the per-shingle lambda
+    val plan = Dedup.docShingles(spark, sf).queryExecution.optimizedPlan
+    val exprs = plan.flatMap(_.expressions)
+    val splitInLambda = exprs.exists(_.exists {
+      case l: LambdaFunction => l.function.exists(_.isInstanceOf[StringSplit])
+      case _ => false
+    })
+    assert(!splitInLambda, s"a split re-runs per shingle:\n$plan")
+    assert(exprs.count(_.exists(_.isInstanceOf[StringSplit])) === 1, plan.toString)
+  }
+
   test("bloom-prefilter dedup: zero false negatives, real pruning, answer identical to the unfiltered path") {
     val (corpus, batch) = Dedup.bloomSplit(spark, sf)
     val nBatch = batch.count()

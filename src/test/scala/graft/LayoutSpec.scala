@@ -3,13 +3,26 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.RDDScanExec
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import graft.plans.Layout
 
 /** Plan-level assertions for the 100 TB layout strategies: bucketed joins
   * must plan with zero shuffles; salted joins must be row-identical to the
   * plain join. */
 class LayoutSpec extends SparkSpec {
+
+  /** Every node of `plan`, walking into AQE's QueryStageExec leaves (a
+    * plain collect stops at the stage boundary). */
+  private def nodesOf(plan: SparkPlan): Seq[SparkPlan] = plan.collect {
+    case st: QueryStageExec => nodesOf(st.plan)
+    case a: AdaptiveSparkPlanExec => nodesOf(a.executedPlan)
+    case p => Seq(p)
+  }.flatten
+
+  private def exchangesOf(plan: SparkPlan): Seq[ShuffleExchangeExec] =
+    nodesOf(plan).collect { case e: ShuffleExchangeExec => e }
 
   private def countShuffles(plan: SparkPlan): Int = {
     val inner = plan match {
@@ -402,21 +415,44 @@ class LayoutSpec extends SparkSpec {
     assert(Fanout.partitions(docs) === dflt)
     assert(Fanout.byKey(docs, col("doc_id")).rdd.getNumPartitions === dflt)
     val base = operators.TextOps.qTextTfidf(spark, sf).collect().map(_.toString).toSeq
+    val basePj = operators.Dedup.qDedupPpjoin(spark, sf).collect().map(_.toString).toSeq
     spark.conf.set("spark.graft.fanout.partitions", "7")
     try {
       assert(Fanout.byKey(docs, col("doc_id")).rdd.getNumPartitions === 7)
       val q = operators.TextOps.qTextTfidf(spark, sf) // hot path: fanout feeds the token explode
       assert(q.collect().map(_.toString).toSeq === base)
-      // AQE materializes exchanges inside QueryStageExec LEAVES — a plain
-      // collect stops at the stage boundary, so walk into each stage's plan
-      def widthsOf(p: SparkPlan): Seq[Int] = p.collect {
-        case e: ShuffleExchangeExec => Seq(e.outputPartitioning.numPartitions)
-        case st: org.apache.spark.sql.execution.adaptive.QueryStageExec => widthsOf(st.plan)
-        case a: AdaptiveSparkPlanExec => widthsOf(a.executedPlan)
-      }.flatten
-      val widths = widthsOf(q.queryExecution.executedPlan)
+      val widths = exchangesOf(q.queryExecution.executedPlan).map(_.outputPartitioning.numPartitions)
       assert(widths.contains(7), s"expected a 7-wide fanout exchange, saw widths: $widths")
+
+      // the dedup family fans out through the same helper. ppjoin fences
+      // its shingle relation, so the fan-out exchange runs under the
+      // fence leaf: read it from the relation's own plan and from the
+      // leaf's RDD lineage
+      val pj = operators.Dedup.qDedupPpjoin(spark, sf)
+      assert(pj.collect().map(_.toString).toSeq === basePj)
+      val onDocId = exchangesOf(operators.Dedup.docShingles(spark, sf).queryExecution.executedPlan)
+        .map(_.outputPartitioning).collect {
+          case h: HashPartitioning if h.expressions.flatMap(_.references.map(_.name)) == Seq("doc_id") =>
+            h.numPartitions
+        }
+      assert(onDocId === Seq(7), s"shingle relation's doc_id exchanges: $onDocId")
+      def shuffleWidths(rdd: org.apache.spark.rdd.RDD[_]): Seq[Int] = rdd.dependencies.flatMap {
+        case d: org.apache.spark.ShuffleDependency[_, _, _] =>
+          d.partitioner.numPartitions +: shuffleWidths(d.rdd)
+        case d => shuffleWidths(d.rdd)
+      }
+      val lineage = nodesOf(pj.queryExecution.executedPlan)
+        .collect { case l: RDDScanExec => shuffleWidths(l.rdd) }.flatten
+      val all = lineage ++ exchangesOf(pj.queryExecution.executedPlan)
+        .map(_.outputPartitioning.numPartitions)
+      assert(lineage.contains(7) && !all.contains(32),
+        s"ppjoin: fenced lineage widths $lineage, all widths $all")
     } finally spark.conf.unset("spark.graft.fanout.partitions")
+  }
+
+  test("no operator hard-codes a fan-out floor of 32") {
+    val hits = FenceGateSpec.offenders("src/main/scala/graft/operators")(_.contains("math.max(32"))
+    assert(hits.isEmpty, s"fan-out floors outside graft.Fanout: $hits")
   }
 
   test("fanout conf parsing is defensive: junk overrides fail by key name, 'auto' falls back") {
