@@ -1643,31 +1643,6 @@ object Similarity {
       .filter(col("cid") >= corpusMin && col("cid") =!= col("qid"))
       .distinct()
 
-  /** Build + COMMIT the persistent kNN-graph search index (r14 verdict
-    * #1: [[graphSearch]] rebuilt the undirected edge relation — a
-    * 2|E|-row distinct — and the hub entry set — a full-graph degree
-    * aggregation — on EVERY call; both are pure functions of the edge
-    * relation, so at 1 B vectors each search invocation paid a 16 B-row
-    * shuffle+dedup before its first beam round). One generation holds:
-    *
-    *  - `edges`   — the UNDIRECTED relation (vid, nb), hash-partitioned
-    *                by vid at a size-derived width (the CommitEpoch
-    *                file-layout rule: the written layout scales with the
-    *                relation, never the session's shuffle conf);
-    *  - `hubs`    — top-`nEntries` in-degree vertices (ties by id), the
-    *                global entry fallback;
-    *  - `buckets` — (cid, bucket): each corpus vector's [[plane2]] LSH
-    *                signature, so query-time bucket-mate entry probes a
-    *                slim 2-column relation instead of re-deriving
-    *                signatures over the full vector table.
-    *
-    * Commits through the [[graft.plans.CommitEpoch]] hidden-tmp +
-    * same-dir-rename protocol (the annIngestStream centroids+postings
-    * precedent): a crash strands only a swept tmp, readers pick the
-    * max-seq generation, superseded generations are deleted after the
-    * rename. `nEntries`/`corpusMin` bake into the hub list — they are
-    * index-build parameters, like nlist in an IVF build. Returns the
-    * committed generation path. */
   /** The [[plane2]] LSH signature as one string column — shared by the
     * graph build, the index buckets, and the streaming maintenance. */
   private[graft] def lshBucket(v: Column, sigBits: Int): Column =
@@ -1691,9 +1666,7 @@ object Similarity {
     * query-time. */
   private[graft] def pruneDegree(gu: DataFrame, vectors: DataFrame,
                                  maxDeg: Int): DataFrame = {
-    val e = vectors.select(col("vec_id"), col("v"))
-      .withColumn("nrm", sqrt(vecDot(col("v"), col("v"))))
-    rescoreTopK(e, gu.select("vid", "nb"), maxDeg).select("vid", "nb")
+    rescoreTopK(withNrm(vectors), gu.select("vid", "nb"), maxDeg).select("vid", "nb")
   }
 
   /** HNSW's DIVERSITY-heuristic pruning (Malkov & Yashunin 2016, Alg. 4
@@ -2090,22 +2063,80 @@ object Similarity {
   /** The leveled upper-edge relation (lvl, vid, nb) of a generation —
     * empty when the index was built flat (maxLevels = 1). */
   private[graft] def loadGraphIndexHi(s: SparkSession, indexDir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val dir = new Path(indexDir)
-    val fs = dir.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val gens = fs.listStatus(dir).map(_.getPath)
-      .filter(_.getName.startsWith("compacted_"))
-      .sortBy(p => p.getName.stripPrefix("compacted_").takeWhile(_.isDigit) match {
-        case "" => -1L; case d => BigInt(d).min(Long.MaxValue - 1).toLong })
-    require(gens.nonEmpty, s"loadGraphIndexHi($indexDir): no committed generation")
-    val hi = new Path(gens.last, "edges_hi")
-    if (fs.exists(hi)) s.read.parquet(hi.toString)
-    else {
-      import s.implicits._
-      Seq.empty[(Int, Long, Long)].toDF("lvl", "vid", "nb")
-    }
+    val (fs, store) = committedStore(s, indexDir, "loadGraphIndexHi")
+    graft.plans.CommitEpoch.readPart(s, fs, store.latest.toSeq, "edges_hi")
+      .getOrElse(emptyLevEdges(s))
   }
 
+  // a graph index's store listing, failing loudly when it holds no generation
+  private def committedStore(s: SparkSession, indexDir: String, who: String)
+      : (org.apache.hadoop.fs.FileSystem, graft.plans.CommitEpoch.Listing) = {
+    val dir = new org.apache.hadoop.fs.Path(indexDir)
+    val fs = dir.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val store = graft.plans.CommitEpoch.list(fs, dir)
+    require(store.latest.nonEmpty, s"$who($indexDir): no committed generation")
+    (fs, store)
+  }
+
+  // a flat index's leveled upper-edge relation (lvl, vid, nb)
+  private[graft] def emptyLevEdges(s: SparkSession): DataFrame = {
+    import s.implicits._
+    Seq.empty[(Int, Long, Long)].toDF("lvl", "vid", "nb")
+  }
+
+  /** (vec_id, v, nrm) — a vector relation with its L2 norm. */
+  private[graft] def withNrm(vectors: DataFrame): DataFrame =
+    vectors.select(col("vec_id"), col("v"))
+      .withColumn("nrm", sqrt(vecDot(col("v"), col("v"))))
+
+  /** One graph-index generation's layout, written into `gen`: the
+    * undirected `edges` by vid, their top-`nEntries` `hubs`, the
+    * `buckets` by cid, the optional `vectors` (vec_id, v) by vec_id and
+    * the optional leveled `edges_hi` by vid. The width is size-derived
+    * from the fenced edges' row count (no extra job): ~4M undirected
+    * edges (~64 MB of (long, long) parquet) per file, so the layout
+    * follows the relation. The fence is read twice (edges, hubs); the
+    * caller releases it after the commit. */
+  private[graft] def writeGraphGeneration(gen: org.apache.hadoop.fs.Path, edges: graft.Fenced,
+      nEntries: Int, corpusMin: Long, buckets: DataFrame,
+      vectors: Option[DataFrame], edgesHi: Option[DataFrame]): Unit = {
+    val width = math.max(1L, math.min(1L << 20, edges.rows / 4000000L + 1L)).toInt
+    def put(df: DataFrame, name: String): Unit =
+      df.write.mode("overwrite").parquet(new org.apache.hadoop.fs.Path(gen, name).toString)
+    put(edges.df.repartition(width, col("vid")), "edges")
+    put(topHubs(edges.df, nEntries, corpusMin).coalesce(1), "hubs")
+    put(buckets.repartition(width, col("cid")), "buckets")
+    vectors.foreach(v =>
+      put(v.select(col("vec_id"), col("v")).repartition(width, col("vec_id")), "vectors"))
+    edgesHi.foreach(h => put(h.repartition(math.max(1, width / 2), col("vid")), "edges_hi"))
+  }
+
+  /** Build + COMMIT the persistent kNN-graph search index (r14 verdict
+    * #1: [[graphSearch]] rebuilt the undirected edge relation — a
+    * 2|E|-row distinct — and the hub entry set — a full-graph degree
+    * aggregation — on EVERY call; both are pure functions of the edge
+    * relation, so at 1 B vectors each search invocation paid a 16 B-row
+    * shuffle+dedup before its first beam round). One generation holds
+    * ([[writeGraphGeneration]]):
+    *
+    *  - `edges`   — the UNDIRECTED relation (vid, nb), hash-partitioned
+    *                by vid at a size-derived width (the written layout
+    *                scales with the relation, never the session's
+    *                shuffle conf);
+    *  - `hubs`    — top-`nEntries` in-degree vertices (ties by id), the
+    *                global entry fallback;
+    *  - `buckets` — (cid, bucket): each corpus vector's [[plane2]] LSH
+    *                signature, so query-time bucket-mate entry probes a
+    *                slim 2-column relation instead of re-deriving
+    *                signatures over the full vector table.
+    *
+    * `indexDir` is a [[graft.plans.CommitEpoch]] generation store; the
+    * build consumes every generation and delta already in it. Reader
+    * caveat: [[loadGraphIndex]] reads the max-seq generation alone —
+    * deltas exist only under [[graft.streaming.Streams.knnIngestStream]],
+    * whose folds re-`distinct` edges. `nEntries`/`corpusMin` bake into
+    * the hub list — they are index-build parameters, like nlist in an
+    * IVF build. Returns the committed generation path. */
   def buildGraphIndex(e: DataFrame, indexDir: String, kRand: Int, kBuild: Int,
                       rounds: Int, sigBits: Int = 8, nEntries: Int = 4,
                       corpusMin: Long = 0L, persistVectors: Boolean = false,
@@ -2114,8 +2145,8 @@ object Similarity {
     val s = e.sparkSession
     val gScored = knnGraphEdgesScored(e, kRand, kBuild, rounds, sigBits)
     val g = gScored.select("vid", "nb")
-    val gu = graft.Fence.cut(
-      g.unionByName(g.select(col("nb").as("vid"), col("vid").as("nb"))).distinct())
+    val gu = graft.Fence.counted(
+      g.unionByName(g.select(col("nb").as("vid"), col("vid").as("nb"))).distinct(), cut = true)
     graft.Fence.releaseCut(gScored) // g is a lazy projection of this cut
     // maxLevels > 1: seed the HNSW hierarchy ([[hnswLevel]] membership,
     // one NN-descent build per layer — populations halve, so the whole
@@ -2141,53 +2172,22 @@ object Similarity {
       }
     val levEdges: Option[DataFrame] =
       if (maxLevels <= 1) None
-      else {
-        import s.implicits._
-        Some(levParts.reduceOption(_ unionByName _)
-          .getOrElse(Seq.empty[(Int, Long, Long)].toDF("lvl", "vid", "nb")))
-      }
-    val hubs = topHubs(gu, nEntries, corpusMin)
+      else Some(levParts.reduceOption(_ unionByName _).getOrElse(emptyLevEdges(s)))
     val buckets = e.select(col("vec_id").as("cid"),
                            lshBucket(col("v"), sigBits).as("bucket"))
     val dir = new Path(indexDir)
     val fs = dir.getFileSystem(s.sparkContext.hadoopConfiguration)
     fs.mkdirs(dir)
-    fs.listStatus(dir).map(_.getPath)
-      .filter(p => p.getName.startsWith("_compact_") && p.getName.endsWith(".tmp"))
-      .foreach(p => fs.delete(p, true))
-    val prior = fs.listStatus(dir).map(_.getPath)
-      .filter(_.getName.startsWith("compacted_"))
-    val epoch = graft.plans.CommitEpoch.next(fs, dir)
-    val tmp = new Path(dir, s"_compact_$epoch.tmp")
-    // size-derived write width: ~4M undirected edges (~64 MB of (long,
-    // long) parquet) per file — the layout follows the relation
-    val nEdges = gu.count()
-    val width = math.max(1L, math.min(1L << 20, nEdges / 4000000L + 1L)).toInt
-    gu.repartition(width, col("vid"))
-      .write.mode("overwrite").parquet(new Path(tmp, "edges").toString)
-    hubs.coalesce(1)
-      .write.mode("overwrite").parquet(new Path(tmp, "hubs").toString)
-    buckets.repartition(width, col("cid"))
-      .write.mode("overwrite").parquet(new Path(tmp, "buckets").toString)
+    val store = graft.plans.CommitEpoch.list(fs, dir)
     // streaming maintenance ([[graft.streaming.Streams.knnIngestStream]])
     // keeps the corpus vectors IN the generation so insert-by-search can
     // exact-score against a self-contained index; batch/one-shot callers
     // skip the copy (their corpus lives in its own table)
-    if (persistVectors)
-      e.select(col("vec_id"), col("v")).repartition(width, col("vec_id"))
-        .write.mode("overwrite").parquet(new Path(tmp, "vectors").toString)
-    levEdges.foreach { le =>
-      le.repartition(math.max(1, width / 2), col("vid"))
-        .write.mode("overwrite").parquet(new Path(tmp, "edges_hi").toString)
-    }
+    val fin = graft.plans.CommitEpoch.commit(fs, dir, store.generations ++ store.deltas)(
+      writeGraphGeneration(_, gu, nEntries, corpusMin, buckets,
+        if (persistVectors) Some(e) else None, levEdges))
     levParts.foreach(graft.Fence.releaseCut)
-    graft.plans.CommitEpoch.midCommitHook("pre-rename")
-    val fin = new Path(dir, s"compacted_$epoch")
-    if (!fs.rename(tmp, fin))
-      throw new java.io.IOException(s"graph index commit rename failed: $tmp -> $fin")
-    graft.plans.CommitEpoch.midCommitHook("post-rename")
-    prior.foreach(p => fs.delete(p, true))
-    graft.Fence.releaseCut(gu)
+    graft.Fence.releaseCut(gu.df)
     fin.toString
   }
 
@@ -2216,32 +2216,15 @@ object Similarity {
                          corpusMin: Long = Long.MinValue,
                          fallbackVecs: Option[DataFrame] = None): String = {
     import org.apache.hadoop.fs.Path
-    val dir = new Path(indexDir)
-    val fs = dir.getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.listStatus(dir).map(_.getPath)
-      .filter(p => p.getName.startsWith("_compact_") && p.getName.endsWith(".tmp"))
-      .foreach(p => fs.delete(p, true))
-    val gens = fs.listStatus(dir).map(_.getPath)
-      .filter(_.getName.startsWith("compacted_"))
-      .sortBy(p => p.getName.stripPrefix("compacted_").takeWhile(_.isDigit) match {
-        case "" => -1L; case d => BigInt(d).min(Long.MaxValue - 1).toLong })
-    require(gens.nonEmpty, s"retireGraphVectors($indexDir): no committed generation")
-    val latest = gens.last
-    val deltas = fs.listStatus(dir).map(_.getPath)
-      .filter(p => !p.getName.startsWith("_") && !p.getName.startsWith(".") &&
-                   p.getName.startsWith("batch_")).toSeq
-    def read(ps: Seq[Path]): Option[DataFrame] =
-      ps.filter(fs.exists(_)).map(p => s.read.parquet(p.toString))
-        .reduceOption(_ unionByName _)
-    def parts(name: String) = new Path(latest, name) +: deltas.map(new Path(_, name))
-    val gu0 = read(parts("edges")).get.distinct()
-    val buckets0 = read(parts("buckets")).get.dropDuplicates("cid")
+    val (fs, store) = committedStore(s, indexDir, "retireGraphVectors")
+    val latest = store.latest.get
+    def part(name: String) =
+      graft.plans.CommitEpoch.readPart(s, fs, latest +: store.deltas, name)
+    val gu0 = part("edges").get.distinct()
+    val buckets0 = part("buckets").get.dropDuplicates("cid")
     val hasVecs = fs.exists(new Path(latest, "vectors"))
     val vecs0 =
-      if (hasVecs)
-        read(parts("vectors")).get.dropDuplicates("vec_id")
-          .select(col("vec_id"), col("v"))
-          .withColumn("nrm", sqrt(vecDot(col("v"), col("v"))))
+      if (hasVecs) withNrm(part("vectors").get.dropDuplicates("vec_id"))
       else fallbackVecs.getOrElse(sys.error(
         s"retireGraphVectors($indexDir): generation carries no vectors — pass fallbackVecs"))
     val ret = graft.Fence.cut(retired.select("vec_id").distinct())
@@ -2262,9 +2245,8 @@ object Similarity {
     val interimHubs = topHubs(pruned, nEntries, corpusMin)
     val heal = insertBySearch(keepVecs, pruned, keepBuckets, interimHubs,
       orphanBatch, kLink, beam, walkRounds, sigBits)
-    val newEdges = graft.Fence.cut(pruned.unionByName(heal).distinct())
+    val newEdges = graft.Fence.counted(pruned.unionByName(heal).distinct(), cut = true)
     graft.Fence.releaseCut(heal); graft.Fence.releaseCut(pruned)
-    val newHubs = topHubs(newEdges, nEntries, corpusMin)
     // UPPER HNSW LAYERS (when maintained): prune every layer edge
     // touching a retired id, then HEAL each layer — upper orphans
     // re-search their pruned layer and relink ([[insertBySearchUpper]],
@@ -2272,7 +2254,7 @@ object Similarity {
     // into the new generation or the hierarchy silently dies with the
     // consumed one. maxLevels is recovered from the stored relation
     // (max lvl + 1) — the level function itself is pure in vec_id.
-    val newHi: Option[DataFrame] = read(parts("edges_hi")).map { hi0 =>
+    val newHi: Option[DataFrame] = part("edges_hi").map { hi0 =>
       val hi = hi0.distinct()
       val prunedHi = graft.Fence.cut(
         hi.join(retV, Seq("vid"), "left_anti").join(retN, Seq("nb"), "left_anti"))
@@ -2288,31 +2270,13 @@ object Similarity {
       graft.Fence.releaseCut(healHi); graft.Fence.releaseCut(prunedHi)
       out
     }
-    // commit with buildGraphIndex's epoch/tmp/rename discipline,
-    // consuming the folded generation + deltas
-    val epoch = graft.plans.CommitEpoch.next(fs, dir)
-    val tmp = new Path(dir, s"_compact_$epoch.tmp")
-    val nEdges = newEdges.count()
-    val width = math.max(1L, math.min(1L << 20, nEdges / 4000000L + 1L)).toInt
-    newEdges.repartition(width, col("vid"))
-      .write.mode("overwrite").parquet(new Path(tmp, "edges").toString)
-    newHubs.coalesce(1)
-      .write.mode("overwrite").parquet(new Path(tmp, "hubs").toString)
-    keepBuckets.repartition(width, col("cid"))
-      .write.mode("overwrite").parquet(new Path(tmp, "buckets").toString)
-    if (hasVecs)
-      keepVecs.select(col("vec_id"), col("v")).repartition(width, col("vec_id"))
-        .write.mode("overwrite").parquet(new Path(tmp, "vectors").toString)
-    newHi.foreach(_.repartition(math.max(1, width / 2), col("vid"))
-      .write.mode("overwrite").parquet(new Path(tmp, "edges_hi").toString))
-    graft.plans.CommitEpoch.midCommitHook("pre-rename")
-    val fin = new Path(dir, s"compacted_$epoch")
-    if (!fs.rename(tmp, fin))
-      throw new java.io.IOException(s"retire commit rename failed: $tmp -> $fin")
-    graft.plans.CommitEpoch.midCommitHook("post-rename")
-    (deltas ++ gens).foreach(p => fs.delete(p, true))
+    // commit consuming the folded generation + deltas
+    val consumed = store.deltas ++ store.generations
+    val fin = graft.plans.CommitEpoch.commit(fs, new Path(indexDir), consumed)(
+      writeGraphGeneration(_, newEdges, nEntries, corpusMin, keepBuckets,
+        if (hasVecs) Some(keepVecs) else None, newHi))
     newHi.foreach(graft.Fence.releaseCut)
-    graft.Fence.releaseCut(newEdges); graft.Fence.releaseCut(keepVecs)
+    graft.Fence.releaseCut(newEdges.df); graft.Fence.releaseCut(keepVecs)
     graft.Fence.releaseCut(ret)
     fin.toString
   }
@@ -2322,14 +2286,7 @@ object Similarity {
   private[graft] def loadGraphIndex(s: SparkSession, indexDir: String)
       : (DataFrame, DataFrame, DataFrame) = {
     import org.apache.hadoop.fs.Path
-    val dir = new Path(indexDir)
-    val fs = dir.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val gens = fs.listStatus(dir).map(_.getPath)
-      .filter(_.getName.startsWith("compacted_"))
-      .sortBy(p => p.getName.stripPrefix("compacted_").takeWhile(_.isDigit) match {
-        case "" => -1L; case d => BigInt(d).min(Long.MaxValue - 1).toLong })
-    require(gens.nonEmpty, s"loadGraphIndex($indexDir): no committed generation")
-    val latest = gens.last
+    val latest = committedStore(s, indexDir, "loadGraphIndex")._2.latest.get
     (s.read.parquet(new Path(latest, "edges").toString),
      s.read.parquet(new Path(latest, "hubs").toString),
      s.read.parquet(new Path(latest, "buckets").toString))

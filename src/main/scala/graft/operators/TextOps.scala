@@ -127,17 +127,28 @@ object TextOps {
     * content fingerprint that survives small edits (same idea as the
     * reference's reuse of one precomputed mask across timesteps: compute a
     * cheap invariant once, compare it everywhere). */
-  def qTextFingerprint(s: SparkSession, d: String): DataFrame = {
-    val sh = expr(
-      """transform(sequence(1, size(split(text, ' ')) - 4),
-        |          i -> md5(concat_ws(' ', slice(split(text, ' '), i, 5))))""".stripMargin)
+  def qTextFingerprint(s: SparkSession, d: String): DataFrame =
     Tables.documents(s, d)
+      .select(col("doc_id"), toks(col("text")).as("w"))
+      .select(col("doc_id"), expr(fingerprintWindows).as("sh"))
       .select(col("doc_id"),
-              substring(array_min(sh), 1, 16).as("fp_min"),
-              substring(array_max(sh), 1, 16).as("fp_max"))
+              substring(array_min(col("sh")), 1, 16).as("fp_min"),
+              substring(array_max(col("sh")), 1, 16).as("fp_max"))
       .orderBy("doc_id")
       .limit(200)
-  }
+
+  // The per-document window arrays over the words `w` (`text` split once,
+  // in the projection below the lambda — re-splitting inside it would
+  // tokenize the text once per window): 5-token md5 windows, word bigrams
+  // and the classifier's uni+bigram features.
+  private[graft] val fingerprintWindows =
+    "transform(sequence(1, size(w) - 4), i -> md5(concat_ws(' ', slice(w, i, 5))))"
+  private[graft] val repetitionBigrams =
+    "transform(sequence(1, size(w) - 1), i -> concat_ws(' ', slice(w, i, 2)))"
+  private[graft] val classifierGrams =
+    """CASE WHEN size(w) < 2 THEN w
+      |ELSE concat(w, transform(sequence(1, size(w) - 1),
+      |  i -> concat(element_at(w, i), '_', element_at(w, i + 1)))) END""".stripMargin
 
   /** EXT: text normalization — casefold, strip non-alphanumerics, collapse
     * whitespace — then dedup on the normalized key. The standard "same doc
@@ -1037,16 +1048,13 @@ object TextOps {
     * + one explode/agg for the bigram mode; ratios integer-scaled before
     * rounding for engine portability. */
   def qTextRepetition(s: SparkSession, d: String): DataFrame = {
-    val words = toks(col("text"))
-    val bigrams = expr(
-      """transform(sequence(1, size(split(text, ' ')) - 1),
-        |          i -> concat_ws(' ', slice(split(text, ' '), i, 2)))""".stripMargin)
     val perDoc = Tables.documents(s, d)
       .filter(col("doc_id") < 200)
+      .select(col("doc_id"), toks(col("text")).as("w"))
       .select(col("doc_id"),
-              size(words).as("n_words"),
-              size(array_distinct(words)).as("n_distinct"),
-              explode(bigrams).as("bigram"))
+              size(col("w")).as("n_words"),
+              size(array_distinct(col("w"))).as("n_distinct"),
+              explode(expr(repetitionBigrams)).as("bigram"))
     val topBigram = perDoc
       .groupBy("doc_id", "n_words", "n_distinct", "bigram").count()
       .groupBy("doc_id", "n_words", "n_distinct")
@@ -1083,12 +1091,6 @@ object TextOps {
     * `list_reduce`), so the FP order is identical and 1e-4 rounding dwarfs
     * the last-ulp sin() drift. */
   def qQualityClassifier(s: SparkSession, d: String): DataFrame = {
-    val grams = expr(
-      """CASE WHEN size(split(text, ' ')) < 2 THEN split(text, ' ')
-        |ELSE concat(split(text, ' '),
-        |  transform(sequence(1, size(split(text, ' ')) - 1),
-        |    i -> concat(element_at(split(text, ' '), i), '_',
-        |                element_at(split(text, ' '), i + 1)))) END""".stripMargin)
     val score = expr(
       """round(1.0 / (1.0 + exp(-(-0.1 +
         |  aggregate(grams, cast(0.0 AS double), (acc, g) -> acc + sin(
@@ -1096,7 +1098,8 @@ object TextOps {
         |     (instr('0123456789abcdef', substring(md5(g), 2, 1)) - 1) + 1) * 0.917))
         |  / size(grams)))), 4)""".stripMargin)
     Tables.documents(s, d)
-      .select(col("doc_id"), grams.as("grams"))
+      .select(col("doc_id"), toks(col("text")).as("w"))
+      .select(col("doc_id"), expr(classifierGrams).as("grams"))
       .select(col("doc_id"),
               size(col("grams")).cast("long").as("n_feats"),
               score.as("score"))

@@ -436,55 +436,33 @@ object Streams {
   }
 
   /** Object-store-safe compaction of the accumulated EDGE relation —
-    * the [[graft.operators.Dedup.compactBandIndex]] protocol applied to
-    * the webgraph stream's state: without it every rank refresh
-    * re-reads and re-distincts O(crawl-history) batch subdirs; after it
-    * the history is one deduplicated, src-partitioned relation. The
-    * commit protocol: write to a HIDDEN `_compact_<epoch>.tmp` inside
-    * edgesDir (readers' recursive listing skips `_`/`.` names), rename
-    * to `compacted_<epoch>` (same-dir rename — atomic on posix/HDFS; on
-    * S3A a bounded copy+delete of this generation's files, so a reader
-    * can transiently see a PARTIAL new generation there), then delete
-    * the superseded subdirs. A reader at any instant sees
-    * old-or-both-or-new — possibly duplicated rows in the "both" window
-    * — which is safe ONLY because every consumer re-`distinct()`s the
-    * edge relation (rank refresh does; any new reader must, or schedule
-    * reads off the compaction window — the band-index caveat,
-    * [[graft.operators.Dedup.compactBandIndex]]). The epoch is a
-    * listing-derived monotonic counter + random nonce
-    * ([[graft.plans.CommitEpoch.next]]), so two compactions can never
-    * collide on the commit name; the write width is size-derived
-    * ([[graft.plans.CommitEpoch.widthFor]]) so the compacted file
-    * layout scales with the relation, not the session. A crash strands
-    * only a hidden tmp that the next compaction sweeps. Returns
-    * (rows before, rows after). */
+    * the [[graft.operators.Dedup.compactBandIndex]] move applied to the
+    * webgraph stream's state: without it every rank refresh re-reads and
+    * re-distincts O(crawl-history) batch subdirs; after it the history is
+    * one deduplicated, src-partitioned relation. Commits through the
+    * [[graft.plans.CommitEpoch]] generation store, consuming every visible
+    * entry of `edgesDir`, at the store's size-derived width
+    * ([[graft.plans.CommitEpoch.widthFor]]) so the compacted file layout
+    * scales with the relation, not the session. Reader caveat: the
+    * store's "both" window shows duplicated rows, which is safe ONLY
+    * because every consumer re-`distinct()`s the edge relation (rank
+    * refresh does; any new reader must, or schedule reads off the
+    * compaction window). Returns (rows before, rows after). */
   def compactEdges(s: SparkSession, edgesDir: String): (Long, Long) = {
     import org.apache.hadoop.fs.Path
     val dir = new Path(edgesDir)
     val fs = dir.getFileSystem(s.sparkContext.hadoopConfiguration)
     if (!fs.exists(dir)) return (0L, 0L)
-    def visible(n: String) = !n.startsWith("_") && !n.startsWith(".")
-    // step 0: sweep hidden tmps stranded by a crashed prior compaction
-    fs.listStatus(dir).map(_.getPath)
-      .filter(p => p.getName.startsWith("_compact_") && p.getName.endsWith(".tmp"))
-      .foreach(p => fs.delete(p, true))
-    val superseded = fs.listStatus(dir).map(_.getPath).filter(p => visible(p.getName))
+    val superseded = graft.plans.CommitEpoch.list(fs, dir).visible
     if (superseded.isEmpty) return (0L, 0L)
     val all = s.read.option("recursiveFileLookup", "true").parquet(edgesDir)
     val before = all.count()
-    val epoch = graft.plans.CommitEpoch.next(fs, dir)
-    val width = graft.plans.CommitEpoch.widthFor(fs, superseded.toSeq, s)
-    val tmp = new Path(dir, s"_compact_$epoch.tmp")
-    all.distinct().repartition(width, col("src"))
-      .write.mode("overwrite").parquet(tmp.toString)
-    val after = s.read.parquet(tmp.toString).count()
-    graft.plans.CommitEpoch.midCommitHook("pre-rename")
-    val fin = new Path(dir, s"compacted_$epoch")
-    if (!fs.rename(tmp, fin))
-      throw new java.io.IOException(s"edge compaction commit rename failed: $tmp -> $fin")
-    graft.plans.CommitEpoch.midCommitHook("post-rename")
-    superseded.foreach(p => fs.delete(p, true))
-    (before, after)
+    val width = graft.plans.CommitEpoch.widthFor(fs, superseded, s)
+    val fin = graft.plans.CommitEpoch.commit(fs, dir, superseded) { tmp =>
+      all.distinct().repartition(width, col("src"))
+        .write.mode("overwrite").parquet(tmp.toString)
+    }
+    (before, s.read.parquet(fin.toString).count())
   }
 
   // auto-compaction trigger for the webgraph streams: compact once the
@@ -495,9 +473,7 @@ object Streams {
     import org.apache.hadoop.fs.Path
     val dir = new Path(edgesDir)
     val fs = dir.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(dir) && fs.listStatus(dir)
-          .count(st => { val n = st.getPath.getName
-                         !n.startsWith("_") && !n.startsWith(".") }) >= threshold)
+    if (fs.exists(dir) && graft.plans.CommitEpoch.list(fs, dir).visible.size >= threshold)
       compactEdges(s, edgesDir)
   }
 
@@ -669,14 +645,13 @@ object Streams {
     * protocol the crawl streams use, so an embedding service can drop
     * parquet and the IVF index stays queryable and fresh).
     *
-    * Watches `dropDir` for (vec_id, embedding) parquet drops; per
-    * micro-batch (exactly-once via the checkpoint's file accounting):
+    * `indexDir` is a [[graft.plans.CommitEpoch]] generation store. Watches
+    * `dropDir` for (vec_id, embedding) parquet drops; per micro-batch
+    * (exactly-once via the checkpoint's file accounting):
     *  - **cold start** (no generation yet): warm/cold-unified
     *    `kmeansIvfRefresh(batch, None, k)` trains the first coarse
     *    quantizer; centroids + fully-assigned postings commit as ONE
-    *    generation `indexDir/compacted_<epoch>/{centroids,postings}`
-    *    through the [[graft.plans.CommitEpoch]] hidden-tmp + same-dir-
-    *    rename protocol (crash strands only a swept tmp).
+    *    generation `{centroids,postings}`.
     *  - **steady state**: the batch's vectors are assigned to the
     *    CURRENT generation's cells (one broadcast-assign scan — the
     *    ivfPqTopk coarse step) and appended as a DELTA
@@ -684,19 +659,19 @@ object Streams {
     *    overwrites rather than duplicates).
     *  - **refresh** (every `refreshEvery`-th batch — the `compactEvery`
     *    amortization): warm-start `kmeansIvfRefresh` from the current
-    *    centroids over generation ∪ deltas ∪ batch, commit the new
-    *    generation, then delete the consumed deltas and superseded
-    *    generations. The tolerance-stopped warm start is the measured
-    *    2.8×-fewer-rounds path (SCALE.md r14 `annrefresh`).
+    *    centroids over generation ∪ deltas ∪ batch, committing a new
+    *    generation that consumes the deltas and superseded generations.
+    *    The tolerance-stopped warm start is the measured 2.8×-fewer-rounds
+    *    path (SCALE.md r14 `annrefresh`).
     *
-    * Reader contract (stated, like the edge-compaction caveat): pick the
-    * MAX-seq generation plus the `batch_*` deltas — never union two
-    * generations (the "both" commit window shows the same vector in two
-    * cells across generations). A reader racing the refresh's delta
-    * delete should schedule reads off the refresh window or retry the
-    * listing. Every artifact is a pure function of the files shipped so
-    * far, so each has a closed-form batch twin (StreamingSpec pins
-    * bit-equality for cold build, delta assignment, and warm refresh).
+    * Reader caveat: in the store's "both" window the same vector sits in
+    * two cells across generations, and a lingering delta still carries
+    * its old-generation cell — the GENERATION copy wins
+    * ([[annIndexSnapshot]]). A reader racing the refresh's delta delete
+    * should schedule reads off the refresh window or retry the listing.
+    * Every artifact is a pure function of the files shipped so far, so
+    * each has a closed-form batch twin (StreamingSpec pins bit-equality
+    * for cold build, delta assignment, and warm refresh).
     *
     * Cold seeding is D²-weighted k-means|| ([[graft.operators.Similarity
     * .d2ColdSeeds]], r14 verdict #2 — a skewed first drop must not
@@ -707,28 +682,8 @@ object Streams {
                       tolPpm: Long = 1000L, maxRounds: Int = 25)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     import org.apache.hadoop.fs.Path
-    // `deleted` is the TOMBSTONE column (r15 verdict #1): optional —
-    // drops written without it read as null (= insert). A (vec_id,
-    // deleted=true) row retires the vector via [[retireIvfVectors]].
-    val dropSchema = StructType(Seq(
-      StructField("vec_id", LongType),
-      StructField("embedding", ArrayType(FloatType)),
-      StructField("deleted", BooleanType)))
-    def prep(df: DataFrame): DataFrame =
-      df.select(col("vec_id"),
-          transform(col("embedding"), x => x.cast("double")).as("v"))
-        .withColumn("nrm",
-          sqrt(graft.functions.VectorMath.vecDot(col("v"), col("v"))))
-    def fromPostings(df: DataFrame): DataFrame =
-      df.select(col("vec_id"), col("v"))
-        .withColumn("nrm",
-          sqrt(graft.functions.VectorMath.vecDot(col("v"), col("v"))))
-    def visible(n: String) = !n.startsWith("_") && !n.startsWith(".")
-    def commitGeneration(assigned: DataFrame, cents: DataFrame,
-                         fs: org.apache.hadoop.fs.FileSystem, dir: Path,
-                         consumed: Seq[Path]): Unit =
-      commitIvfGeneration(s, assigned, cents, fs, dir, consumed)
-    s.readStream.format("parquet").schema(dropSchema).load(dropDir)
+    import graft.plans.CommitEpoch
+    s.readStream.format("parquet").schema(vectorDropSchema).load(dropDir)
       .writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
@@ -737,16 +692,7 @@ object Streams {
         val dir = new Path(indexDir)
         val fs = dir.getFileSystem(s.sparkContext.hadoopConfiguration)
         fs.mkdirs(dir)
-        // sweep tmps stranded by a crashed prior commit
-        fs.listStatus(dir).map(_.getPath)
-          .filter(p => p.getName.startsWith("_compact_") && p.getName.endsWith(".tmp"))
-          .foreach(p => fs.delete(p, true))
-        def gens = fs.listStatus(dir).map(_.getPath)
-          .filter(p => p.getName.startsWith("compacted_"))
-          .sortBy(p => p.getName.stripPrefix("compacted_").takeWhile(_.isDigit) match {
-            case "" => -1L; case d => BigInt(d).min(Long.MaxValue - 1).toLong })
-        def deltas = fs.listStatus(dir).map(_.getPath)
-          .filter(p => visible(p.getName) && p.getName.startsWith("batch_"))
+        def store = CommitEpoch.list(fs, dir)
         // TOMBSTONES first (r15 verdict #1): retire against the
         // PRE-BATCH state, then insert the batch's live rows — and the
         // tombstone wins within a batch (an id both shipped and deleted
@@ -754,12 +700,14 @@ object Streams {
         // already-absent ids rewrites an equivalent generation.
         val tombs = batch.filter(col("deleted") === true).select("vec_id")
         val hasTombs = !tombs.isEmpty
-        if (hasTombs && gens.nonEmpty) retireIvfVectors(s, indexDir, tombs)
+        if (hasTombs && store.latest.nonEmpty) retireIvfVectors(s, indexDir, tombs)
         val live0 = batch.filter(coalesce(col("deleted"), lit(false)) === lit(false))
         val live = if (hasTombs) live0.join(tombs, Seq("vec_id"), "left_anti") else live0
         if (!live.isEmpty) {
-        val e = graft.Fanout.byKey(prep(live), col("vec_id"))
-        if (gens.isEmpty) {
+        val e = graft.Fanout.byKey(dropVectors(live), col("vec_id"))
+        val pre = store
+        (pre.latest match {
+          case None =>
           // cold start: train + commit generation 0 from this drop alone.
           // Enforce the scaladoc contract LOUDLY (r14 advice): a first
           // drop under k vectors would silently commit an under-sized
@@ -771,12 +719,12 @@ object Streams {
             "the first drop must train a full codebook")
           val (assigned, cents, _) =
             graft.operators.Similarity.kmeansIvfRefresh(e, None, k, tolPpm, maxRounds)
-          commitGeneration(assigned, cents, fs, dir, deltas.toSeq)
-        } else {
-          val latest = gens.last
+          CommitEpoch.commit(fs, dir, pre.deltas)(writeIvfGeneration(_, assigned, cents,
+            CommitEpoch.widthFor(fs, pre.deltas, s)))
+          case Some(latest) =>
           val cents = s.read.parquet(new Path(latest, "centroids").toString)
           // REPLAY IDEMPOTENCE across the branch switch (r14 advice): a
-          // crash after commitGeneration but before the checkpoint commit
+          // crash after a commit but before the checkpoint commit
           // replays this batch down a DIFFERENT branch (cold→steady, or
           // refresh→steady against the new generation), and the replayed
           // delta's vectors are already in the committed postings — which
@@ -793,37 +741,85 @@ object Streams {
             .select(col("cid"), col("vec_id"), col("v"))
             .write.mode("overwrite").parquet(new Path(dir, s"batch_$batchId").toString)
           if (refreshEvery > 0 && batchId % refreshEvery == 0) {
-            // belt-and-braces for the rename→delete crash window (a
+            // fresh listing: the refresh folds in the delta just written.
+            // Belt-and-braces for the rename→delete crash window (a
             // consumed delta lingering next to the generation that
             // absorbed it): keep ONE copy per vec_id, newest first
             // (deltas outrank the generation; among deltas, higher batch
             // id wins) — under the append-only contract every copy
             // carries the same vector, so this only removes duplicates.
-            val parts = (new Path(latest, "postings"), -1L) +: deltas.toSeq.map { p =>
-              val d = p.getName.stripPrefix("batch_").takeWhile(_.isDigit)
-              (p, if (d.isEmpty) 0L else BigInt(d).min(Long.MaxValue - 1).toLong)
-            }
+            val deltas = store.deltas
             val wLatest = org.apache.spark.sql.expressions.Window
               .partitionBy("vec_id").orderBy(col("pri").desc)
-            val corpus = fromPostings(
-              parts.map { case (p, pri) =>
+            val corpus = graft.operators.Similarity.withNrm(
+              (new Path(latest, "postings") +: deltas).zipWithIndex.map { case (p, pri) =>
                 s.read.parquet(p.toString)
                   .select(col("vec_id"), col("v")).withColumn("pri", lit(pri))
               }.reduce(_ unionByName _)
                 .withColumn("rk", row_number().over(wLatest))
-                .filter(col("rk") === 1)
-                .select("vec_id", "v"))
+                .filter(col("rk") === 1))
             val (assigned, newCents, _) = graft.operators.Similarity
               .kmeansIvfRefresh(corpus, Some(cents), k, tolPpm, maxRounds)
-            commitGeneration(assigned, newCents, fs, dir,
-              deltas.toSeq ++ gens.toSeq)
+            val consumed = deltas ++ pre.generations
+            CommitEpoch.commit(fs, dir, consumed)(writeIvfGeneration(_, assigned, newCents,
+              CommitEpoch.widthFor(fs, consumed, s)))
           }
-        }
+        }): Unit // the cold branch's commit returns the generation
         }
         }
       }
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
+  }
+
+  // the (vec_id, embedding[, deleted]) drops both index streams watch;
+  // `deleted` is the optional TOMBSTONE column (r15 verdict #1) — drops
+  // written without it read as null (= insert)
+  private val vectorDropSchema = StructType(Seq(
+    StructField("vec_id", LongType),
+    StructField("embedding", ArrayType(FloatType)),
+    StructField("deleted", BooleanType)))
+
+  // a drop's vectors as (vec_id, v, nrm)
+  private def dropVectors(df: DataFrame): DataFrame =
+    graft.operators.Similarity.withNrm(df.select(col("vec_id"),
+      transform(col("embedding"), x => x.cast("double")).as("v")))
+
+  // one IVF generation's layout, written into `gen`: the postings
+  // (cid, vec_id, v) by cid at `width`, and the centroids
+  private def writeIvfGeneration(gen: org.apache.hadoop.fs.Path, assigned: DataFrame,
+                                 cents: DataFrame, width: Int): Unit = {
+    import org.apache.hadoop.fs.Path
+    assigned.select(col("cid"), col("vec_id"), col("v"))
+      .repartition(width, col("cid"))
+      .write.mode("overwrite").parquet(new Path(gen, "postings").toString)
+    cents.coalesce(1)
+      .write.mode("overwrite").parquet(new Path(gen, "centroids").toString)
+  }
+
+  /** DELETE/TAKEDOWN door for the IVF index (r15 verdict #1): without
+    * it a retired vector stays in the [[annIngestStream]] generation's
+    * postings forever and keeps being returned by cell probes — the
+    * band-index phantom-duplicate failure mode, vector-side. Folds the
+    * current state through the [[annIndexSnapshot]] rule (so in the
+    * commit's crash window the generation's cell wins over a lingering
+    * delta's stale one), drops retired vec_ids, and commits the
+    * survivors as a new generation under the SAME trained centroids
+    * (cells shrink; the next warm refresh re-centers them), consuming
+    * the folded state. Idempotent: retiring absent ids rewrites an
+    * equivalent generation. */
+  def retireIvfVectors(s: SparkSession, indexDir: String, retired: DataFrame): Unit = {
+    import org.apache.hadoop.fs.Path
+    import graft.plans.CommitEpoch
+    val dir = new Path(indexDir)
+    val fs = dir.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val store = CommitEpoch.list(fs, dir)
+    val kept = ivfSnapshot(s, indexDir, store)
+      .join(retired.select("vec_id").distinct(), Seq("vec_id"), "left_anti")
+    val cents = s.read.parquet(new Path(store.latest.get, "centroids").toString)
+    val consumed = store.deltas ++ store.generations
+    CommitEpoch.commit(fs, dir, consumed)(
+      writeIvfGeneration(_, kept, cents, CommitEpoch.widthFor(fs, consumed, s)))
   }
 
   /** The [[annIngestStream]] reader contract made CODE (r14 verdict #6 —
@@ -840,93 +836,34 @@ object Streams {
     * single-generation-consistent relation — StreamingSpec pins each via
     * the midCommitHook seam. A delta listed but deleted before its read
     * surfaces as a read error: retry the snapshot (stated contract). */
-  private def commitIvfGeneration(s: SparkSession,
-      assigned: DataFrame, cents: DataFrame,
-      fs: org.apache.hadoop.fs.FileSystem, dir: org.apache.hadoop.fs.Path,
-      consumed: Seq[org.apache.hadoop.fs.Path]): Unit = {
-    import org.apache.hadoop.fs.Path
-    val epoch = graft.plans.CommitEpoch.next(fs, dir)
-    val width = if (consumed.isEmpty) 1
-                else graft.plans.CommitEpoch.widthFor(fs, consumed, s)
-    val tmp = new Path(dir, s"_compact_$epoch.tmp")
-    assigned.select(col("cid"), col("vec_id"), col("v"))
-      .repartition(width, col("cid"))
-      .write.mode("overwrite").parquet(new Path(tmp, "postings").toString)
-    cents.coalesce(1)
-      .write.mode("overwrite").parquet(new Path(tmp, "centroids").toString)
-    graft.plans.CommitEpoch.midCommitHook("pre-rename")
-    val fin = new Path(dir, s"compacted_$epoch")
-    if (!fs.rename(tmp, fin))
-      throw new java.io.IOException(s"ann index commit rename failed: $tmp -> $fin")
-    graft.plans.CommitEpoch.midCommitHook("post-rename")
-    consumed.foreach(p => fs.delete(p, true))
-  }
-
-  /** DELETE/TAKEDOWN door for the IVF index (r15 verdict #1): without
-    * it a retired vector stays in the [[annIngestStream]] generation's
-    * postings forever and keeps being returned by cell probes — the
-    * band-index phantom-duplicate failure mode, vector-side. Folds the
-    * current state (max-seq generation + batch_* deltas, the
-    * [[annIndexSnapshot]] reader contract), drops retired vec_ids, and
-    * commits the survivors as a new generation under the SAME trained
-    * centroids (cells shrink; the next warm refresh re-centers them).
-    * Idempotent: retiring absent ids rewrites an equivalent
-    * generation. */
-  def retireIvfVectors(s: SparkSession, indexDir: String, retired: DataFrame): Unit = {
-    import org.apache.hadoop.fs.Path
-    val dir = new Path(indexDir)
-    val fs = dir.getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.listStatus(dir).map(_.getPath)
-      .filter(p => p.getName.startsWith("_compact_") && p.getName.endsWith(".tmp"))
-      .foreach(p => fs.delete(p, true))
-    val gens = fs.listStatus(dir).map(_.getPath)
-      .filter(_.getName.startsWith("compacted_"))
-      .sortBy(p => p.getName.stripPrefix("compacted_").takeWhile(_.isDigit) match {
-        case "" => -1L; case d => BigInt(d).min(Long.MaxValue - 1).toLong })
-    require(gens.nonEmpty, s"retireIvfVectors($indexDir): no committed generation")
-    val latest = gens.last
-    val deltas = fs.listStatus(dir).map(_.getPath)
-      .filter(p => !p.getName.startsWith("_") && !p.getName.startsWith(".") &&
-                   p.getName.startsWith("batch_")).toSeq
-    val postings0 = (s.read.parquet(new Path(latest, "postings").toString) +:
-        deltas.map(p => s.read.parquet(p.toString)))
-      .reduce(_ unionByName _)
-      .dropDuplicates("vec_id") // rename→delete crash window, copies identical
-    val kept = postings0
-      .join(retired.select("vec_id").distinct(), Seq("vec_id"), "left_anti")
-      .select("cid", "vec_id", "v")
-    val cents = s.read.parquet(new Path(latest, "centroids").toString)
-    commitIvfGeneration(s, kept, cents, fs, dir, deltas ++ gens.toSeq)
-  }
-
   def annIndexSnapshot(s: SparkSession, indexDir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val dir = new Path(indexDir)
+    val dir = new org.apache.hadoop.fs.Path(indexDir)
     val fs = dir.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val gens = fs.listStatus(dir).map(_.getPath)
-      .filter(_.getName.startsWith("compacted_"))
-      .sortBy(p => p.getName.stripPrefix("compacted_").takeWhile(_.isDigit) match {
-        case "" => -1L; case d => BigInt(d).min(Long.MaxValue - 1).toLong })
-    require(gens.nonEmpty, s"annIndexSnapshot($indexDir): no committed generation")
-    val gen = s.read.parquet(new Path(gens.last, "postings").toString)
-      .select(col("vec_id"), col("cid"), col("v")).withColumn("pri", lit(1))
-    val all = fs.listStatus(dir).map(_.getPath)
-      .filter(p => !p.getName.startsWith("_") && !p.getName.startsWith(".") &&
-                   p.getName.startsWith("batch_"))
-      .map(p => s.read.parquet(p.toString)
-        .select(col("vec_id"), col("cid"), col("v")).withColumn("pri", lit(0)))
-      .foldLeft(gen)(_ unionByName _)
+    ivfSnapshot(s, indexDir, graft.plans.CommitEpoch.list(fs, dir))
+  }
+
+  // the annIndexSnapshot fold over one listing of the store
+  private def ivfSnapshot(s: SparkSession, indexDir: String,
+                          store: graft.plans.CommitEpoch.Listing): DataFrame = {
+    require(store.latest.nonEmpty, s"$indexDir: no committed generation")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("vec_id").orderBy(col("pri").desc)
-    all.withColumn("rk", row_number().over(w)).filter(col("rk") === 1)
+    ((new org.apache.hadoop.fs.Path(store.latest.get, "postings"), 1) +: store.deltas.map((_, 0)))
+      .map { case (p, pri) =>
+        s.read.parquet(p.toString)
+          .select(col("vec_id"), col("cid"), col("v")).withColumn("pri", lit(pri))
+      }
+      .reduce(_ unionByName _)
+      .withColumn("rk", row_number().over(w)).filter(col("rk") === 1)
       .select("vec_id", "cid", "v")
   }
 
   /** Streaming kNN-GRAPH maintenance — the graph index's streaming door
     * (r14 verdict #2; completes the lifecycle ledger: dedup has band
     * compaction, IVF has [[annIngestStream]], ranks have warm refresh).
-    * Watches `dropDir` for (vec_id, embedding) parquet drops; per
-    * micro-batch (exactly-once via the checkpoint's file accounting):
+    * `indexDir` is a [[graft.plans.CommitEpoch]] generation store. Watches
+    * `dropDir` for (vec_id, embedding) parquet drops; per micro-batch
+    * (exactly-once via the checkpoint's file accounting):
     *
     *  - **cold start** (no generation): [[graft.operators.Similarity
     *    .buildGraphIndex]] over the first drop — NN-descent build, then
@@ -952,14 +889,14 @@ object Streams {
     *    vertices accumulate in-links without bound and walk cost is
     *    frontier × out-degree per round — [[graft.operators.Similarity
     *    .pruneDegree]]; 0 disables), hubs recomputed from the compacted
-    *    relation, consumed deltas and superseded generations deleted
-    *    after the CommitEpoch rename.
+    *    relation, committed as a new generation that consumes the deltas
+    *    and superseded generations.
     *
     * Replay idempotence (the annIngestStream discipline): the batch is
     * anti-joined against the index's vec_ids before linking, so a
     * replayed batch writes an EMPTY delta; delta names are batch-id
-    * idempotent. Reader contract: max-seq generation + `batch_*` deltas;
-    * edges may carry duplicates mid-window — every consumer here
+    * idempotent. Reader caveat: edges may carry duplicates in the store's
+    * "both" window — every consumer here
     * re-distincts or tolerates multiplicity (the walk's candidate set is
     * DISTINCT by construction). Vec_ids are append-only/immutable. */
   def knnIngestStream(s: SparkSession, dropDir: String, indexDir: String,
@@ -970,25 +907,12 @@ object Streams {
                       maxLevels: Int = 4)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     import org.apache.hadoop.fs.Path
-    // `deleted` = optional tombstone column (r15 verdict #1): a
-    // (vec_id, deleted=true) row retires the vector — bucket rows and
+    import graft.plans.CommitEpoch
+    import graft.operators.Similarity
+    // a (vec_id, deleted=true) row retires the vector — bucket rows and
     // every touching edge drop, orphaned neighbors re-link
-    // ([[graft.operators.Similarity.retireGraphVectors]]); drops
-    // written without the column read as null (= insert).
-    val dropSchema = StructType(Seq(
-      StructField("vec_id", LongType),
-      StructField("embedding", ArrayType(FloatType)),
-      StructField("deleted", BooleanType)))
-    def prep(df: DataFrame): DataFrame =
-      df.select(col("vec_id"),
-          transform(col("embedding"), x => x.cast("double")).as("v"))
-        .withColumn("nrm",
-          sqrt(graft.functions.VectorMath.vecDot(col("v"), col("v"))))
-    def withNrm(df: DataFrame): DataFrame =
-      df.select(col("vec_id"), col("v"))
-        .withColumn("nrm",
-          sqrt(graft.functions.VectorMath.vecDot(col("v"), col("v"))))
-    s.readStream.format("parquet").schema(dropSchema).load(dropDir)
+    // ([[graft.operators.Similarity.retireGraphVectors]])
+    s.readStream.format("parquet").schema(vectorDropSchema).load(dropDir)
       .writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
@@ -997,16 +921,7 @@ object Streams {
         val dir = new Path(indexDir)
         val fs = dir.getFileSystem(s.sparkContext.hadoopConfiguration)
         fs.mkdirs(dir)
-        fs.listStatus(dir).map(_.getPath)
-          .filter(p => p.getName.startsWith("_compact_") && p.getName.endsWith(".tmp"))
-          .foreach(p => fs.delete(p, true))
-        def gens = fs.listStatus(dir).map(_.getPath)
-          .filter(_.getName.startsWith("compacted_"))
-          .sortBy(p => p.getName.stripPrefix("compacted_").takeWhile(_.isDigit) match {
-            case "" => -1L; case d => BigInt(d).min(Long.MaxValue - 1).toLong })
-        def deltas = fs.listStatus(dir).map(_.getPath)
-          .filter(p => !p.getName.startsWith("_") && !p.getName.startsWith(".") &&
-                       p.getName.startsWith("batch_"))
+        def store = CommitEpoch.list(fs, dir)
         // TOMBSTONES first (r15 verdict #1): retire against the
         // pre-batch state (prune + heal + recommit, consuming deltas),
         // then insert the live rows; the tombstone wins within a batch.
@@ -1014,32 +929,27 @@ object Streams {
         // nothing, orphans nobody, rewrites an equivalent generation.
         val tombs = batch.filter(col("deleted") === true).select("vec_id")
         val hasTombs = !tombs.isEmpty
-        if (hasTombs && gens.nonEmpty)
-          graft.operators.Similarity.retireGraphVectors(s, indexDir, tombs,
+        if (hasTombs && store.latest.nonEmpty)
+          Similarity.retireGraphVectors(s, indexDir, tombs,
             kLink, beam, walkRounds, sigBits, nEntries,
             corpusMin = Long.MinValue)
         val live0 = batch.filter(coalesce(col("deleted"), lit(false)) === lit(false))
         val live = if (hasTombs) live0.join(tombs, Seq("vec_id"), "left_anti") else live0
         if (!live.isEmpty) {
-        val e = graft.Fanout.byKey(prep(live), col("vec_id"))
-        if (gens.isEmpty) {
+        val e = graft.Fanout.byKey(dropVectors(live), col("vec_id"))
+        val pre = store
+        (pre.latest match {
+          case None =>
           val n = e.count()
           require(n >= 2,
             s"knnIngestStream($dropDir): cold-start drop carries $n vector(s) — " +
             "a graph needs at least 2")
-          graft.operators.Similarity.buildGraphIndex(e, indexDir,
+          // the build's commit consumes any stale delta
+          Similarity.buildGraphIndex(e, indexDir,
             kRand, kBuild, buildRounds, sigBits, nEntries,
             corpusMin = Long.MinValue, persistVectors = true,
             maxLevels = maxLevels)
-          deltas.foreach(p => fs.delete(p, true))
-        } else {
-          val latest = gens.last
-          def genPart(name: String) = s.read.parquet(new Path(latest, name).toString)
-          def deltaPartOf(ps: Seq[Path], name: String): Option[DataFrame] = {
-            val qs = ps.map(p => new Path(p, name))
-              .filter(fs.exists(_)).map(p => s.read.parquet(p.toString))
-            qs.reduceOption(_ unionByName _)
-          }
+          case Some(latest) =>
           // REPLAY DETERMINISM (r15 advice): exclude this batch's OWN
           // stale delta from every pre-insert input. A crash after the
           // delta write but before the checkpoint commit replays this
@@ -1051,27 +961,26 @@ object Streams {
           // delta from the same pre-batch state and whole-replaces
           // batch_<id> — a deterministic rewrite, the annIngestStream
           // discipline (StreamingSpec's deleted-commit replay twin).
-          val prior = deltas.filter(_.getName != s"batch_$batchId").toSeq
-          def deltaPart(name: String) = deltaPartOf(prior, name)
-          val vectors = deltaPart("vectors")
-            .foldLeft(genPart("vectors"))(_ unionByName _)
+          val prior = latest +: pre.deltas.filter(_.getName != s"batch_$batchId")
+          def part(name: String) = CommitEpoch.readPart(s, fs, prior, name)
+          val vectors = part("vectors").get
           // replay idempotence: drop vec_ids the index already holds
           val b = graft.Fence.cut(
             e.join(vectors.select("vec_id"), Seq("vec_id"), "left_anti"))
-          val gu = deltaPart("edges").foldLeft(genPart("edges"))(_ unionByName _)
-          val buckets = deltaPart("buckets").foldLeft(genPart("buckets"))(_ unionByName _)
+          val gu = part("edges").get
+          val buckets = part("buckets").get
             .unionByName(b.select(col("vec_id").as("cid"),
-              graft.operators.Similarity.lshBucket(col("v"), sigBits).as("bucket")))
-          val eAll = withNrm(vectors).unionByName(b)
-          val newEdges = graft.operators.Similarity.insertBySearch(
-            eAll, gu, buckets, genPart("hubs"), b,
+              Similarity.lshBucket(col("v"), sigBits).as("bucket")))
+          val eAll = Similarity.withNrm(vectors).unionByName(b)
+          val newEdges = Similarity.insertBySearch(
+            eAll, gu, buckets, s.read.parquet(new Path(latest, "hubs").toString), b,
             kLink, beam, walkRounds, sigBits)
           val out = new Path(dir, s"batch_$batchId")
           newEdges.write.mode("overwrite").parquet(new Path(out, "edges").toString)
           b.select(col("vec_id"), col("v"))
             .write.mode("overwrite").parquet(new Path(out, "vectors").toString)
           b.select(col("vec_id").as("cid"),
-              graft.operators.Similarity.lshBucket(col("v"), sigBits).as("bucket"))
+              Similarity.lshBucket(col("v"), sigBits).as("bucket"))
             .write.mode("overwrite").parquet(new Path(out, "buckets").toString)
           // UPPER HNSW LAYERS, maintained insert-by-search (r15 verdict
           // #3): every batch member of layer ℓ ≥ 1 searches the current
@@ -1081,12 +990,8 @@ object Streams {
           // with the populated layers). Level = pure function of
           // vec_id, so replays assign identically.
           if (maxLevels > 1) {
-            import s.implicits._
-            val emptyHi = Seq.empty[(Int, Long, Long)].toDF("lvl", "vid", "nb")
-            val genHiP = new Path(latest, "edges_hi")
-            val genHi = if (fs.exists(genHiP)) s.read.parquet(genHiP.toString) else emptyHi
-            val levEdges = deltaPart("edges_hi").foldLeft(genHi)(_ unionByName _)
-            val newHi = graft.operators.Similarity.insertBySearchUpper(
+            val levEdges = part("edges_hi").getOrElse(Similarity.emptyLevEdges(s))
+            val newHi = Similarity.insertBySearchUpper(
               eAll, levEdges, buckets, b, kLink, beam, walkRounds, sigBits, maxLevels)
             newHi.write.mode("overwrite").parquet(new Path(out, "edges_hi").toString)
             graft.Fence.releaseCut(newHi)
@@ -1102,7 +1007,8 @@ object Streams {
             // insert-by-search construction this stream exists to grow)
             // fresh listing: the refresh folds in the delta this batch
             // just wrote (prior excludes it by design)
-            val allDeltaPaths = deltas.toSeq
+            val allDeltas = store.deltas
+            def allPart(name: String) = CommitEpoch.readPart(s, fs, latest +: allDeltas, name)
             // belt-and-braces for the rename→delete crash window (r15
             // advice): after a crash between the generation rename and
             // the consumed-delta delete, a stale delta's vectors are
@@ -1114,72 +1020,37 @@ object Streams {
             // bucket is a pure function of the vector, so the dedup only
             // removes duplicates (the annIngestStream refresh rank-1
             // pattern; edges already union via distinct()).
-            val allVecs = deltaPartOf(allDeltaPaths, "vectors")
-              .foldLeft(genPart("vectors"))(_ unionByName _)
-              .dropDuplicates("vec_id")
-            val unioned = deltaPartOf(allDeltaPaths, "edges")
-              .foldLeft(genPart("edges"))(_ unionByName _)
-              .distinct()
+            val allVecs = allPart("vectors").get.dropDuplicates("vec_id")
+            val unioned = allPart("edges").get.distinct()
             // DIVERSITY-heuristic prune, not plain top-M: similarity-
             // ranked pruning cuts the long-range links first and
             // collapses global-entry navigability (measured 0.495 →
-            // 0.100 at the 50k probe shape — SCALE.md r15)
-            val allEdges =
-              if (maxDegree > 0)
-                graft.operators.Similarity.pruneDegreeDiverse(unioned, allVecs, maxDegree)
-              else unioned
-            val allBuckets = deltaPartOf(allDeltaPaths, "buckets")
-              .foldLeft(genPart("buckets"))(_ unionByName _)
-              .dropDuplicates("cid")
+            // 0.100 at the 50k probe shape — SCALE.md r15). Fenced once:
+            // the writer reads it for the width, the hubs and the edges.
+            val allEdges = graft.Fence.counted(
+              if (maxDegree > 0) Similarity.pruneDegreeDiverse(unioned, allVecs, maxDegree)
+              else unioned, cut = true)
+            val allBuckets = allPart("buckets").get.dropDuplicates("cid")
             // upper layers: fold + per-layer diversity prune (layers
             // halve, so the whole pass costs ~1× the base prune)
             val allHi: Option[DataFrame] = if (maxLevels <= 1) None else {
-              import s.implicits._
-              val emptyHi = Seq.empty[(Int, Long, Long)].toDF("lvl", "vid", "nb")
-              val genHiP = new Path(latest, "edges_hi")
-              val genHi = if (fs.exists(genHiP)) s.read.parquet(genHiP.toString)
-                          else emptyHi
-              val unionedHi = deltaPartOf(allDeltaPaths, "edges_hi")
-                .foldLeft(genHi)(_ unionByName _).distinct()
+              val emptyHi = Similarity.emptyLevEdges(s)
+              val unionedHi = allPart("edges_hi").getOrElse(emptyHi).distinct()
               Some(if (maxDegree > 0) {
                 (1 until maxLevels).map { l =>
-                  graft.operators.Similarity.pruneDegreeDiverse(
+                  Similarity.pruneDegreeDiverse(
                       unionedHi.filter(col("lvl") === l).select("vid", "nb"),
                       allVecs, maxDegree)
                     .select(lit(l).as("lvl"), col("vid"), col("nb"))
                 }.reduceOption(_ unionByName _).getOrElse(emptyHi)
               } else unionedHi)
             }
-            val hubs = graft.operators.Similarity.topHubs(
-              allEdges, nEntries, corpusMin = Long.MinValue)
-            // snapshot the consumed state BEFORE the rename: gens/deltas
-            // are re-listing defs, and a post-rename listing returns the
-            // fresh generation under a fully-QUALIFIED path that a Path
-            // != comparison against the unqualified `fin` cannot exclude
-            val consumed = allDeltaPaths ++ gens.toSeq
-            val epoch = graft.plans.CommitEpoch.next(fs, dir)
-            val tmp = new Path(dir, s"_compact_$epoch.tmp")
-            val nEdges = allEdges.count()
-            val width = math.max(1L, math.min(1L << 20, nEdges / 4000000L + 1L)).toInt
-            allEdges.repartition(width, col("vid"))
-              .write.mode("overwrite").parquet(new Path(tmp, "edges").toString)
-            hubs.coalesce(1)
-              .write.mode("overwrite").parquet(new Path(tmp, "hubs").toString)
-            allBuckets.repartition(width, col("cid"))
-              .write.mode("overwrite").parquet(new Path(tmp, "buckets").toString)
-            allVecs.repartition(width, col("vec_id"))
-              .write.mode("overwrite").parquet(new Path(tmp, "vectors").toString)
-            allHi.foreach(_.repartition(math.max(1, width / 2), col("vid"))
-              .write.mode("overwrite").parquet(new Path(tmp, "edges_hi").toString))
-            graft.plans.CommitEpoch.midCommitHook("pre-rename")
-            val fin = new Path(dir, s"compacted_$epoch")
-            if (!fs.rename(tmp, fin))
-              throw new java.io.IOException(
-                s"knn index commit rename failed: $tmp -> $fin")
-            graft.plans.CommitEpoch.midCommitHook("post-rename")
-            consumed.foreach(p => fs.delete(p, true))
+            CommitEpoch.commit(fs, dir, allDeltas ++ pre.generations)(
+              Similarity.writeGraphGeneration(_, allEdges, nEntries, Long.MinValue,
+                allBuckets, Some(allVecs), allHi))
+            graft.Fence.releaseCut(allEdges.df)
           }
-        }
+        }): Unit // the cold branch's commit returns the generation
         }
         }
       }

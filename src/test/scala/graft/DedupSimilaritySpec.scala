@@ -1291,16 +1291,63 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(got(-4L) === Seq("x y z", "y z x", "z x y"))
     assert(got(-5L) === Seq("p q r"))
 
-    // structural: ppjoin's shingle relation splits in a projection under
-    // the explode, never inside the per-shingle lambda
-    val plan = Dedup.docShingles(spark, sf).queryExecution.optimizedPlan
-    val exprs = plan.flatMap(_.expressions)
-    val splitInLambda = exprs.exists(_.exists {
-      case l: LambdaFunction => l.function.exists(_.isInstanceOf[StringSplit])
-      case _ => false
-    })
-    assert(!splitInLambda, s"a split re-runs per shingle:\n$plan")
-    assert(exprs.count(_.exists(_.isInstanceOf[StringSplit])) === 1, plan.toString)
+    // the four window builders over the once-split words `w`: each equals
+    // its former split-inside-lambda expression on the same inputs, row for
+    // row (an input the former form rejects — a text too short for
+    // fingerprint's 5-token window makes `slice` see index 0 — must be
+    // rejected by the new form too)
+    val builders = Seq(
+      "fingerprint" -> (TextOps.fingerprintWindows,
+        """transform(sequence(1, size(split(text, ' ')) - 4),
+          |          i -> md5(concat_ws(' ', slice(split(text, ' '), i, 5))))""".stripMargin),
+      "repetition" -> (TextOps.repetitionBigrams,
+        """transform(sequence(1, size(split(text, ' ')) - 1),
+          |          i -> concat_ws(' ', slice(split(text, ' '), i, 2)))""".stripMargin),
+      "classifier" -> (TextOps.classifierGrams,
+        """CASE WHEN size(split(text, ' ')) < 2 THEN split(text, ' ')
+          |ELSE concat(split(text, ' '),
+          |  transform(sequence(1, size(split(text, ' ')) - 1),
+          |    i -> concat(element_at(split(text, ' '), i), '_',
+          |                element_at(split(text, ' '), i + 1)))) END""".stripMargin),
+      "segments" -> (Dedup.segmentWindows,
+        """transform(sequence(0, cast(ceil(size(split(text, ' ')) / 4.0) as int) - 1),
+          |          i -> concat_ws(' ', slice(split(text, ' '), i * 4 + 1, 4)))""".stripMargin))
+    def arrays(rows: org.apache.spark.sql.DataFrame, e: String, words: Boolean) =
+      scala.util.Try((if (words) rows.select(col("doc_id"), split(col("text"), " ").as("w"))
+                      else rows).select(col("doc_id"), expr(e).as("a")).collect()
+        .map(r => r.getLong(0) -> Option(r.getSeq[String](1))).toMap)
+    val corpus = Tables.documents(spark, sf01).select("doc_id", "text")
+    builders.foreach { case (name, (once, former)) =>
+      val ref = arrays(corpus, former, words = false).get
+      assert(ref.size === corpus.count() && ref.values.exists(_.exists(_.nonEmpty)))
+      assert(arrays(corpus, once, words = true).get === ref, name)
+      edges.foreach { edge =>
+        val row = Seq(edge).toDF("doc_id", "text")
+        val (r, g) = (arrays(row, former, words = false), arrays(row, once, words = true))
+        assert(r.isFailure === g.isFailure && r.toOption === g.toOption, s"$name on $edge")
+      }
+    }
+
+    // structural: ppjoin's shingle relation and the four window queries
+    // split in a projection under the lambda, never inside it, once per
+    // documents scan (segments reads the relation twice: frequency + join)
+    Seq("docShingles" -> Dedup.docShingles(spark, sf),
+        "qTextFingerprint" -> TextOps.qTextFingerprint(spark, sf),
+        "qTextRepetition" -> TextOps.qTextRepetition(spark, sf),
+        "qQualityClassifier" -> TextOps.qQualityClassifier(spark, sf),
+        "qDedupSegments" -> Dedup.qDedupSegments(spark, sf)).foreach { case (name, df) =>
+      val plan = df.queryExecution.optimizedPlan
+      val exprs = plan.flatMap(_.expressions)
+      val splitInLambda = exprs.exists(_.exists {
+        case l: LambdaFunction => l.function.exists(_.isInstanceOf[StringSplit])
+        case _ => false
+      })
+      assert(!splitInLambda, s"$name: a split re-runs per window:\n$plan")
+      val scans = plan.collect {
+        case r: org.apache.spark.sql.execution.datasources.LogicalRelation => r }.size
+      assert(scans >= 1 && exprs.count(_.exists(_.isInstanceOf[StringSplit])) === scans,
+        s"$name:\n$plan")
+    }
   }
 
   test("bloom-prefilter dedup: zero false negatives, real pruning, answer identical to the unfiltered path") {

@@ -11,7 +11,9 @@ import org.apache.spark.storage.StorageLevel
   *  1. GREP GATES — `graft.Fence` is the engine's ONLY spelling of a raw
   *     `.localCheckpoint()` and the only main-source caller of the
   *     shim's one fence materialization, so the release discipline and
-  *     the fence instrumentation stay enforceable from one file.
+  *     the fence instrumentation stay enforceable from one file; and
+  *     `graft.plans.CommitEpoch` is the only generation store (names,
+  *     delta listing, commit hook and rename).
   *  2. PIN LIFECYCLE — `Fence.apply` sets EXACTLY MEMORY_ONLY on the
   *     leaf RDD; `Fence.release` clears it; a re-read after release is
   *     row-identical (recompute through lineage — the documented
@@ -60,6 +62,17 @@ class FenceGateSpec extends SparkSpec {
       call.findFirstIn(_).isDefined)
     assert(hits.isEmpty,
       s"GraftSqlShim.materialize reached outside graft.Fence: $hits")
+  }
+
+  test("generation-store names, delta listing, commit hook and rename appear only in CommitEpoch") {
+    // every persisted index commits and lists through graft.plans.CommitEpoch;
+    // Layout.compact's in-place `._compact_tmp`/`._compact_old` directory
+    // swap is a different protocol, exempt by name
+    val layoutCompact = """(?s)\n  def compact\(s: SparkSession, dir: String.*?\n  }\n""".r
+    val store = """"compacted_|"_compact_|startsWith\("batch_"\)|midCommitHook\(|fs\.rename\(""".r
+    val hits = offenders("src/main/scala", Set("CommitEpoch.scala"))(text =>
+      store.findFirstIn(layoutCompact.replaceAllIn(text, "\n")).isDefined)
+    assert(hits.isEmpty, s"generation-store logic outside graft.plans.CommitEpoch: $hits")
   }
 
   /** The pinned leaf's RDD, or None if the frame has no LogicalRDD leaf. */

@@ -1166,6 +1166,71 @@ class StreamingSpec extends SparkSpec {
       s"retired-index recall $rRet must sit within noise of fresh-build $rFresh")
   }
 
+  test("IVF retire in a refresh's rename→delete crash window commits the snapshot's cells, not a lingering delta's stale ones") {
+    import org.apache.hadoop.fs.{FileUtil, Path}
+    import spark.implicits._
+    val drop = Files.createTempDirectory("graft_cw_drop").toString
+    val index = Files.createTempDirectory("graft_cw_idx").resolve("idx").toString
+    val crash = Files.createTempDirectory("graft_cw_crash").resolve("idx").toString
+    val ckpt = Files.createTempDirectory("graft_cw_ckpt").toString
+    // cells are assigned by cosine. Generation 0 trains four axis cells
+    // (A = e1, B = e2, C = e3, D = e4); the delta's vectors at 40° in the
+    // e1-e2 plane go to A; the refresh batch's at 50° pull B toward them,
+    // so the refresh moves the delta's vectors to B. The delta still says A.
+    def at(id: Long, deg: Double): (Long, Array[Float]) = {
+      val j = (id % 7).toFloat * 0.01f
+      val r = math.toRadians(deg)
+      (id, Array((10 * math.cos(r)).toFloat + j, (10 * math.sin(r)).toFloat + j, j, j))
+    }
+    def axis(id: Long): (Long, Array[Float]) = {
+      val j = (id % 7).toFloat * 0.01f
+      (id, Array.tabulate(4)(i => (if (i == id % 4) 10f else 0f) + j))
+    }
+    def ship(rows: Seq[(Long, Array[Float])], tag: String): Unit = {
+      val staging = Files.createTempDirectory(s"graft_cw_stage_$tag").toString
+      rows.toDF("vec_id", "embedding").coalesce(1).write.mode("overwrite").parquet(staging)
+      new java.io.File(staging).listFiles()
+        .filter(f => f.getName.endsWith(".parquet"))
+        .foreach(f => Files.move(f.toPath, Paths.get(drop, s"$tag.parquet")))
+    }
+    def run(): Unit =
+      Streams.annIngestStream(spark, drop, index, ckpt, k = 4, refreshEvery = 2)
+        .awaitTermination(240000)
+    def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Seq[Double])] =
+      df.select("vec_id", "cid", "v").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Double](2))).toSet
+    val fs = new Path(index).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+    ship((0L until 80L).map(axis), "drop1"); run()                // batch 0: generation 0
+    ship((100L until 110L).map(at(_, 40.0)), "drop2"); run()      // batch 1: delta
+    graft.plans.CommitEpoch.midCommitHook = { phase =>
+      if (phase == "post-rename")
+        FileUtil.copy(fs, new Path(index), fs, new Path(crash), false,
+          spark.sparkContext.hadoopConfiguration)
+    }
+    try { ship((200L until 240L).map(at(_, 50.0)), "drop3"); run() } // batch 2: refresh
+    finally graft.plans.CommitEpoch.midCommitHook = _ => ()
+
+    // the captured state: both generations and the consumed deltas visible
+    val names = new java.io.File(crash).list().toSeq
+    assert(names.count(_.startsWith("compacted_")) === 2 && names.contains("batch_1"), names)
+    val snapshot = rows(Streams.annIndexSnapshot(spark, crash))
+    val stale = spark.read.parquet(s"$crash/batch_1").select("vec_id", "cid").collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val snapCell = snapshot.map { case (id, c, _) => id -> c }.toMap
+    assert(stale.nonEmpty && stale.forall { case (id, c) => snapCell(id) != c },
+      "fixture: the refresh must move every delta vector to another cell")
+
+    val retired = Set(0L, 1L, 100L, 201L)
+    Streams.retireIvfVectors(spark, crash, retired.toSeq.toDF("vec_id"))
+    val after = new java.io.File(crash).list().toSeq.filterNot(_.startsWith("."))
+    assert(after.size === 1 && after.head.startsWith("compacted_"),
+      s"retire consumes both generations and every delta: $after")
+    assert(rows(spark.read.parquet(s"$crash/${after.head}/postings")) ===
+      snapshot.filterNot { case (id, _, _) => retired(id) },
+      "the committed postings are the pre-retire snapshot minus the retired ids")
+  }
+
   test("IVF retire: tombstones drop postings across generation AND deltas; snapshot is phantom-free") {
     import org.apache.hadoop.fs.Path
     val drop = Files.createTempDirectory("graft_ivfret_drop").toString
